@@ -190,7 +190,7 @@ def event_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a2_event_update",
     """
     SELECT 'req-0' AS aws_request_id, 'source_system/create' AS method_name,
-           'delivered' AS status, 'txlog' AS catalog_backend
+           'delivered' AS status, 'deltalog' AS catalog_backend
     """,
 )
 def event_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,10 +202,9 @@ def event_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``status`` — see SURVEY.md §1.2 — our plain column just works.)
 
     The output carries ``catalog_backend`` and the oracle pins it to
-    ``'txlog'`` (VERDICT r3 item #5): the green row proves the update
-    ran through the transaction-log commit protocol, not the plain
-    directory swap.  If Delta ever lands in the image, the auto-probe
-    flips the backend and this row goes red — the signal to re-pin."""
+    ``'deltalog'`` (VERDICT r3 item #5): the green row proves the
+    update ran as a commit on the catalog's Delta table.  If any other
+    storage path ever serves the update, this row goes red."""
     cat = Catalog(spark, tempfile.mkdtemp(prefix="spark_graft_wh_"))
     cat._audit("source_system/create", None, request_id="req-0")
     cat._audit("source_system/create", None, request_id="req-1")

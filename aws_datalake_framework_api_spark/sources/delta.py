@@ -3,11 +3,10 @@
 The reference's CFT provisions a lake bucket whose tables a real
 deployment would manage with an open table format (the project
 BASELINE names "Spark SQL + Delta/Iceberg connectors" as the
-approach); the engine's own ACID catalog backend (``txlog.py``)
-implements the Delta FEATURE SET over a private manifest format, but
-a user arriving from a lakehouse needs to point the engine at an
-EXISTING Delta table.  ``delta-spark`` is auto-used when installed
-(``catalog.delta_available``); this module is the fallback that works
+approach).  This module reads and writes Delta tables without
+``delta-spark``: it is the engine's Delta connector for EXISTING
+lakehouse tables and the storage of the engine's own catalog
+(``catalog.py`` keeps every entity and audit table here).  It works
 from the PUBLIC PROTOCOL alone — the Delta transaction-log layout
 documented in delta-io/delta's PROTOCOL.md:
 

@@ -1,9 +1,9 @@
 """Lake-scale MERGE (upsert) on a partitioned parquet table
 (SURVEY.md §2 B1 extension; complements :mod:`..txlog`).
 
-The catalog's txlog handles METADATA-scale mutations; this module is
-the 100 TB side of the north star's MERGE story: upserting a change
-batch into a partitioned LAKE table.  The scale-correct cost model —
+The catalog's Delta tables handle METADATA-scale mutations; this
+module is the 100 TB side of the north star's MERGE story: upserting
+a change batch into a partitioned LAKE table.  The scale-correct cost model —
 what Delta/Iceberg MERGE compiles to under the hood — is:
 
 1. **identify touched partitions** from the (small) update batch — a

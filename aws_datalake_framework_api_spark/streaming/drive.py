@@ -26,6 +26,7 @@ unchanged.
 from __future__ import annotations
 
 import time
+import warnings
 from typing import Callable
 
 from pyspark.sql.streaming import StreamingQuery
@@ -51,15 +52,26 @@ def run_stream_to_completion(
 ) -> None:
     """Start the stream via ``start()`` and await termination,
     restarting (same checkpoint, so committed batches are skipped) on
-    the transient Python-worker spawn timeout only."""
+    the transient Python-worker spawn timeout only — whether it is
+    raised by ``start()`` itself (a Python source's schema-inference
+    worker) or surfaced by ``awaitTermination()``.  Each retry warns
+    with its attempt number and reason, so a run whose timing a retry
+    inflated is visible in its log."""
+    if attempts < 1:
+        raise ValueError(f"attempts must be >= 1, got {attempts}")
     for attempt in range(attempts):
-        q = start()
         try:
-            q.awaitTermination()
+            start().awaitTermination()
             return
         except Exception as exc:  # noqa: BLE001 — filtered below
             if not _is_transient(exc) or attempt == attempts - 1:
                 raise
+            warnings.warn(
+                f"stream attempt {attempt + 1}/{attempts} failed, "
+                f"retrying: {exc}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
             # brief backoff: the spawn timed out because the box was
             # momentarily saturated; give it a beat before re-forking
             time.sleep(1.0 + attempt)

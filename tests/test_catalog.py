@@ -1,42 +1,41 @@
 """Catalog + API-layer semantics (SURVEY.md A4/A5/A10 and the
 per-call CRUD paths the batch-based oracle queries don't drive)."""
 
+import json
+import os
+
 import pytest
 
-#: driver-budget split (r12): deep suite, excluded from the default
-#: run by pytest.ini; runs via  pytest -m slow  in the builder's loop
-pytestmark = pytest.mark.slow
-
 from aws_datalake_framework_api_spark.api import dispatch, health
-from aws_datalake_framework_api_spark.catalog import Catalog, delta_available
+from aws_datalake_framework_api_spark.catalog import Catalog
 
 
-@pytest.fixture(params=["auto", "deltalog", "iceberg"])
-def cat(request, spark, tmp_path):
-    """Every CRUD/audit test runs three times: on the probed default
-    backend (txlog here — delta-spark is absent) and on ``deltalog`` /
-    ``iceberg``, the dependency-free open-table-format backends, so
-    the catalog's ACID semantics are proven on BOTH open formats."""
-    return Catalog(spark, str(tmp_path / "wh"), backend=request.param)
+@pytest.fixture()
+def cat(spark, tmp_path):
+    return Catalog(spark, str(tmp_path / "wh"))
 
 
-def test_backend_probe_records_which_path_runs(spark, tmp_path, capsys):
-    """The storage backend is probed, not assumed: Delta when the
-    delta-spark package + io.delta jar are genuinely present, the
-    txlog transaction-log format otherwise.  The chosen path is
-    recorded so a CI log shows which backend the CRUD suite actually
-    exercised."""
-    probed = delta_available(spark)
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    assert cat.backend == ("delta" if probed else "txlog")
-    print(f"catalog-backend={cat.backend} (delta_available={probed})")
-    # whatever the backend, the seam holds: a create round-trips
-    assert cat.create("source_system", 900, "probe")["statusCode"] == 200
-    assert cat.read("source_system", 900).count() == 1
-    # and the audit trail records which backend served the call
-    cat.flush_audit()
-    backends = {r["catalog_backend"] for r in cat.audit_log().collect()}
-    assert backends == {cat.backend}
+def _delta_versions(d):
+    """Committed ``_delta_log`` versions of the table at ``d``."""
+    return sorted(
+        int(f[:-5]) for f in os.listdir(os.path.join(d, "_delta_log"))
+        if f.endswith(".json")
+    )
+
+
+def _active_files(d, version):
+    """Data files active at ``version``: replay of the log's add/remove
+    actions, last writer wins."""
+    files = set()
+    for v in range(version + 1):
+        with open(os.path.join(d, "_delta_log", f"{v:020d}.json")) as fh:
+            for line in fh:
+                a = json.loads(line)
+                if "add" in a:
+                    files.add(a["add"]["path"])
+                elif "remove" in a:
+                    files.discard(a["remove"]["path"])
+    return files
 
 
 def test_create_read_roundtrip(cat):
@@ -75,8 +74,6 @@ def test_entities_are_isolated_per_type(cat):
 def test_source_system_provisions_landing_prefix(cat, tmp_path):
     """create_source also provisions storage — the CFT's per-source
     bucket + init/ prefix (cft/sourceSystem.yaml:20-27,77)."""
-    import os
-
     cat.create("source_system", 7, "s7")
     assert os.path.isdir(str(tmp_path / "wh" / "lake" / "7" / "init"))
 
@@ -86,11 +83,13 @@ def test_audit_every_call_including_reads(cat):
     cat.read("source_system", 1)
     cat.read("source_system", 999)
     cat.flush_audit()
-    log = {(r["method_name"],): r for r in cat.audit_log().collect()}
-    methods = [r["method_name"] for r in cat.audit_log().collect()]
+    rows = cat.audit_log().collect()
+    methods = [r["method_name"] for r in rows]
     assert methods.count("source_system/create") == 1
     assert methods.count("source_system/read") == 2
-    assert all(r["api_call_type"] == "synchronous" for r in cat.audit_log().collect())
+    assert all(r["api_call_type"] == "synchronous" for r in rows)
+    # every row records the storage path that served the call
+    assert {r["catalog_backend"] for r in rows} == {"deltalog"}
 
 
 def test_conditional_event_update(cat):
@@ -163,13 +162,11 @@ def test_global_config_loads_reference_shape(tmp_path):
     assert cfg.table_name("data_asset") == "dl-fmwrk.data_asset"
 
 
-def test_deltalog_catalog_is_time_travelable_delta(spark, tmp_path):
-    """The deltalog backend writes REAL Delta tables: the catalog's
-    mutation history stays readable with the protocol reader's
-    versionAsOf — every CRUD commit is a Delta log version."""
+def test_deltalog_catalog_is_time_travelable_delta(spark, cat):
+    """The catalog writes REAL Delta tables: its mutation history
+    stays readable with the protocol reader's versionAsOf."""
     from aws_datalake_framework_api_spark.sources.delta import read_delta
 
-    cat = Catalog(spark, str(tmp_path / "wh"), backend="deltalog")
     cat.create("source_system", 1, "alpha")
     cat.update("source_system", 1, name="beta")
     d = cat._table_dir("source_system")
@@ -179,132 +176,62 @@ def test_deltalog_catalog_is_time_travelable_delta(spark, tmp_path):
     assert v0[0]["name"] == "alpha"
 
 
-def test_txlog_point_update_rewrites_no_data_dir(spark, tmp_path):
-    """A2 at scale (VERDICT r5 'what's wrong' #1): on the unbounded
-    audit table a point status flip must NOT rewrite the table.  The
-    txlog path commits one tombstone-keys dir + one patch dir; every
-    pre-existing data dir survives byte-identical."""
-    import os
+def test_catalog_mutations_are_one_delta_version_each(cat):
+    """A6/A8/A9 each commit exactly one ``_delta_log`` version, and
+    the conditional-update no-op (A2/A8 attribute_exists semantics)
+    commits NOTHING."""
+    d = cat._table_dir("source_system")
+    cat.create("source_system", 1, "alpha")
+    cat.create("source_system", 2, "beta")
+    cat.update("source_system", 1, status="suspended")
+    assert _delta_versions(d) == [0, 1, 2]
+    res = cat.update("source_system", 999, status="ghost")  # no match
+    assert res["matched"] == 0
+    assert _delta_versions(d) == [0, 1, 2]  # no-op committed nothing
+    cat.delete("source_system", 2)
+    assert _delta_versions(d) == [0, 1, 2, 3]
+    rows = {r["entity_id"]: r["status"] for r in cat.load("source_system").collect()}
+    assert rows == {1: "suspended"}
 
-    from aws_datalake_framework_api_spark.txlog import TxLogTable
 
-    cat = Catalog(spark, str(tmp_path / "wh"), backend="txlog")
-    for i in range(3):  # three flushes -> three immutable data dirs
-        cat._audit("m", None, request_id=f"r{i}")
-        cat.flush_audit()
+def test_catalog_audit_flush_is_delta_append(cat):
+    """Each flush adds one version and leaves the earlier data files
+    active; the read unions every committed file."""
     d = os.path.join(cat.warehouse, "api_events")
-    tbl = TxLogTable(spark, d)
-    before = tbl.snapshot()
-    files_before = {
-        dd: sorted(os.listdir(os.path.join(d, dd))) for dd in before["dirs"]
-    }
-    mtimes_before = {
-        dd: [os.path.getmtime(os.path.join(d, dd, f)) for f in fs]
-        for dd, fs in files_before.items()
-    }
-    assert cat.update_event_status("r1", "m", "done") == 1
-    after = tbl.snapshot()
-    # every old dir is still listed, in order, and physically untouched
-    assert after["dirs"][: len(before["dirs"])] == before["dirs"]
-    assert len(after["dirs"]) == len(before["dirs"]) + 1  # exactly one patch dir
-    for dd, fs in files_before.items():
-        assert sorted(os.listdir(os.path.join(d, dd))) == fs
-        assert [
-            os.path.getmtime(os.path.join(d, dd, f)) for f in fs
-        ] == mtimes_before[dd]
-    # one new DV entry covering exactly the pre-existing dirs
-    assert len(after["dv"]) == len(before.get("dv", [])) + 1
-    assert after["dv"][-1]["covers"] == before["dirs"]
-    # and the read is correct: r1 flipped, siblings untouched, no dupes
-    rows = cat.audit_log().collect()
-    assert len(rows) == 3
-    statuses = {r["aws_request_id"]: r["status"] for r in rows}
-    assert statuses == {"r0": "success", "r1": "done", "r2": "success"}
-    # a second update on another key stacks the same way (still no rewrite)
-    assert cat.update_event_status("r2", "m", "done") == 1
-    assert {r["aws_request_id"]: r["status"] for r in cat.audit_log().collect()} == {
-        "r0": "success", "r1": "done", "r2": "done",
-    }
+    cat._audit("m/a", None)
+    cat.flush_audit()
+    first = _active_files(d, 0)
+    cat._audit("m/b", None)
+    cat.flush_audit()
+    assert _delta_versions(d) == [0, 1]
+    assert first < _active_files(d, 1)
+    assert cat.audit_log().count() == 2
+    # an update matching nothing writes no version
+    assert cat.update_event_status("nope", "m/a", "done") == 0
+    assert _delta_versions(d) == [0, 1]
 
 
-def test_deltalog_point_update_rewrites_only_hit_files(spark, tmp_path):
-    """Same A2 contract on the open Delta format: the UPDATE commit
-    removes+re-adds ONLY the file(s) holding the matched row; the
-    other data files stay active under their original paths and are
-    physically untouched."""
-    import json as _json
-    import os
-
-    cat = Catalog(spark, str(tmp_path / "wh"), backend="deltalog")
+def test_deltalog_point_update_rewrites_only_hit_files(cat):
+    """A2 on the unbounded audit table: the UPDATE commit removes and
+    re-adds ONLY the file holding the matched row; the other data
+    files stay active under their original paths and are physically
+    untouched."""
     for i in range(3):  # three append commits -> three data files
         cat._audit("m", None, request_id=f"r{i}")
         cat.flush_audit()
     d = os.path.join(cat.warehouse, "api_events")
-    log = os.path.join(d, "_delta_log")
-
-    def active_paths(version):
-        files: dict[str, bool] = {}
-        for v in range(version + 1):
-            with open(os.path.join(log, f"{v:020d}.json")) as fh:
-                for line in fh:
-                    a = _json.loads(line)
-                    if "add" in a:
-                        files[a["add"]["path"]] = True
-                    elif "remove" in a:
-                        files.pop(a["remove"]["path"], None)
-        return set(files)
-
-    before = active_paths(2)
+    before = _active_files(d, 2)
     mtimes = {p: os.path.getmtime(os.path.join(d, p)) for p in before}
     assert cat.update_event_status("r1", "m", "done") == 1
-    with open(os.path.join(log, f"{3:020d}.json")) as fh:
-        actions = [_json.loads(line) for line in fh]
+    with open(os.path.join(d, "_delta_log", f"{3:020d}.json")) as fh:
+        actions = [json.loads(line) for line in fh]
     removes = [a["remove"]["path"] for a in actions if "remove" in a]
     adds = [a["add"]["path"] for a in actions if "add" in a]
     assert len(removes) == 1 and len(adds) == 1  # one hit file rewritten
     assert removes[0] in before
     survivors = before - set(removes)
-    assert active_paths(3) == survivors | set(adds)
+    assert _active_files(d, 3) == survivors | set(adds)
     for p in survivors:  # untouched on disk, not just still-listed
         assert os.path.getmtime(os.path.join(d, p)) == mtimes[p]
     statuses = {r["aws_request_id"]: r["status"] for r in cat.audit_log().collect()}
     assert statuses == {"r0": "success", "r1": "done", "r2": "success"}
-
-
-def test_iceberg_point_update_rewrites_no_data_file(spark, tmp_path):
-    """A2 on the Iceberg backend: the status flip commits one position-
-    delete file + one patch file in ONE snapshot; every pre-existing
-    data file survives byte-identical, and history stays
-    time-travelable."""
-    import os
-
-    from aws_datalake_framework_api_spark.sources.iceberg import (
-        history_iceberg, read_iceberg,
-    )
-
-    cat = Catalog(spark, str(tmp_path / "wh"), backend="iceberg")
-    for i in range(3):
-        cat._audit("m", None, request_id=f"r{i}")
-        cat.flush_audit()
-    d = os.path.join(cat.warehouse, "api_events")
-    data_dir = os.path.join(d, "data")
-    before = {
-        f: os.path.getmtime(os.path.join(data_dir, f))
-        for f in os.listdir(data_dir)
-    }
-    assert cat.update_event_status("r1", "m", "done") == 1
-    for f, mt in before.items():
-        assert os.path.getmtime(os.path.join(data_dir, f)) == mt
-    rows = cat.audit_log().collect()
-    assert {r["aws_request_id"]: r["status"] for r in rows} == {
-        "r0": "success", "r1": "done", "r2": "success",
-    }
-    h = history_iceberg(spark, d)
-    assert [x["operation"] for x in h] == [
-        "append", "append", "append", "overwrite",
-    ]
-    # pre-update snapshot still shows the old status
-    old = read_iceberg(spark, d, snapshot_id=h[2]["snapshot_id"])
-    assert {r["aws_request_id"]: r["status"] for r in old.collect()} == {
-        "r0": "success", "r1": "success", "r2": "success",
-    }

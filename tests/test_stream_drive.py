@@ -15,6 +15,13 @@ _TRANSIENT_MSG = (
 )
 
 
+def _no_sleep(monkeypatch):
+    monkeypatch.setattr(
+        "aws_datalake_framework_api_spark.streaming.drive.time.sleep",
+        lambda _s: None,
+    )
+
+
 class _Query:
     def __init__(self, exc=None):
         self.exc = exc
@@ -36,14 +43,12 @@ def _starter(outcomes, log):
 
 
 def test_transient_failure_is_retried_then_succeeds(monkeypatch):
-    monkeypatch.setattr(
-        "aws_datalake_framework_api_spark.streaming.drive.time.sleep",
-        lambda _s: None,
-    )
+    _no_sleep(monkeypatch)
     log = []
-    run_stream_to_completion(
-        _starter([RuntimeError(_TRANSIENT_MSG), None], log)
-    )
+    with pytest.warns(RuntimeWarning, match="retrying"):
+        run_stream_to_completion(
+            _starter([RuntimeError(_TRANSIENT_MSG), None], log)
+        )
     assert log == ["start", "start"]  # restarted once, then completed
 
 
@@ -57,12 +62,50 @@ def test_non_transient_failure_raises_on_first_attempt():
 
 
 def test_persistent_transient_failure_raises_after_budget(monkeypatch):
-    monkeypatch.setattr(
-        "aws_datalake_framework_api_spark.streaming.drive.time.sleep",
-        lambda _s: None,
-    )
+    _no_sleep(monkeypatch)
     log = []
     errs = [RuntimeError(_TRANSIENT_MSG)] * 3
-    with pytest.raises(RuntimeError, match="failed to connect back"):
+    with pytest.raises(RuntimeError, match="failed to connect back"), \
+            pytest.warns(RuntimeWarning, match="retrying"):
         run_stream_to_completion(_starter(errs, log))
     assert log == ["start"] * 3  # bounded: 1 original + 2 retries
+
+
+def test_transient_failure_raised_by_start_is_retried(monkeypatch):
+    """The same spawn timeout can surface synchronously from start()
+    (a Python source's schema inference) rather than from
+    awaitTermination(); it is retried the same way."""
+    _no_sleep(monkeypatch)
+    log = []
+    outcomes = iter([RuntimeError(_TRANSIENT_MSG), None])
+
+    def start():
+        log.append("start")
+        exc = next(outcomes)
+        if exc is not None:
+            raise exc
+        return _Query()
+
+    with pytest.warns(RuntimeWarning, match="retrying"):
+        run_stream_to_completion(start)
+    assert log == ["start", "start"]
+
+
+def test_each_retry_warns_with_attempt_and_reason(monkeypatch):
+    _no_sleep(monkeypatch)
+    log = []
+    errs = [RuntimeError(_TRANSIENT_MSG)] * 2 + [None]
+    with pytest.warns(RuntimeWarning) as record:
+        run_stream_to_completion(_starter(errs, log))
+    msgs = [str(w.message) for w in record]
+    assert len(msgs) == 2
+    assert "attempt 1/3" in msgs[0] and "attempt 2/3" in msgs[1]
+    assert all("failed to connect back" in m for m in msgs)
+
+
+@pytest.mark.parametrize("attempts", [0, -1])
+def test_attempts_below_one_is_refused(attempts):
+    log = []
+    with pytest.raises(ValueError, match="attempts must be >= 1"):
+        run_stream_to_completion(_starter([None], log), attempts=attempts)
+    assert log == []  # never started

@@ -1,7 +1,7 @@
 """Transaction-log table format (txlog.py): commit atomicity,
 snapshot isolation, optimistic concurrency, history/time travel,
-vacuum — the ACID-ish properties the catalog's A2/A8 semantics ride
-on when Delta is absent."""
+vacuum — the ACID-ish properties the lake and streaming tables built
+on it ride on."""
 
 import json
 import os
@@ -10,7 +10,6 @@ import pytest
 
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from aws_datalake_framework_api_spark.catalog import Catalog
 from aws_datalake_framework_api_spark.txlog import LOG_DIR, TxLogTable
 
 SCHEMA = StructType(
@@ -87,41 +86,6 @@ def test_commit_race_loser_rebases(spark, table):
     entry = table.append(_df(spark, [(2, "b")]))
     assert entry["version"] == 3  # rebased past the winner
     assert {r["k"] for r in table.read(SCHEMA).collect()} == {1, 2}
-
-
-def test_catalog_txlog_mutations_have_honest_history(spark, tmp_path):
-    """The catalog's A6/A8/A9 flow over txlog: each mutation is one
-    commit, op labels match the API calls, and the conditional-update
-    no-op (A2/A8 attribute_exists semantics) commits NOTHING."""
-    cat = Catalog(spark, str(tmp_path / "wh"), backend="txlog")
-    cat.create("source_system", 1, "alpha")
-    cat.create("source_system", 2, "beta")
-    cat.update("source_system", 1, status="suspended")
-    versions_before = TxLogTable(
-        spark, os.path.join(str(tmp_path / "wh"), "source_system")
-    ).versions()
-    res = cat.update("source_system", 999, status="ghost")  # no match
-    assert res["matched"] == 0
-    t = TxLogTable(spark, os.path.join(str(tmp_path / "wh"), "source_system"))
-    assert t.versions() == versions_before  # no-op committed nothing
-    cat.delete("source_system", 2)
-    assert [h["op"] for h in t.history()] == ["create", "create", "update", "delete"]
-    rows = {r["entity_id"]: r["status"] for r in cat.load("source_system").collect()}
-    assert rows == {1: "suspended"}
-
-
-def test_catalog_audit_append_is_txlog_append(spark, tmp_path):
-    """Audit flushes append (old dirs survive); a second flush adds a
-    commit, and the read unions every committed dir."""
-    cat = Catalog(spark, str(tmp_path / "wh"), backend="txlog")
-    cat._audit("m/a", None)
-    cat.flush_audit()
-    cat._audit("m/b", None)
-    cat.flush_audit()
-    t = TxLogTable(spark, os.path.join(str(tmp_path / "wh"), "api_events"))
-    assert [h["op"] for h in t.history()] == ["append", "append"]
-    assert len(t.snapshot()["dirs"]) == 2
-    assert cat.audit_log().count() == 2
 
 
 def test_stats_skipping_prunes_only_provably_dead_dirs(spark, table):
