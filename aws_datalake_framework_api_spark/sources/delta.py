@@ -50,7 +50,7 @@ parquet write, flattens them into the table root under unique names
 (the log, not the directory layout, is the source of truth — the
 reader never assumes hive-style paths), derives ``partitionValues``
 from the staging layout, and publishes the commit JSON atomically
-with the ``os.link`` put-if-absent idiom shared with ``txlog.py``:
+with the ``os.link`` put-if-absent idiom:
 two racing writers of version N produce exactly one winner, the loser
 gets a ``FileExistsError`` to retry against the new state (optimistic
 concurrency, as the protocol prescribes).
@@ -4943,9 +4943,8 @@ def read_delta_range(
 ) -> DataFrame:
     """Range read with stats-based file skipping: scan only the files
     :func:`prune_files` keeps, then apply the residual row filter.
-    Same correctness division of labor as the txlog table's
-    ``read_range`` — stats prune FILES, the filter prunes ROWS, so
-    results are identical to an unpruned scan by construction."""
+    Stats prune FILES, the filter prunes ROWS, so results are
+    identical to an unpruned scan by construction."""
     snap, _ = _snapshot(spark, path, version_as_of)
     schema, part_cols, rename, l2p = _resolve_read_schema(snap)
     # prune by the STORED stats key, filter by the LOGICAL column

@@ -3326,7 +3326,6 @@ def upsert_iceberg(
     data manifest commit together, so readers see the old row version
     or the new one, never both and never neither.  No existing data
     file is rewritten; cost is O(source + matched positions), the
-    Iceberg twin of the txlog path's ``upsert_keys`` and the
     merge-on-read complement to the Delta connector's copy-on-write
     ``merge_delta``.  The deletes carry the same sequence number as
     the new data and reference only PRE-EXISTING files by path, so

@@ -1,5 +1,7 @@
 """Lake-scale MERGE (upsert) on a partitioned parquet table
-(SURVEY.md §2 B1 extension; complements :mod:`..txlog`).
+(SURVEY.md §2 B1 extension), plus the Delta-table exhibits: time
+travel, vacuum, data skipping, deletion vectors, partition-spec and
+schema evolution, erasure and restore, all on :mod:`.delta`.
 
 The catalog's Delta tables handle METADATA-scale mutations; this
 module is the 100 TB side of the north star's MERGE story: upserting
@@ -40,6 +42,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from .delta import (
+    _snapshot,
+    _stage_files,
+    delete_where_delta,
+    history_delta,
+    prune_files,
+    read_delta,
+    read_delta_range,
+    restore_delta,
+    vacuum_delta,
+    write_delta,
+)
 from .readers import load_table
 
 #: update rule constants — shared by the Spark path and the oracle
@@ -386,32 +400,33 @@ def compact_table(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def lake_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot time travel on the file-backed transaction log
-    (txlog.py — the repo's Delta/Iceberg-class table format): build a
-    table with two commits (overwrite, then append), then read BOTH
-    versions through their manifests and prove the old snapshot still
-    sees exactly the pre-append contents.
+    """Snapshot time travel on a Delta table: build a table with two
+    commits (overwrite, then append), then read BOTH versions through
+    the log and prove the old snapshot still sees exactly the
+    pre-append contents.
 
     This is the lakehouse contract the reference's catalog fronts
     (`SURVEY.md` §0: Delta/Iceberg connectors are the mandate's north
-    star): every commit is an immutable manifest naming immutable data
-    dirs, so version-v reads resolve ONE manifest and never list or
-    lock the table — at any table size, time travel costs one small
-    JSON read plus the snapshot's own data scan.  Concurrency/crash
-    semantics are pinned separately in tests/test_txlog.py (staged-
-    but-uncommitted invisibility, loser-rebases commit race)."""
-    from ..txlog import TxLogTable  # local import: avoid a cycle at module load
-
+    star): every commit is an immutable log entry naming immutable
+    data files, so version-v reads replay the log and never list or
+    lock the table — time travel costs the log replay plus the
+    snapshot's own data scan.  Concurrency/crash semantics are pinned
+    in tests/test_delta.py (put-if-absent commit atomicity)."""
     nation = load_table(spark, sf_dir, "nation")
     path = os.path.join(_tracked_tmp("spark_graft_tt_"), "timetravel_tbl")
-    t = TxLogTable(spark, path)
-    t.overwrite(nation.filter(F.col("n_regionkey") < 2))
-    t.append(nation.filter(F.col("n_regionkey") == 2))
-    versions = t.versions()
+    write_delta(
+        nation.filter(F.col("n_regionkey") < 2).coalesce(1), path,
+        mode="overwrite",
+    )
+    write_delta(
+        nation.filter(F.col("n_regionkey") == 2).coalesce(1), path,
+        mode="append",
+    )
+    versions = [h["version"] for h in history_delta(spark, path)]
     first, latest = versions[0], versions[-1]
 
     def stats(label: str, version: int) -> DataFrame:
-        snap = t.read(nation.schema, version)
+        snap = read_delta(spark, path, version_as_of=version)
         return snap.agg(
             F.lit(label).alias("snapshot"),
             F.count("*").alias("n_rows"),
@@ -435,30 +450,33 @@ def lake_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VACUUM on the txlog table format — the maintenance op that
-    completes the ACID story: remove data dirs no retained manifest
-    references.  The exhibit constructs BOTH orphan classes
-    deterministically — (a) a crash leftover: a dir staged by a writer
-    that died before commit, (b) a historical dir: the pre-overwrite
-    version's data — then vacuums and proves the CURRENT snapshot is
-    byte-identical afterwards (the oracle pins the post-vacuum rows
-    and the exact removed-dir count of 2).
+    """VACUUM on a Delta table — the maintenance op that completes the
+    ACID story: remove data files the current version does not
+    reference.  The exhibit constructs BOTH orphan classes
+    deterministically — (a) a crash leftover: a file staged by a
+    writer that died before commit, (b) a tombstoned file: the
+    pre-overwrite version's data — then vacuums with zero retention
+    and proves the CURRENT snapshot is unchanged afterwards (the
+    oracle pins the post-vacuum rows and the exact removed-file count
+    of 2).
 
-    Scale: vacuum lists the table root and reads ONE manifest — cost
-    is O(dirs), never O(rows); it is the same directory-diff a Delta
-    VACUUM does past its retention window."""
-    from ..txlog import TxLogTable
-
+    Scale: vacuum replays the log and walks the table root — cost is
+    O(files), never O(rows)."""
     nation = load_table(spark, sf_dir, "nation")
     path = os.path.join(_tracked_tmp("spark_graft_vac_"), "vacuum_tbl")
-    t = TxLogTable(spark, path)
-    t.overwrite(nation.filter(F.col("n_regionkey") < 2))  # historical dir
-    t.overwrite(nation.filter(F.col("n_regionkey") <= 2))  # current snapshot
-    t._stage(nation.limit(3))  # crash leftover: staged, never committed
-    removed = t.vacuum()
-    cur = t.read(nation.schema)
-    return cur.agg(
-        F.lit(len(removed)).cast("long").alias("n_removed"),
+    write_delta(  # v0: becomes the tombstoned file
+        nation.filter(F.col("n_regionkey") < 2).coalesce(1), path,
+        mode="overwrite",
+    )
+    write_delta(  # v1: the current snapshot
+        nation.filter(F.col("n_regionkey") <= 2).coalesce(1), path,
+        mode="overwrite",
+    )
+    # crash leftover: staged into the table root, never committed
+    _stage_files(nation.limit(3).coalesce(1), path, [], 2)
+    removed = vacuum_delta(spark, path, retention_ms=0, force=True)
+    return read_delta(spark, path).agg(
+        F.lit(removed["deleted_files"]).cast("long").alias("n_removed"),
         F.count("*").alias("n_rows_after"),
         F.sum("n_nationkey").cast("long").alias("key_sum_after"),
     )
@@ -483,39 +501,37 @@ def lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-level min/max data skipping on the txlog table format —
-    the Delta/Iceberg 'metrics filtering' feature: each commit records
-    per-dir [min, max] stats in its manifest, and a range read drops
-    every dir whose range provably cannot match BEFORE any parquet
+    """File-level min/max data skipping on a Delta table — the
+    Delta/Iceberg 'metrics filtering' feature: each commit's ``add``
+    action carries per-file [min, max] stats, and a range read drops
+    every file whose range provably cannot match BEFORE any parquet
     footer is opened.
 
     The exhibit appends the orders table in four key-range-clustered
-    commits (quartiles of o_orderkey, disjoint by construction — the
-    clustered layout a z-ordered or ingestion-time-sorted lake table
-    has naturally), range-reads [0.3·maxkey, 0.45·maxkey] — strictly
-    inside the second quartile — and returns the pruning decision
-    (1 dir scanned, 3 skipped: exact ints the oracle pins as literals)
-    alongside row-level aggregates the oracle recomputes from raw
-    orders.  The correctness division of labor is the point: stats
-    prune FILES, the residual filter prunes ROWS, so a wrong stat
-    could only ever cost performance, never rows — except the oracle
-    would then catch the missing rows too."""
-    from ..txlog import TxLogTable  # local import: avoid a cycle at module load
-
+    one-file commits (quartiles of o_orderkey, disjoint by
+    construction — the clustered layout a z-ordered or
+    ingestion-time-sorted lake table has naturally), range-reads
+    [0.3·maxkey, 0.45·maxkey] — strictly inside the second quartile —
+    and returns the pruning decision (1 file scanned, 3 skipped: exact
+    ints the oracle pins as literals) alongside row-level aggregates
+    the oracle recomputes from raw orders.  The correctness division
+    of labor is the point: stats prune FILES, the residual filter
+    prunes ROWS, so a wrong stat could only ever cost performance,
+    never rows — except the oracle would then catch the missing rows
+    too."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     mk = orders.agg(F.max("o_orderkey")).first()[0]
     path = os.path.join(_tracked_tmp("spark_graft_skip_"), "skipping_tbl")
-    t = TxLogTable(spark, path)  # fresh scratch dir per call, like timetravel
     bounds = [0, mk // 4, mk // 2, (mk * 3) // 4, mk]
     for i in range(4):
         slice_df = orders.filter(
             (F.col("o_orderkey") > bounds[i])
             & (F.col("o_orderkey") <= bounds[i + 1])
         )
-        t.append(slice_df, stats_cols=("o_orderkey",))
+        write_delta(slice_df.coalesce(1), path, mode="append")
     lo, hi = (mk * 3) // 10, (mk * 45) // 100
-    kept, skipped = t.prune_dirs("o_orderkey", lo, hi)
-    hit = t.read_range(orders.schema, "o_orderkey", lo, hi)
+    kept, skipped = prune_files(spark, path, "o_orderkey", lo, hi)
+    hit = read_delta_range(spark, path, "o_orderkey", lo, hi)
     return hit.agg(
         F.lit(len(kept)).cast("long").alias("n_dirs_kept"),
         F.lit(len(skipped)).cast("long").alias("n_dirs_skipped"),
@@ -544,41 +560,32 @@ def lake_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_deletevec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read DELETE (Delta deletion-vector / Iceberg v2 delete
-    class, keyed): tombstone ~2 % of orders keys WITHOUT rewriting any
-    data file — the delete commit stages only the key list, and the
-    oracle pins ``n_data_dirs = 1`` to prove the data dir set really
-    did not change.  Readers subtract tombstones with one broadcast
-    anti-join scoped to the covered dirs; ``purge_deletes`` then folds
-    them in (write-path compaction) and VACUUM reclaims exactly the
-    old data dir + the tombstone dir (``n_vacuumed = 2``).  Row
-    aggregates are computed from the POST-purge read, so the exhibit
-    also proves purge preserved the DV-applied state bit-for-bit.
-    At 100 TB the point is the cost model: a 1 %-of-keys delete is one
-    key-list write now + one bounded rewrite at purge time, instead of
-    a multi-TB rewrite on the delete path."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ..txlog import TxLogTable  # local import: avoid a cycle at module load
-
-    schema = StructType(
-        [
-            StructField("k", LongType(), True),
-            StructField("price_cents", LongType(), True),
-        ]
-    )
+    """Merge-on-read DELETE with Delta deletion vectors: tombstone ~2 %
+    of orders keys WITHOUT rewriting any data file — the delete
+    commit writes only a bitmap, and the oracle pins
+    ``n_data_dirs = 1`` to prove the active data file set did not
+    grow.  Readers subtract the vector; an overwrite from the
+    DV-applied read then folds it in (write-path compaction) and
+    VACUUM reclaims exactly the old data file + the superseded vector
+    file (``n_vacuumed = 2``).  Row aggregates are computed from the
+    POST-compaction read, so the exhibit also proves compaction
+    preserved the DV-applied state bit-for-bit.  At 100 TB the point
+    is the cost model: a 1 %-of-keys delete is one bitmap write per
+    touched file now + one bounded rewrite at compaction time,
+    instead of a multi-TB rewrite on the delete path."""
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("k"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
     )
     path = os.path.join(_tracked_tmp("spark_graft_dv_"), "dv_tbl")
-    t = TxLogTable(spark, path)
-    t.overwrite(base)
-    t.delete_keys(base.filter(F.col("k") % 53 == 0).select("k"), "k")
-    n_data_dirs = len(t.snapshot()["dirs"])  # delete touched no data dir
-    t.purge_deletes(schema)
-    n_vacuumed = len(t.vacuum())  # old data dir + tombstone dir
-    return t.read(schema).agg(
+    write_delta(base.coalesce(1), path, mode="overwrite")
+    delete_where_delta(spark, path, F.col("k") % 53 == 0)
+    n_data_dirs = len(_snapshot(spark, path)[0].files)  # no file added
+    write_delta(read_delta(spark, path).coalesce(1), path, mode="overwrite")
+    n_vacuumed = vacuum_delta(spark, path, retention_ms=0, force=True)[
+        "deleted_files"
+    ]  # old data file + its deletion-vector file
+    return read_delta(spark, path).agg(
         F.count("*").alias("n_rows"),
         F.sum("price_cents").cast("long").alias("price_sum_cents"),
         F.lit(n_data_dirs).cast("long").alias("n_data_dirs"),
@@ -630,35 +637,33 @@ def lake_deletevec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_partevolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-spec EVOLUTION on the txlog table format — Iceberg's
-    headline metadata feature: a table whose early commits were
-    written under a coarse spec (one dir per WEEK) later switches to a
-    fine spec (one dir per DAY), and readers keep pruning correctly
-    across the boundary WITHOUT rewriting a single old file.
+    """Partition-spec EVOLUTION on a Delta table — Iceberg's headline
+    metadata feature: a table whose early commits were written under
+    a coarse spec (one file per WEEK) later switches to a fine spec
+    (one file per DAY), and readers keep pruning correctly across the
+    boundary WITHOUT rewriting a single old file.
 
     Why this falls out for free here (and in Iceberg): pruning is
-    driven by per-dir [min, max] ts stats in the manifest, not by
-    parsing partition values out of paths — a Hive-layout reader
-    would have to understand both directory schemes, while a
-    stats-based reader doesn't care what policy grouped the rows.
-    The query writes the events table that way (weekly commits before
-    the range midpoint, daily after), range-reads a ±3-day window
-    straddling the spec boundary, and returns the pruning decision
-    (total dirs, dirs kept) plus the row aggregates; the ORACLE
-    independently predicts all four from raw events — including which
-    dirs an honest min/max prune must keep — so a pruning bug that
-    dropped or over-kept a dir fails the hash, not just a perf test.
+    driven by per-file [min, max] ts stats in the log, not by parsing
+    partition values out of paths — a Hive-layout reader would have
+    to understand both directory schemes, while a stats-based reader
+    doesn't care what policy grouped the rows.  The query writes the
+    events table that way (weekly commits before the range midpoint,
+    daily after), range-reads a ±3-day window straddling the spec
+    boundary, and returns the pruning decision (total files, files
+    kept) plus the row aggregates; the ORACLE independently predicts
+    all four from raw events — including which files an honest
+    min/max prune must keep — so a pruning bug that dropped or
+    over-kept a file fails the hash, not just a perf test.
 
     Scale: commit count = calendar buckets (bounded); the range read
-    opens only surviving dirs (O(matching files) like
+    opens only surviving files (O(matching files) like
     `b_lake_skipping`); the driver-side slice loop is bounded by the
     bucket count, never row count."""
     import datetime as _dt
 
-    from ..txlog import TxLogTable
-
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
-    # manifest stats must be JSON scalars, and pruning needs a total
+    # file stats must be JSON scalars, and pruning needs a total
     # order — integer epoch-µs (monotone in ts; b_sessionize's same
     # trick) carries both.
     ev = ev.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
@@ -679,16 +684,15 @@ def lake_partevolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = os.path.join(_tracked_tmp("spark_graft_pe_"), "partevolve_tbl")
-    t = TxLogTable(spark, path)
     # coarse spec: one commit per week before the split
     old = ev.filter(F.col("ts") < F.lit(split_ts))
     weeks = sorted(
         r[0] for r in old.select(F.date_trunc("week", "ts")).distinct().collect()
     )
     for wk in weeks:
-        t.append(
-            old.filter(F.date_trunc("week", "ts") == F.lit(wk)),
-            stats_cols=("ts_us",),
+        write_delta(
+            old.filter(F.date_trunc("week", "ts") == F.lit(wk)).coalesce(1),
+            path, mode="append",
         )
     # spec evolution: subsequent commits are per day
     new = ev.filter(F.col("ts") >= F.lit(split_ts))
@@ -696,13 +700,13 @@ def lake_partevolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         r[0] for r in new.select(F.date_trunc("day", "ts")).distinct().collect()
     )
     for dd in days:
-        t.append(
-            new.filter(F.date_trunc("day", "ts") == F.lit(dd)),
-            stats_cols=("ts_us",),
+        write_delta(
+            new.filter(F.date_trunc("day", "ts") == F.lit(dd)).coalesce(1),
+            path, mode="append",
         )
 
-    kept, skipped = t.prune_dirs("ts_us", lo_us, hi_us)
-    hit = t.read_range(ev.schema, "ts_us", lo_us, hi_us)
+    kept, skipped = prune_files(spark, path, "ts_us", lo_us, hi_us)
+    hit = read_delta_range(spark, path, "ts_us", lo_us, hi_us)
     return hit.agg(
         F.lit(len(kept) + len(skipped)).cast("long").alias("n_dirs_total"),
         F.lit(len(kept)).cast("long").alias("n_dirs_kept"),
@@ -733,34 +737,29 @@ def lake_partevolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_gdpr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-be-forgotten sweep on the txlog table format — the
-    governance composition: erase every row of a user cohort from an
-    ACID table WITHOUT rewriting data files (merge-on-read deletion
-    vectors, `b_lake_deletevec`'s primitive), then report the erasure
-    audit: users erased, rows erased, rows and value remaining.
+    """Right-to-be-forgotten sweep on a Delta table — the governance
+    composition: erase every row of a user cohort from an ACID table
+    WITHOUT rewriting data files (deletion vectors,
+    `b_lake_deletevec`'s primitive), then report the erasure audit:
+    users erased, rows erased, rows and value remaining.
 
-    The erased-read runs through the committed deletion vector (one
-    broadcast anti-join on user_id scoped to covered dirs), so the
+    The erased-read runs through the committed deletion vector, so the
     oracle's raw-predicate recomputation cross-checks the DV path on
     a multi-column aggregate — an erasure that missed a row, or
-    shadowed a survivor, fails the hash.  At 100 TB: the tombstone
-    commit is one key-list write; `purge_deletes` + `vacuum`
-    physically reclaim on the maintenance schedule, and `history()`
-    is the compliance audit trail showing WHEN erasure committed."""
-    from ..txlog import TxLogTable
-
+    shadowed a survivor, fails the hash.  At 100 TB: the erasure
+    commit is one bitmap write per touched file; a compacting rewrite
+    + `vacuum_delta` physically reclaim on the maintenance schedule,
+    and `history_delta` is the compliance audit trail showing WHEN
+    erasure committed."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     path = os.path.join(_tracked_tmp("spark_graft_gdpr_"), "gdpr_tbl")
-    t = TxLogTable(spark, path)
-    t.append(ev)
-    cohort = ev.filter(F.col("user_id") % 37 == 0).select("user_id").distinct()
-    n_users = cohort.count()  # bounded: cohort of the 150-user fixture
-    pre = t.read(ev.schema).count()
-    t.delete_keys(cohort, "user_id")
-    remaining = t.read(ev.schema)
-    return remaining.agg(
+    write_delta(ev.coalesce(1), path, mode="append")
+    erase = F.col("user_id") % 37 == 0
+    n_users = ev.filter(erase).select("user_id").distinct().count()
+    _, n_erased = delete_where_delta(spark, path, erase)
+    return read_delta(spark, path).agg(
         F.lit(n_users).cast("long").alias("n_users_erased"),
-        (F.lit(pre) - F.count("*")).cast("long").alias("n_rows_erased"),
+        F.lit(n_erased).cast("long").alias("n_rows_erased"),
         F.count("*").alias("n_rows_remaining"),
         (F.sum(F.round(F.col("value") * 100.0).cast("long")) / 100.0)
         .cast("double")
@@ -785,15 +784,12 @@ def lake_gdpr(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESTORE VERSION AS OF — rollback as a forward commit: after a
-    good append (v1), a bad append (v2), and a bad delete (v3), one
-    O(1) manifest commit (v4) restores v1's exact dir/stat/DV lists —
-    no data rewritten, the bad versions still auditable in history.
-    The read-after-restore must equal the v1 content (oracle
-    recomputes it from raw orders) and the history length must be 4 —
-    restore ADDS a version, never erases one (Delta RESTORE
-    semantics)."""
-    from ..txlog import TxLogTable
-
+    good append (v0), a bad append (v1), and a bad delete (v2), one
+    metadata-only commit (v3) re-adds v0's exact files — no data
+    rewritten, the bad versions still auditable in history.  The
+    read-after-restore must equal the v0 content (oracle recomputes
+    it from raw orders) and the history length must be 4 — restore
+    ADDS a version, never erases one (Delta RESTORE semantics)."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -802,16 +798,14 @@ def lake_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = orders.filter(F.col("o_orderdate") >= cut).drop("o_orderdate")
 
     path = os.path.join(_tracked_tmp("spark_graft_restore_"), "restore_tbl")
-    t = TxLogTable(spark, path)
-    t.append(good)                                     # v1: good state
-    t.append(bad)                                      # v2: bad ingest
-    t.delete_keys(                                     # v3: bad delete
-        good.limit(50).select("o_orderkey"), "o_orderkey"
+    write_delta(good.coalesce(1), path, mode="append")  # v0: good state
+    write_delta(bad.coalesce(1), path, mode="append")   # v1: bad ingest
+    delete_where_delta(                                  # v2: bad delete
+        spark, path, F.col("o_orderkey") % 50 == 0
     )
-    t.restore(1)                                       # v4: rollback
-    restored = t.read(good.schema)
-    n_versions = len(t.versions())
-    return restored.agg(
+    restore_delta(spark, path, 0)                        # v3: rollback
+    n_versions = len(history_delta(spark, path))
+    return read_delta(spark, path).agg(
         F.lit(n_versions).cast("long").alias("n_versions"),
         F.count("*").alias("n_rows"),
         (F.sum(F.round(F.col("o_totalprice") * 100.0).cast("long")) / 100.0)
@@ -838,23 +832,21 @@ def lake_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WRITE-side schema evolution on the txlog format (the ACID twin
-    of the read-side `b_scan_evolve`): early commits wrote the narrow
-    v1 schema (event_id, ts, value); the pipeline later starts
-    recording event_type and appends the wide v2 schema — with NO
-    rewrite of v1 files and no table downtime.  Readers supply the
-    CURRENT (widest) schema; parquet's by-name column resolution
-    backfills the missing column as NULL in v1 dirs, which is
-    exactly Delta/Iceberg ADD COLUMN semantics (metadata-only, old
-    files untouched).
+    """WRITE-side schema evolution on a Delta table (the ACID twin of
+    the read-side `b_scan_evolve`): early commits wrote the narrow v1
+    schema (event_id, ts, value); the pipeline later starts recording
+    event_type and appends the wide v2 schema with ``merge_schema`` —
+    one ``metaData`` update in the same commit, NO rewrite of v1
+    files and no table downtime.  Readers get the CURRENT (widest)
+    schema from the log and the missing column backfills as NULL in
+    v1 files, which is exactly Delta/Iceberg ADD COLUMN semantics
+    (metadata-only, old files untouched).
 
     The audit proves both eras: legacy-row count = rows whose
     event_type read back NULL, new-era type cardinality from the v2
-    dirs, and the cent-grid total over BOTH eras — recomputed by the
+    files, and the cent-grid total over BOTH eras — recomputed by the
     oracle from raw events, so a reader that dropped v1 rows or
     misaligned columns fails the hash."""
-    from ..txlog import TxLogTable
-
     ev = load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-20").cast("timestamp")
     v1 = ev.filter(F.col("ts") < cut).select("event_id", "ts", "value")
@@ -862,10 +854,9 @@ def lake_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "value", "event_type"
     )
     path = os.path.join(_tracked_tmp("spark_graft_sevolve_"), "sevolve_tbl")
-    t = TxLogTable(spark, path)
-    t.append(v1)
-    t.append(v2)
-    wide = t.read(v2.schema)  # current schema; v1 dirs null-backfill
+    write_delta(v1.coalesce(1), path, mode="append")
+    write_delta(v2.coalesce(1), path, mode="append", merge_schema=True)
+    wide = read_delta(spark, path)  # current schema; v1 files null-backfill
     # legacy count via the ACTUAL backfill (event_type IS NULL) while
     # the oracle counts via the era predicate — a misaligned or
     # un-backfilled column makes the two diverge and fail the hash.

@@ -16,8 +16,9 @@ and ``update_postimage`` rows count +1, ``delete`` and
 deltas exactly.  Money rides integer cent units (see
 ``functions/numeric.py``) so the incremental path is bit-identical to
 a recompute — no float drift across thousands of batches.
-Exactly-once = checkpoint replay + the view manifest's
-``last_batch_id`` high-water mark, the same layering as
+The view is itself a Delta table, overwritten once per micro-batch.
+Exactly-once = checkpoint replay + the view's Delta ``txn`` action
+(``txn=(APP_ID, batch_id)``) as high-water mark, the same layering as
 ``streaming/upsert.py``.
 """
 
@@ -38,8 +39,14 @@ from pyspark.sql.types import (
 )
 
 from ..registry import query
+from ..sources.delta import (
+    alter_table_properties_delta,
+    last_txn_version,
+    merge_delta,
+    read_delta,
+    write_delta,
+)
 from ..sources.readers import load_table
-from ..txlog import TxLogTable
 
 MV_SCHEMA = StructType(
     [
@@ -52,20 +59,25 @@ MV_SCHEMA = StructType(
 #: change types that ADD a row version / REMOVE one
 _PLUS = ("insert", "update_postimage")
 _MINUS = ("delete", "update_preimage")
+#: ``txn`` application id of the view's refresh commits
+APP_ID = "cdf-mv"
 
 
-def mv_apply_batch(
-    view: TxLogTable, batch_df: DataFrame, batch_id: int
-) -> None:
-    """Fold one micro-batch of CDF rows into the view: per-group
-    signed deltas (one shuffle over the BATCH, never the base table),
-    merged with the current state, zero-count groups dropped.  A
-    replayed batch at or below the recorded mark is skipped without a
-    commit (exactly-once)."""
-    snap = view.snapshot()
-    last = (snap or {}).get("meta", {}).get("last_batch_id", -1)
-    if batch_id <= last:
-        return
+def mv_apply_batch(view: str, batch_df: DataFrame, batch_id: int) -> None:
+    """Fold one micro-batch of CDF rows into the Delta view at
+    ``view``: per-group signed deltas (one shuffle over the BATCH,
+    never the base table), merged with the current state, zero-count
+    groups dropped, committed as one overwrite carrying ``txn=(APP_ID,
+    batch_id)``.  A replayed batch at or below the committed mark is
+    skipped without a commit (exactly-once).  The first batch creates
+    the view."""
+    spark = batch_df.sparkSession
+    try:
+        if batch_id <= last_txn_version(spark, view, APP_ID):
+            return
+        cur = read_delta(spark, view)
+    except FileNotFoundError:
+        cur = spark.createDataFrame([], MV_SCHEMA)
     sign = (
         F.when(F.col("_change_type").isin(*_PLUS), F.lit(1))
         .when(F.col("_change_type").isin(*_MINUS), F.lit(-1))
@@ -82,7 +94,6 @@ def mv_apply_batch(
             ).cast("long").alias("units"),
         )
     )
-    cur = view.read(MV_SCHEMA)
     merged = (
         cur.unionByName(delta)
         .groupBy("o_orderpriority")
@@ -92,13 +103,13 @@ def mv_apply_batch(
         )
         .filter(F.col("n") != 0)
     )
-    view.overwrite(
-        merged, op="cdf-mv-refresh", meta={"last_batch_id": batch_id}
+    write_delta(
+        merged.coalesce(1), view, mode="overwrite", txn=(APP_ID, batch_id)
     )
 
 
 def run_cdf_mv_stream(
-    spark: SparkSession, table: str, view: TxLogTable, checkpoint_dir: str
+    spark: SparkSession, table: str, view: str, checkpoint_dir: str
 ) -> None:
     """Tail the table's change feed from genesis and keep the view
     fresh — one refresh commit per change-carrying micro-batch."""
@@ -154,8 +165,6 @@ def stream_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong sign, a dropped preimage, or a double-applied replay all
     fail the hash compare.  (r8 — the streaming twin of
     ``b_mv_incremental``.)"""
-    from ..sources.delta import alter_table_properties_delta, merge_delta
-    from ..sources.delta import write_delta
     from .delta_source import register
 
     register(spark)
@@ -184,9 +193,9 @@ def stream_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"when": "not_matched", "action": "insert"},
         ],
     )                                                            # v2
-    view = TxLogTable(spark, os.path.join(tmp, "mv"))
+    view = os.path.join(tmp, "mv")
     run_cdf_mv_stream(spark, t, view, os.path.join(tmp, "ckpt"))
-    return view.read(MV_SCHEMA).select(
+    return read_delta(spark, view).select(
         "o_orderpriority",
         F.col("n").cast("long").alias("n"),
         (F.col("units") / F.lit(100.0)).alias("total_price"),

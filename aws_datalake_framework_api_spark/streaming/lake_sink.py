@@ -4,9 +4,9 @@ VERDICT r7 item #3): ``readStream`` → ``foreachBatch`` →
 replay.
 
 :mod:`~.upsert` proves the exactly-once layering (checkpoint replay +
-table-side high-water mark) against the minimal txlog format; this
-module wires the SAME guarantee into the two production connectors so
-a stream can MAINTAIN a Delta or Iceberg table:
+table-side high-water mark) with a whole-state Delta overwrite per
+batch; this module wires the SAME guarantee into MERGE on both
+connectors so a stream can MAINTAIN a Delta or Iceberg table:
 
 1. the stream checkpoint replays an uncommitted micro-batch after a
    crash (at-least-once delivery of batches);
@@ -18,7 +18,7 @@ a stream can MAINTAIN a Delta or Iceberg table:
    commit; at-least-once delivery + idempotent apply = exactly-once
    table effect.
 
-Unlike the txlog twin (overwrite of the whole state per batch), the
+Unlike :mod:`~.upsert` (overwrite of the whole state per batch), the
 connector merges are COPY-ON-WRITE MERGEs: only files holding matched
 keys rewrite (stats/manifest-bounds-pruned discovery), so per-batch
 cost rides the touched-file bytes, not table size — the property that

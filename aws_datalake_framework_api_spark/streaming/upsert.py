@@ -1,5 +1,5 @@
-"""Streaming MERGE into the ACID table format (SURVEY.md §2 B9 ∪ B1):
-``readStream`` → ``foreachBatch`` → txlog commit, idempotent under
+"""Streaming MERGE into a Delta table (SURVEY.md §2 B9 ∪ B1):
+``readStream`` → ``foreachBatch`` → Delta commit, idempotent under
 micro-batch replay.
 
 This is the streaming-lakehouse pattern the north star's
@@ -14,10 +14,10 @@ Exactly-once is TWO mechanisms layered, exactly as in Delta:
 
 1. the stream checkpoint replays an uncommitted micro-batch after a
    crash (at-least-once delivery of batches);
-2. the table manifest records the last applied ``batch_id``
-   (``meta={"last_batch_id": N}`` — Delta's ``txn`` appId/version
-   action); a replayed batch with ``batch_id <= N`` is skipped, so
-   at-least-once delivery + idempotent apply = exactly-once effect.
+2. each commit carries Delta's ``txn`` action
+   (``txn=(APP_ID, batch_id)``); a replayed batch with ``batch_id`` at
+   or below :func:`last_txn_version` is skipped, so at-least-once
+   delivery + idempotent apply = exactly-once effect.
 
 Reference anchor: the ingestion topology (``cft/sourceSystem.yaml:
 29-63``) delivers files; what the reference's empty Lambda bodies
@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..registry import query
+from ..sources.delta import history_delta, last_txn_version, read_delta, write_delta
 from ..sources.readers import load_table
-from ..txlog import TxLogTable
 
 FEED_SCHEMA = StructType(
     [
@@ -52,18 +52,23 @@ FEED_SCHEMA = StructType(
 #: keys receiving a second-wave price bump (same rule as b_lake_upsert)
 BUMP_MOD = 97
 BUMP_CENTS = 500
+#: ``txn`` application id of the stream's commits
+APP_ID = "stream-upsert"
 
 
-def merge_microbatch(table: TxLogTable, batch_df: DataFrame, batch_id: int) -> None:
-    """Apply one micro-batch to the table: last-write-wins by ``seq``
-    per key over (current state ∪ batch), committed as ONE txlog
-    version carrying the batch high-water mark.  Replay-safe: a batch
-    at or below the recorded mark is skipped without a commit."""
-    snap = table.snapshot()
-    last = (snap or {}).get("meta", {}).get("last_batch_id", -1)
-    if batch_id <= last:
-        return  # checkpoint replayed a batch the table already has
-    cur = table.read(FEED_SCHEMA)
+def merge_microbatch(path: str, batch_df: DataFrame, batch_id: int) -> None:
+    """Apply one micro-batch to the Delta table at ``path``:
+    last-write-wins by ``seq`` per key over (current state ∪ batch),
+    committed as ONE overwrite version carrying ``txn=(APP_ID,
+    batch_id)``.  Replay-safe: a batch at or below the committed mark
+    is skipped without a commit.  The first batch creates the table."""
+    spark = batch_df.sparkSession
+    try:
+        if batch_id <= last_txn_version(spark, path, APP_ID):
+            return  # checkpoint replayed a batch the table already has
+        cur = read_delta(spark, path)
+    except FileNotFoundError:
+        cur = spark.createDataFrame([], FEED_SCHEMA)
     w = Window.partitionBy("k").orderBy(F.desc("seq"))
     merged = (
         cur.unionByName(batch_df.select("k", "price_cents", "seq"))
@@ -71,11 +76,11 @@ def merge_microbatch(table: TxLogTable, batch_df: DataFrame, batch_id: int) -> N
         .filter(F.col("rnk") == 1)
         .drop("rnk")
     )
-    table.overwrite(merged, op="stream-merge", meta={"last_batch_id": batch_id})
+    write_delta(merged.coalesce(1), path, mode="overwrite", txn=(APP_ID, batch_id))
 
 
 def run_upsert_stream(
-    spark: SparkSession, landing_dir: str, table: TxLogTable, checkpoint_dir: str
+    spark: SparkSession, landing_dir: str, path: str, checkpoint_dir: str
 ) -> None:
     """Drive the stream over the current backlog, one file per
     micro-batch (``maxFilesPerTrigger=1`` makes the multi-batch merge
@@ -89,7 +94,7 @@ def run_upsert_stream(
             .parquet(landing_dir)
             .writeStream.trigger(availableNow=True)
             .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(lambda df, bid: merge_microbatch(table, df, bid))
+            .foreachBatch(lambda df, bid: merge_microbatch(path, df, bid))
             .start()
         )
     )
@@ -155,9 +160,9 @@ def _stage_feed(spark: SparkSession, sf_dir: str, landing: str) -> None:
 )
 def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END streaming merge: stage a two-wave feed, run the real
-    readStream → foreachBatch → txlog pipeline (one file per
+    readStream → foreachBatch → Delta pipeline (one file per
     micro-batch), then aggregate the FINAL TABLE STATE read through
-    its manifest.  The oracle recomputes the expected final state from
+    its log.  The oracle recomputes the expected final state from
     raw orders and pins the commit count (2 — one per micro-batch;
     a broken idempotence guard double-applying a replay, or a backlog
     collapse into one batch, both flip it).  Replay idempotence itself
@@ -167,10 +172,10 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(tmp, "landing")
     os.makedirs(landing)
     _stage_feed(spark, sf_dir, landing)
-    table = TxLogTable(spark, os.path.join(tmp, "tbl"))
+    table = os.path.join(tmp, "tbl")
     run_upsert_stream(spark, landing, table, os.path.join(tmp, "ckpt"))
-    final = table.read(FEED_SCHEMA)
-    n_commits = len(table.versions())
+    final = read_delta(spark, table)
+    n_commits = len(history_delta(spark, table))
     return final.agg(
         F.count("*").alias("n_rows"),
         F.sum("price_cents").cast("long").alias("price_sum_cents"),

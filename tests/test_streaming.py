@@ -393,37 +393,83 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
     assert streamed == batch and len(batch) > 0
 
 
+def _assert_replay_is_idempotent(spark, path, apply, app_id, batches, want):
+    """Apply ``batches`` 0 and 1, replay batch 1, then apply batch 2.
+    The replay must commit nothing — same Delta history length, same
+    ``txn`` watermark, same rows — and the new batch exactly one
+    version.  ``want[i]`` is the sorted table state after batch i."""
+    from aws_datalake_framework_api_spark.sources.delta import (
+        history_delta,
+        last_txn_version,
+        read_delta,
+    )
+
+    def state():
+        return sorted(tuple(r) for r in read_delta(spark, path).collect())
+
+    apply(path, batches[0], 0)
+    apply(path, batches[1], 1)
+    n_versions = len(history_delta(spark, path))
+    assert last_txn_version(spark, path, app_id) == 1
+    assert state() == want[1]
+
+    # crash-recovery replay: the checkpoint redelivers batch 1
+    apply(path, batches[1], 1)
+    assert len(history_delta(spark, path)) == n_versions  # no new commit
+    assert last_txn_version(spark, path, app_id) == 1
+    assert state() == want[1]
+
+    # a NEW batch still applies on top, as exactly one version
+    apply(path, batches[2], 2)
+    assert len(history_delta(spark, path)) == n_versions + 1
+    assert last_txn_version(spark, path, app_id) == 2
+    assert state() == want[2]
+
+
 def test_stream_upsert_replay_is_idempotent(spark, tmp_path):
     """The table-side batch high-water mark (Delta's txn action) must
     make a replayed micro-batch a no-op: same version, same rows —
     while a genuinely new batch still applies."""
     from aws_datalake_framework_api_spark.streaming.upsert import (
+        APP_ID,
         FEED_SCHEMA,
         merge_microbatch,
     )
-    from aws_datalake_framework_api_spark.txlog import TxLogTable
 
-    t = TxLogTable(spark, str(tmp_path / "t"))
-    b0 = spark.createDataFrame([(1, 100, 1), (2, 200, 1)], FEED_SCHEMA)
-    b1 = spark.createDataFrame([(2, 250, 2)], FEED_SCHEMA)
+    batches = [
+        spark.createDataFrame(rows, FEED_SCHEMA)
+        for rows in ([(1, 100, 1), (2, 200, 1)], [(2, 250, 2)], [(3, 300, 3)])
+    ]
+    want = {1: [(1, 100, 1), (2, 250, 2)]}
+    want[2] = want[1] + [(3, 300, 3)]
+    _assert_replay_is_idempotent(
+        spark, str(tmp_path / "t"), merge_microbatch, APP_ID, batches, want
+    )
 
-    merge_microbatch(t, b0, 0)
-    merge_microbatch(t, b1, 1)
-    v_after = t.snapshot()["version"]
-    state = {(r["k"], r["price_cents"]) for r in t.read(FEED_SCHEMA).collect()}
-    assert state == {(1, 100), (2, 250)}
 
-    # crash-recovery replay: the checkpoint redelivers batch 1
-    merge_microbatch(t, b1, 1)
-    assert t.snapshot()["version"] == v_after  # no new commit
-    assert {(r["k"], r["price_cents"]) for r in t.read(FEED_SCHEMA).collect()} == state
+def test_cdf_mv_replay_is_idempotent(spark, tmp_path):
+    """The CDF-maintained view's replay guard: a redelivered change
+    batch must not fold its signed deltas in twice."""
+    from aws_datalake_framework_api_spark.streaming.cdf_mv import (
+        APP_ID,
+        mv_apply_batch,
+    )
 
-    # a NEW batch still applies on top
-    merge_microbatch(t, spark.createDataFrame([(3, 300, 3)], FEED_SCHEMA), 2)
-    assert t.snapshot()["version"] == v_after + 1
-    assert (3, 300) in {
-        (r["k"], r["price_cents"]) for r in t.read(FEED_SCHEMA).collect()
-    }
+    schema = "o_orderpriority string, o_totalprice double, _change_type string"
+    batches = [
+        spark.createDataFrame(rows, schema)
+        for rows in (
+            [("1-URGENT", 1.0, "insert"), ("2-HIGH", 2.0, "insert")],
+            [("2-HIGH", 2.0, "update_preimage"),
+             ("2-HIGH", 2.5, "update_postimage")],
+            [("3-MEDIUM", 3.0, "insert")],
+        )
+    ]
+    want = {1: [("1-URGENT", 1, 100), ("2-HIGH", 1, 250)]}
+    want[2] = want[1] + [("3-MEDIUM", 1, 300)]
+    _assert_replay_is_idempotent(
+        spark, str(tmp_path / "mv"), mv_apply_batch, APP_ID, batches, want
+    )
 
 
 def test_stream_stream_outer_join_matches_batch_on_decided_region(
