@@ -4571,8 +4571,8 @@ def merge_iceberg(
     # Materialize the merge source ONCE (r11 optimization, guide §5):
     # the planning below executes it repeatedly (dup check, key-bounds
     # aggregate, clause counts, insert count, staging writes), and in
-    # the CDC-replication path its lineage roots in the Python-
-    # DataSource stream read — a JVM→Python→JVM hop per re-execution.
+    # the CDC-replication path its lineage roots in the change-feed
+    # read — per-commit scans and DV joins per re-execution.
     # Mirrors merge_delta; delta-spark materializes its merge source
     # for the same reason.
     source = pin(source)

@@ -1,11 +1,11 @@
 """Incremental MATERIALIZED-VIEW maintenance from the Delta CHANGE
-FEED (SURVEY.md §2 B9 ∪ B1 composition, r8): ``readChangeFeed=true``
-stream → ``foreachBatch`` → signed delta application, exactly-once.
+FEED (SURVEY.md §2 B9 ∪ B1 composition, r8): change-feed catch-up →
+signed delta application, exactly-once.
 
 This closes the CDC loop the round opened: ``merge_delta`` WRITES
-row-level changes (cdc files), the ``delta_stream`` CDF tail READS
-them, and this module CONSUMES them to keep an aggregate view fresh
-without ever rescanning the base table — the streaming form of
+row-level changes (cdc files), ``read_delta_changes`` READS them, and
+this module CONSUMES them to keep an aggregate view fresh without
+ever rescanning the base table — the change-feed form of
 ``b_mv_incremental`` (operators/maintenance.py), and the standard
 production pattern for "a dashboard over a 100 TB mutating table":
 per-batch cost rides the CHANGE volume, never the table.
@@ -16,10 +16,14 @@ and ``update_postimage`` rows count +1, ``delete`` and
 deltas exactly.  Money rides integer cent units (see
 ``functions/numeric.py``) so the incremental path is bit-identical to
 a recompute — no float drift across thousands of batches.
-The view is itself a Delta table, overwritten once per micro-batch.
-Exactly-once = checkpoint replay + the view's Delta ``txn`` action
-(``txn=(APP_ID, batch_id)``) as high-water mark, the same layering as
-``streaming/upsert.py``.
+The view is itself a Delta table, overwritten once per batch.
+Exactly-once comes from the view's Delta ``txn`` action alone; there
+is no stream checkpoint.  Each refresh (``streaming/catchup.py``)
+reads the view's ``txn`` watermark — the source version it has
+folded in — drains the changes after it, and commits the new view
+with ``txn=(APP_ID, <the source's latest version>)``.  A crash before
+that commit leaves the watermark where it was, so the next refresh
+re-reads the same range.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ from pyspark.sql.types import (
 
 from ..registry import query
 from ..sources.delta import (
+    _table_version,
     alter_table_properties_delta,
     last_txn_version,
     merge_delta,
@@ -47,6 +52,7 @@ from ..sources.delta import (
     write_delta,
 )
 from ..sources.readers import load_table
+from .catchup import _PLUS, catch_up
 
 MV_SCHEMA = StructType(
     [
@@ -56,28 +62,27 @@ MV_SCHEMA = StructType(
     ]
 )
 
-#: change types that ADD a row version / REMOVE one
-_PLUS = ("insert", "update_postimage")
+#: change types that REMOVE a row version (``_PLUS`` adds one)
 _MINUS = ("delete", "update_preimage")
 #: ``txn`` application id of the view's refresh commits
 APP_ID = "cdf-mv"
 
 
 def mv_apply_batch(view: str, batch_df: DataFrame, batch_id: int) -> None:
-    """Fold one micro-batch of CDF rows into the Delta view at
-    ``view``: per-group signed deltas (one shuffle over the BATCH,
-    never the base table), merged with the current state, zero-count
-    groups dropped, committed as one overwrite carrying ``txn=(APP_ID,
+    """Fold one batch of CDF rows into the Delta view at ``view``:
+    per-group signed deltas (one shuffle over the BATCH, never the
+    base table), merged with the current state, zero-count groups
+    dropped, committed as one overwrite carrying ``txn=(APP_ID,
     batch_id)``.  A replayed batch at or below the committed mark is
     skipped without a commit (exactly-once).  The first batch creates
     the view."""
     spark = batch_df.sparkSession
-    try:
-        if batch_id <= last_txn_version(spark, view, APP_ID):
-            return
-        cur = read_delta(spark, view)
-    except FileNotFoundError:
+    if batch_id <= last_txn_version(spark, view, APP_ID):
+        return
+    if _table_version(view) is None:
         cur = spark.createDataFrame([], MV_SCHEMA)
+    else:
+        cur = read_delta(spark, view)
     sign = (
         F.when(F.col("_change_type").isin(*_PLUS), F.lit(1))
         .when(F.col("_change_type").isin(*_MINUS), F.lit(-1))
@@ -108,23 +113,13 @@ def mv_apply_batch(view: str, batch_df: DataFrame, batch_id: int) -> None:
     )
 
 
-def run_cdf_mv_stream(
-    spark: SparkSession, table: str, view: str, checkpoint_dir: str
-) -> None:
-    """Tail the table's change feed from genesis and keep the view
-    fresh — one refresh commit per change-carrying micro-batch."""
-    from .drive import run_stream_to_completion
-
-    run_stream_to_completion(
-        lambda: (
-            spark.readStream.format("delta_stream")
-            .option("readChangeFeed", "true")
-            .load(table)
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(lambda df, bid: mv_apply_batch(view, df, bid))
-            .start()
-        )
+def run_cdf_mv_stream(spark: SparkSession, table: str, view: str) -> None:
+    """Bring the view up to the table's latest version: fold the
+    changes after the view's watermark (from genesis on the first
+    run) in one refresh commit; no commit when nothing changed."""
+    catch_up(
+        spark, table, last_txn_version(spark, view, APP_ID),
+        lambda df, bid: mv_apply_batch(view, df, bid),
     )
 
 
@@ -158,16 +153,13 @@ def run_cdf_mv_stream(
 )
 def stream_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END CDC-maintained aggregate: seed a CDF-enabled Delta
-    table, MERGE (update/delete/insert), tail the change feed from
-    genesis, and fold every micro-batch's signed deltas into a
+    table, MERGE (update/delete/insert), drain the change feed from
+    genesis, and fold the batch's signed deltas into a
     grouped SUM/COUNT view — then return the VIEW, which must equal
     the oracle's from-scratch recompute of the final table state.  A
     wrong sign, a dropped preimage, or a double-applied replay all
     fail the hash compare.  (r8 — the streaming twin of
     ``b_mv_incremental``.)"""
-    from .delta_source import register
-
-    register(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -194,7 +186,7 @@ def stream_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )                                                            # v2
     view = os.path.join(tmp, "mv")
-    run_cdf_mv_stream(spark, t, view, os.path.join(tmp, "ckpt"))
+    run_cdf_mv_stream(spark, t, view)
     return read_delta(spark, view).select(
         "o_orderpriority",
         F.col("n").cast("long").alias("n"),

@@ -33,8 +33,9 @@ Semantics (delta-spark parity):
   CHANGE-FEED tail (:class:`DeltaCDFStreamReader`): micro-batches
   emit row-level changes (table schema + ``_change_type`` +
   ``_commit_version``) matching the batch ``read_delta_changes``
-  exactly, so update/delete-carrying commits stream without loss
-  instead of refusing.
+  exactly — both classify commits with the one ``_plan_changes`` in
+  ``sources/delta.py`` — so update/delete-carrying commits stream
+  without loss instead of refusing.
 """
 
 from __future__ import annotations
@@ -54,14 +55,16 @@ from pyspark.sql.types import StructType
 from ..sources.delta import (
     _CMAP_ID_KEY,
     _CMAP_PHYS_KEY,
-    _dv_uid,
     _list_versions,
+    _live_dv,
     _load_dv_positions,
     _logical_json,
     _mapping_mode,
     _physical_json,
+    _plan_changes,
     _snapshot,
     _table_version,
+    _version_actions,
     _version_file,
 )
 
@@ -297,15 +300,8 @@ class DeltaStreamReader(DataSourceStreamReader):
         snap, _ = _snapshot(None, self.path, hi)
         fields, part_cols = resolve_file_fields(snap, self.schema)
         out: list[_DeltaFilePartition] = []
-        have = set(_list_versions(self.path))
         for v in range(lo + 1, hi + 1):
-            if v not in have:
-                raise ValueError(
-                    f"delta_stream: version {v} JSON is gone (log cleanup) "
-                    "— restart the stream from a fresh checkpoint"
-                )
-            with open(_version_file(self.path, v)) as fh:
-                acts = [json.loads(line) for line in fh if line.strip()]
+            acts = _version_actions(self.path, v)
             for a in acts:
                 if "remove" in a and a["remove"].get("dataChange", True):
                     if not self.ignore_changes:
@@ -321,14 +317,11 @@ class DeltaStreamReader(DataSourceStreamReader):
                     continue
                 add = a["add"]
                 rel = urllib.parse.unquote(add["path"])
-                dv = add.get("deletionVector")
-                if not (dv and int(dv.get("cardinality") or 0)):
-                    dv = None
                 out.append(
                     _DeltaFilePartition(
                         os.path.join(self.path, rel),
                         dict(add.get("partitionValues") or {}),
-                        dv,
+                        _live_dv(add),
                         self.path,
                         fields,
                         part_cols,
@@ -353,8 +346,11 @@ class _DeltaCDFPartition(InputPartition):
       (DV subtracted) are inserts;
     - ``delete``: a dataChange remove in a non-cdc commit — the
       file's PREVIOUSLY-live rows (old DV applied) are deletes;
-    - ``dv_delta``: a remove+re-add with a grown deletion vector —
-      exactly the NEWLY-dead positions (new minus old) are deletes.
+    - ``dv``: a remove+re-add with a changed deletion vector — the
+      newly-dead positions (new minus old) are deletes, the
+      newly-live ones (old minus new) inserts.
+
+    The kinds are :func:`~..sources.delta._plan_changes`'s units.
 
     All DV decode happens executor-side in ``read()``; the planner
     ships O(1) descriptor bytes per file."""
@@ -433,141 +429,34 @@ class DeltaCDFStreamReader(DataSourceStreamReader):
             if f.name not in ("_change_type", "_commit_version")
         ]
         part_cols = list(state.metadata.get("partitionColumns") or [])
-        have = set(_list_versions(self.path))
-
-        def live_dv(a: dict) -> dict | None:
-            d = a.get("deletionVector")
-            return d if d and int(d.get("cardinality") or 0) else None
-
         out: list[_DeltaCDFPartition] = []
-        for v in range(lo + 1, hi + 1):
-            if v not in have:
-                raise ValueError(
-                    f"delta_stream: version {v} JSON is gone (log "
-                    "cleanup) — the change feed for this range is "
-                    "unreconstructable; restart from a fresh checkpoint"
+        for v, units in _plan_changes(self.path, state, lo, hi):
+            for kind, rel, action, dv, old_dv in units:
+                pvals = dict(action.get("partitionValues") or {})
+                out.append(
+                    _DeltaCDFPartition(
+                        kind,
+                        os.path.join(self.path, urllib.parse.unquote(rel)),
+                        pvals, dv, old_dv, v, self.path, fields, part_cols,
+                        kind != "cdc" or bool(pvals),
+                    )
                 )
-            with open(_version_file(self.path, v)) as fh:
-                acts = [json.loads(line) for line in fh if line.strip()]
-            cdc_acts = [a["cdc"] for a in acts if "cdc" in a]
-            if cdc_acts:
-                # protocol rule: a cdc-carrying commit is read from its
-                # change files EXCLUSIVELY (deriving from add/remove too
-                # would double-count)
-                for c in cdc_acts:
-                    pvals = dict(c.get("partitionValues") or {})
-                    out.append(
-                        _DeltaCDFPartition(
-                            "cdc",
-                            os.path.join(
-                                self.path, urllib.parse.unquote(c["path"])
-                            ),
-                            pvals, None, None, v, self.path,
-                            fields, part_cols, bool(pvals),
-                        )
-                    )
-            else:
-                adds = {
-                    a["add"]["path"]: a["add"] for a in acts if "add" in a
-                }
-                removes = {
-                    a["remove"]["path"]: a["remove"]
-                    for a in acts
-                    if "remove" in a
-                }
-                for p, a in adds.items():
-                    if not a.get("dataChange", True):
-                        continue
-                    if p in removes and _dv_uid(
-                        a.get("deletionVector")
-                    ) == _dv_uid(removes[p].get("deletionVector")):
-                        continue  # unchanged-DV re-add: no row changed
-                    fp = os.path.join(self.path, urllib.parse.unquote(p))
-                    if p in removes:
-                        # DV transition on a surviving path: newly-dead
-                        # positions (new minus old) stream as deletes;
-                        # newly-LIVE positions (old minus new — a
-                        # shrunk, cleared, or replaced vector, e.g.
-                        # RESTORE re-adding the file without its DV)
-                        # stream as inserts.  (ADVICE r8: non-growing
-                        # transitions were silently dropped.)
-                        old_a = (state.files or {}).get(p) or {}
-                        nd = live_dv(a)
-                        od = live_dv(old_a)
-                        pv = dict(a.get("partitionValues") or {})
-                        if nd:
-                            out.append(
-                                _DeltaCDFPartition(
-                                    "dv_delta", fp, pv, nd, od, v,
-                                    self.path, fields, part_cols, True,
-                                )
-                            )
-                        if od:
-                            out.append(
-                                _DeltaCDFPartition(
-                                    "dv_restore", fp, pv, nd, od, v,
-                                    self.path, fields, part_cols, True,
-                                )
-                            )
-                        continue
-                    out.append(
-                        _DeltaCDFPartition(
-                            "insert", fp,
-                            dict(a.get("partitionValues") or {}),
-                            live_dv(a), None, v, self.path,
-                            fields, part_cols, True,
-                        )
-                    )
-                for p, r in removes.items():
-                    if not r.get("dataChange", True) or p in adds:
-                        continue
-                    old_a = (state.files or {}).get(p)
-                    if old_a is None:
-                        continue
-                    out.append(
-                        _DeltaCDFPartition(
-                            "delete",
-                            os.path.join(
-                                self.path, urllib.parse.unquote(p)
-                            ),
-                            dict(old_a.get("partitionValues") or {}),
-                            live_dv(old_a), None, v, self.path,
-                            fields, part_cols, True,
-                        )
-                    )
-            for a in acts:
-                state.apply(a)
         return out
 
     def read(self, partition: _DeltaCDFPartition):
         import pyarrow.parquet as pq
 
-        affected: set[int] = set()
-        if partition.kind in ("dv_delta", "dv_restore"):
-            # resolve the position delta BEFORE touching the data file
-            # — the pure-growth transition plans a dv_restore partition
-            # whose restored set is empty, and it must cost two bitmap
-            # reads, not a parquet scan
-            new_pos = (
-                set(_load_dv_positions(partition.table_root, partition.dv))
-                if partition.dv
+        if partition.kind == "dv":
+            # resolve the position deltas BEFORE touching the data
+            # file: a transition that changes no live row costs two
+            # bitmap reads, not a parquet scan
+            new_pos, old_pos = (
+                set(_load_dv_positions(partition.table_root, d)) if d
                 else set()
+                for d in (partition.dv, partition.old_dv)
             )
-            old_pos = (
-                set(
-                    _load_dv_positions(
-                        partition.table_root, partition.old_dv
-                    )
-                )
-                if partition.old_dv
-                else set()
-            )
-            affected = (
-                new_pos - old_pos
-                if partition.kind == "dv_delta"
-                else old_pos - new_pos
-            )
-            if not affected:
+            dead, revived = new_pos - old_pos, old_pos - new_pos
+            if not (dead or revived):
                 return
         table = pq.read_table(partition.file_path)
         cols = set(table.column_names)
@@ -578,29 +467,27 @@ class DeltaCDFStreamReader(DataSourceStreamReader):
             and (partition.pvals_in_action or name not in cols)
         }
 
-        def value(row, name):
-            if name in part_typed:
-                return part_typed[name]
-            return row.get(name) if name in cols else None
+        def emit(row, ctype):
+            return tuple(
+                [
+                    part_typed[n] if n in part_typed
+                    else (row.get(n) if n in cols else None)
+                    for n, _s in partition.fields
+                ]
+                + [ctype, partition.version]
+            )
 
         if partition.kind == "cdc":
             for row in table.to_pylist():
-                yield tuple(
-                    [value(row, n) for n, _s in partition.fields]
-                    + [row.get("_change_type"), partition.version]
-                )
+                yield emit(row, row.get("_change_type"))
             return
-        if partition.kind in ("dv_delta", "dv_restore"):
-            # materialize ONLY the affected positions (Table.take) —
-            # a point delete/restore on a large file stays O(changed
-            # rows)
-            ctype = "delete" if partition.kind == "dv_delta" else "insert"
-            idx = sorted(p for p in affected if p < table.num_rows)
-            for row in table.take(idx).to_pylist():
-                yield tuple(
-                    [value(row, n) for n, _s in partition.fields]
-                    + [ctype, partition.version]
-                )
+        if partition.kind == "dv":
+            # materialize ONLY the affected positions (Table.take) — a
+            # point delete/restore on a large file stays O(changed rows)
+            for ctype, pos in (("delete", dead), ("insert", revived)):
+                idx = sorted(p for p in pos if p < table.num_rows)
+                for row in table.take(idx).to_pylist() if idx else ():
+                    yield emit(row, ctype)
             return
         # delete: the file's previously-live rows (old DV applied);
         # insert: its live rows (own DV subtracted) — same scan shape,
@@ -610,14 +497,9 @@ class DeltaCDFStreamReader(DataSourceStreamReader):
             if partition.dv
             else set()
         )
-        ctype = "delete" if partition.kind == "delete" else "insert"
         for pos, row in enumerate(table.to_pylist()):
-            if pos in dead:
-                continue
-            yield tuple(
-                [value(row, n) for n, _s in partition.fields]
-                + [ctype, partition.version]
-            )
+            if pos not in dead:
+                yield emit(row, partition.kind)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the engine checkpoint

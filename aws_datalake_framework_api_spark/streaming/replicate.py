@@ -1,10 +1,11 @@
-"""Cross-format CDC REPLICATION: stream a Delta table's change feed
+"""Cross-format CDC REPLICATION: drain a Delta table's change feed
 into an Iceberg replica (SURVEY.md §2 B9 ∪ B1 composition, r8).
 
 This is the Flink-CDC-into-Iceberg shape built from this engine's own
 parts: the Delta side WRITES row-level changes (``merge_delta`` cdc
-files), the ``delta_stream`` ``readChangeFeed`` tail streams them,
-and each micro-batch lands on the replica as
+files), a bounded catch-up (``streaming/catchup.py``) reads everything
+the replica has not seen with ``read_delta_changes``, and that batch
+lands on the replica as
 
 1. one **equality-delete** commit for the net-dead keys
    (``delete_by_key_iceberg`` — O(keys), reads NO data file), then
@@ -15,12 +16,14 @@ and each micro-batch lands on the replica as
 so replica cost per batch rides the CHANGE volume on both the read
 and the write side — the only shape that survives a 100 TB source.
 
-Exactly-once: the batch is gated on the replica's ``txn.<app_id>``
-property (read BEFORE applying, advanced atomically by the final
-merge commit).  A crash between the delete and the merge replays the
-whole batch: the watermark hasn't advanced, the re-issued equality
-delete re-kills already-dead keys (a semantic no-op), and the merge
-lands once.  Within a batch, the NET effect per key is applied — the
+Exactly-once comes from the replica's ``txn.<app_id>`` property
+alone; there is no stream checkpoint.  The property holds the source
+version the replica has applied: each run reads it, drains the
+changes after it with the source's latest version as batch id, and
+the final merge commit advances it atomically.  A crash between the
+delete and the merge replays the whole range on the next run: the
+watermark hasn't advanced, the re-issued equality delete re-kills
+already-dead keys (a semantic no-op), and the merge lands once.  Within a batch, the NET effect per key is applied — the
 last change by ``_commit_version`` wins, with add-type changes
 (insert/update_postimage) outranking remove-types within the same
 version because a copy-on-write rewrite emits delete+insert pairs
@@ -39,15 +42,13 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.readers import load_table
-
-#: change types that carry the key's surviving row version
-_PLUS = ("insert", "update_postimage")
+from .catchup import _PLUS, catch_up
 
 
 def replicate_batch(
     replica: str, on: list[str], app_id: str
 ):
-    """foreachBatch callable applying one CDF micro-batch to the
+    """Per-batch callable applying one batch of CDF rows to the
     Iceberg replica as net per-key effects."""
     from ..sources.iceberg import (
         delete_by_key_iceberg,
@@ -58,14 +59,14 @@ def replicate_batch(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         # A deletes-only batch advances the watermark too: the
         # zero-change merge commits a properties-only txn advance
-        # (no snapshot — merge_iceberg, ADVICE r8), so a checkpoint
-        # replay of such a batch skips ENTIRELY instead of
+        # (no snapshot — merge_iceberg, ADVICE r8), so a replay of
+        # such a batch skips ENTIRELY instead of
         # re-committing a redundant (if idempotent) delete snapshot.
         spark = batch_df.sparkSession
         if int(batch_id) <= last_txn_version_iceberg(
             spark, replica, app_id
         ):
-            return  # checkpoint replayed an applied batch
+            return  # a replay of an applied batch
         cols = [
             c for c in batch_df.columns
             if c not in ("_change_type", "_commit_version")
@@ -79,11 +80,9 @@ def replicate_batch(
         # equality-delete staging, and merge_iceberg's ~6 planning
         # actions (dup check, key bounds, touched/insert counts, the
         # two staging writes) — otherwise re-executes this lineage,
-        # and its root is the Python-DataSource CDF stream read (a
-        # JVM→Python→JVM hop per re-run).  Measured at sf0.1: the
-        # foreachBatch apply dropped ~2.8× (5.9 s → 2.1 s warm).  The
-        # frame is one micro-batch's net changes — bounded by change
-        # volume, the same working set the merge stages anyway.
+        # the change-feed read with its per-commit scans and DV
+        # joins.  The frame is one batch's net changes — bounded by
+        # change volume, the same working set the merge stages anyway.
         from ..sources.merge_clauses import pin
 
         net = pin(
@@ -112,25 +111,20 @@ def run_replication(
     source_table: str,
     replica: str,
     on: list[str],
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     app_id: str = "delta-replica",
 ) -> None:
-    """Tail ``source_table``'s change feed from genesis and converge
-    the Iceberg ``replica`` to it."""
-    from .delta_source import register
-    from .drive import run_stream_to_completion
+    """Converge the Iceberg ``replica`` to ``source_table``: apply the
+    source's changes after the replica's watermark (from genesis on
+    the first run) as one batch.  ``checkpoint_dir`` is ignored — the
+    replica's watermark is the only resume state; the parameter stays
+    for callers that still pass one."""
+    from ..sources.iceberg import last_txn_version_iceberg
 
-    register(spark)
-    run_stream_to_completion(
-        lambda: (
-            spark.readStream.format("delta_stream")
-            .option("readChangeFeed", "true")
-            .load(source_table)
-            .writeStream.trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(replicate_batch(replica, on, app_id))
-            .start()
-        )
+    catch_up(
+        spark, source_table,
+        last_txn_version_iceberg(spark, replica, app_id),
+        replicate_batch(replica, on, app_id),
     )
 
 
@@ -161,13 +155,13 @@ def run_replication(
 def stream_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END cross-format replication: a CDF-enabled Delta table
     takes a full-clause MERGE (update/delete/insert); its change feed
-    streams into an empty Iceberg replica as equality-deletes + MOR
+    drains into an empty Iceberg replica as equality-deletes + MOR
     merges; the REPLICA's final state must equal the oracle's
     recompute of the Delta table's final state.  A wrong net-effect
     precedence (a COW rewrite's delete+insert pair mis-resolved), a
     lost delete, or a double-applied replay all fail the hash
-    compare.  (r8 — composes the round's CDF writer, CDF stream tail,
-    equality deletes, and merge-on-read MERGE.)"""
+    compare.  (r8 — composes the round's CDF writer, the change-feed
+    catch-up, equality deletes, and merge-on-read MERGE.)"""
     from ..functions.numeric import money_sum
     from ..sources.delta import alter_table_properties_delta, merge_delta
     from ..sources.delta import write_delta
@@ -200,9 +194,7 @@ def stream_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )                                                            # v2
     replica = os.path.join(tmp, "replica")
     write_iceberg(orders.limit(0).coalesce(1), replica, mode="error")
-    run_replication(
-        spark, t, replica, ["o_orderkey"], os.path.join(tmp, "ckpt")
-    )
+    run_replication(spark, t, replica, ["o_orderkey"])
     return read_iceberg(spark, replica).groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
         money_sum("o_totalprice").alias("total_price"),

@@ -38,7 +38,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..registry import query
-from ..sources.delta import history_delta, last_txn_version, read_delta, write_delta
+from ..sources.delta import (
+    _table_version,
+    history_delta,
+    last_txn_version,
+    read_delta,
+    write_delta,
+)
 from ..sources.readers import load_table
 
 FEED_SCHEMA = StructType(
@@ -63,12 +69,12 @@ def merge_microbatch(path: str, batch_df: DataFrame, batch_id: int) -> None:
     batch_id)``.  Replay-safe: a batch at or below the committed mark
     is skipped without a commit.  The first batch creates the table."""
     spark = batch_df.sparkSession
-    try:
-        if batch_id <= last_txn_version(spark, path, APP_ID):
-            return  # checkpoint replayed a batch the table already has
-        cur = read_delta(spark, path)
-    except FileNotFoundError:
+    if batch_id <= last_txn_version(spark, path, APP_ID):
+        return  # checkpoint replayed a batch the table already has
+    if _table_version(path) is None:
         cur = spark.createDataFrame([], FEED_SCHEMA)
+    else:
+        cur = read_delta(spark, path)
     w = Window.partitionBy("k").orderBy(F.desc("seq"))
     merged = (
         cur.unionByName(batch_df.select("k", "price_cents", "seq"))

@@ -189,3 +189,23 @@ def test_restore_to_missing_version_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="not reconstructable"):
         restore_delta(spark, path, 99)
     assert _sorted_rows(read_delta(spark, path)) == [(1, "a", 1.0)]
+
+
+def test_last_txn_version_is_minus_one_without_a_table(spark, tmp_path):
+    """A sink that has never committed reads watermark -1, whether its
+    path does not exist yet or holds no Delta log — the first batch's
+    replay guard must not raise."""
+    from aws_datalake_framework_api_spark.sources.delta import (
+        last_txn_version,
+    )
+
+    missing = str(tmp_path / "never_written")
+    assert last_txn_version(spark, missing, "app") == -1
+    empty = tmp_path / "empty_dir"
+    empty.mkdir()
+    assert last_txn_version(spark, str(empty), "app") == -1
+    write_delta(
+        _df(spark, [(1, "a", 1.0)]), str(empty), mode="error",
+        txn=("app", 3),
+    )
+    assert last_txn_version(spark, str(empty), "app") == 3

@@ -195,8 +195,8 @@ def test_cross_format_replication_converges_and_replays_noop(
     """Delta→Iceberg CDC replication (streaming/replicate.py): the
     replica converges to the source after every incremental run —
     across a DV delete, a re-insert of a deleted key, and a
-    full-clause MERGE — and a fresh-checkpoint replay of the whole
-    feed is a state no-op (txn watermark)."""
+    full-clause MERGE — and a re-run with nothing new commits nothing
+    (the txn watermark already holds the source's latest version)."""
     from aws_datalake_framework_api_spark.sources.delta import (
         alter_table_properties_delta,
         delete_where_delta,
@@ -224,25 +224,25 @@ def test_cross_format_replication_converges_and_replays_noop(
     def rep_state():
         return _state(spark, read_iceberg, replica)
 
-    ckpt = str(tmp_path / "ck")
-    run_replication(spark, t, replica, ["k"], ckpt)
+    run_replication(spark, t, replica, ["k"])
     assert rep_state() == src_state()
     delete_where_delta(spark, t, F.col("k") == 2)           # DV delete
-    run_replication(spark, t, replica, ["k"], ckpt)
+    run_replication(spark, t, replica, ["k"])
     assert rep_state() == src_state() and (2, 2, 1) not in rep_state()
     merge_delta(                                            # re-insert 2,
         spark, t,                                           # update 1, add 5
         _df(spark, [(1, 100, 2), (2, 22, 2), (5, 5, 2)]), on=["k"],
     )
-    run_replication(spark, t, replica, ["k"], ckpt)
+    run_replication(spark, t, replica, ["k"])
     assert rep_state() == src_state() == {
         (1, 100, 2), (2, 22, 2), (3, 3, 1), (4, 4, 1), (5, 5, 2),
     }
-    # fresh checkpoint: the whole feed replays as batch 0 ≤ watermark
+    # re-run with no new source version: the watermark already holds
+    # the latest version, so the catch-up commits nothing
     n_meta = len(glob.glob(
         os.path.join(replica, "metadata", "v*.metadata.json")
     ))
-    run_replication(spark, t, replica, ["k"], str(tmp_path / "ck2"))
+    run_replication(spark, t, replica, ["k"])
     assert rep_state() == src_state()
     assert len(glob.glob(
         os.path.join(replica, "metadata", "v*.metadata.json")
@@ -294,3 +294,152 @@ def test_deletes_only_replication_batch_advances_watermark(spark, tmp_path):
     apply(batch, 0)
     assert meta() == (n_versions, n_snapshots)
     assert _state(spark, read_iceberg, replica) == {(1, 1, 1)}
+
+
+def _n_meta(replica):
+    return len(glob.glob(os.path.join(replica, "metadata", "v*.metadata.json")))
+
+
+def test_replication_crash_between_delete_and_merge_replays_once(
+    spark, tmp_path, monkeypatch
+):
+    """A run killed after the equality-delete commit and before the
+    watermark-carrying merge leaves the watermark where it was, so the
+    next run re-reads the same version range and lands it exactly
+    once: the replica equals the source, the watermark equals the
+    source's latest version, and a further run commits nothing."""
+    from aws_datalake_framework_api_spark.sources import iceberg
+    from aws_datalake_framework_api_spark.sources.delta import (
+        _table_version,
+        alter_table_properties_delta,
+    )
+    from aws_datalake_framework_api_spark.streaming.replicate import (
+        run_replication,
+    )
+
+    t = str(tmp_path / "src")
+    replica = str(tmp_path / "replica")
+    write_delta(
+        _df(spark, [(1, 1, 1), (2, 2, 1), (3, 3, 1), (4, 4, 1)])
+        .coalesce(1),
+        t,
+    )
+    alter_table_properties_delta(
+        spark, t, {"delta.enableChangeDataFeed": "true"}
+    )
+    write_iceberg(_df(spark, []).coalesce(1), replica)
+    run_replication(spark, t, replica, ["k"])
+    done = last_txn_version_iceberg(spark, replica, "delta-replica")
+    merge_delta(                          # update 1, delete 2, insert 5
+        spark, t,
+        _df(spark, [(1, 100, 2), (2, 0, 2), (5, 5, 2)]), on=["k"],
+        clauses=[
+            {"when": "matched", "action": "update",
+             "condition": "s.v > t.v"},
+            {"when": "matched", "action": "delete"},
+            {"when": "not_matched", "action": "insert"},
+        ],
+    )
+    real_merge = iceberg.merge_iceberg
+    calls = []
+
+    def killed_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("killed between delete and merge")
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(iceberg, "merge_iceberg", killed_once)
+    n_meta = _n_meta(replica)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_replication(spark, t, replica, ["k"])
+    # the equality delete committed; the watermark did not move
+    assert _n_meta(replica) == n_meta + 1
+    assert (2, 2, 1) not in _state(spark, read_iceberg, replica)
+    assert last_txn_version_iceberg(spark, replica, "delta-replica") == done
+
+    run_replication(spark, t, replica, ["k"])
+    assert _state(spark, read_iceberg, replica) == _state(
+        spark, read_delta, t
+    ) == {(1, 100, 2), (3, 3, 1), (4, 4, 1), (5, 5, 2)}
+    assert last_txn_version_iceberg(
+        spark, replica, "delta-replica"
+    ) == _table_version(t)
+    n_meta = _n_meta(replica)
+    run_replication(spark, t, replica, ["k"])
+    assert _n_meta(replica) == n_meta
+
+
+def test_change_feed_consumers_start_no_stream(spark, tmp_path, monkeypatch):
+    """Replication and the CDF view drain the change feed without a
+    Structured Streaming query or a checkpoint directory: with
+    ``DataStreamWriter.start`` refusing, both converge from genesis,
+    after a MERGE, and commit nothing on a run with no new version."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from aws_datalake_framework_api_spark.sources.delta import (
+        alter_table_properties_delta,
+        history_delta,
+    )
+    from aws_datalake_framework_api_spark.streaming.cdf_mv import (
+        run_cdf_mv_stream,
+    )
+    from aws_datalake_framework_api_spark.streaming.replicate import (
+        run_replication,
+    )
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("a change-feed consumer started a stream")
+
+    monkeypatch.setattr(DataStreamWriter, "start", refuse)
+    t = str(tmp_path / "src")
+    replica = str(tmp_path / "replica")
+    view = str(tmp_path / "mv")
+    cols = "o_orderkey long, o_orderpriority string, o_totalprice double"
+    write_delta(
+        spark.createDataFrame(
+            [(k, f"p{k % 3}", k * 1.25) for k in range(1, 13)], cols
+        ).coalesce(1),
+        t,
+    )
+    alter_table_properties_delta(
+        spark, t, {"delta.enableChangeDataFeed": "true"}
+    )
+    write_iceberg(spark.createDataFrame([], cols).coalesce(1), replica)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def run_and_check():
+        run_replication(spark, t, replica, ["o_orderkey"])
+        run_cdf_mv_stream(spark, t, view)
+        src = read_delta(spark, t)
+        assert rows(read_iceberg(spark, replica)) == rows(src)
+        recompute = src.groupBy("o_orderpriority").agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            .cast("long").alias("units"),
+        )
+        assert rows(read_delta(spark, view)) == rows(recompute)
+
+    run_and_check()                                   # from genesis
+    merge_delta(
+        spark, t,
+        spark.createDataFrame(
+            [(3, "p0", 99.5), (4, "p1", 0.0), (20, "p2", 7.75)], cols
+        ),
+        on=["o_orderkey"],
+        clauses=[
+            {"when": "matched", "action": "update",
+             "condition": "s.o_totalprice > t.o_totalprice"},
+            {"when": "matched", "action": "delete"},
+            {"when": "not_matched", "action": "insert"},
+        ],
+    )
+    run_and_check()                                   # after one MERGE
+    n_meta, n_view = _n_meta(replica), len(history_delta(spark, view))
+    run_and_check()                                   # nothing new
+    assert _n_meta(replica) == n_meta
+    assert len(history_delta(spark, view)) == n_view
+    assert sorted(os.listdir(tmp_path)) == ["mv", "replica", "src"]
