@@ -332,7 +332,8 @@ class Catalog:
                 "unmatched": len(set(entity_ids) - matched_ids)}
 
     def delete_where(self, entity_type: str, entity_ids: list[int]) -> dict:
-        """Batch deregistration (anti-join rewrite), one write."""
+        """Batch deregistration (anti-join rewrite), one write — none
+        when no id matched."""
         existing = self.load(entity_type)
         matched = {
             r["entity_id"]
@@ -340,10 +341,11 @@ class Catalog:
             .select("entity_id")
             .collect()
         }
-        self._overwrite(
-            entity_type,
-            existing.filter(~F.col("entity_id").isin(entity_ids)),
-        )
+        if matched:
+            self._overwrite(
+                entity_type,
+                existing.filter(~F.col("entity_id").isin(entity_ids)),
+            )
         for i in entity_ids:
             self._audit(
                 f"{entity_type}/delete",
@@ -381,13 +383,15 @@ class Catalog:
         return {"statusCode": 200, "matched": matched}
 
     def delete(self, entity_type: str, entity_id: int) -> dict:
-        """A9: deregister — anti-join rewrite of ``DELETE FROM``."""
+        """A9: deregister — anti-join rewrite of ``DELETE FROM``; a
+        missing id reports 404 and writes nothing."""
         existing = self.load(entity_type)
         matched = existing.filter(F.col("entity_id") == entity_id).count()
-        self._overwrite(
-            entity_type,
-            existing.filter(F.col("entity_id") != entity_id),
-        )
+        if matched:
+            self._overwrite(
+                entity_type,
+                existing.filter(F.col("entity_id") != entity_id),
+            )
         self._audit(
             f"{entity_type}/delete",
             str(entity_id),

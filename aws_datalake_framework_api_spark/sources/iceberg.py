@@ -28,14 +28,16 @@ Equality deletes (content=2, the merge-on-read DELETE shape Flink
 CDC writes) are both READ (null-safe anti-join on the delete's
 equality columns, strict sequence gating, partition scoping) and
 WRITTEN (``delete_by_key_iceberg`` — an O(keys) point delete that
-never reads the table).
+never reads the table; with ``rows=`` it appends the keys' new
+versions in the same snapshot, the spec's upsert shape that CDC
+replication commits once per drain).
 
 Honest gates (refuse, never misread): equality deletes on
-renamed-column tables or nested fields, compaction over equality
-deletes, unsupported partition transforms for *pruning* (files
-under bucket/truncate/day transforms are conservatively KEPT — the
-row filter still applies, so results stay correct and only pruning
-is lost), snappy/zstd-compressed Avro metadata, and type evolution
+renamed-column tables or nested fields, unsupported partition
+transforms for *pruning* (files under bucket/truncate/day transforms
+are conservatively KEPT — the row filter still applies, so results
+stay correct and only pruning is lost), snappy/zstd-compressed Avro
+metadata, and type evolution
 (int→long promotion).  Column resolution is BY NAME on the fast path
 and BY PARQUET FIELD ID when the metadata's schema history proves a
 rename happened (r6 — see the schema-evolution-reads section):
@@ -2742,10 +2744,11 @@ def set_properties_iceberg(path: str, props: dict[str, str]) -> int:
     snapshot — the iceberg-spark ``ALTER TABLE SET TBLPROPERTIES``
     shape (a pure metadata.json rewrite; time travel, sequence
     numbers, and every manifest are untouched).  Used by
-    :func:`merge_iceberg` to advance a ``txn.<app_id>`` watermark when
-    a replayed-exactly-once micro-batch nets ZERO row changes — the
-    alternative (skipping the commit) leaves the watermark behind and
-    every checkpoint replay re-commits its side effects (ADVICE r8)."""
+    :func:`merge_iceberg` and :func:`delete_by_key_iceberg` to advance
+    a ``txn.<app_id>`` watermark when a replayed-exactly-once
+    micro-batch nets ZERO row changes — the alternative (skipping the
+    commit) leaves the watermark behind and every checkpoint replay
+    re-commits its side effects (ADVICE r8)."""
     if not props:
         raise ValueError("set_properties_iceberg: nothing to set")
     meta = _load_metadata(path)
@@ -3237,7 +3240,11 @@ def delete_iceberg_rows(spark: SparkSession, path: str, condition) -> int:
 
 
 def delete_by_key_iceberg(
-    spark: SparkSession, path: str, keys: DataFrame
+    spark: SparkSession,
+    path: str,
+    keys: DataFrame,
+    rows: DataFrame | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Merge-on-read DELETE BY KEY via an equality delete file
     (content=2): stage the distinct ``keys`` rows as parquet, commit a
@@ -3250,8 +3257,23 @@ def delete_by_key_iceberg(
     sequence gate — only data committed BEFORE this delete is
     affected, so a later re-insert of the same key survives.
     ``keys``'s columns must be a subset of the table's top-level
-    columns with exactly the declared types."""
+    columns with exactly the declared types.
+
+    ``rows`` (optional, the table's exact schema) append as new data
+    files IN THE SAME SNAPSHOT: they share the delete's sequence
+    number, so the strict gate spares them — the Iceberg spec's
+    upsert shape, the one Flink's CDC sink writes (delete every
+    changed key, append each key's surviving row).  ``txn=(app_id,
+    version)`` is :func:`merge_iceberg`'s exactly-once watermark: it
+    rides the committing metadata version, a version at or below the
+    stored ``txn.<app_id>`` commits nothing, and a call that stages
+    neither a delete nor a row advances it as a properties-only
+    commit.  Returns the table's metadata version afterwards."""
     meta = _load_metadata(path)
+    if txn is not None and int(txn[1]) <= int(
+        (meta.get("properties") or {}).get(f"txn.{txn[0]}", -1)
+    ):
+        return max(_metadata_versions(path))
     schema_json = _current_schema(meta)
     by_name = {f["name"]: f for f in schema_json["fields"]}
     cols = list(keys.columns)
@@ -3275,46 +3297,102 @@ def delete_by_key_iceberg(
         raise ValueError(
             f"key schema mismatch: table declares {declared}, keys have {got}"
         )
-    snap = _snapshot_by_id(meta, None)
-    if snap is None:
-        return max(_metadata_versions(path))
-    ddir = os.path.join(path, "data")
-    os.makedirs(ddir, exist_ok=True)
-    staging = os.path.join(path, f"_stage-{uuid.uuid4().hex[:12]}")
-    # distinct: duplicate delete rows are legal but pure waste; sorted
-    # within partitions so the file carries tight column bounds
-    _stamp_field_ids(
-        keys.distinct().sortWithinPartitions(*cols), schema_json
-    ).write.mode("errorifexists").parquet(staging)
-    del_files: list[dict] = []
-    for fname in sorted(os.listdir(staging)):
-        if not fname.endswith(".parquet"):
-            continue
-        dst = os.path.join(ddir, f"eq-delete-{uuid.uuid4().hex[:8]}-{fname}")
-        os.replace(os.path.join(staging, fname), dst)
-        n, lower, upper = _file_stats(dst, schema_json)
-        if n == 0:
-            os.unlink(dst)
-            continue
-        del_files.append(
-            {
-                "content": 2,  # equality deletes
-                "file_path": dst,
-                "file_format": "PARQUET",
-                "partition": {},  # unpartitioned spec — applies globally
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(dst),
-                "lower_bounds": lower,
-                "upper_bounds": upper,
-                "equality_ids": eq_ids,
-            }
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    if not del_files:
-        return max(_metadata_versions(path))
-    manifest = _delete_manifest(path, del_files, schema_json)
+    if rows is not None:
+        declared = {
+            f.name: f.dataType.simpleString()
+            for f in _schema_to_spark(schema_json).fields
+        }
+        got = {f.name: f.dataType.simpleString() for f in rows.schema.fields}
+        if declared != got:
+            raise ValueError(
+                f"schema mismatch: table declares {declared}, rows have {got}"
+            )
     carry = _carry_manifests(path, meta)
-    return _commit_snapshot(path, meta, [manifest], carry, "delete")
+    del_files: list[dict] = []
+    if any(
+        int(m.get("content") or 0) == 0
+        and (m.get("added_rows_count"), m.get("existing_rows_count"))
+        != (0, 0)
+        for m in carry
+    ):
+        # the keys can only kill rows committed before this snapshot:
+        # a table with none (no snapshot, or a replica's first drain)
+        # stages no delete, and its readers pay no anti-join for it
+        ddir = os.path.join(path, "data")
+        os.makedirs(ddir, exist_ok=True)
+        staging = os.path.join(path, f"_stage-{uuid.uuid4().hex[:12]}")
+        # distinct: duplicate delete rows are legal but pure waste;
+        # sorted within partitions so the file carries tight bounds
+        _stamp_field_ids(
+            keys.distinct().sortWithinPartitions(*cols), schema_json
+        ).write.mode("errorifexists").parquet(staging)
+        for fname in sorted(os.listdir(staging)):
+            if not fname.endswith(".parquet"):
+                continue
+            dst = os.path.join(
+                ddir, f"eq-delete-{uuid.uuid4().hex[:8]}-{fname}"
+            )
+            os.replace(os.path.join(staging, fname), dst)
+            n, lower, upper = _file_stats(dst, schema_json)
+            if n == 0:
+                os.unlink(dst)
+                continue
+            del_files.append(
+                {
+                    "content": 2,  # equality deletes
+                    "file_path": dst,
+                    "file_format": "PARQUET",
+                    "partition": {},  # unpartitioned spec — applies globally
+                    "record_count": n,
+                    "file_size_in_bytes": os.path.getsize(dst),
+                    "lower_bounds": lower,
+                    "upper_bounds": upper,
+                    "equality_ids": eq_ids,
+                }
+            )
+        shutil.rmtree(staging, ignore_errors=True)
+    part_spec = _spec_from_meta(meta, schema_json)
+    staged = (
+        []
+        if rows is None
+        else _stage_data_files(rows, path, part_spec, schema_json)
+    )
+    if not del_files and not staged:
+        if txn is None:
+            return max(_metadata_versions(path))
+        return set_properties_iceberg(
+            path, {f"txn.{txn[0]}": str(int(txn[1]))}
+        )
+    new_manifests = []
+    if del_files:
+        new_manifests.append(_delete_manifest(path, del_files, schema_json))
+    if staged:
+        new_manifests.append(
+            _write_manifest(
+                path,
+                [
+                    {
+                        "status": 1,
+                        "snapshot_id": None,
+                        "sequence_number": None,
+                        "file_sequence_number": None,
+                        "data_file": f,
+                    }
+                    for f in staged
+                ],
+                part_spec, 0, "data", schema_json,
+                spec_id=int(meta.get("default-spec-id", 0)),
+            )
+        )
+    if txn is not None:
+        # the watermark advances IN the committing metadata version
+        props = dict(meta.get("properties") or {})
+        props[f"txn.{txn[0]}"] = str(int(txn[1]))
+        meta["properties"] = props
+    op = "overwrite" if del_files and staged else (
+        "delete" if del_files else "append"
+    )
+    return _commit_snapshot(path, meta, new_manifests, carry, op)
 
 
 def upsert_iceberg(
@@ -4469,8 +4547,9 @@ def rewrite_position_delete_files(spark: SparkSession, path: str) -> dict:
 def last_txn_version_iceberg(
     spark: SparkSession, path: str, app_id: str
 ) -> int:
-    """Highest ``txn`` watermark committed for ``app_id`` via
-    :func:`merge_iceberg`'s ``txn=`` parameter, or -1.  Stored as
+    """Highest ``txn`` watermark committed for ``app_id`` via the
+    ``txn=`` parameter of :func:`merge_iceberg` or
+    :func:`delete_by_key_iceberg`, or -1.  Stored as
     table property ``txn.<app_id>`` so it survives snapshot expiry —
     a restarted streaming writer reads this to know which
     micro-batches already landed (the Delta connector's

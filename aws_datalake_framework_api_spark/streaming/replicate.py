@@ -5,29 +5,27 @@ This is the Flink-CDC-into-Iceberg shape built from this engine's own
 parts: the Delta side WRITES row-level changes (``merge_delta`` cdc
 files), a bounded catch-up (``streaming/catchup.py``) reads everything
 the replica has not seen with ``read_delta_changes``, and that batch
-lands on the replica as
-
-1. one **equality-delete** commit for the net-dead keys
-   (``delete_by_key_iceberg`` — O(keys), reads NO data file), then
-2. one **merge-on-read MERGE** for the net-live rows
-   (``merge_iceberg(strategy="mor")`` — commit bytes ∝ changed rows,
-   SCALE.md r8),
-
-so replica cost per batch rides the CHANGE volume on both the read
-and the write side — the only shape that survives a 100 TB source.
+lands on the replica as ONE snapshot (``delete_by_key_iceberg`` with
+``rows=``): an equality delete of every changed key plus an append of
+each key's net-live row.  The appended rows share the delete's
+sequence number, so the strict equality-delete gate spares them and
+kills only the older versions.  No replica data file is read and no
+position delete is written: replica cost per batch rides the CHANGE
+volume on both the read and the write side — the only shape that
+survives a 100 TB source.
 
 Exactly-once comes from the replica's ``txn.<app_id>`` property
 alone; there is no stream checkpoint.  The property holds the source
 version the replica has applied: each run reads it, drains the
 changes after it with the source's latest version as batch id, and
-the final merge commit advances it atomically.  A crash between the
-delete and the merge replays the whole range on the next run: the
-watermark hasn't advanced, the re-issued equality delete re-kills
-already-dead keys (a semantic no-op), and the merge lands once.  Within a batch, the NET effect per key is applied — the
-last change by ``_commit_version`` wins, with add-type changes
-(insert/update_postimage) outranking remove-types within the same
-version because a copy-on-write rewrite emits delete+insert pairs
-for carried rows whose net is "still here".
+the batch's snapshot advances it in the same metadata version.  A
+crash before that version is claimed leaves nothing committed (only
+unreferenced staged files), so the next run re-reads the same range
+and lands it once.  Within a batch, the NET effect per key is
+applied — the last change by ``_commit_version`` wins, with add-type
+changes (insert/update_postimage) outranking remove-types within the
+same version because a copy-on-write rewrite emits delete+insert
+pairs for carried rows whose net is "still here".
 """
 
 from __future__ import annotations
@@ -49,24 +47,11 @@ def replicate_batch(
     replica: str, on: list[str], app_id: str
 ):
     """Per-batch callable applying one batch of CDF rows to the
-    Iceberg replica as net per-key effects."""
-    from ..sources.iceberg import (
-        delete_by_key_iceberg,
-        last_txn_version_iceberg,
-        merge_iceberg,
-    )
+    Iceberg replica as net per-key effects, in one snapshot."""
+    from ..sources.iceberg import delete_by_key_iceberg
+    from ..sources.merge_clauses import pin
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # A deletes-only batch advances the watermark too: the
-        # zero-change merge commits a properties-only txn advance
-        # (no snapshot — merge_iceberg, ADVICE r8), so a replay of
-        # such a batch skips ENTIRELY instead of
-        # re-committing a redundant (if idempotent) delete snapshot.
-        spark = batch_df.sparkSession
-        if int(batch_id) <= last_txn_version_iceberg(
-            spark, replica, app_id
-        ):
-            return  # a replay of an applied batch
         cols = [
             c for c in batch_df.columns
             if c not in ("_change_type", "_commit_version")
@@ -76,31 +61,23 @@ def replicate_batch(
             F.desc("_commit_version"), F.desc(F.col("_is_plus"))
         )
         # Materialize the net-effect frame ONCE (r11 optimization,
-        # guide §5): every downstream action — the dead-key probe, the
-        # equality-delete staging, and merge_iceberg's ~6 planning
-        # actions (dup check, key bounds, touched/insert counts, the
-        # two staging writes) — otherwise re-executes this lineage,
-        # the change-feed read with its per-commit scans and DV
-        # joins.  The frame is one batch's net changes — bounded by
-        # change volume, the same working set the merge stages anyway.
-        from ..sources.merge_clauses import pin
-
+        # guide §5): the key and row staging writes both consume it
+        # and would otherwise each re-execute the change-feed read
+        # with its per-commit scans and DV joins.  The frame is one
+        # batch's net changes — bounded by change volume.
         net = pin(
             batch_df.withColumn("_is_plus", is_plus)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
         )
-        dead = net.filter(F.col("_is_plus") == 0).select(*on)
-        live = net.filter(F.col("_is_plus") == 1).select(*cols)
-        if dead.limit(1).count():
-            # O(keys) equality delete: no replica data file is read;
-            # idempotent under batch replay (re-killing dead keys)
-            delete_by_key_iceberg(spark, replica, dead)
-        # merge-on-read upsert carries the txn watermark — the batch
-        # is "applied" exactly when this commits
-        merge_iceberg(
-            spark, replica, live, on,
-            txn=(app_id, int(batch_id)), strategy="mor",
+        # every changed key dies (O(keys) equality delete: no replica
+        # data file is read) and each net-live row is re-appended in
+        # the same snapshot, which also carries the txn watermark — a
+        # replay of an applied batch id commits nothing
+        delete_by_key_iceberg(
+            batch_df.sparkSession, replica, net.select(*on),
+            rows=net.filter(F.col("_is_plus") == 1).select(*cols),
+            txn=(app_id, int(batch_id)),
         )
 
     return apply
@@ -155,13 +132,13 @@ def run_replication(
 def stream_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END cross-format replication: a CDF-enabled Delta table
     takes a full-clause MERGE (update/delete/insert); its change feed
-    drains into an empty Iceberg replica as equality-deletes + MOR
-    merges; the REPLICA's final state must equal the oracle's
+    drains into an empty Iceberg replica as one equality-delete +
+    append snapshot; the REPLICA's final state must equal the oracle's
     recompute of the Delta table's final state.  A wrong net-effect
     precedence (a COW rewrite's delete+insert pair mis-resolved), a
     lost delete, or a double-applied replay all fail the hash
     compare.  (r8 — composes the round's CDF writer, the change-feed
-    catch-up, equality deletes, and merge-on-read MERGE.)"""
+    catch-up, and equality deletes with a same-snapshot append.)"""
     from ..functions.numeric import money_sum
     from ..sources.delta import alter_table_properties_delta, merge_delta
     from ..sources.delta import write_delta

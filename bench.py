@@ -133,8 +133,8 @@ HEADLINE = [
     # after the first run its timing isolates the MERGE-ON-READ READ
     # path (two delete generations applied under sequence gates);
     # b_stream_replicate rebuilds end-to-end EVERY run — Delta CDF
-    # write, change-feed catch-up, equality-delete + MOR merge
-    # replication into Iceberg.  Totals before r9 exclude these two
+    # write, change-feed catch-up, replication into Iceberg as one
+    # equality-delete + append snapshot.  Totals before r9 exclude these two
     # (BASELINE.md note).
     "b_lake_iceberg_merge_mor",
     "b_stream_replicate",

@@ -178,8 +178,8 @@ def test_deltalog_catalog_is_time_travelable_delta(spark, cat):
 
 def test_catalog_mutations_are_one_delta_version_each(cat):
     """A6/A8/A9 each commit exactly one ``_delta_log`` version, and
-    the conditional-update no-op (A2/A8 attribute_exists semantics)
-    commits NOTHING."""
+    the no-ops — a conditional update (A2/A8 attribute_exists
+    semantics) or a delete that matches no id — commit NOTHING."""
     d = cat._table_dir("source_system")
     cat.create("source_system", 1, "alpha")
     cat.create("source_system", 2, "beta")
@@ -189,6 +189,11 @@ def test_catalog_mutations_are_one_delta_version_each(cat):
     assert res["matched"] == 0
     assert _delta_versions(d) == [0, 1, 2]  # no-op committed nothing
     cat.delete("source_system", 2)
+    assert _delta_versions(d) == [0, 1, 2, 3]
+    # deleting a missing id (alone or in a batch) is a 404 that
+    # commits nothing
+    assert cat.delete("source_system", 999)["statusCode"] == 404
+    assert cat.delete_where("source_system", [998, 999])["matched"] == 0
     assert _delta_versions(d) == [0, 1, 2, 3]
     rows = {r["entity_id"]: r["status"] for r in cat.load("source_system").collect()}
     assert rows == {1: "suspended"}

@@ -479,6 +479,81 @@ def test_compaction_folds_equality_deletes(spark, tmp_path):
     ]
 
 
+def test_delete_by_key_with_rows_is_one_upsert_snapshot(spark, tmp_path):
+    """``delete_by_key_iceberg(rows=, txn=)`` is the spec's upsert
+    shape in ONE snapshot: every key's older version dies, a key
+    deleted and re-appended in the same snapshot survives (the strict
+    sequence gate spares rows at the delete's own sequence), the
+    changelog emits the pair as delete + insert, compaction folds the
+    snapshot to the same rows, a replayed ``txn`` commits nothing,
+    ``rows`` must match the table schema, and a table with no rows
+    gets no delete file."""
+    from aws_datalake_framework_api_spark.sources.iceberg import (
+        _manifest_entries,
+        _metadata_versions,
+        _snapshot_by_id,
+        last_txn_version_iceberg,
+        read_iceberg_changes,
+        rewrite_data_files,
+    )
+
+    path = str(tmp_path / "t")
+    write_iceberg(
+        _df(spark, [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0)]),
+        path, mode="error",
+    )
+    before = history_iceberg(spark, path)[-1]["snapshot_id"]
+    n_snaps = len(history_iceberg(spark, path))
+    delete_by_key_iceberg(                  # update 1, delete 2, insert 4
+        spark, path, spark.createDataFrame([(1,), (2,), (4,)], "k int"),
+        rows=_df(spark, [(1, "a", 10.0), (4, "c", 4.0)]),
+        txn=("app", 7),
+    )
+    expect = [(1, "a", 10.0), (3, "b", 3.0), (4, "c", 4.0)]
+    assert _sorted_rows(read_iceberg(spark, path)) == expect
+    assert len(history_iceberg(spark, path)) == n_snaps + 1
+    assert last_txn_version_iceberg(spark, path, "app") == 7
+    meta = _load_metadata(path)
+    _data, pos, eq = _manifest_entries(path, meta, _snapshot_by_id(meta, None))
+    assert not pos and len(eq) >= 1         # equality deletes only
+    assert sorted(
+        (r["_change_type"], r["k"], r["v"])
+        for r in read_iceberg_changes(spark, path, before).collect()
+    ) == [
+        ("delete", 1, 1.0), ("delete", 2, 2.0),
+        ("insert", 1, 10.0), ("insert", 4, 4.0),
+    ]
+    # a replayed (or older) txn version commits nothing
+    n_meta = len(_metadata_versions(path))
+    for v in (7, 3):
+        delete_by_key_iceberg(
+            spark, path, spark.createDataFrame([(3,)], "k int"),
+            rows=_df(spark, [(3, "b", 30.0)]), txn=("app", v),
+        )
+    assert len(_metadata_versions(path)) == n_meta
+    assert _sorted_rows(read_iceberg(spark, path)) == expect
+    with pytest.raises(ValueError, match="schema mismatch"):
+        delete_by_key_iceberg(
+            spark, path, spark.createDataFrame([(3,)], "k int"),
+            rows=spark.createDataFrame([(3, "b")], "k int, part string"),
+        )
+    assert rewrite_data_files(spark, path)["files_before"] >= 1
+    assert _sorted_rows(read_iceberg(spark, path)) == expect
+    # a table holding no rows yet (a replica's first drain) stages no
+    # equality delete: the keys could kill nothing
+    empty = str(tmp_path / "e")
+    write_iceberg(_df(spark, []).coalesce(1), empty, mode="error")
+    delete_by_key_iceberg(
+        spark, empty, spark.createDataFrame([(1,)], "k int"),
+        rows=_df(spark, [(1, "a", 1.0)]),
+    )
+    assert not [
+        f for f in os.listdir(os.path.join(empty, "data"))
+        if f.startswith("eq-delete-")
+    ]
+    assert _sorted_rows(read_iceberg(spark, empty)) == [(1, "a", 1.0)]
+
+
 def test_partition_filter_prunes_at_planning_time(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.createDataFrame(

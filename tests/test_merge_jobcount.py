@@ -10,6 +10,13 @@ fails loudly.  Bounds are deliberately loose — AQE splits one action
 into 1-3 sub-jobs — but far below the pre-r12 counts (23 for the CDC
 copy-on-write merge, 21 for the merge-on-read merge, measured on this
 fixture before the fold).
+
+Replication applies a whole change-feed drain as one equality-delete +
+append snapshot: change-feed read, net-frame pin, key and row staging
+writes, commit — no replica scan, no merge planning.  Its budget is 8
+jobs per drain (15 at genesis and 30 incremental on this fixture when
+replication still ran a merge-on-read merge), and a drain with nothing
+new runs none.
 """
 
 import os
@@ -23,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from aws_datalake_framework_api_spark.sources.delta import (  # noqa: E402
     alter_table_properties_delta,
     merge_delta,
+    read_delta,
     write_delta,
 )
 from aws_datalake_framework_api_spark.sources.iceberg import (  # noqa: E402
@@ -31,6 +39,9 @@ from aws_datalake_framework_api_spark.sources.iceberg import (  # noqa: E402
     write_iceberg,
 )
 from aws_datalake_framework_api_spark.sources.readers import load_table  # noqa: E402
+from aws_datalake_framework_api_spark.streaming.replicate import (  # noqa: E402
+    run_replication,
+)
 
 CLAUSES = [
     {"when": "matched", "action": "update", "condition": "t.o_orderkey % 12 = 0"},
@@ -92,6 +103,36 @@ def test_iceberg_mor_merge_job_budget(spark, sf_dir, tmp_path):
         ),
     )
     assert n <= 19, f"merge-on-read merge issued {n} jobs (budget 19)"
+
+
+def test_replication_drain_job_budget(spark, sf_dir, tmp_path):
+    orders = _orders(spark, sf_dir)
+    t = str(tmp_path / "d")
+    replica = str(tmp_path / "r")
+    write_delta(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2), t)
+    alter_table_properties_delta(
+        spark, t, {"delta.enableChangeDataFeed": "true"}
+    )
+    write_iceberg(orders.limit(0).coalesce(1), replica)
+
+    def drain(tag):
+        return _jobs_in_group(
+            spark, tag,
+            lambda: run_replication(spark, t, replica, ["o_orderkey"]),
+        )
+
+    n_genesis = drain("replicate-budget-genesis")
+    merge_delta(spark, t, _source(orders), on=["o_orderkey"], clauses=CLAUSES)
+    n_incremental = drain("replicate-budget-incremental")
+    n_noop = drain("replicate-budget-noop")
+    assert n_genesis <= 8 and n_incremental <= 8 and n_noop == 0, (
+        f"replication drains issued {n_genesis} (genesis), "
+        f"{n_incremental} (incremental), {n_noop} (no-op) jobs "
+        "(budget 8, 8, 0)"
+    )
+    assert sorted(map(tuple, read_iceberg(spark, replica).collect())) == sorted(
+        map(tuple, read_delta(spark, t).collect())
+    )
 
 
 def test_merge_pin_persist_mode_same_result(spark, sf_dir, tmp_path, monkeypatch):

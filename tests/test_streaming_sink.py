@@ -251,11 +251,10 @@ def test_cross_format_replication_converges_and_replays_noop(
 
 def test_deletes_only_replication_batch_advances_watermark(spark, tmp_path):
     """A micro-batch whose NET effect is deletes-only must still
-    advance the txn watermark — as a properties-only commit, NOT a
-    snapshot — so a crash-replay of the same batch id commits nothing
-    at all (ADVICE r8: previously the zero-change merge early-returned
-    without recording the batch, and every replay re-committed a
-    redundant equality-delete snapshot)."""
+    advance the txn watermark — in the same snapshot as its equality
+    delete — so a crash-replay of the same batch id commits nothing
+    at all (ADVICE r8: a batch that never records itself re-commits a
+    redundant equality-delete snapshot on every replay)."""
     import json
 
     from pyspark.sql import functions as F
@@ -282,12 +281,11 @@ def test_deletes_only_replication_batch_advances_watermark(spark, tmp_path):
     apply = replicate_batch(replica, ["k"], "app")
     apply(batch, 0)
     assert _state(spark, read_iceberg, replica) == {(1, 1, 1)}
-    # watermark advanced even though the merge saw zero live rows
+    # watermark advanced even though the batch had zero live rows
     assert last_txn_version_iceberg(spark, replica, "app") == 0
     n_versions, n_snapshots = meta()
-    # the watermark advance itself must be snapshot-free: one eq-delete
-    # snapshot on top of the initial write, plus one properties-only
-    # metadata version
+    # one eq-delete snapshot, carrying the watermark, on top of the
+    # initial write
     assert n_snapshots == 2
     # crash-replay of the SAME batch id: no metadata version, no
     # snapshot, no state change
@@ -300,14 +298,15 @@ def _n_meta(replica):
     return len(glob.glob(os.path.join(replica, "metadata", "v*.metadata.json")))
 
 
-def test_replication_crash_between_delete_and_merge_replays_once(
+def test_replication_crash_before_claim_replays_once(
     spark, tmp_path, monkeypatch
 ):
-    """A run killed after the equality-delete commit and before the
-    watermark-carrying merge leaves the watermark where it was, so the
-    next run re-reads the same version range and lands it exactly
-    once: the replica equals the source, the watermark equals the
-    source's latest version, and a further run commits nothing."""
+    """A run killed after staging its files and before claiming the
+    batch's metadata version commits nothing: no new metadata version,
+    the replica's rows and watermark unchanged.  The next run re-reads
+    the same version range and lands it exactly once — replica equals
+    source, watermark equals the source's latest version — and a
+    further run commits nothing."""
     from aws_datalake_framework_api_spark.sources import iceberg
     from aws_datalake_framework_api_spark.sources.delta import (
         _table_version,
@@ -330,6 +329,7 @@ def test_replication_crash_between_delete_and_merge_replays_once(
     write_iceberg(_df(spark, []).coalesce(1), replica)
     run_replication(spark, t, replica, ["k"])
     done = last_txn_version_iceberg(spark, replica, "delta-replica")
+    before = _state(spark, read_iceberg, replica)
     merge_delta(                          # update 1, delete 2, insert 5
         spark, t,
         _df(spark, [(1, 100, 2), (2, 0, 2), (5, 5, 2)]), on=["k"],
@@ -340,22 +340,21 @@ def test_replication_crash_between_delete_and_merge_replays_once(
             {"when": "not_matched", "action": "insert"},
         ],
     )
-    real_merge = iceberg.merge_iceberg
+    real_claim = iceberg._claim_metadata
     calls = []
 
     def killed_once(*args, **kwargs):
         calls.append(1)
         if len(calls) == 1:
-            raise RuntimeError("killed between delete and merge")
-        return real_merge(*args, **kwargs)
+            raise RuntimeError("killed before the claim")
+        return real_claim(*args, **kwargs)
 
-    monkeypatch.setattr(iceberg, "merge_iceberg", killed_once)
+    monkeypatch.setattr(iceberg, "_claim_metadata", killed_once)
     n_meta = _n_meta(replica)
     with pytest.raises(RuntimeError, match="killed"):
         run_replication(spark, t, replica, ["k"])
-    # the equality delete committed; the watermark did not move
-    assert _n_meta(replica) == n_meta + 1
-    assert (2, 2, 1) not in _state(spark, read_iceberg, replica)
+    assert _n_meta(replica) == n_meta
+    assert _state(spark, read_iceberg, replica) == before
     assert last_txn_version_iceberg(spark, replica, "delta-replica") == done
 
     run_replication(spark, t, replica, ["k"])
