@@ -29,10 +29,14 @@ one PATH per table).  Every table is read and written through the
 dependency-free Delta connector in :mod:`.sources.delta` — the same
 open format the engine's execution core reads, interoperable with
 delta-spark readers and time-travelable with ``version_as_of``.
-Entity mutations are full-table overwrite commits (readers see old or
-new, never a torn state); audit flushes are append commits; the A2
-point update is one copy-on-write ``update_delta`` commit that
-rewrites only the files holding matched rows.
+Every entity mutation is one conditional commit (the engine's
+``ConditionExpression``): collect the rows at a pinned version, check
+the call in Python, and overwrite only on top of the version read
+(``write_delta(read_version=)``) — a rival commit in between is a
+conflict that re-reads and re-checks, never a lost row.  Audit
+flushes are appends; the A2 point update is one copy-on-write
+``update_delta`` commit that rewrites only the files holding matched
+rows.
 
 Every audit record carries ``catalog_backend`` (always ``"deltalog"``)
 so correctness rows show which storage path served the call.
@@ -40,8 +44,8 @@ so correctness rows show which storage path served the call.
 Catalog tables are ENTITY metadata — hundreds to thousands of rows at
 any real deployment (they scale with registered systems, not with
 data volume), so a single-file overwrite commit is the right cost
-model; the 100 TB concerns live in the lake tables the catalog
-points at.
+model (and a driver collect the right check); the 100 TB concerns
+live in the lake tables the catalog points at.
 """
 
 from __future__ import annotations
@@ -61,7 +65,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .sources.delta import read_delta, update_delta, write_delta
+from .sources.delta import (CommitConflict, _table_version, read_delta,
+                            update_delta, write_delta)
 
 ENTITY_TYPES = ("source_system", "target_system", "data_asset")
 
@@ -126,19 +131,26 @@ def _is_table(d: str) -> bool:
     return os.path.isdir(os.path.join(d, "_delta_log"))
 
 
-def _write(df: DataFrame, d: str, mode: str) -> None:
-    """One Delta commit of ``df`` as a single file.  The first write
-    uses mode "error" so version 0 carries protocol+metaData.  Safe to
-    overwrite from a plan that reads this same table: data files are
-    immutable (tombstoned, never deleted)."""
-    write_delta(df.coalesce(1), d, mode=mode if _is_table(d) else "error")
+def _retry(attempt):
+    """Run ``attempt`` (read, check, commit) again while a rival
+    writer wins its commit race — 5 tries, ``write_delta``'s own bound
+    for a rebasing append — then raise."""
+    for _ in range(5):
+        try:
+            return attempt()
+        except (CommitConflict, FileExistsError) as e:
+            lost = e
+    raise CommitConflict("lost the commit race 5 times") from lost
 
 
 @dataclass
 class Catalog:
     """A warehouse-backed entity catalog with an audit log, every
     table a Delta table written through :mod:`..sources.delta`
-    (a delta-spark reader can open the warehouse, and vice versa)."""
+    (a delta-spark reader can open the warehouse, and vice versa).
+    The batch mutators own the logic, each a change committed by
+    :meth:`_mutate`; ``create``/``update``/``delete`` are their
+    one-id calls, mapping the result to 200/409/404."""
 
     spark: SparkSession
     warehouse: str
@@ -173,9 +185,30 @@ class Catalog:
             return self.spark.createDataFrame([], ENTITY_SCHEMA)
         return read_delta(self.spark, d)
 
-    def _overwrite(self, entity_type: str, df: DataFrame) -> None:
-        """Full-table replace as one transactional overwrite commit."""
-        _write(df, self._table_dir(entity_type), "overwrite")
+    def _mutate(self, entity_type: str, change):
+        """The one conditional commit under every entity mutator:
+        ``change({entity_id: row dict}) -> (new_rows | None, result)``
+        runs on the rows at a pinned version; ``new_rows`` replace the
+        table in one single-file overwrite on top of that version
+        (``None`` commits nothing).  Returns ``result``."""
+        d = self._table_dir(entity_type)
+
+        def attempt():
+            v = _table_version(d)
+            rows = {} if v is None else {
+                r["entity_id"]: r.asDict()
+                for r in read_delta(self.spark, d, version_as_of=v).collect()
+            }
+            new_rows, result = change(rows)
+            if new_rows is not None:
+                write_delta(
+                    _local_df(self.spark, new_rows, ENTITY_SCHEMA).coalesce(1),
+                    d, mode="error" if v is None else "overwrite",
+                    read_version=v,
+                )
+            return result
+
+        return _retry(attempt)
 
     # ------------------------------------------------------------ audit (A1)
 
@@ -210,7 +243,10 @@ class Catalog:
         df = _local_df(self.spark, self._audit_rows, AUDIT_SCHEMA).withColumn(
             "modified_ts", F.current_timestamp()
         )
-        _write(df, self._audit_dir(), "append")
+        d = self._audit_dir()
+        # the first flush creates the table: version 0 carries
+        # protocol+metaData
+        write_delta(df.coalesce(1), d, mode="append" if _is_table(d) else "error")
         self._audit_rows = []
 
     def audit_log(self) -> DataFrame:
@@ -233,7 +269,9 @@ class Catalog:
         one copy-on-write ``update_delta`` commit that rewrites ONLY
         the files holding matched rows — O(files-with-matches) on the
         unbounded audit table (VERDICT r5) — and commits nothing on a
-        miss.  History stays readable via ``version_as_of``."""
+        miss; a concurrent flush that wins the commit race re-runs the
+        update (:func:`_retry`).  History stays readable via
+        ``version_as_of``."""
         matched = 0
         for r in self._audit_rows:
             if r["aws_request_id"] == request_id and r["method_name"] == method_name:
@@ -244,7 +282,9 @@ class Catalog:
             cond = (F.col("aws_request_id") == request_id) & (
                 F.col("method_name") == method_name
             )
-            matched += update_delta(self.spark, d, cond, {"status": new_status})[1]
+            matched += _retry(
+                lambda: update_delta(self.spark, d, cond, {"status": new_status})[1]
+            )
         return matched
 
     # ------------------------------------------------------------ CRUD (A6-A9)
@@ -254,42 +294,29 @@ class Catalog:
         """A6: register an entity; also provisions its storage prefix —
         the engine's analogue of the per-source-system bucket
         (``cft/sourceSystem.yaml:20-27``)."""
-        existing = self.load(entity_type)
-        if existing.filter(F.col("entity_id") == entity_id).count() > 0:
-            self._audit(f"{entity_type}/create", attrs, status="failure")
-            return {"statusCode": 409, "body": f"{entity_type} {entity_id} exists"}
-        row = _local_df(
-            self.spark, [(entity_id, name, attrs, "active")], ENTITY_SCHEMA
-        )
-        self._overwrite(entity_type, existing.unionByName(row))
-        if entity_type == "source_system":
-            os.makedirs(
-                os.path.join(self.warehouse, "lake", str(entity_id), "init"),
-                exist_ok=True,
-            )
-        self._audit(f"{entity_type}/create", attrs)
-        return {"statusCode": 200, "body": f"{entity_type} {entity_id} created"}
+        if self.create_many(entity_type, [(entity_id, name, attrs)])["created"]:
+            return {"statusCode": 200, "body": f"{entity_type} {entity_id} created"}
+        return {"statusCode": 409, "body": f"{entity_type} {entity_id} exists"}
 
     def create_many(self, entity_type: str, rows: list[tuple[int, str, str | None]]) -> dict:
-        """Batch registration: one validation pass + ONE table write
-        for N entities (the per-call path would be N full
-        read-modify-write cycles — at catalog scale that's latency,
-        not correctness, but bulk onboarding is a real API).  Audit
-        still records one row per entity, like N reference calls."""
-        existing = self.load(entity_type)
-        new_ids = {r[0] for r in rows}
-        dups = {
-            r["entity_id"]
-            for r in existing.filter(F.col("entity_id").isin(list(new_ids)))
-            .select("entity_id")
-            .collect()
-        }
-        fresh = [r for r in rows if r[0] not in dups]
-        if fresh:
-            batch = _local_df(
-                self.spark, [(i, n, a, "active") for i, n, a in fresh], ENTITY_SCHEMA
-            )
-            self._overwrite(entity_type, existing.unionByName(batch))
+        """Batch registration: one check + ONE table write for N
+        entities.  An id already registered — or repeated earlier in
+        the same batch — is a conflict; the first occurrence wins.
+        Audit still records one row per entity, like N reference
+        calls."""
+
+        def change(cur):
+            fresh, dups = [], []
+            for r in rows:
+                if r[0] in cur:
+                    dups.append(r)
+                else:
+                    fresh.append(r)
+                    cur[r[0]] = {"entity_id": r[0], "name": r[1],
+                                 "attrs": r[2], "status": "active"}
+            return (list(cur.values()) if fresh else None), (fresh, dups)
+
+        fresh, dups = self._mutate(entity_type, change)
         for i, _, a in fresh:
             self._audit(f"{entity_type}/create", a)
             if entity_type == "source_system":
@@ -297,55 +324,43 @@ class Catalog:
                     os.path.join(self.warehouse, "lake", str(i), "init"),
                     exist_ok=True,
                 )
-        for r in rows:
-            if r[0] in dups:
-                self._audit(f"{entity_type}/create", r[2], status="failure")
+        for _, _, a in dups:
+            self._audit(f"{entity_type}/create", a, status="failure")
         return {"statusCode": 200, "created": len(fresh), "conflicts": len(dups)}
 
     def update_where(self, entity_type: str, entity_ids: list[int], *,
-                     status: str | None = None, name: str | None = None) -> dict:
+                     status: str | None = None, name: str | None = None,
+                     attrs: str | None = None) -> dict:
         """Batch conditional update: one write for N ids; ids that
         don't exist are reported unmatched and NOT created (A2)."""
-        existing = self.load(entity_type)
-        matched_ids = {
-            r["entity_id"]
-            for r in existing.filter(F.col("entity_id").isin(entity_ids))
-            .select("entity_id")
-            .collect()
-        }
-        if matched_ids:
-            hit = F.col("entity_id").isin(list(matched_ids))
-            updated = existing
-            for col, val in (("name", name), ("status", status)):
-                if val is not None:
-                    updated = updated.withColumn(
-                        col, F.when(hit, F.lit(val)).otherwise(F.col(col))
-                    )
-            self._overwrite(entity_type, updated)
+        values = {c: v for c, v in (("name", name), ("attrs", attrs),
+                                    ("status", status)) if v is not None}
+
+        def change(cur):
+            hit = {i for i in entity_ids if i in cur}
+            for i in hit:
+                cur[i].update(values)
+            return (list(cur.values()) if hit else None), hit
+
+        matched = self._mutate(entity_type, change)
         for i in entity_ids:
             self._audit(
                 f"{entity_type}/update",
                 str(i),
-                status="success" if i in matched_ids else "failure",
+                status="success" if i in matched else "failure",
             )
-        return {"statusCode": 200, "matched": len(matched_ids),
-                "unmatched": len(set(entity_ids) - matched_ids)}
+        return {"statusCode": 200, "matched": len(matched),
+                "unmatched": len(set(entity_ids) - matched)}
 
     def delete_where(self, entity_type: str, entity_ids: list[int]) -> dict:
-        """Batch deregistration (anti-join rewrite), one write — none
-        when no id matched."""
-        existing = self.load(entity_type)
-        matched = {
-            r["entity_id"]
-            for r in existing.filter(F.col("entity_id").isin(entity_ids))
-            .select("entity_id")
-            .collect()
-        }
-        if matched:
-            self._overwrite(
-                entity_type,
-                existing.filter(~F.col("entity_id").isin(entity_ids)),
-            )
+        """Batch deregistration, one write — none when no id matched."""
+
+        def change(cur):
+            hit = {i for i in entity_ids if i in cur}
+            keep = [r for i, r in cur.items() if i not in hit]
+            return (keep if hit else None), hit
+
+        matched = self._mutate(entity_type, change)
         for i in entity_ids:
             self._audit(
                 f"{entity_type}/delete",
@@ -364,37 +379,14 @@ class Catalog:
     def update(self, entity_type: str, entity_id: int, *, name: str | None = None,
                attrs: str | None = None, status: str | None = None) -> dict:
         """A8: conditional update — mutate ONLY IF the id exists (A2
-        semantics applied to entities); a missing id reports
-        matched=0 and writes nothing."""
-        existing = self.load(entity_type)
-        matched = existing.filter(F.col("entity_id") == entity_id).count()
-        if matched == 0:
-            self._audit(f"{entity_type}/update", str(entity_id), status="failure")
-            return {"statusCode": 404, "matched": 0}
-        hit = F.col("entity_id") == entity_id
-        updated = existing
-        for col, val in (("name", name), ("attrs", attrs), ("status", status)):
-            if val is not None:
-                updated = updated.withColumn(
-                    col, F.when(hit, F.lit(val)).otherwise(F.col(col))
-                )
-        self._overwrite(entity_type, updated)
-        self._audit(f"{entity_type}/update", str(entity_id))
-        return {"statusCode": 200, "matched": matched}
+        semantics applied to entities); a missing id reports 404,
+        matched=0, and writes nothing."""
+        matched = self.update_where(entity_type, [entity_id], name=name,
+                                    attrs=attrs, status=status)["matched"]
+        return {"statusCode": 200 if matched else 404, "matched": matched}
 
     def delete(self, entity_type: str, entity_id: int) -> dict:
-        """A9: deregister — anti-join rewrite of ``DELETE FROM``; a
-        missing id reports 404 and writes nothing."""
-        existing = self.load(entity_type)
-        matched = existing.filter(F.col("entity_id") == entity_id).count()
-        if matched:
-            self._overwrite(
-                entity_type,
-                existing.filter(F.col("entity_id") != entity_id),
-            )
-        self._audit(
-            f"{entity_type}/delete",
-            str(entity_id),
-            status="success" if matched else "failure",
-        )
+        """A9: deregister; a missing id reports 404 and writes
+        nothing."""
+        matched = self.delete_where(entity_type, [entity_id])["matched"]
         return {"statusCode": 200 if matched else 404, "matched": matched}

@@ -2780,6 +2780,7 @@ def write_delta(
     partition_by: list[str] | None = None,
     txn: tuple[str, int] | None = None,
     merge_schema: bool = False,
+    read_version: int | None = None,
 ) -> int:
     """Write ``df`` to a Delta table at ``path``; returns the committed
     version.  ``mode``: ``error`` (table must not exist), ``append``,
@@ -2796,7 +2797,14 @@ def write_delta(
     idempotent streaming appends: if ``version`` is not strictly
     greater than :func:`last_txn_version` for the app, the write is a
     NO-OP returning the current latest version — a crashed-and-retried
-    micro-batch lands exactly once."""
+    micro-batch lands exactly once.
+
+    ``read_version`` is the table version ``df`` was derived from (a
+    read-check-write).  The write then commits only as version
+    ``read_version + 1``: if the table has moved past it, or another
+    writer claims that version first, it raises :class:`CommitConflict`
+    and is never rebased — the caller re-reads and re-checks.  Writes
+    that read nothing pass nothing."""
     partition_by = list(partition_by or [])
     spark = df.sparkSession
     if mode not in ("error", "overwrite", "append"):
@@ -2804,6 +2812,11 @@ def write_delta(
     latest = _table_version(path)
     if latest is not None and mode == "error":
         raise FileExistsError(f"delta table already exists at {path}")
+    if read_version is not None and latest != read_version:
+        raise CommitConflict(
+            f"table at {path} moved to version {latest} after this write "
+            f"read version {read_version} — re-read and retry"
+        )
     snap: _Snapshot | None = None
     evolved: StructType | None = None
     evolved_sj: dict | None = None
@@ -2974,8 +2987,12 @@ def write_delta(
     # rebase onto latest+1 — delta-spark's winning-commit
     # reconciliation for its append class.  Everything else loses
     # deterministically: create → FileExistsError (the documented
-    # contract), overwrite/evolving append → CommitConflict.
-    blind_append = mode == "append" and snap is not None and evolved is None
+    # contract), overwrite/evolving append/any write carrying
+    # read_version → CommitConflict.
+    blind_append = (
+        mode == "append" and snap is not None and evolved is None
+        and read_version is None
+    )
     ict_conf = (
         (snap.metadata or {}).get("configuration") if snap is not None
         else None

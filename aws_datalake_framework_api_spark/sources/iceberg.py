@@ -4649,11 +4649,13 @@ def merge_iceberg(
     check_clauses(clauses, cols)
     # Materialize the merge source ONCE (r11 optimization, guide §5):
     # the planning below executes it repeatedly (dup check, key-bounds
-    # aggregate, clause counts, insert count, staging writes), and in
-    # the CDC-replication path its lineage roots in the change-feed
-    # read — per-commit scans and DV joins per re-execution.
-    # Mirrors merge_delta; delta-spark materializes its merge source
-    # for the same reason.
+    # aggregate, clause counts, insert count, staging writes), and a
+    # caller's source lineage would re-run on every re-execution: a
+    # micro-batch in the streaming merge sink (streaming/lake_sink.py)
+    # or a fixture union in the merge ids (b_lake_iceberg_merge,
+    # b_lake_iceberg_merge_mor, b_stream_iceberg_cdf).  Mirrors
+    # merge_delta; delta-spark materializes its merge source for the
+    # same reason.
     source = pin(source)
     matched_cl = [c for c in clauses if c["when"] == "matched"]
     # ONE pass over the checkpointed source for BOTH the duplicate-key
@@ -4756,9 +4758,10 @@ def merge_iceberg(
         )
         if not (stats["updated"] or stats["deleted"] or stats["inserted"]):
             # zero-change merge still ADVANCES a txn watermark, as a
-            # properties-only commit (no snapshot): a deletes-only
-            # replication batch otherwise never records itself and
-            # replays its equality delete on every restart (ADVICE r8)
+            # properties-only commit (no snapshot): a streaming merge
+            # sink batch (streaming/lake_sink.py) that changes nothing
+            # otherwise never records itself and replays on every
+            # restart (ADVICE r8)
             v = max(_metadata_versions(path))
             if txn is not None:
                 v = set_properties_iceberg(

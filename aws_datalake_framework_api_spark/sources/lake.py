@@ -45,6 +45,7 @@ from ..registry import query
 from .delta import (
     _snapshot,
     _stage_files,
+    _table_version,
     delete_where_delta,
     history_delta,
     prune_files,
@@ -581,7 +582,11 @@ def lake_deletevec(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_delta(base.coalesce(1), path, mode="overwrite")
     delete_where_delta(spark, path, F.col("k") % 53 == 0)
     n_data_dirs = len(_snapshot(spark, path)[0].files)  # no file added
-    write_delta(read_delta(spark, path).coalesce(1), path, mode="overwrite")
+    v = _table_version(path)
+    write_delta(
+        read_delta(spark, path, version_as_of=v).coalesce(1), path,
+        mode="overwrite", read_version=v,
+    )
     n_vacuumed = vacuum_delta(spark, path, retention_ms=0, force=True)[
         "deleted_files"
     ]  # old data file + its deletion-vector file

@@ -73,16 +73,18 @@ def mv_apply_batch(view: str, batch_df: DataFrame, batch_id: int) -> None:
     per-group signed deltas (one shuffle over the BATCH, never the
     base table), merged with the current state, zero-count groups
     dropped, committed as one overwrite carrying ``txn=(APP_ID,
-    batch_id)``.  A replayed batch at or below the committed mark is
+    batch_id)`` on top of the version read (a rival commit in between
+    raises ``CommitConflict``).  A replayed batch at or below the committed mark is
     skipped without a commit (exactly-once).  The first batch creates
     the view."""
     spark = batch_df.sparkSession
     if batch_id <= last_txn_version(spark, view, APP_ID):
         return
-    if _table_version(view) is None:
+    v = _table_version(view)  # commit only on top of the state read
+    if v is None:
         cur = spark.createDataFrame([], MV_SCHEMA)
     else:
-        cur = read_delta(spark, view)
+        cur = read_delta(spark, view, version_as_of=v)
     sign = (
         F.when(F.col("_change_type").isin(*_PLUS), F.lit(1))
         .when(F.col("_change_type").isin(*_MINUS), F.lit(-1))
@@ -109,7 +111,8 @@ def mv_apply_batch(view: str, batch_df: DataFrame, batch_id: int) -> None:
         .filter(F.col("n") != 0)
     )
     write_delta(
-        merged.coalesce(1), view, mode="overwrite", txn=(APP_ID, batch_id)
+        merged.coalesce(1), view, mode="overwrite", txn=(APP_ID, batch_id),
+        read_version=v,
     )
 
 

@@ -66,15 +66,17 @@ def merge_microbatch(path: str, batch_df: DataFrame, batch_id: int) -> None:
     """Apply one micro-batch to the Delta table at ``path``:
     last-write-wins by ``seq`` per key over (current state ∪ batch),
     committed as ONE overwrite version carrying ``txn=(APP_ID,
-    batch_id)``.  Replay-safe: a batch at or below the committed mark
+    batch_id)`` on top of the version read (a rival commit in between
+    raises ``CommitConflict``).  Replay-safe: a batch at or below the committed mark
     is skipped without a commit.  The first batch creates the table."""
     spark = batch_df.sparkSession
     if batch_id <= last_txn_version(spark, path, APP_ID):
         return  # checkpoint replayed a batch the table already has
-    if _table_version(path) is None:
+    v = _table_version(path)  # commit only on top of the state read
+    if v is None:
         cur = spark.createDataFrame([], FEED_SCHEMA)
     else:
-        cur = read_delta(spark, path)
+        cur = read_delta(spark, path, version_as_of=v)
     w = Window.partitionBy("k").orderBy(F.desc("seq"))
     merged = (
         cur.unionByName(batch_df.select("k", "price_cents", "seq"))
@@ -82,7 +84,10 @@ def merge_microbatch(path: str, batch_df: DataFrame, batch_id: int) -> None:
         .filter(F.col("rnk") == 1)
         .drop("rnk")
     )
-    write_delta(merged.coalesce(1), path, mode="overwrite", txn=(APP_ID, batch_id))
+    write_delta(
+        merged.coalesce(1), path, mode="overwrite", txn=(APP_ID, batch_id),
+        read_version=v,
+    )
 
 
 def run_upsert_stream(

@@ -240,3 +240,161 @@ def test_deltalog_point_update_rewrites_only_hit_files(cat):
         assert os.path.getmtime(os.path.join(d, p)) == mtimes[p]
     statuses = {r["aws_request_id"]: r["status"] for r in cat.audit_log().collect()}
     assert statuses == {"r0": "success", "r1": "done", "r2": "success"}
+
+
+def test_create_many_repeated_id_registers_first_occurrence(cat):
+    """An id repeated inside one batch is a conflict like an id that
+    already exists: the first occurrence registers, each repeat is
+    audited as a failure, and the table holds one row per id."""
+    res = cat.create_many("source_system", [(1, "a", None), (1, "b", None)])
+    assert (res["created"], res["conflicts"]) == (1, 1)
+    rows = [(r["entity_id"], r["name"]) for r in cat.load("source_system").collect()]
+    assert rows == [(1, "a")]
+    statuses = sorted(r["status"] for r in cat.audit_log().collect())
+    assert statuses == ["failure", "success"]
+
+
+# ------------------------------------------------------- racing writers
+
+_RACES = {
+    # A's call, the rival's call, A's status, ids left, status of id 7
+    "create": (lambda c: c.create("source_system", 1, "a"),
+               lambda c: c.create("source_system", 2, "b"),
+               200, [1, 2, 7, 100], "active"),
+    "update": (lambda c: c.update("source_system", 7, status="suspended"),
+               lambda c: c.create("source_system", 2, "b"),
+               200, [2, 7, 100], "suspended"),
+    "delete": (lambda c: c.delete("source_system", 7),
+               lambda c: c.create("source_system", 2, "b"),
+               200, [2, 100], None),
+    "create_same_id": (lambda c: c.create("source_system", 1, "a"),
+                       lambda c: c.create("source_system", 1, "b"),
+                       409, [1, 7, 100], "active"),
+    "update_deleted": (lambda c: c.update("source_system", 7, status="x"),
+                       lambda c: c.delete("source_system", 7),
+                       404, [100], None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RACES))
+def test_rival_commit_between_read_and_commit_is_never_lost(
+    spark, tmp_path, monkeypatch, case
+):
+    """A second Catalog on the same warehouse commits after A read the
+    entity table and before A commits.  A's write loses the race,
+    re-reads and re-checks: both entities survive, or A reports the
+    conflict the rival caused (409/404) — never a silent loss."""
+    import aws_datalake_framework_api_spark.catalog as catalog_mod
+
+    wh = str(tmp_path / "wh")
+    a, rival = Catalog(spark, wh), Catalog(spark, wh)
+    a.create_many("source_system", [(7, "seven", None), (100, "hundred", None)])
+    call, rival_call, status, ids, status7 = _RACES[case]
+    write = catalog_mod.write_delta
+    raced = []
+
+    def racing_write(*args, **kwargs):
+        if not raced:
+            raced.append(True)
+            assert rival_call(rival)["statusCode"] == 200
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(catalog_mod, "write_delta", racing_write)
+    assert call(a)["statusCode"] == status
+    assert raced
+    rows = {r["entity_id"]: r for r in a.load("source_system").collect()}
+    assert sorted(rows) == ids
+    assert (rows[7]["status"] if 7 in rows else None) == status7
+    if 1 in rows:  # the rival's same-id create won
+        assert rows[1]["name"] == ("b" if case == "create_same_id" else "a")
+
+
+def test_racing_catalogs_lose_no_acknowledged_create(spark, tmp_path):
+    """Threads, each with its own Catalog on one warehouse, create
+    distinct ids at once.  A create may give up with CommitConflict
+    after its bounded retries, but every create that returned 200 is
+    in the table, and nothing else is."""
+    import threading
+
+    from aws_datalake_framework_api_spark.sources.delta import CommitConflict
+
+    wh = str(tmp_path / "wh")
+    Catalog(spark, wh).create("data_asset", 0, "seed")
+    acked, errors = [0], []
+
+    def worker(base):
+        cat = Catalog(spark, wh)
+        for i in (base, base + 1):
+            try:
+                if cat.create("data_asset", i, f"n{i}")["statusCode"] == 200:
+                    acked.append(i)
+            except CommitConflict:
+                pass
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(10 * t + 1,))
+               for t in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads) and not errors
+    ids = sorted(r["entity_id"] for r in Catalog(spark, wh).load("data_asset").collect())
+    assert ids == sorted(acked)
+
+
+def _jobs(spark, tag, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_catalog_call_job_budget(spark, cat):
+    """Each mutator is one collect of the entity table plus one commit
+    write: at most 2 Spark jobs, and 1 when the check refuses the call
+    (409/404) and nothing is written."""
+    cat.create("source_system", 1, "a")  # the table exists from here on
+    calls = {
+        "create": (lambda: cat.create("source_system", 2, "b"), 2),
+        "update": (lambda: cat.update("source_system", 2, status="x"), 2),
+        "delete": (lambda: cat.delete("source_system", 2), 2),
+        "create_409": (lambda: cat.create("source_system", 1, "dup"), 1),
+        "update_404": (lambda: cat.update("source_system", 9, status="x"), 1),
+        "delete_404": (lambda: cat.delete("source_system", 9), 1),
+    }
+    got = {name: _jobs(spark, f"catalog-budget-{name}", fn)
+           for name, (fn, _) in calls.items()}
+    assert all(got[name] <= budget for name, (_, budget) in calls.items()), (
+        f"catalog calls issued {got} Spark jobs"
+    )
+
+
+def test_event_update_survives_a_concurrent_flush(spark, tmp_path, monkeypatch):
+    """Another Catalog flushing its audit rows while this one's
+    conditional update is in flight wins the commit race; the update
+    re-runs against the new table state instead of raising, and the
+    matches still buffered in memory are counted once."""
+    import aws_datalake_framework_api_spark.sources.delta as delta_mod
+
+    wh = str(tmp_path / "wh")
+    a, rival = Catalog(spark, wh), Catalog(spark, wh)
+    a._audit("m", None, request_id="r1")
+    a.flush_audit()
+    a._audit("m", None, request_id="r1")  # still buffered
+    rival._audit("m", None, request_id="r2")
+    stage = delta_mod._stage_mutation
+
+    def flush_first(*args, **kwargs):
+        rival.flush_audit()  # a no-op once the buffer is empty
+        return stage(*args, **kwargs)
+
+    monkeypatch.setattr(delta_mod, "_stage_mutation", flush_first)
+    assert a.update_event_status("r1", "m", "done") == 2
+    flushed = {r["aws_request_id"]: r["status"]
+               for r in rival.audit_log().collect()}
+    assert flushed == {"r1": "done", "r2": "success"}

@@ -209,3 +209,50 @@ def test_last_txn_version_is_minus_one_without_a_table(spark, tmp_path):
         txn=("app", 3),
     )
     assert last_txn_version(spark, str(empty), "app") == 3
+
+
+def test_write_at_read_version_conflicts_once_the_table_moved(
+    spark, tmp_path, monkeypatch
+):
+    """``read_version`` makes a write land only as the next version
+    after the one it read.  A table already past it raises
+    ``CommitConflict`` before anything is staged; a rival claiming the
+    next version mid-write raises too — even for an append, which
+    without ``read_version`` would be rebased onto the rival."""
+    import aws_datalake_framework_api_spark.sources.delta as delta_mod
+    from aws_datalake_framework_api_spark.sources.delta import (
+        CommitConflict,
+        history_delta,
+    )
+
+    path = str(tmp_path / "t")
+    write_delta(_df(spark, [(1, "a", 1.0)]), path, mode="error")
+    write_delta(_df(spark, [(2, "a", 2.0)]), path, mode="append")  # v1
+    with pytest.raises(CommitConflict):
+        write_delta(_df(spark, [(9, "x", 9.0)]), path, mode="overwrite",
+                    read_version=0)
+    assert _sorted_rows(read_delta(spark, path)) == [
+        (1, "a", 1.0), (2, "a", 2.0)
+    ]
+
+    stage = delta_mod._stage_files
+    rivals = []
+
+    def rival_commits_first(*args, **kwargs):
+        if not rivals:  # the rival's own write stages normally
+            rivals.append(True)
+            write_delta(_df(spark, [(3, "r", 3.0)]), path, mode="append")
+        return stage(*args, **kwargs)
+
+    monkeypatch.setattr(delta_mod, "_stage_files", rival_commits_first)
+    with pytest.raises(CommitConflict):
+        write_delta(_df(spark, [(4, "x", 4.0)]), path, mode="append",
+                    read_version=1)
+    assert [h["version"] for h in history_delta(spark, path)][-1] == 2
+    assert _sorted_rows(read_delta(spark, path)) == [
+        (1, "a", 1.0), (2, "a", 2.0), (3, "r", 3.0)
+    ]
+    # the same race without read_version: a blind append is rebased
+    rivals.clear()
+    assert write_delta(_df(spark, [(5, "b", 5.0)]), path, mode="append") == 4
+    assert (5, "b", 5.0) in _sorted_rows(read_delta(spark, path))

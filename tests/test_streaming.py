@@ -472,6 +472,56 @@ def test_cdf_mv_replay_is_idempotent(spark, tmp_path):
     )
 
 
+@pytest.mark.parametrize("sink", ["upsert", "cdf_mv"])
+def test_sink_batch_conflicts_with_a_rival_commit(
+    spark, tmp_path, monkeypatch, sink
+):
+    """Both sinks overwrite the table they read.  A rival commit
+    landing between a batch's read and its commit must make the batch
+    raise ``CommitConflict`` — not tombstone the rival's rows — and
+    leave the ``txn`` watermark where it was, so the batch replays."""
+    import importlib
+
+    from aws_datalake_framework_api_spark.sources.delta import (
+        CommitConflict,
+        last_txn_version,
+        read_delta,
+        write_delta,
+    )
+
+    mod = importlib.import_module(
+        f"aws_datalake_framework_api_spark.streaming.{sink}"
+    )
+    if sink == "upsert":
+        batch = spark.createDataFrame([(1, 100, 1)], mod.FEED_SCHEMA)
+        rival = spark.createDataFrame([(9, 900, 1)], mod.FEED_SCHEMA)
+        apply = mod.merge_microbatch
+    else:
+        batch = spark.createDataFrame(
+            [("1-URGENT", 1.0, "insert")],
+            "o_orderpriority string, o_totalprice double, _change_type string",
+        )
+        rival = spark.createDataFrame([("9-RIVAL", 1, 900)], mod.MV_SCHEMA)
+        apply = mod.mv_apply_batch
+    path = str(tmp_path / sink)
+    apply(path, batch, 0)
+    before = sorted(tuple(r) for r in read_delta(spark, path).collect())
+    raced = []
+
+    def racing_write(df, p, **kwargs):
+        if not raced:
+            raced.append(True)
+            write_delta(rival, p, mode="append")
+        return write_delta(df, p, **kwargs)
+
+    monkeypatch.setattr(mod, "write_delta", racing_write)
+    with pytest.raises(CommitConflict):
+        apply(path, batch, 1)
+    after = sorted(tuple(r) for r in read_delta(spark, path).collect())
+    assert after == sorted(before + [tuple(rival.first())])
+    assert last_txn_version(spark, path, mod.APP_ID) == 0
+
+
 def test_stream_stream_outer_join_matches_batch_on_decided_region(
     spark, sf_dir, tmp_path
 ):
