@@ -1363,9 +1363,10 @@ class CommitConflict(RuntimeError):
     """A concurrent writer claimed the version this commit computed.
 
     Raised by the mutation paths (DELETE/UPDATE/MERGE/OPTIMIZE/
-    RESTORE/partition-delete), which read a snapshot and therefore
-    cannot be rebased blindly — delta-spark's winning-commit
-    reconciliation likewise fails these and asks the caller to re-run.
+    RESTORE/partition-delete) and by ``write_delta(read_version=)``,
+    which read a snapshot and therefore cannot be rebased blindly —
+    delta-spark's winning-commit reconciliation likewise fails these
+    and asks the caller to re-run.
     Blind appends never see this under contention: ``write_delta``
     auto-rebases them onto the winner (see its retry loop)."""
 
