@@ -2998,70 +2998,88 @@ def write_delta(
         (snap.metadata or {}).get("configuration") if snap is not None
         else None
     )
-    for _attempt in range(5):
-        try:
-            # inject per ATTEMPT: a rebase moves `version`, and the
-            # in-commit timestamp must exceed the NEW predecessor's
-            _commit(
-                path, version,
-                _apply_row_tracking(
+    try:
+        for _attempt in range(5):
+            try:
+                # inject per ATTEMPT: a rebase moves `version`, and the
+                # in-commit timestamp must exceed the NEW predecessor's
+                _commit(
                     path, version,
-                    _apply_ict(path, version, actions, ict_conf),
-                    snap,
-                ),
+                    _apply_row_tracking(
+                        path, version,
+                        _apply_ict(path, version, actions, ict_conf),
+                        snap,
+                    ),
+                )
+                return version
+            except FileExistsError:
+                if snap is None:
+                    raise  # racing CREATE: the table now exists
+                if _rt_supported(snap):
+                    # a row-tracked append reads the id high watermark
+                    # from its snapshot — a blind rebase onto a
+                    # concurrent commit could re-issue ids that commit
+                    # already minted; surface the conflict instead
+                    raise CommitConflict(
+                        f"concurrent writer committed version {version} "
+                        "while this row-tracked append was in flight — "
+                        "re-run against the current table state"
+                    ) from None
+                if not blind_append:
+                    raise CommitConflict(
+                        f"concurrent writer committed version {version} "
+                        f"while this {mode} was computed against version "
+                        f"{version - 1} — re-run it against the current "
+                        "table state"
+                    ) from None
+                latest2 = _table_version(path)
+                for w in range(version, latest2 + 1):
+                    with open(_version_file(path, w)) as fh:
+                        for line in fh:
+                            line = line.strip()
+                            if not line:
+                                continue
+                            a = json.loads(line)
+                            if "metaData" in a or "protocol" in a:
+                                raise CommitConflict(
+                                    f"concurrent commit {w} changed table "
+                                    "metadata/protocol while this append was "
+                                    "in flight — re-validate the write and "
+                                    "retry"
+                                ) from None
+                            if (
+                                txn is not None
+                                and "txn" in a
+                                and a["txn"].get("appId") == txn[0]
+                                and int(a["txn"].get("version", -1))
+                                >= int(txn[1])
+                            ):
+                                # idempotent sink: a concurrent writer
+                                # already applied this app transaction
+                                _unlink_staged(path, adds)
+                                return w
+                version = latest2 + 1
+        raise CommitConflict(
+            "append lost the commit race 5 times — the table is under "
+            "write contention this writer cannot keep up with"
+        )
+    except (FileExistsError, CommitConflict):
+        # nothing committed: no log version references the files this
+        # write staged, so they go now rather than at the next vacuum
+        _unlink_staged(path, adds)
+        raise
+
+
+def _unlink_staged(path: str, adds: list[dict]) -> None:
+    """Delete the data files a write staged for a commit that did not
+    land."""
+    for a in adds:
+        try:
+            os.unlink(
+                os.path.join(path, urllib.parse.unquote(a["add"]["path"]))
             )
-            return version
-        except FileExistsError:
-            if snap is None:
-                raise  # racing CREATE: the table now exists
-            if _rt_supported(snap):
-                # a row-tracked append reads the id high watermark
-                # from its snapshot — a blind rebase onto a
-                # concurrent commit could re-issue ids that commit
-                # already minted; surface the conflict instead
-                raise CommitConflict(
-                    f"concurrent writer committed version {version} "
-                    "while this row-tracked append was in flight — "
-                    "re-run against the current table state"
-                ) from None
-            if not blind_append:
-                raise CommitConflict(
-                    f"concurrent writer committed version {version} "
-                    f"while this {mode} was computed against version "
-                    f"{version - 1} — re-run it against the current "
-                    "table state"
-                ) from None
-            latest2 = _table_version(path)
-            for w in range(version, latest2 + 1):
-                with open(_version_file(path, w)) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        a = json.loads(line)
-                        if "metaData" in a or "protocol" in a:
-                            raise CommitConflict(
-                                f"concurrent commit {w} changed table "
-                                "metadata/protocol while this append was "
-                                "in flight — re-validate the write and "
-                                "retry"
-                            ) from None
-                        if (
-                            txn is not None
-                            and "txn" in a
-                            and a["txn"].get("appId") == txn[0]
-                            and int(a["txn"].get("version", -1))
-                            >= int(txn[1])
-                        ):
-                            # idempotent sink: a concurrent writer
-                            # already applied this app transaction —
-                            # our staged files become vacuumable orphans
-                            return w
-            version = latest2 + 1
-    raise CommitConflict(
-        "append lost the commit race 5 times — the table is under "
-        "write contention this writer cannot keep up with"
-    )
+        except FileNotFoundError:
+            pass
 
 
 def _assign_mapping(node, counter: list[int], phys=None):

@@ -11,13 +11,16 @@ Built on Spark 4's Python Data Source API (the same public seam as
 driver-side ``partitions()`` call plans from the table log/metadata
 (planning-sized JSON/avro — never data bytes) and emits one
 :class:`InputPartition` per live data file; the EXECUTOR-side
-``read()`` opens that one parquet with pyarrow, resolves columns
-(parquet field ids on mapped/renamed tables), injects Delta partition
-values from the log, and subtracts merge-on-read deletes — Delta
-deletion vectors decoded from the shipped O(1) descriptor, Iceberg
-positional + equality delete files gated by sequence number and
-partition scope (gating decided at PLANNING time per data file, so a
-task reads only the delete files that can apply to it).
+``read()`` opens that one parquet with pyarrow through the SAME
+per-file reader as the format's streaming tail — Delta's
+``read_file_partition`` (column mapping, partition-value injection,
+deletion vectors decoded from the shipped O(1) descriptor) and
+Iceberg's ``read_live_rows`` (field-id column resolution, identity
+constants on converted tables, position and equality deletes).  The
+Iceberg equality-delete gate, strict sequence plus partition scope,
+is ``sources.iceberg._eq_delete_applies``; the reader applies it per
+(delete, data) file pair before opening a delete file, so a task
+reads only the delete files that can apply to it.
 
 Scale shape: file-parallel reads with data bytes moving
 executor-side, never through the driver.  The facade trades the
@@ -45,11 +48,7 @@ import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader
 from pyspark.sql.types import StructType
 
 from ..functions.numeric import money_sum, sql_money_sum
@@ -59,14 +58,18 @@ from ..streaming.delta_source import (
     read_file_partition,
     resolve_file_fields,
 )
-from ..streaming.iceberg_source import _colmap
+from ..streaming.iceberg_source import (
+    _describe,
+    _eq_chunk,
+    _field_id_map,
+    _IceFilePartition,
+    read_live_rows,
+)
 from .delta import _snapshot, _version_at_timestamp
 from .iceberg import (
     _current_schema,
-    _identity_const_plan,
     _load_metadata,
     _manifest_entries,
-    _resolution,
     _schema_to_spark,
     _snapshot_at_timestamp,
     _snapshot_by_id,
@@ -242,40 +245,14 @@ class DeltaBatchSource(DataSource):
 # ----------------------------------------------------------- iceberg batch
 
 
-class _IceScanPartition(InputPartition):
-    def __init__(
-        self,
-        file_path: str,
-        names: list[str],
-        resolve: dict | None,
-        # positional-delete files whose sequence gate (delete seq >=
-        # this file's data seq) passed at planning time; read() scans
-        # them and keeps positions targeting THIS file's basename
-        pos_delete_files: list[str],
-        # (delete file path, equality column names) — sequence gate
-        # (STRICTLY greater) and partition scope already applied at
-        # planning time per the spec's rules
-        eq_deletes: list[tuple[str, tuple[str, ...]]],
-        # identity-partition constants for THIS file (typed Python
-        # values; spec §Column Projection) — converted/migrated files
-        # LACK the columns, so reading them by name would NULL-fill
-        consts: dict | None = None,
-    ) -> None:
-        self.file_path = file_path
-        self.names = names
-        self.resolve = resolve
-        self.pos_delete_files = pos_delete_files
-        self.eq_deletes = eq_deletes
-        self.consts = consts or {}
-
-
 class IcebergBatchReader(DataSourceReader):
-    """One :class:`_IceScanPartition` per live data file of the
-    resolved snapshot.  Merge-on-read gating — which delete files CAN
-    apply to which data file (sequence numbers, equality partition
-    scope) — is decided driver-side from planning-sized manifests, so
-    each task opens only its own data file plus the delete files that
-    survived its gates."""
+    """One :class:`_IceFilePartition` per live data file of the
+    resolved snapshot, read by the same executor-side
+    ``read_live_rows`` as the streaming tails.  Each task ships the
+    snapshot's delete-file descriptors; the reader's per-pair gates
+    (sequence for position deletes, ``_eq_delete_applies`` for
+    equality deletes) decide which apply to its data file, and a
+    delete file that applies to none is never opened."""
 
     def __init__(self, schema: StructType, options) -> None:
         self.path = options.get("path")
@@ -285,11 +262,6 @@ class IcebergBatchReader(DataSourceReader):
             )
         self.options = options
         self.schema = schema
-        # per-task equality-kill-set chunk size (rows), matching the
-        # changelog stream tail's option of the same name
-        self.eq_chunk = max(
-            1, int(options.get("maxeqdeleterows", 1 << 16))
-        )
 
     def _snap(self, meta: dict) -> dict | None:
         sid = self.options.get("snapshotid")
@@ -312,155 +284,27 @@ class IcebergBatchReader(DataSourceReader):
     def partitions(self):
         meta = _load_metadata(self.path)
         snap = self._snap(meta)
-        names = [f.name for f in self.schema.fields]
         if snap is None:
             return []
+        names = [f.name for f in self.schema.fields]
         data, deletes, eq_deletes = _manifest_entries(self.path, meta, snap)
-        res = _resolution(meta)
-        resolve = None
-        if res is not None:
-            if eq_deletes:
-                # same refusal as the native reader's _apply_eq_deletes
-                raise ValueError(
-                    "equality deletes on a renamed-column table are not "
-                    "supported by this reader"
-                )
-            cur_by_name = {f["name"]: int(f["id"]) for f in res["ordered"]}
-            ids = {}
-            for n in names:
-                fid = cur_by_name.get(n, res["name_to_id"].get(n))
-                if fid is not None:
-                    ids[int(fid)] = n
-            resolve = {
-                "ids": ids,
-                "name_to_id": res["name_to_id"],
-                "ambiguous": sorted(res["ambiguous"]),
-            }
-        schema_json = _current_schema(meta)
-        by_id = {int(f["id"]): f for f in schema_json["fields"]}
-        # identity-partition constants (typed for row assembly) — the
-        # same plan the native reader injects; None on evolved specs.
-        # Served on the RENAMED path too (r11, ADVICE r11 medium +
-        # VERDICT r10 item #6): a converted/migrated table's
-        # referenced files LACK their identity partition columns, and
-        # read()'s consts-first value lookup keeps the by-field-id
-        # resolution from silently NULL-filling them.
-        const_plan = _identity_const_plan(
-            meta, schema_json, data, typed=True
-        )
-        const_files = const_plan[1] if const_plan else {}
-
-        def pjson(p: dict | None) -> str | None:
-            return json.dumps(p, sort_keys=True, default=str) if p else None
-
-        out: list[_IceScanPartition] = []
-        for rec in sorted(data, key=lambda r: r["path"]):
-            pos_files = sorted(
-                d["path"] for d in deletes if d["seq"] >= rec["seq"]
+        resolve = _field_id_map(meta, names)
+        if resolve is not None and eq_deletes:
+            # same refusal as the native reader's _apply_eq_deletes
+            raise ValueError(
+                "equality deletes on a renamed-column table are not "
+                "supported by this reader"
             )
-            eqs: list[tuple[str, tuple[str, ...]]] = []
-            for d in sorted(eq_deletes, key=lambda d: d["path"]):
-                # STRICT gate: an equality delete at sequence S removes
-                # rows only from data files with data seq < S, scoped
-                # to the delete file's partition when it has one
-                if d["seq"] <= rec["seq"]:
-                    continue
-                dp = pjson(d.get("partition"))
-                if dp is not None and dp != pjson(rec.get("partition")):
-                    continue
-                cols = []
-                for fid in sorted(d["equality_ids"]):
-                    f = by_id.get(int(fid))
-                    if f is None or not isinstance(f.get("type"), str):
-                        raise ValueError(
-                            "equality delete on unresolvable/nested "
-                            f"field id {fid} is not supported"
-                        )
-                    cols.append(f["name"])
-                eqs.append((d["path"], tuple(cols)))
-            out.append(
-                _IceScanPartition(
-                    urllib.parse.unquote(rec["path"]),
-                    names,
-                    resolve,
-                    pos_files,
-                    eqs,
-                    const_files.get(
-                        os.path.basename(
-                            urllib.parse.unquote(rec["path"])
-                        )
-                    ),
-                )
-            )
-        return out
-
-    def read(self, partition: _IceScanPartition):
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.file_path)
-        colmap = _colmap(table, partition.resolve)
-        my_base = os.path.basename(partition.file_path)
-        dead: set[int] = set()
-        for dfile in partition.pos_delete_files:
-            dt = pq.read_table(dfile, columns=["file_path", "pos"])
-            for fp, pos in zip(
-                dt.column("file_path").to_pylist(),
-                dt.column("pos").to_pylist(),
-            ):
-                if os.path.basename(urllib.parse.unquote(fp)) == my_base:
-                    dead.add(int(pos))
-        consts = partition.consts
-
-        def val(row, n):
-            if n in consts:  # identity partition source: metadata wins
-                return consts[n]
-            return row.get(colmap[n]) if n in colmap else None
-
-        live = [
-            row
-            for pos, row in enumerate(table.to_pylist())
-            if pos not in dead
+        desc = _describe(meta, data)
+        pos = [desc(d) for d in deletes]
+        eqs = [desc(d) for d in eq_deletes]
+        return [
+            _IceFilePartition([desc(r)], names, resolve, pos, eqs)
+            for r in sorted(data, key=lambda r: r["path"])
         ]
-        killed = bytearray(len(live))
-        if partition.eq_deletes:
-            # Equality kill sets stream in bounded chunks (r11, same
-            # shape as the changelog tail's eq_kill_flags): one key
-            # extraction pass per distinct key-column set, then each
-            # delete file's keys materialize maxEqDeleteRows at a
-            # time — an arbitrarily large key file never holds its
-            # whole key set resident in the task.  Python tuple
-            # equality matches NULL to NULL, the spec's
-            # IS-NOT-DISTINCT-FROM semantics.
-            groups: dict[tuple, list[str]] = {}
-            for dfile, cols in partition.eq_deletes:
-                groups.setdefault(tuple(cols), []).append(dfile)
-            for cols, dfiles in sorted(groups.items()):
-                row_keys = [
-                    tuple(val(r, c) for c in cols) for r in live
-                ]
-                for dfile in sorted(dfiles):
-                    pf = pq.ParquetFile(dfile)
-                    for batch in pf.iter_batches(
-                        batch_size=self.eq_chunk, columns=list(cols)
-                    ):
-                        keys = set(
-                            zip(
-                                *[
-                                    batch.column(
-                                        batch.schema.get_field_index(c)
-                                    ).to_pylist()
-                                    for c in cols
-                                ]
-                            )
-                        )
-                        for i, rk in enumerate(row_keys):
-                            if not killed[i] and rk in keys:
-                                killed[i] = 1
-                        del keys
-        for i, row in enumerate(live):
-            if killed[i]:
-                continue
-            yield tuple(val(row, n) for n in partition.names)
+
+    def read(self, partition: _IceFilePartition):
+        return read_live_rows(partition, _eq_chunk(self.options))
 
 
 class IcebergBatchSource(DataSource):

@@ -578,6 +578,83 @@ def _manifest_entries(
     return data, deletes, eq_deletes
 
 
+def _ordered_snapshots(meta: dict) -> list[dict]:
+    """The snapshot log in commit order (sequence number, then
+    timestamp): the position space of changelog ranges and of the
+    stream tails' offsets."""
+    return sorted(
+        meta.get("snapshots") or [],
+        key=lambda s: (s.get("sequence-number", 0), s.get("timestamp-ms", 0)),
+    )
+
+
+def _plan_snapshot_changes(
+    path: str, meta: dict, snaps: list[dict], lo: int, hi: int
+):
+    """The per-snapshot change classifier under every Iceberg change
+    reader: :func:`read_iceberg_changes` (Spark scans) and both
+    ``iceberg_stream`` tails (per-file executor reads) — the Iceberg
+    twin of ``sources.delta._plan_changes``.  Yields ``(snapshot,
+    step)`` for ``snaps[lo:hi]`` in order, where ``step`` holds:
+
+    - ``prev`` / ``cur``: the ``(data, position-delete,
+      equality-delete)`` manifest records live before / after the
+      snapshot (``prev`` of the first is ``snaps[lo - 1]``'s state);
+    - ``added``: data files the snapshot added;
+    - ``removed``: data files it removed (their before-state records);
+    - ``carried``: data files live on both sides;
+    - ``new_pos`` / ``new_eq``: delete files it added.
+
+    Each list is sorted by path."""
+
+    def by_path(recs):
+        return sorted(recs, key=lambda r: r["path"])
+
+    prev = (
+        _manifest_entries(path, meta, snaps[lo - 1]) if lo >= 1
+        else ([], [], [])
+    )
+    for snap in snaps[lo:hi]:
+        cur = _manifest_entries(path, meta, snap)
+        was = [{r["path"] for r in recs} for recs in prev]
+        now = [{r["path"] for r in recs} for recs in cur]
+        yield snap, {
+            "prev": prev,
+            "cur": cur,
+            "added": by_path(r for r in cur[0] if r["path"] not in was[0]),
+            "removed": by_path(r for r in prev[0] if r["path"] not in now[0]),
+            "carried": by_path(r for r in prev[0] if r["path"] in now[0]),
+            "new_pos": by_path(d for d in cur[1] if d["path"] not in was[1]),
+            "new_eq": by_path(d for d in cur[2] if d["path"] not in was[2]),
+        }
+        prev = cur
+
+
+def _part_key(partition: dict | None) -> str | None:
+    """A manifest partition tuple as a comparable key; None for an
+    unpartitioned file."""
+    return (
+        json.dumps(partition, sort_keys=True, default=str)
+        if partition else None
+    )
+
+
+def _eq_delete_applies(d: dict, f: dict) -> bool:
+    """The equality-delete gate: delete file ``d`` applies to data file
+    ``f`` when its sequence number is STRICTLY above the data file's
+    (so an upsert's rows survive the delete committed with them) and
+    it was written unpartitioned or for ``f``'s partition (so a
+    partition-local delete cannot kill equal keys elsewhere).  ``d``
+    and ``f`` are manifest records or the executor reader's
+    descriptors.  The Python row readers call this per (delete, data)
+    file pair; :func:`_apply_eq_deletes` applies the same two
+    conditions as its Spark join condition over :func:`_part_key`."""
+    dp = _part_key(d.get("partition"))
+    return d["seq"] > f["seq"] and (
+        dp is None or dp == _part_key(f.get("partition"))
+    )
+
+
 # ------------------------------------------------------------------ reader
 
 
@@ -1407,12 +1484,10 @@ def _apply_eq_deletes(
     """Subtract equality-delete rows (content=2, the merge-on-read
     DELETE shape Flink CDC writes) from a tagged scan: one null-safe
     left-anti join per distinct ``equality_ids`` set, on the delete's
-    equality columns, gated by data-file sequence STRICTLY below the
-    delete's and scoped to the delete file's partition (a delete
-    written under a partitioned spec applies only to its own
-    partition; one written unpartitioned applies globally — per the
-    spec's scoping rule, which keeps a partition-local delete from
-    over-deleting equal keys elsewhere).
+    equality columns, gated as :func:`_eq_delete_applies` rules
+    (data-file sequence STRICTLY below the delete's; the delete file's
+    partition only, unless it was written unpartitioned), here as the
+    join condition.
 
     ``return_killed=True`` inverts the join: return the rows the
     deletes KILL (semi-join per group, deduped on the scan tags) —
@@ -1431,18 +1506,13 @@ def _apply_eq_deletes(
         sf.name: sf for sf in _schema_to_spark(schema_json).fields
     }
 
-    def pjson(p: dict | None) -> str | None:
-        return (
-            json.dumps(p, sort_keys=True, default=str) if p else None
-        )
-
     smap = spark.createDataFrame(
         pd.DataFrame(
             sorted(
                 (
                     os.path.basename(urllib.parse.unquote(r["path"])),
                     r["seq"],
-                    pjson(r.get("partition")),
+                    _part_key(r.get("partition")),
                 )
                 for r in data
             ),
@@ -1472,7 +1542,7 @@ def _apply_eq_deletes(
                     (
                         os.path.basename(urllib.parse.unquote(d["path"])),
                         d["seq"],
-                        pjson(d.get("partition")),
+                        _part_key(d.get("partition")),
                     )
                     for d in recs
                 ),
@@ -1627,8 +1697,10 @@ def read_iceberg_changes(
     ``create_changelog_view``): output = table columns +
     ``_change_type`` ('insert' | 'delete') + ``_snapshot_id``.
     ``starting_snapshot_id`` is EXCLUSIVE (None = from genesis),
-    ``ending_snapshot_id`` inclusive (None = current).  Per snapshot,
-    in sequence order:
+    ``ending_snapshot_id`` inclusive (None = current).  Snapshots are
+    classified by :func:`_plan_snapshot_changes`, the same steps the
+    ``iceberg_stream`` changelog tail reads.  Per snapshot, in sequence
+    order:
 
     - data files ADDED → their rows as inserts, with the snapshot's
       own deletes applied — an upsert's NET effect streams, dead-on-
@@ -1638,7 +1710,8 @@ def read_iceberg_changes(
     - NEW position-delete files → exactly the newly-dead rows of
       still-active files as deletes (previously-dead positions were
       already subtracted, so an overlapping foreign delete file
-      cannot double-emit);
+      cannot double-emit; rows a new equality delete kills too are
+      left to the next bullet);
     - NEW equality-delete files → the rows they kill (null-safe
       match, strict sequence gate, partition scope) as deletes.
 
@@ -1650,10 +1723,7 @@ def read_iceberg_changes(
     schema_json = _current_schema(meta)
     spark_schema = _schema_to_spark(schema_json)
     res = _resolution(meta)
-    snaps = sorted(
-        meta.get("snapshots") or [],
-        key=lambda s: (s.get("sequence-number", 0), s.get("timestamp-ms", 0)),
-    )
+    snaps = _ordered_snapshots(meta)
     ids = [int(s["snapshot-id"]) for s in snaps]
 
     def _index(sid, label):
@@ -1670,133 +1740,66 @@ def read_iceberg_changes(
         starting_snapshot_id, "starting") + 1
     hi = len(snaps) if ending_snapshot_id is None else _index(
         ending_snapshot_id, "ending") + 1
-    ct = F.lit(None)
-    empty = (
-        spark.createDataFrame([], spark_schema)
-        .withColumn("_change_type", F.lit(None).cast("string"))
-        .withColumn("_snapshot_id", F.lit(None).cast("long"))
-    )
-    del ct
-    if lo >= hi:
-        return empty
-    if lo == 0:
-        prev_data, prev_del, prev_eq = [], [], []
-    else:
-        prev_data, prev_del, prev_eq = _manifest_entries(
-            path, meta, snaps[lo - 1]
+
+    def scan(data, deletes, eq_deletes, tagged=False):
+        return _plan_scan(
+            spark, spark_schema, data, deletes, res,
+            eq_deletes=eq_deletes, schema_json=schema_json, meta=meta,
+            keep_file=tagged, keep_pos=tagged,
         )
-    import pandas as pd
 
     out = None
-    for i in range(lo, hi):
-        cur = snaps[i]
-        cur_data, cur_del, cur_eq = _manifest_entries(path, meta, cur)
-        prev_paths = {r["path"] for r in prev_data}
-        cur_paths = {r["path"] for r in cur_data}
-        added = [r for r in cur_data if r["path"] not in prev_paths]
-        removed = [r for r in prev_data if r["path"] not in cur_paths]
-        survivors = [r for r in prev_data if r["path"] in cur_paths]
-        new_pos = [
-            d for d in cur_del
-            if d["path"] not in {x["path"] for x in prev_del}
-        ]
-        new_eq = [
-            d for d in cur_eq
-            if d["path"] not in {x["path"] for x in prev_eq}
-        ]
-        parts: list[DataFrame] = []
-        if added:
-            parts.append(
-                _plan_scan(
-                    spark, spark_schema, added, cur_del, res,
-                    eq_deletes=cur_eq, schema_json=schema_json, meta=meta,
-                ).withColumn("_change_type", F.lit("insert"))
-            )
-        if removed:
-            parts.append(
-                _plan_scan(
-                    spark, spark_schema, removed, prev_del, res,
-                    eq_deletes=prev_eq, schema_json=schema_json, meta=meta,
-                ).withColumn("_change_type", F.lit("delete"))
-            )
-        if new_pos and survivors:
-            tagged = _plan_scan(
-                spark, spark_schema, survivors, prev_del, res,
-                eq_deletes=prev_eq, schema_json=schema_json, meta=meta,
-                keep_file=True, keep_pos=True,
-            )
-            dseq = spark.createDataFrame(
-                pd.DataFrame(
-                    sorted(
-                        (os.path.basename(urllib.parse.unquote(d["path"])),
-                         d["seq"])
-                        for d in new_pos
-                    ),
-                    columns=["_ice_dfile", "_ice_dseq"],
-                ),
-                "_ice_dfile string, _ice_dseq long",
-            )
-            smap = spark.createDataFrame(
-                pd.DataFrame(
-                    sorted(
-                        (os.path.basename(urllib.parse.unquote(r["path"])),
-                         r["seq"])
-                        for r in survivors
-                    ),
-                    columns=["_ice_file", "_ice_seq"],
-                ),
-                "_ice_file string, _ice_seq long",
-            )
-            dfiles = sorted({d["path"] for d in new_pos})
-            del_rows = (
-                spark.read.schema("file_path string, pos long")
-                .parquet(*dfiles)
-                .withColumn(
-                    "_ice_dfile",
-                    F.element_at(
-                        F.split(F.col("_metadata.file_name"), "/"), -1
-                    ),
-                )
-                .join(F.broadcast(dseq), "_ice_dfile")
-                .withColumn(
-                    "_ice_file",
-                    F.url_decode(
-                        F.element_at(F.split(F.col("file_path"), "/"), -1)
-                    ),
-                )
-                .join(F.broadcast(smap), "_ice_file")
-                .filter(F.col("_ice_dseq") >= F.col("_ice_seq"))
-                .select("_ice_file", F.col("pos").alias("_ice_pos"))
-            )
-            parts.append(
-                tagged.join(del_rows, ["_ice_file", "_ice_pos"], "left_semi")
-                .drop("_ice_file", "_ice_pos")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        if new_eq and survivors:
-            tagged = _plan_scan(
-                spark, spark_schema, survivors, prev_del, res,
-                eq_deletes=prev_eq, schema_json=schema_json, meta=meta,
-                keep_file=True, keep_pos=True,
-            )
+    for snap, step in _plan_snapshot_changes(path, meta, snaps, lo, hi):
+        _, prev_pos, prev_eq = step["prev"]
+        _, cur_pos, cur_eq = step["cur"]
+        carried = step["carried"]
+        inserts, deletes = [], []
+        if step["added"]:
+            inserts.append(scan(step["added"], cur_pos, cur_eq))
+        if step["removed"]:
+            deletes.append(scan(step["removed"], prev_pos, prev_eq))
+        if carried and (step["new_pos"] or step["new_eq"]):
+            # the carried files' rows live before the snapshot, tagged
+            # so the new delete files' kills can be picked out of them
+            tagged = scan(carried, prev_pos, prev_eq, tagged=True)
             base_seq = {
                 os.path.basename(urllib.parse.unquote(r["path"])): r["seq"]
-                for r in survivors
+                for r in carried
             }
-            parts.append(
-                _apply_eq_deletes(
-                    spark, tagged, new_eq, survivors, base_seq, res,
-                    schema_json, return_killed=True,
+            if step["new_pos"]:
+                hit = tagged.join(
+                    _pos_kill_rows(spark, step["new_pos"], base_seq),
+                    ["_ice_file", "_ice_pos"], "left_semi",
                 )
-                .drop("_ice_file", "_ice_pos")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        lit_s = F.lit(int(cur["snapshot-id"])).cast("long")
-        for p in parts:
-            p = p.withColumn("_snapshot_id", lit_s)
-            out = p if out is None else out.unionByName(p)
-        prev_data, prev_del, prev_eq = cur_data, cur_del, cur_eq
-    return out if out is not None else empty
+                if step["new_eq"]:
+                    # a row the new equality deletes kill too is
+                    # emitted once, by the equality part below
+                    hit = _apply_eq_deletes(
+                        spark, hit, step["new_eq"], carried, base_seq,
+                        res, schema_json,
+                    )
+                deletes.append(hit.drop("_ice_file", "_ice_pos"))
+            if step["new_eq"]:
+                deletes.append(
+                    _apply_eq_deletes(
+                        spark, tagged, step["new_eq"], carried, base_seq,
+                        res, schema_json, return_killed=True,
+                    ).drop("_ice_file", "_ice_pos")
+                )
+        lit_s = F.lit(int(snap["snapshot-id"])).cast("long")
+        for ct, parts in (("insert", inserts), ("delete", deletes)):
+            for p in parts:
+                p = p.withColumn("_change_type", F.lit(ct)).withColumn(
+                    "_snapshot_id", lit_s
+                )
+                out = p if out is None else out.unionByName(p)
+    if out is None:
+        return (
+            spark.createDataFrame([], spark_schema)
+            .withColumn("_change_type", F.lit(None).cast("string"))
+            .withColumn("_snapshot_id", F.lit(None).cast("long"))
+        )
+    return out
 
 
 def history_iceberg(spark: SparkSession, path: str) -> list[dict]:
@@ -4928,10 +4931,7 @@ def expire_snapshots(
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     meta = _load_metadata(path)
-    snaps = sorted(
-        meta.get("snapshots") or [],
-        key=lambda s: (s.get("sequence-number", 0), s.get("timestamp-ms", 0)),
-    )
+    snaps = _ordered_snapshots(meta)
     cur = meta.get("current-snapshot-id")
     keep = {s["snapshot-id"] for s in snaps[-keep_last:]} | ({cur} if cur else set())
     # named refs PIN their snapshots — a tag exists to survive expiry

@@ -256,3 +256,57 @@ def test_write_at_read_version_conflicts_once_the_table_moved(
     rivals.clear()
     assert write_delta(_df(spark, [(5, "b", 5.0)]), path, mode="append") == 4
     assert (5, "b", 5.0) in _sorted_rows(read_delta(spark, path))
+
+
+def test_write_that_commits_nothing_unlinks_its_staged_files(
+    spark, tmp_path, monkeypatch
+):
+    """A write that loses its commit deletes the data files it staged:
+    after a rival claims the version a ``read_version`` overwrite
+    computed against, and after a rival applies the same ``txn`` first,
+    every parquet file in the table root is named by some ``add`` in
+    the log."""
+    import urllib.parse
+
+    import aws_datalake_framework_api_spark.sources.delta as delta_mod
+    from aws_datalake_framework_api_spark.sources.delta import (
+        CommitConflict,
+        _table_version,
+    )
+
+    path = str(tmp_path / "t")
+    write_delta(_df(spark, [(1, "a", 1.0)]), path, mode="error")
+    stage = delta_mod._stage_files
+    rival_writes = []
+
+    def rival_commits_first(*args, **kwargs):
+        if rival_writes:  # the rival's own write stages normally
+            rows, txn = rival_writes.pop()
+            write_delta(_df(spark, rows), path, mode="append", txn=txn)
+        return stage(*args, **kwargs)
+
+    def orphans():
+        added = {
+            urllib.parse.unquote(a["path"])
+            for v in range(_table_version(path) + 1)
+            for a in _adds_at_version(path, v)
+        }
+        return {
+            f for f in os.listdir(path) if f.endswith(".parquet")
+        } - added
+
+    monkeypatch.setattr(delta_mod, "_stage_files", rival_commits_first)
+    rival_writes.append(([(2, "r", 2.0)], ("app", 1)))
+    with pytest.raises(CommitConflict):
+        write_delta(_df(spark, [(3, "x", 3.0)]), path, mode="overwrite",
+                    read_version=0)
+    assert orphans() == set()
+    # a blind append carrying the txn the rival already applied
+    rival_writes.append(([(4, "r", 4.0)], ("app", 2)))
+    v = write_delta(_df(spark, [(4, "r", 4.0)]), path, mode="append",
+                    txn=("app", 2))
+    assert v == _table_version(path)
+    assert orphans() == set()
+    assert _sorted_rows(read_delta(spark, path)) == [
+        (1, "a", 1.0), (2, "r", 2.0), (4, "r", 4.0)
+    ]

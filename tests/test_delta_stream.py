@@ -384,148 +384,6 @@ def _run_ice(spark, table, out, ckpt, **opts):
     q.awaitTermination()
 
 
-def test_iceberg_changelog_stream_matches_batch_reader(spark, tmp_path):
-    """readChangeFeed=true: a position-delete snapshot, a MOR merge
-    (update + delete + insert), and a COW rewrite all stream as
-    row-level changes EQUAL to the batch read_iceberg_changes over
-    the same range — and the checkpoint advances (no re-emission)."""
-    from aws_datalake_framework_api_spark.sources.iceberg import (
-        delete_iceberg_rows,
-        history_iceberg,
-        merge_iceberg,
-        read_iceberg_changes,
-        write_iceberg,
-    )
-    from aws_datalake_framework_api_spark.streaming.iceberg_source import (
-        register as ice_register,
-    )
-
-    ice_register(spark)
-    t = str(tmp_path / "t")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    write_iceberg(
-        _df(spark, [(i, "a", float(i)) for i in range(1, 9)])
-        .coalesce(1),
-        t, mode="error",
-    )                                                     # snap 1
-    delete_iceberg_rows(spark, t, F.col("k") == 8)        # snap 2
-    merge_iceberg(
-        spark, t,
-        _df(spark, [(1, "a", 100.0), (2, "a", 0.0), (9, "a", 9.0)]),
-        on=["k"],
-        clauses=[
-            {"when": "matched", "action": "update",
-             "condition": "s.v > t.v"},
-            {"when": "matched", "action": "delete"},
-            {"when": "not_matched", "action": "insert"},
-        ],
-        strategy="mor",
-    )                                                     # snap 3
-    merge_iceberg(
-        spark, t, _df(spark, [(3, "a", 300.0)]), on=["k"],
-    )                                                     # snap 4 (COW)
-    _run_ice(spark, t, out, ckpt, readChangeFeed="true", startingPos="1")
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(out)
-        .drop("_snapshot_id").collect()
-    )
-    hist = history_iceberg(spark, t)
-    batch = sorted(
-        tuple(r)
-        for r in read_iceberg_changes(
-            spark, t, hist[0]["snapshot_id"], hist[-1]["snapshot_id"]
-        ).drop("_snapshot_id").collect()
-    )
-    assert got == batch
-    # the explicit change classes, for readability of the contract:
-    assert got == sorted(
-        [(8, "a", 8.0, "delete")]                 # pos-delete snapshot
-        + [(1, "a", 1.0, "delete"),               # MOR update preimage
-           (1, "a", 100.0, "insert"),             # MOR update postimage
-           (2, "a", 2.0, "delete"),               # MOR delete clause
-           (9, "a", 9.0, "insert")]               # MOR insert
-        + [(i, "a", float(i), "delete")           # COW rewrite: whole
-           for i in (3, 4, 5, 6, 7)]              # hit file deletes...
-        + [(3, "a", 300.0, "insert")]             # ...and re-inserts
-        + [(i, "a", float(i), "insert") for i in (4, 5, 6, 7)]
-    )
-    # checkpoint advance: rerun emits nothing new
-    _run_ice(spark, t, out, ckpt, readChangeFeed="true", startingPos="1")
-    assert len(_sunk(spark, out)) == len(got)
-
-
-def test_iceberg_changelog_stream_covers_equality_deletes(
-    spark, tmp_path
-):
-    """Equality-delete snapshots STREAM (r9, VERDICT r8 item #2 —
-    previously refused): a delete_by_key kill, a re-insert of a
-    killed key, a SECOND eq delete of that key (sequence gate: only
-    the re-inserted version dies, the original is already dead), a
-    position delete landing on an eq-carrying state, and a COW
-    rewrite removing an eq-subtracted file — all matching the batch
-    read_iceberg_changes over the same range."""
-    from aws_datalake_framework_api_spark.sources.iceberg import (
-        delete_by_key_iceberg,
-        delete_iceberg_rows,
-        history_iceberg,
-        merge_iceberg,
-        read_iceberg_changes,
-        write_iceberg,
-    )
-    from aws_datalake_framework_api_spark.streaming.iceberg_source import (
-        register as ice_register,
-    )
-
-    ice_register(spark)
-    t = str(tmp_path / "t")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def keys(*ks):
-        return spark.createDataFrame([(k,) for k in ks], "k int")
-
-    write_iceberg(
-        _df(spark, [(i, "a", float(i)) for i in range(1, 7)])
-        .coalesce(1),
-        t, mode="error",
-    )                                                     # snap 1
-    delete_by_key_iceberg(spark, t, keys(2, 4))           # snap 2: eq
-    write_iceberg(
-        _df(spark, [(2, "a", 22.0), (7, "a", 7.0)]).coalesce(1),
-        t, mode="append",
-    )                                                     # snap 3
-    delete_by_key_iceberg(spark, t, keys(2))              # snap 4: eq again
-    delete_iceberg_rows(spark, t, F.col("k") == 5)        # snap 5: posdel
-    merge_iceberg(
-        spark, t, _df(spark, [(6, "a", 600.0)]), on=["k"],
-    )                                                     # snap 6: COW
-    _run_ice(spark, t, out, ckpt, readChangeFeed="true", startingPos="1")
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(out)
-        .drop("_snapshot_id").collect()
-    )
-    hist = history_iceberg(spark, t)
-    batch = sorted(
-        tuple(r)
-        for r in read_iceberg_changes(
-            spark, t, hist[0]["snapshot_id"], hist[-1]["snapshot_id"]
-        ).drop("_snapshot_id").collect()
-    )
-    assert got == batch
-    assert got == sorted(
-        [(2, "a", 2.0, "delete"), (4, "a", 4.0, "delete")]  # snap 2 eq
-        + [(2, "a", 22.0, "insert"), (7, "a", 7.0, "insert")]  # snap 3
-        + [(2, "a", 22.0, "delete")]   # snap 4: ONLY the re-insert dies
-        + [(5, "a", 5.0, "delete")]    # snap 5: posdel on eq-carrying state
-        + [(1, "a", 1.0, "delete"), (3, "a", 3.0, "delete"),
-           (6, "a", 6.0, "delete"),    # snap 6 COW: prev-LIVE rows only
-           (1, "a", 1.0, "insert"), (3, "a", 3.0, "insert"),
-           (6, "a", 600.0, "insert")]
-    )
-    # checkpoint advance: rerun emits nothing new
-    _run_ice(spark, t, out, ckpt, readChangeFeed="true", startingPos="1")
-    assert len(_sunk(spark, out)) == len(got)
-
-
 def test_iceberg_changelog_stream_chunks_oversized_key_files(
     spark, tmp_path
 ):
