@@ -29,6 +29,21 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEM`` when set, else half
+    of physical memory, at least 1 GiB.  ``local[N]`` runs every
+    executor inside the driver JVM, so a heap sized past the host lets
+    the kernel's OOM killer take the JVM instead of Spark spilling."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    return f"{max(1024, _mem_total_mb() // 2)}m"
+
+
+def _mem_total_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
 def get_spark(
     app_name: str = "aws-datalake-framework-api-spark",
     shuffle_partitions: int | None = None,
@@ -52,7 +67,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # 200-row dims (part) are far under this; keep the default 10MB
         # threshold but make the intent explicit for cluster configs.

@@ -49,17 +49,14 @@ Write path (``write_delta``): stages data files with a normal
 parquet write, flattens them into the table root under unique names
 (the log, not the directory layout, is the source of truth — the
 reader never assumes hive-style paths), derives ``partitionValues``
-from the staging layout, and publishes the commit JSON atomically
-with the ``os.link`` put-if-absent idiom:
-two racing writers of version N produce exactly one winner, the loser
-gets a ``FileExistsError`` to retry against the new state (optimistic
-concurrency, as the protocol prescribes).
-
-``os.link`` assumes a filesystem with atomic link semantics (POSIX,
-NFSv4, HDFS-mounted).  On an object store the same guarantee needs an
-external put-if-absent coordinator — exactly the LogStore seam
-delta-spark itself requires on S3 — so a cloud deployment swaps
-``_commit``'s publish step for that service and nothing else changes.
+from the staging layout, and publishes the commit JSON with
+put-if-absent: two racing writers of version N produce exactly one
+winner, the loser gets a ``FileExistsError`` to retry against the new
+state (optimistic concurrency, as the protocol prescribes).  Staging,
+footer stats and the put-if-absent publish are the format-neutral
+steps in :mod:`.table_io`, shared with the Iceberg connector; this
+module keeps the Delta codec (``add``/``cdc`` actions, JSON stats,
+log replay and checkpoints).
 """
 
 from __future__ import annotations
@@ -80,6 +77,12 @@ from ..functions.numeric import money_sum, sql_money_sum
 from ..registry import query
 from .landing import _scratch
 from .readers import load_table
+from .table_io import (
+    CommitConflict,
+    footer_min_max,
+    put_if_absent,
+    stage_parquet,
+)
 
 _LOG = "_delta_log"
 
@@ -433,33 +436,25 @@ def _stage_cdc(df: DataFrame, snap: _Snapshot, path: str) -> list[dict]:
                 cols.append(col.alias(pf.name))
     else:
         cols = [F.col(c) for c in data_cols]
-    staged_df = df.select(*cols, F.col("_change_type"))
-    cdc_dir = os.path.join(path, _CDC_DIR)
-    staging = os.path.join(path, f".staging-cdc-{uuid.uuid4().hex[:12]}")
-    staged_df.write.mode("overwrite").parquet(staging)
-    os.makedirs(cdc_dir, exist_ok=True)
-    actions: list[dict] = []
-    i = 0
-    for root, _dirs, files in os.walk(staging):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"cdc-{i:05d}-{uuid.uuid4().hex[:8]}.parquet"
-            i += 1
-            dst = os.path.join(cdc_dir, name)
-            os.replace(os.path.join(root, f), dst)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": urllib.parse.quote(f"{_CDC_DIR}/{name}"),
-                        "partitionValues": {},
-                        "size": os.path.getsize(dst),
-                        "dataChange": False,
-                    }
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    return actions
+    staged = stage_parquet(
+        df.select(*cols, F.col("_change_type")),
+        os.path.join(path, ".staging-cdc-"),
+        os.path.join(path, _CDC_DIR),
+        lambda i, _f: f"cdc-{i:05d}-{uuid.uuid4().hex[:8]}.parquet",
+    )
+    return [
+        {
+            "cdc": {
+                "path": urllib.parse.quote(
+                    f"{_CDC_DIR}/{os.path.basename(dst)}"
+                ),
+                "partitionValues": {},
+                "size": os.path.getsize(dst),
+                "dataChange": False,
+            }
+        }
+        for dst, _pv in staged
+    ]
 
 
 def _to_physical_df(df: DataFrame, sj: dict, mode: str) -> DataFrame:
@@ -1359,18 +1354,6 @@ def _dv_relation(
 # ------------------------------------------------------------------ writer
 
 
-class CommitConflict(RuntimeError):
-    """A concurrent writer claimed the version this commit computed.
-
-    Raised by the mutation paths (DELETE/UPDATE/MERGE/OPTIMIZE/
-    RESTORE/partition-delete) and by ``write_delta(read_version=)``,
-    which read a snapshot and therefore cannot be rebased blindly —
-    delta-spark's winning-commit reconciliation likewise fails these
-    and asks the caller to re-run.
-    Blind appends never see this under contention: ``write_delta``
-    auto-rebases them onto the winner (see its retry loop)."""
-
-
 _ICT_KEY = "delta.enableInCommitTimestamps"
 
 
@@ -1543,56 +1526,36 @@ def _commit_mutation(
 
 
 def _commit(path: str, version: int, actions: list[dict]) -> None:
-    """Publish one commit atomically: write a temp file, ``os.link``
-    it to the version name — the link fails if the version exists, so
-    concurrent writers of version N get exactly one winner."""
+    """Publish one commit with :func:`.table_io.put_if_absent`: a
+    version that exists raises ``FileExistsError``, so concurrent
+    writers of version N get exactly one winner."""
     os.makedirs(_log_dir(path), exist_ok=True)
-    tmp = os.path.join(_log_dir(path), f".tmp-{uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-    try:
-        os.link(tmp, _version_file(path, version))
-    finally:
-        os.unlink(tmp)
+    put_if_absent(
+        _version_file(path, version),
+        "".join(json.dumps(a) + "\n" for a in actions),
+    )
 
 
 def _footer_stats(dst: str) -> str | None:
-    """Per-file column stats from the ALREADY-WRITTEN parquet footer —
-    no data read — serialized as the protocol's ``add.stats`` JSON
-    string ({numRecords, minValues, maxValues}).  Only JSON-safe
-    scalar types are recorded; anything else is simply absent, which
-    readers must (and do) treat as unprunable."""
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(dst).metadata
-    except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
+    """The protocol's ``add.stats`` JSON string ({numRecords,
+    minValues, maxValues}) from the already-written parquet footer
+    (:func:`.table_io.footer_min_max`).  Only JSON-safe scalar types
+    are recorded; anything else is simply absent, which readers must
+    (and do) treat as unprunable."""
+    folded = footer_min_max(dst)
+    if folded is None:
         return None
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            s = col.statistics
-            if s is None or not s.has_min_max:
-                continue
-            name = col.path_in_schema
-            try:
-                lo, hi = s.min, s.max
-            except Exception:  # noqa: BLE001 — e.g. pyarrow cannot
-                continue  # extract decimal statistics; stats optional
-            if isinstance(lo, bytes) or isinstance(hi, bytes):
-                continue
-            if not isinstance(lo, (int, float, str, bool)):
-                continue
-            if name not in mins or lo < mins[name]:  # type: ignore[operator]
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:  # type: ignore[operator]
-                maxs[name] = hi
+    n, mins, maxs = folded
+
+    def scalars(vals: dict) -> dict:
+        return {
+            k: v for k, v in vals.items()
+            if isinstance(v, (int, float, str, bool))
+        }
+
     return json.dumps(
-        {"numRecords": md.num_rows, "minValues": mins, "maxValues": maxs}
+        {"numRecords": n, "minValues": scalars(mins),
+         "maxValues": scalars(maxs)}
     )
 
 
@@ -1601,48 +1564,35 @@ def _stage_files(
     data_change: bool = True,
 ) -> list[dict]:
     """Write df as parquet, flatten the part files into the table root
-    under unique names, and return their ``add`` actions (partition
-    values recovered from the staging layout's hive dirs).
-    ``data_change=False`` marks the adds as pure rearrangement
-    (compaction) so incremental consumers can skip them, per the
-    protocol's dataChange contract."""
-    staging = os.path.join(path, f".staging-{uuid.uuid4().hex[:12]}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    under unique names (:func:`.table_io.stage_parquet`), and return
+    their ``add`` actions (partition values recovered from the staging
+    layout's hive dirs).  ``data_change=False`` marks the adds as pure
+    rearrangement (compaction) so incremental consumers can skip them,
+    per the protocol's dataChange contract."""
+    staged = stage_parquet(
+        df, os.path.join(path, ".staging-"), path,
+        lambda i, _f: (
+            f"part-{version:05d}-{i:05d}-{uuid.uuid4().hex[:8]}.parquet"
+        ),
+        partition_by,
+    )
     adds: list[dict] = []
-    i = 0
-    for root, _dirs, files in os.walk(staging):
-        pvals: dict[str, str | None] = {}
-        for comp in os.path.relpath(root, staging).split(os.sep):
-            if "=" in comp:
-                k, _, v = comp.partition("=")
-                v = urllib.parse.unquote(v)
-                pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"part-{version:05d}-{i:05d}-{uuid.uuid4().hex[:8]}.parquet"
-            i += 1
-            dst = os.path.join(path, name)
-            os.replace(os.path.join(root, f), dst)
-            st = os.stat(dst)
-            adds.append(
-                {
-                    "add": {
-                        "path": urllib.parse.quote(name),
-                        "partitionValues": {
-                            c: pvals.get(c) for c in partition_by
-                        },
-                        "size": st.st_size,
-                        "modificationTime": int(st.st_mtime * 1000),
-                        "dataChange": data_change,
-                        "stats": _footer_stats(dst),
-                    }
+    for dst, pvals in staged:
+        st = os.stat(dst)
+        adds.append(
+            {
+                "add": {
+                    "path": urllib.parse.quote(os.path.basename(dst)),
+                    "partitionValues": {
+                        c: pvals.get(c) for c in partition_by
+                    },
+                    "size": st.st_size,
+                    "modificationTime": int(st.st_mtime * 1000),
+                    "dataChange": data_change,
+                    "stats": _footer_stats(dst),
                 }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+            }
+        )
     return adds
 
 
@@ -4603,17 +4553,15 @@ def checkpoint_delta(spark: SparkSession, path: str) -> int:
                 {k: v for k, v in r.items() if v is not None}
             )
         if add_rows:
-            sdir = os.path.join(_log_dir(path), "_sidecars")
-            os.makedirs(sdir, exist_ok=True)
             sc_name = f"{uuid.uuid4()}.parquet"
-            sc_file = os.path.join(sdir, sc_name)
-            tmp = sc_file + f".tmp-{uuid.uuid4().hex[:8]}"
-            spark.createDataFrame(add_rows, schema).select(
-                "add"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-            os.replace(os.path.join(tmp, part), sc_file)
-            shutil.rmtree(tmp, ignore_errors=True)
+            sdir = os.path.join(_log_dir(path), "_sidecars")
+            ((sc_file, _pv),) = stage_parquet(
+                spark.createDataFrame(add_rows, schema).select(
+                    "add"
+                ).coalesce(1),
+                os.path.join(sdir, sc_name + ".tmp-"), sdir,
+                lambda _i, _f: sc_name,
+            )
             actions.append(
                 {"sidecar": {
                     "path": sc_name,
@@ -4626,16 +4574,12 @@ def checkpoint_delta(spark: SparkSession, path: str) -> int:
                 fh.write(json.dumps(a) + "\n")
         os.replace(main_tmp, main)
     else:
-        cp_file = os.path.join(
-            _log_dir(path), f"{latest:020d}.checkpoint.parquet"
+        cp_name = f"{latest:020d}.checkpoint.parquet"
+        stage_parquet(
+            spark.createDataFrame(rows, schema).coalesce(1),
+            os.path.join(_log_dir(path), cp_name + ".tmp-"),
+            _log_dir(path), lambda _i, _f: cp_name,
         )
-        tmp = cp_file + f".tmp-{uuid.uuid4().hex[:8]}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.replace(os.path.join(tmp, part), cp_file)
-        shutil.rmtree(tmp, ignore_errors=True)
     # publish the pointer atomically: a crash mid-write must never
     # leave truncated JSON where the live pointer was (ADVICE r5)
     lc = os.path.join(_log_dir(path), "_last_checkpoint")

@@ -20,9 +20,13 @@ this module implements the PUBLIC Iceberg table spec
   as one distributed anti-join against ``_metadata.row_index`` with
   sequence-number gating (a delete applies only to data files whose
   data sequence number is <= the delete's);
-- **commit**: ``os.link`` put-if-absent on the next metadata version
-  + atomic ``version-hint.text`` replace — same optimistic protocol
-  as the Delta connector's log commits.
+- **commit**: put-if-absent on the next metadata version + atomic
+  ``version-hint.text`` replace — the same optimistic protocol as the
+  Delta connector's log commits.  Staging, footer stats, the
+  put-if-absent publish and ``CommitConflict`` are the format-neutral
+  steps in :mod:`.table_io`, shared with :mod:`.delta`; this module
+  keeps the Iceberg codec (``data_file`` records, binary bounds, Avro
+  manifests and metadata JSON).
 
 Equality deletes (content=2, the merge-on-read DELETE shape Flink
 CDC writes) are both READ (null-safe anti-join on the delete's
@@ -89,6 +93,12 @@ from ..registry import query
 from .avro_codec import read_avro_file, write_avro_file
 from .landing import _scratch
 from .readers import load_table
+from .table_io import (
+    CommitConflict,
+    footer_min_max,
+    put_if_absent,
+    stage_parquet,
+)
 
 # ---------------------------------------------------------------- type mapping
 
@@ -1826,50 +1836,27 @@ def _file_stats(
     fpath: str, schema_json: dict
 ) -> tuple[int, list | None, list | None]:
     """(row_count, lower_bounds, upper_bounds) from the already-written
-    parquet footer — bounds in the k/v-record-array encoding, keyed by
-    field id.  Best-effort: no stats is always legal."""
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(fpath).metadata
-    except Exception:  # noqa: BLE001 — stats are an optimization
+    parquet footer (:func:`.table_io.footer_min_max`) — bounds of the
+    top-level primitive columns in the k/v-record-array encoding,
+    keyed by field id.  Best-effort: no stats is always legal."""
+    folded = footer_min_max(fpath)
+    if folded is None:
         return 0, None, None
+    n, mins, maxs = folded
     ids = {f["name"]: (int(f["id"]), f["type"]) for f in schema_json["fields"]}
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            s = col.statistics
-            if s is None or not s.has_min_max:
+
+    def bounds(vals: dict) -> list | None:
+        out = []
+        for name, v in vals.items():
+            fid, ftype = ids.get(name, (None, None))
+            if not isinstance(ftype, str):
                 continue
-            name = col.path_in_schema
-            if name not in ids or not isinstance(ids[name][1], str):
-                continue
-            try:
-                lo, hi = s.min, s.max
-            except Exception:  # noqa: BLE001 — e.g. pyarrow cannot
-                continue  # extract decimal statistics; stats optional
-            if isinstance(lo, bytes):
-                continue
-            if name not in mins or lo < mins[name]:  # type: ignore[operator]
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:  # type: ignore[operator]
-                maxs[name] = hi
-    lower = []
-    upper = []
-    for name, v in mins.items():
-        fid, ftype = ids[name]
-        b = _sv_encode(ftype, v)
-        if b is not None:
-            lower.append({"key": fid, "value": b})
-    for name, v in maxs.items():
-        fid, ftype = ids[name]
-        b = _sv_encode(ftype, v)
-        if b is not None:
-            upper.append({"key": fid, "value": b})
-    return md.num_rows, lower or None, upper or None
+            b = _sv_encode(ftype, v)
+            if b is not None:
+                out.append({"key": fid, "value": b})
+        return out or None
+
+    return n, bounds(mins), bounds(maxs)
 
 
 def _typed_part_value(ice_type: str, raw: str | None):
@@ -2306,57 +2293,40 @@ def _stage_data_files(
     and the originals stay in the files.  Hidden partitioning: the
     transform evaluation is the writer's job, JVM-side builtins for
     everything except bucket (Arrow-batched seed-0 murmur3)."""
-    staging = os.path.join(path, f"_stage-{uuid.uuid4().hex[:12]}")
     w = _stamp_field_ids(_required_guard(df, schema_json), schema_json)
     for pf in part_spec:
         w = w.withColumn(f"_ice_p_{pf['name']}", _partition_value_col(pf))
-    writer = w.write.mode("errorifexists")
-    if part_spec:
-        writer = writer.partitionBy(
-            *[f"_ice_p_{pf['name']}" for pf in part_spec]
-        )
-    writer.parquet(staging)
-    ptypes = {pf["name"]: pf["ptype"] for pf in part_spec}
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
+    staged = stage_parquet(
+        w, os.path.join(path, "_stage-"), os.path.join(path, "data"),
+        lambda _i, f: f"{uuid.uuid4().hex[:8]}-{f}",
+        [f"_ice_p_{pf['name']}" for pf in part_spec],
+    )
     out: list[dict] = []
-    for root, _dirs, fnames in sorted(os.walk(staging)):
-        rel = os.path.relpath(root, staging)
-        pvals: dict[str, object] = {}
-        ok = True
-        for seg in [] if rel == "." else rel.split(os.sep):
-            k, _, v = seg.partition("=")
-            k = k.removeprefix("_ice_p_")
-            raw = None if v == "__HIVE_DEFAULT_PARTITION__" else urllib.parse.unquote(v)
-            try:
-                pvals[k] = _typed_part_value(ptypes.get(k, "string"), raw)
-            except (TypeError, ValueError):
-                ok = False
-        if not ok:
-            raise ValueError(f"cannot type partition path segment under {root}")
-        for f in sorted(fnames):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"{uuid.uuid4().hex[:8]}-{f}"
-            dst = os.path.join(data_dir, name)
-            os.replace(os.path.join(root, f), dst)
-            n, lower, upper = _file_stats(dst, schema_json)
-            out.append(
-                {
-                    "content": 0,
-                    "file_path": dst,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        pf["name"]: pvals.get(pf["name"])
-                        for pf in part_spec
-                    },
-                    "record_count": n,
-                    "file_size_in_bytes": os.path.getsize(dst),
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    for dst, raw in staged:
+        try:
+            partition = {
+                pf["name"]: _typed_part_value(
+                    pf["ptype"], raw.get(f"_ice_p_{pf['name']}")
+                )
+                for pf in part_spec
+            }
+        except (TypeError, ValueError):
+            raise ValueError(
+                f"cannot type partition path segment of {dst}"
+            ) from None
+        n, lower, upper = _file_stats(dst, schema_json)
+        out.append(
+            {
+                "content": 0,
+                "file_path": dst,
+                "file_format": "PARQUET",
+                "partition": partition,
+                "record_count": n,
+                "file_size_in_bytes": os.path.getsize(dst),
+                "lower_bounds": lower,
+                "upper_bounds": upper,
+            }
+        )
     return out
 
 
@@ -2573,37 +2543,45 @@ def _commit_snapshot(
     return version
 
 
-class CommitConflict(RuntimeError):
-    """A concurrent writer claimed the metadata version this commit
-    computed.  Snapshot-dependent operations (upsert, merge, delete,
-    compaction, evolution) surface it to the caller — they read a
-    snapshot and cannot be rebased blindly; ``write_iceberg`` appends
-    auto-rebase onto the winner instead (see its retry loop)."""
-
-
 def _claim_metadata(path: str, meta: dict, version: int) -> None:
-    """Claim exactly metadata version N with ``os.link`` put-if-absent
-    (concurrent committers conflict loudly, never rebase silently),
-    then atomically repoint ``version-hint.text``."""
+    """Claim exactly metadata version N with
+    :func:`.table_io.put_if_absent` (concurrent committers conflict
+    loudly, never rebase silently), then atomically repoint
+    ``version-hint.text``."""
     final = os.path.join(_meta_dir(path), f"v{version}.metadata.json")
-    tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
     try:
-        os.link(tmp, final)  # put-if-absent: version claims are exclusive
+        put_if_absent(final, json.dumps(meta))
     except FileExistsError as e:
         raise CommitConflict(
             f"iceberg commit conflict at version {version} ({path}) — "
             "a concurrent writer won; re-read the table and retry the "
             "operation"
         ) from e
-    finally:
-        os.unlink(tmp)
     hint = os.path.join(_meta_dir(path), "version-hint.text")
     htmp = hint + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(htmp, "w") as fh:
         fh.write(str(version))
     os.replace(htmp, hint)
+
+
+def _commit_metadata(
+    path: str, meta: dict, current: int | None = None
+) -> int:
+    """The metadata-only commit tail: stamp ``last-updated-ms``, claim
+    the version after the one ``meta`` was loaded at (its
+    ``__file_version__``) and return it.  ``current`` also moves
+    ``current-snapshot-id`` there and logs the move in
+    ``snapshot-log`` at the same timestamp."""
+    now = int(time.time() * 1000)
+    meta["last-updated-ms"] = now
+    if current is not None:
+        meta["current-snapshot-id"] = current
+        meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
+            {"timestamp-ms": now, "snapshot-id": current}
+        ]
+    version = int(meta.pop("__file_version__")) + 1
+    _claim_metadata(path, meta, version)
+    return version
 
 
 def evolve_iceberg(
@@ -2735,10 +2713,7 @@ def evolve_iceberg(
     ]
     meta["current-schema-id"] = new_sid
     meta["last-column-id"] = last_id
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+    return _commit_metadata(path, meta)
 
 
 def set_properties_iceberg(path: str, props: dict[str, str]) -> int:
@@ -2758,10 +2733,7 @@ def set_properties_iceberg(path: str, props: dict[str, str]) -> int:
     merged = dict(meta.get("properties") or {})
     merged.update({str(k): str(v) for k, v in props.items()})
     meta["properties"] = merged
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+    return _commit_metadata(path, meta)
 
 
 def evolve_spec_iceberg(path: str, partition_by: list[str]) -> int:
@@ -2811,10 +2783,7 @@ def evolve_spec_iceberg(path: str, partition_by: list[str]) -> int:
     ]
     meta["default-spec-id"] = new_sid
     meta["last-partition-id"] = last_pid
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+    return _commit_metadata(path, meta)
 
 
 def tag_iceberg(
@@ -2841,10 +2810,7 @@ def tag_iceberg(
     refs = dict(meta.get("refs") or {})
     refs[name] = {"snapshot-id": sid, "type": ref_type}
     meta["refs"] = refs
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+    return _commit_metadata(path, meta)
 
 
 def drop_ref_iceberg(path: str, name: str) -> int:
@@ -2856,10 +2822,7 @@ def drop_ref_iceberg(path: str, name: str) -> int:
         raise ValueError(f"no such ref: {name!r}")
     del refs[name]
     meta["refs"] = refs
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+    return _commit_metadata(path, meta)
 
 
 def fast_forward_iceberg(path: str, branch: str) -> int:
@@ -2889,14 +2852,7 @@ def fast_forward_iceberg(path: str, branch: str) -> int:
             f"cannot fast-forward: main moved since {branch!r} forked "
             "(rebase the branch or merge manually)"
         )
-    meta["current-snapshot-id"] = head
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
-        {"timestamp-ms": meta["last-updated-ms"], "snapshot-id": head}
-    ]
-    version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+    return _commit_metadata(path, meta, current=head)
 
 
 def rollback_iceberg(path: str, snapshot_id: int) -> int:
@@ -2933,14 +2889,7 @@ def rollback_iceberg(path: str, snapshot_id: int) -> int:
             f"snapshot {sid} is not an ancestor of the current snapshot "
             f"{cur} — rollback_to_snapshot only rewinds the main line"
         )
-    meta["current-snapshot-id"] = sid
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
-        {"timestamp-ms": meta["last-updated-ms"], "snapshot-id": sid}
-    ]
-    version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+    return _commit_metadata(path, meta, current=sid)
 
 
 def _carry_manifests(
@@ -3115,21 +3064,14 @@ def _stage_pos_delete(
     when nothing matched).  ``subdir`` places them — the UniForm
     generator uses ``metadata`` so ``vacuum_delta``'s tree walk (which
     skips that directory) can never reclaim Iceberg-owned deletes."""
-    ddir = os.path.join(path, subdir)
-    os.makedirs(ddir, exist_ok=True)
-    staging = os.path.join(path, f"_stage-{uuid.uuid4().hex[:12]}")
-    hits.orderBy("file_path", "pos").coalesce(1).write.mode(
-        "errorifexists"
-    ).parquet(staging)
-    parts = [
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ]
-    del_files: list[dict] = []
-    for f in parts:
-        dst = os.path.join(ddir, f"delete-{uuid.uuid4().hex[:8]}-{f}")
-        os.replace(os.path.join(staging, f), dst)
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
+    del_files: list[dict] = []
+    for dst, _pv in stage_parquet(
+        hits.orderBy("file_path", "pos").coalesce(1),
+        os.path.join(path, "_stage-"), os.path.join(path, subdir),
+        lambda _i, f: f"delete-{uuid.uuid4().hex[:8]}-{f}",
+    ):
         n = pq.ParquetFile(dst).metadata.num_rows
         if n == 0:
             os.unlink(dst)
@@ -3146,7 +3088,6 @@ def _stage_pos_delete(
                 "upper_bounds": None,
             }
         )
-    shutil.rmtree(staging, ignore_errors=True)
     return del_files
 
 
@@ -3321,21 +3262,15 @@ def delete_by_key_iceberg(
         # the keys can only kill rows committed before this snapshot:
         # a table with none (no snapshot, or a replica's first drain)
         # stages no delete, and its readers pay no anti-join for it
-        ddir = os.path.join(path, "data")
-        os.makedirs(ddir, exist_ok=True)
-        staging = os.path.join(path, f"_stage-{uuid.uuid4().hex[:12]}")
         # distinct: duplicate delete rows are legal but pure waste;
         # sorted within partitions so the file carries tight bounds
-        _stamp_field_ids(
-            keys.distinct().sortWithinPartitions(*cols), schema_json
-        ).write.mode("errorifexists").parquet(staging)
-        for fname in sorted(os.listdir(staging)):
-            if not fname.endswith(".parquet"):
-                continue
-            dst = os.path.join(
-                ddir, f"eq-delete-{uuid.uuid4().hex[:8]}-{fname}"
-            )
-            os.replace(os.path.join(staging, fname), dst)
+        for dst, _pv in stage_parquet(
+            _stamp_field_ids(
+                keys.distinct().sortWithinPartitions(*cols), schema_json
+            ),
+            os.path.join(path, "_stage-"), os.path.join(path, "data"),
+            lambda _i, f: f"eq-delete-{uuid.uuid4().hex[:8]}-{f}",
+        ):
             n, lower, upper = _file_stats(dst, schema_json)
             if n == 0:
                 os.unlink(dst)
@@ -3353,7 +3288,6 @@ def delete_by_key_iceberg(
                     "equality_ids": eq_ids,
                 }
             )
-        shutil.rmtree(staging, ignore_errors=True)
     part_spec = _spec_from_meta(meta, schema_json)
     staged = (
         []
@@ -4290,11 +4224,7 @@ def rewrite_data_files(
         # them so the fold pays that debt off
         eq_hit = [
             r for r in recs
-            if any(
-                d["seq"] > r["seq"]
-                and (not d.get("partition") or d["partition"] == r["partition"])
-                for d in eq_deletes
-            )
+            if any(_eq_delete_applies(d, r) for d in eq_deletes)
         ]
         group = sorted(
             {
@@ -4967,30 +4897,12 @@ def expire_snapshots(
                 )
     # new metadata version with the surviving snapshots only
     meta2 = json.loads(json.dumps(meta))
-    version = int(meta2.pop("__file_version__")) + 1
     meta2["snapshots"] = [s for s in snaps if s["snapshot-id"] in keep]
     keep_ids = {s["snapshot-id"] for s in meta2["snapshots"]}
     meta2["snapshot-log"] = [
         e for e in meta2.get("snapshot-log") or [] if e["snapshot-id"] in keep_ids
     ]
-    final = os.path.join(_meta_dir(path), f"v{version}.metadata.json")
-    tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(meta2, fh)
-    try:
-        os.link(tmp, final)
-    except FileExistsError as e:
-        raise CommitConflict(
-            f"iceberg commit conflict at version {version} ({path}) — "
-            "a concurrent writer won; re-read the table and retry"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    hint = os.path.join(_meta_dir(path), "version-hint.text")
-    htmp = hint + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(htmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(htmp, hint)
+    version = _commit_metadata(path, meta2)
     # reclaim: files under data/ and avro under metadata/ that no
     # surviving snapshot references
     n_del = 0

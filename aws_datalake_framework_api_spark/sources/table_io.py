@@ -1,0 +1,135 @@
+"""Format-neutral file I/O under the Delta and Iceberg connectors.
+
+Both formats publish data the same way: Spark writes parquet into a
+scratch directory, the part files move under the table's own names,
+their footers give row counts and column bounds, and a commit file is
+claimed with put-if-absent.  This module holds one copy of each step
+(:func:`stage_parquet`, :func:`footer_min_max`, :func:`put_if_absent`)
+and the one :class:`CommitConflict`; :mod:`.delta` and :mod:`.iceberg`
+keep only their codecs (Delta ``add``/``cdc`` actions with JSON stats,
+Iceberg ``data_file`` records with binary bounds).
+
+``os.link`` assumes a filesystem with atomic link semantics (POSIX,
+NFSv4, HDFS-mounted).  On an object store the same guarantee needs an
+external put-if-absent coordinator (the LogStore seam delta-spark
+requires on S3); a cloud deployment swaps :func:`put_if_absent` and
+nothing else changes.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import urllib.parse
+import uuid
+from typing import Callable
+
+from pyspark.sql import DataFrame
+
+
+class CommitConflict(RuntimeError):
+    """A concurrent writer claimed the version this commit computed.
+
+    Raised by operations that read a snapshot and therefore cannot be
+    rebased blindly: Delta DELETE/UPDATE/MERGE/OPTIMIZE/RESTORE and
+    ``write_delta(read_version=)``, Iceberg upsert/merge/delete/
+    compaction/evolution — delta-spark's winning-commit reconciliation
+    likewise fails these and asks the caller to re-run.  Blind appends
+    (``write_delta``, ``write_iceberg``) auto-rebase onto the winner
+    instead (see their retry loops)."""
+
+
+def stage_parquet(
+    df: DataFrame,
+    staging_prefix: str,
+    dest_dir: str,
+    name: Callable[[int, str], str],
+    partition_by: list[str] | tuple[str, ...] = (),
+) -> list[tuple[str, dict[str, str | None]]]:
+    """Write ``df`` as parquet into a fresh ``{staging_prefix}{hex}``
+    directory, move every part file to ``dest_dir/name(i, part_name)``
+    (``i`` counts the files in sorted staging order) and return one
+    ``(dest_path, partition_values)`` pair per file.  The values are
+    the hive ``k=v`` segments of the file's staging subdirectory,
+    unquoted, with ``__HIVE_DEFAULT_PARTITION__`` as None.  The staging
+    directory is removed in a ``finally``: a write that fails mid-job
+    leaves nothing behind in the table."""
+    staging = f"{staging_prefix}{uuid.uuid4().hex[:12]}"
+    try:
+        writer = df.write.mode("errorifexists")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        os.makedirs(dest_dir, exist_ok=True)
+        out: list[tuple[str, dict[str, str | None]]] = []
+        for root, _dirs, files in sorted(os.walk(staging)):
+            rel = os.path.relpath(root, staging)
+            pvals: dict[str, str | None] = {}
+            for seg in [] if rel == "." else rel.split(os.sep):
+                k, _, v = seg.partition("=")
+                pvals[k] = (
+                    None if v == "__HIVE_DEFAULT_PARTITION__"
+                    else urllib.parse.unquote(v)
+                )
+            for f in sorted(files):
+                if not f.endswith(".parquet"):
+                    continue
+                dst = os.path.join(dest_dir, name(len(out), f))
+                os.replace(os.path.join(root, f), dst)
+                out.append((dst, pvals))
+        return out
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def footer_min_max(
+    fpath: str,
+) -> tuple[int, dict[str, object], dict[str, object]] | None:
+    """``(num_rows, mins, maxs)`` from an already-written parquet
+    footer, the per-row-group statistics folded per column path.
+    Columns without min/max, with binary values, or whose statistics
+    pyarrow cannot extract (e.g. decimals) are absent; None when the
+    footer is unreadable.  Stats are an optimization: callers record
+    what is present and treat the rest as unprunable."""
+    try:
+        import pyarrow.parquet as pq
+
+        md = pq.ParquetFile(fpath).metadata
+    except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
+        return None
+    mins: dict[str, object] = {}
+    maxs: dict[str, object] = {}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            s = col.statistics
+            if s is None or not s.has_min_max:
+                continue
+            name = col.path_in_schema
+            try:
+                lo, hi = s.min, s.max
+            except Exception:  # noqa: BLE001 — e.g. pyarrow cannot
+                continue  # extract decimal statistics; stats optional
+            if isinstance(lo, bytes) or isinstance(hi, bytes):
+                continue
+            if name not in mins or lo < mins[name]:  # type: ignore[operator]
+                mins[name] = lo
+            if name not in maxs or hi > maxs[name]:  # type: ignore[operator]
+                maxs[name] = hi
+    return md.num_rows, mins, maxs
+
+
+def put_if_absent(final: str, text: str) -> None:
+    """Publish ``text`` at ``final`` atomically unless ``final`` exists:
+    write a temp file beside it and ``os.link`` it to the final name.
+    The link fails with ``FileExistsError`` if the name is taken, so
+    concurrent writers of one version get exactly one winner; readers
+    never see a partial file."""
+    tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex[:12]}")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    try:
+        os.link(tmp, final)
+    finally:
+        os.unlink(tmp)

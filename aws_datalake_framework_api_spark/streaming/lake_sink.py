@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.readers import load_table
+from ..sources.table_io import stage_parquet
 
 #: second-wave price bump (same rule as b_stream_upsert / b_lake_upsert)
 BUMP_MOD = 97
@@ -115,18 +116,6 @@ def iceberg_merge_batch(
     return apply
 
 
-def _stage_single_file(df: DataFrame, landing: str, name: str) -> None:
-    """One parquet file ``landing/name`` via coalesce(1) + part-file
-    rename — staged with Spark writes, never a driver collect."""
-    import glob
-
-    stage = os.path.join(landing, f".{name}.stage")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-    shutil.move(part, os.path.join(landing, name))
-    shutil.rmtree(stage, ignore_errors=True)
-
-
 def _base_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -151,8 +140,12 @@ def stage_merge_feed(spark: SparkSession, sf_dir: str, landing: str) -> None:
         (F.col("price_cents") + F.lit(INS_DELTA)).alias("price_cents"),
         F.lit(3).cast("long").alias("seq"),
     )
-    _stage_single_file(wave_a, landing, "feed-000.parquet")
-    _stage_single_file(wave_b, landing, "feed-001.parquet")
+    for i, wave in enumerate((wave_a, wave_b)):
+        # one file per wave: the stream's one-file-per-micro-batch shape
+        stage_parquet(
+            wave.coalesce(1), os.path.join(landing, ".stage-"), landing,
+            lambda _i, _f: f"feed-{i:03d}.parquet",
+        )
     now = time.time()
     os.utime(os.path.join(landing, "feed-000.parquet"), (now - 2, now - 2))
     os.utime(os.path.join(landing, "feed-001.parquet"), (now, now))

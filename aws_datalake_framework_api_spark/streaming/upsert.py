@@ -46,6 +46,7 @@ from ..sources.delta import (
     write_delta,
 )
 from ..sources.readers import load_table
+from ..sources.table_io import stage_parquet
 
 FEED_SCHEMA = StructType(
     [
@@ -111,20 +112,6 @@ def run_upsert_stream(
     )
 
 
-def _stage_single_file(df: DataFrame, landing: str, name: str) -> None:
-    """Write ``df`` as exactly one parquet file ``landing/name`` via a
-    coalesce(1) Spark write + rename of the part file — never a
-    driver-side collect, so staging scales with the cluster exactly
-    like the pipeline it feeds."""
-    import glob
-
-    stage = os.path.join(landing, f".{name}.stage")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-    shutil.move(part, os.path.join(landing, name))
-    shutil.rmtree(stage, ignore_errors=True)
-
-
 def _stage_feed(spark: SparkSession, sf_dir: str, landing: str) -> None:
     """Two deterministic feed files derived from orders: wave 1 = the
     base state (seq 1), wave 2 = price bumps on k % 97 == 0 (seq 2).
@@ -144,8 +131,12 @@ def _stage_feed(spark: SparkSession, sf_dir: str, landing: str) -> None:
         .withColumn("price_cents", F.col("price_cents") + F.lit(BUMP_CENTS))
         .withColumn("seq", F.lit(2).cast("long"))
     )
-    _stage_single_file(orders, landing, "feed-000.parquet")
-    _stage_single_file(wave2, landing, "feed-001.parquet")
+    for i, wave in enumerate((orders, wave2)):
+        # one file per wave: the stream's one-file-per-micro-batch shape
+        stage_parquet(
+            wave.coalesce(1), os.path.join(landing, ".stage-"), landing,
+            lambda _i, _f: f"feed-{i:03d}.parquet",
+        )
     now = time.time()
     os.utime(os.path.join(landing, "feed-000.parquet"), (now - 2, now - 2))
     os.utime(os.path.join(landing, "feed-001.parquet"), (now, now))

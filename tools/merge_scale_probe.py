@@ -54,6 +54,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from aws_datalake_framework_api_spark.session import driver_memory
     from aws_datalake_framework_api_spark.sources.delta import (
         alter_table_properties_delta,
         delete_where_delta,
@@ -71,8 +72,7 @@ def main() -> None:
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
         )
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -1,24 +1,40 @@
-"""Round-11 scale probes (numbers recorded in SCALE.md):
+"""Scale probes (numbers recorded in SCALE.md).  Each probe times one
+mechanism at two input scales, so its cost can be read as flat or
+linear in the quantity the mechanism is meant to scale with.
 
-- DV-carrying Delta→Iceberg conversion: wall + zero-copied-bytes at
-  1× vs 10× deleted-row volume (the materialized position-delete
-  commit must cost O(deleted rows) executor work + O(files) driver
-  metadata, never a data-file copy);
-- changelog equality-kill chunking: one LARGE single eq-delete key
-  file streamed with a small maxEqDeleteRows chunk vs one big chunk —
-  identical rows, walls within noise (residency, not wall, is what
-  the chunk bounds);
-- contiguous identity minting: append wall at 1× vs 10× rows (the
-  eager-checkpoint pin + count pass are the added cost; both scale
-  linearly with the batch, not the table);
-- MOR Iceberg→Delta conversion: wall at 1× vs 10× merge-on-read
-  delete volume (kills plan distributed, one executor-side DV bitmap
-  per touched file, zero data-file copies);
-- UniForm enable + refresh: wall at 1× vs 8× file count (both are
-  O(files) metadata passes — per-file footer/DV work, never data).
+- ``substr``: ExactSubstr span dedup wall at sf0.1 vs the 10x
+  salted-replica fixture (build it first: ``python
+  tools/gen_scale_fixture.py 10 tmp_scale/sf1``);
+- ``pq``: PQ-ADC ANN wall at the same two scales;
+- ``clone``: Delta SHALLOW CLONE wall + metadata bytes at 32 vs 320
+  source files (zero data bytes either way);
+- ``migrate``: add_files migration wall + per-file cost at 1x vs 10x
+  file count (the O(files)-metadata claim, zero data bytes either
+  way);
+- ``posdel``: rewrite_position_delete_files wall at 1x vs 10x
+  delete-row volume;
+- ``inject``: identity-partition constants injection: partitioned-scan
+  wall with the injected plan vs a pre-injection-style full-schema
+  scan, plus the bytes-read delta visible in ReadSchema;
+- ``convert``: DV-carrying Delta→Iceberg conversion: wall +
+  zero-copied-bytes at 1× vs 10× deleted-row volume (the materialized
+  position-delete commit must cost O(deleted rows) executor work +
+  O(files) driver metadata, never a data-file copy);
+- ``eqchunk``: changelog equality-kill chunking: one LARGE single
+  eq-delete key file streamed with a small maxEqDeleteRows chunk vs
+  one big chunk — identical rows, walls within noise (residency, not
+  wall, is what the chunk bounds);
+- ``mint``: contiguous identity minting: append wall at 1× vs 10× rows
+  (the eager-checkpoint pin + count pass are the added cost; both
+  scale linearly with the batch, not the table);
+- ``morconv``: MOR Iceberg→Delta conversion: wall at 1× vs 10×
+  merge-on-read delete volume (kills plan distributed, one
+  executor-side DV bitmap per touched file, zero data-file copies);
+- ``uniform``: UniForm enable + refresh: wall at 1× vs 8× file count
+  (both are O(files) metadata passes — per-file footer/DV work, never
+  data).
 
-Usage: python tools/r11_scale_probes.py
-       [convert|eqchunk|mint|morconv|uniform|all]
+Usage: python tools/scale_probes.py <probe>|all
 """
 
 from __future__ import annotations
@@ -32,6 +48,176 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF01 = "/root/testdata/sf0.1"
+SF10X = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tmp_scale", "sf1",
+)
+
+
+def _timed(fn, *a) -> float:
+    fn(*a).write.mode("overwrite").format("noop").save()  # warm
+    t0 = time.time()
+    fn(*a).write.mode("overwrite").format("noop").save()
+    return time.time() - t0
+
+
+def probe_substr(spark) -> None:
+    from aws_datalake_framework_api_spark.llm.substr import llm_dedup_substr
+
+    for label, d in (("sf0.1", SF01), ("10x", SF10X)):
+        print(f"substr {label}: {_timed(llm_dedup_substr, spark, d):.2f}s")
+
+
+def probe_pq(spark) -> None:
+    from aws_datalake_framework_api_spark.llm.similarity import llm_knn_pq
+
+    for label, d in (("sf0.1", SF01), ("10x", SF10X)):
+        print(f"pq {label}: {_timed(llm_knn_pq, spark, d):.2f}s")
+
+
+def probe_clone(spark) -> None:
+    import tempfile
+
+    from pyspark.sql import functions as F  # noqa: F401
+
+    from aws_datalake_framework_api_spark.sources.delta import (
+        clone_delta,
+        read_delta,
+        write_delta,
+    )
+    from aws_datalake_framework_api_spark.sources.readers import load_table
+
+    orders = load_table(spark, SF01, "orders")
+
+    def du(p: str) -> int:
+        return sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _, fs in os.walk(p)
+            for f in fs
+        )
+
+    base = tempfile.mkdtemp(prefix="clone_probe_")
+    try:
+        for nfiles in (32, 320):
+            src = os.path.join(base, f"src_{nfiles}")
+            dst = os.path.join(base, f"dst_{nfiles}")
+            write_delta(orders.repartition(nfiles), src, mode="error")
+            t0 = time.time()
+            clone_delta(spark, src, dst)
+            dt = time.time() - t0
+            ok = read_delta(spark, dst).count() == orders.count()
+            print(
+                f"clone files={nfiles} wall={dt * 1000:.1f}ms "
+                f"src={du(src) // 1024}K dst_meta={du(dst) // 1024}K "
+                f"rows_match={ok}"
+            )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def probe_migrate(spark) -> None:
+    from pyspark.sql import functions as F
+
+    from aws_datalake_framework_api_spark.sources.migrate import (
+        add_files_iceberg,
+    )
+    from aws_datalake_framework_api_spark.sources.readers import load_table
+
+    orders = load_table(spark, SF01, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_totalprice"
+    )
+    for label, parts in (("32f", 32), ("320f", 320)):
+        src = tempfile.mkdtemp(prefix="probe_mig_src_")
+        dst = tempfile.mkdtemp(prefix="probe_mig_dst_") + "/t"
+        shutil.rmtree(src, ignore_errors=True)
+        orders.repartition(parts // 5).write.partitionBy(
+            "o_orderpriority"
+        ).parquet(src)
+        n = sum(
+            1
+            for _r, _d, fs in os.walk(src)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+        t0 = time.time()
+        add_files_iceberg(spark, src, dst)
+        wall = time.time() - t0
+        meta_bytes = sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _d, fs in os.walk(os.path.join(dst, "metadata"))
+            for f in fs
+        )
+        print(
+            f"add_files {label}: {n} files, {wall:.2f}s "
+            f"({1000*wall/n:.1f} ms/file), metadata {meta_bytes/1024:.0f} KB"
+        )
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(os.path.dirname(dst), ignore_errors=True)
+
+
+def probe_posdel(spark) -> None:
+    from pyspark.sql import functions as F
+
+    from aws_datalake_framework_api_spark.sources.iceberg import (
+        delete_iceberg_rows,
+        rewrite_position_delete_files,
+        write_iceberg,
+    )
+    from aws_datalake_framework_api_spark.sources.readers import load_table
+
+    orders = load_table(spark, SF01, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_totalprice"
+    )
+    for label, mod in (("1x(~15k rows)", 10), ("10x(~150k rows)", 1)):
+        t = tempfile.mkdtemp(prefix="probe_posdel_") + "/t"
+        write_iceberg(orders.repartition(8), t, mode="error")
+        # fragment the delete state across 5 commits
+        for i in range(5):
+            delete_iceberg_rows(
+                spark, t,
+                (F.col("o_orderkey") % 50 == i) if mod == 1
+                else (F.col("o_orderkey") % 500 == i),
+            )
+        t0 = time.time()
+        res = rewrite_position_delete_files(spark, t)
+        wall = time.time() - t0
+        print(f"rewrite_posdel {label}: {res} in {wall:.2f}s")
+        shutil.rmtree(os.path.dirname(t), ignore_errors=True)
+
+
+def probe_inject(spark) -> None:
+    from pyspark.sql import functions as F
+
+    from aws_datalake_framework_api_spark.sources.iceberg import (
+        read_iceberg,
+        write_iceberg,
+    )
+    from aws_datalake_framework_api_spark.sources.readers import load_table
+
+    lineitem = load_table(spark, SF01, "lineitem")
+    t = tempfile.mkdtemp(prefix="probe_inject_") + "/t"
+    write_iceberg(
+        lineitem.repartition(16), t, mode="error",
+        partition_by=["l_returnflag"],
+    )
+
+    def agg():
+        return (
+            read_iceberg(spark, t)
+            .filter(F.col("l_quantity") > 25)
+            .groupBy("l_returnflag")
+            .agg(F.sum("l_extendedprice"))
+        )
+
+    agg().write.mode("overwrite").format("noop").save()  # warm
+    t0 = time.time()
+    for _ in range(3):
+        agg().write.mode("overwrite").format("noop").save()
+    print(f"injected partitioned scan+agg x3: {time.time()-t0:.2f}s")
+    plan = agg()._jdf.queryExecution().executedPlan().toString()
+    rs = [ln.strip() for ln in plan.splitlines() if "ReadSchema" in ln]
+    print("ReadSchema:", rs[:1])
+    shutil.rmtree(os.path.dirname(t), ignore_errors=True)
 
 
 def probe_convert(spark) -> None:
@@ -285,18 +471,32 @@ def probe_uniform(spark) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
-if __name__ == "__main__":
+PROBES = {
+    "substr": probe_substr,
+    "pq": probe_pq,
+    "clone": probe_clone,
+    "migrate": probe_migrate,
+    "posdel": probe_posdel,
+    "inject": probe_inject,
+    "convert": probe_convert,
+    "eqchunk": probe_eqchunk,
+    "mint": probe_mint,
+    "morconv": probe_morconv,
+    "uniform": probe_uniform,
+}
+
+
+def main() -> None:
+    which = sys.argv[1] if len(sys.argv) > 1 else "all"
+    if which != "all" and which not in PROBES:
+        sys.exit(f"usage: scale_probes.py {'|'.join(PROBES)}|all")
     from aws_datalake_framework_api_spark.session import get_spark
 
-    which = sys.argv[1] if len(sys.argv) > 1 else "all"
-    spark = get_spark("r11-scale-probes")
-    if which in ("convert", "all"):
-        probe_convert(spark)
-    if which in ("eqchunk", "all"):
-        probe_eqchunk(spark)
-    if which in ("mint", "all"):
-        probe_mint(spark)
-    if which in ("morconv", "all"):
-        probe_morconv(spark)
-    if which in ("uniform", "all"):
-        probe_uniform(spark)
+    spark = get_spark("scale-probes")
+    for name, probe in PROBES.items():
+        if which in (name, "all"):
+            probe(spark)
+
+
+if __name__ == "__main__":
+    main()
