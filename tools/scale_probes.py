@@ -47,7 +47,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF01 = "/root/testdata/sf0.1"
+from aws_datalake_framework_api_spark.session import DEFAULT_SF_DIR  # noqa: E402
+
+SF01 = DEFAULT_SF_DIR  # sf0.1 unless SPARK_GRAFT_SF_DIR names another
 SF10X = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "tmp_scale", "sf1",
