@@ -67,6 +67,7 @@ from pyspark.sql.types import (
 
 from .sources.delta import (CommitConflict, _table_version, read_delta,
                             update_delta, write_delta)
+from .sources.readers import empty_frame
 
 ENTITY_TYPES = ("source_system", "target_system", "data_asset")
 
@@ -91,7 +92,7 @@ def _local_df(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
     import pandas as pd
 
     if not rows:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     cols = [f.name for f in schema.fields]
     pdf = pd.DataFrame(list(rows), columns=None if isinstance(rows[0], dict) else cols)
     if isinstance(rows[0], dict):
@@ -182,7 +183,7 @@ class Catalog:
     def load(self, entity_type: str) -> DataFrame:
         d = self._table_dir(entity_type)
         if not _is_table(d):
-            return self.spark.createDataFrame([], ENTITY_SCHEMA)
+            return empty_frame(self.spark, ENTITY_SCHEMA)
         return read_delta(self.spark, d)
 
     def _mutate(self, entity_type: str, change):
@@ -254,7 +255,7 @@ class Catalog:
         pending = (
             _local_df(self.spark, self._audit_rows, AUDIT_SCHEMA)
             if self._audit_rows
-            else self.spark.createDataFrame([], AUDIT_SCHEMA)
+            else empty_frame(self.spark, AUDIT_SCHEMA)
         )
         if _is_table(d):
             return read_delta(self.spark, d).unionByName(pending)

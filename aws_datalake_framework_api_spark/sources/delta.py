@@ -76,7 +76,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..functions.numeric import money_sum, sql_money_sum
 from ..registry import query
 from .landing import _scratch
-from .readers import load_table
+from .readers import empty_frame, load_table
 from .table_io import (
     CommitConflict,
     footer_min_max,
@@ -1052,7 +1052,7 @@ def _scan_files(
     output — the copy-on-write UPDATE path uses it to attribute
     matched rows to the files that must be rewritten."""
     if not rels:
-        out = spark.createDataFrame([], schema)
+        out = empty_frame(spark, schema)
         if keep_file:
             out = out.withColumn("_dl_file", F.lit(None).cast("string"))
         if keep_pos:
@@ -4299,6 +4299,32 @@ def _plan_changes(path: str, state: _Snapshot, lo: int, hi: int):
             state.apply(a)
 
 
+def _name_layers(units: list[tuple]) -> list[dict[str, tuple]]:
+    """Split change units ``(rel, version, ...)`` into layers, in range
+    order, in which each file basename occurs once: one scan per layer
+    can then key per-file values on ``_metadata.file_name``.  A
+    basename recurs only when the range re-adds a path (RESTORE),
+    changes one file's vector twice, or holds equal names in two
+    partitions."""
+    layers: list[dict[str, tuple]] = []
+    for u in units:
+        base = os.path.basename(urllib.parse.unquote(u[0]))
+        layer = next((la for la in layers if base not in la), None)
+        if layer is None:
+            layer = {}
+            layers.append(layer)
+        layer[base] = u
+    return layers
+
+
+def _file_map(layer: dict[str, tuple], value):
+    """A map literal from each basename of ``layer`` to ``value(unit)``,
+    to be indexed by a ``_dl_file`` column."""
+    return F.create_map(*[
+        F.lit(x) for base, u in sorted(layer.items()) for x in (base, value(u))
+    ])
+
+
 def read_delta_changes(
     spark: SparkSession,
     path: str,
@@ -4327,8 +4353,16 @@ def read_delta_changes(
       file-granular CDC contract; consumers key-dedupe downstream;
     - ``dataChange: false`` actions (OPTIMIZE) are skipped.
 
-    Intended for short version ranges (a catch-up's batch): the plan
-    unions one scan per touched file set per commit."""
+    Intended for short version ranges (a catch-up's batch).  The plan
+    holds one scan per change kind for the whole range — every ``cdc``
+    file of the range is one scan — and each row takes its
+    ``_commit_version``, and a foreign writer's ``cdc`` file its
+    partition values, from a map literal keyed by the row's
+    ``_metadata.file_name``.  Codegen passes a map literal by
+    reference but inlines a long literal into the generated Java, so a
+    plan with no version number in it reuses the classes compiled for
+    the drain before it.  The lookup scans the map once per row, which
+    is one more reason to keep ranges short."""
     latest = _table_version(path)
     if latest is None:
         raise FileNotFoundError(f"no delta log at {path}")
@@ -4345,54 +4379,47 @@ def read_delta_changes(
     schema, part_cols, rename, _l2p = _resolve_read_schema(state)
     _enable_field_id_read(spark, state, path, sorted(state.files))
     types_ = {f.name: f.dataType for f in schema.fields}
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    ct = StructField("_change_type", StringType())
+    # every unit of the range as (rel, version, action, dv, old_dv)
+    units: dict[str, list[tuple]] = {
+        "cdc": [], "insert": [], "delete": [], "dv": []
+    }
+    for v, vunits in _plan_changes(path, state, starting_version, end):
+        for kind, rel, action, dv, old_dv in vunits:
+            units[kind].append((rel, v, action, dv, old_dv))
     out_parts: list[DataFrame] = []
 
-    def scan(files_map: dict[str, dict], **tags) -> DataFrame:
-        # live rows (the files' own vectors subtracted); a tagged scan
-        # keeps every position for the DV-transition joins instead
+    def emit(df: DataFrame, layer: dict) -> None:
+        # physical columns + _change_type + _dl_file -> the output shape
+        df = df.withColumn(
+            "_commit_version",
+            _file_map(layer, lambda u: u[1])[F.col("_dl_file")].cast("long"),
+        )
+        cols = (
+            [f.name for f in schema.fields] if rename is None else [
+                (F.col(p).cast(lt) if needs else F.col(p)).alias(l)
+                for p, l, lt, needs in rename
+            ]
+        )
+        out_parts.append(df.select(*cols, "_change_type", "_commit_version"))
+
+    def scan(layer: dict, keep_pos: bool = False) -> DataFrame:
+        # live rows (the files' own vectors subtracted) tagged with
+        # _dl_file; ``keep_pos`` keeps every position for the
+        # DV-transition joins instead
         tmp = _Snapshot()
         tmp.metadata = state.metadata
-        tmp.files = files_map
-        rels = sorted(files_map)
+        tmp.files = {u[0]: u[2] for u in layer.values()}
+        rels = sorted(tmp.files)
         return _scan_files(
             spark, path, tmp, rels, schema, part_cols,
-            None if tags else _dv_map(path, tmp, rels), **tags,
+            None if keep_pos else _dv_map(path, tmp, rels),
+            keep_file=True, keep_pos=keep_pos,
         )
-
-    def cdc_scan(c: dict) -> DataFrame:
-        fpath = os.path.join(path, urllib.parse.unquote(c["path"]))
-        pvals = c.get("partitionValues") or {}
-        if pvals:
-            # foreign writer: partition values live in the action,
-            # data columns in the file
-            body = spark.read.schema(
-                StructType(data_fields + [ct])
-            ).parquet(fpath)
-            for pc in part_cols:
-                body = body.withColumn(
-                    pc, F.lit(pvals.get(pc)).cast(types_[pc])
-                )
-        else:
-            # this writer: all columns live in the file
-            body = spark.read.schema(
-                StructType(list(schema.fields) + [ct])
-            ).parquet(fpath)
-        if rename is not None:
-            return body.select(
-                *[
-                    (F.col(p).cast(lt) if needs else F.col(p)).alias(l)
-                    for p, l, lt, needs in rename
-                ],
-                "_change_type",
-            )
-        return body.select(*[f.name for f in schema.fields], "_change_type")
 
     def positions(wanted: dict, minus: dict) -> DataFrame:
         # (file, position) pairs in ``wanted``'s vectors and not in
         # ``minus``'s; both decode executor-side, and the join side is
-        # bounded by the commit's vector cardinalities, broadcast only
+        # bounded by the range's vector cardinalities, broadcast only
         # when small
         out = _dv_relation(spark, path, wanted)
         if minus:
@@ -4403,55 +4430,52 @@ def read_delta_changes(
         total = sum(int(d.get("cardinality") or 0) for d in wanted.values())
         return F.broadcast(out) if total <= _DV_BROADCAST_CAP else out
 
-    for v, units in _plan_changes(path, state, starting_version, end):
-        lit_v = F.lit(v).cast("long")
-        files: dict[str, dict[str, dict]] = {"insert": {}, "delete": {}}
-        dv_files: dict[str, dict] = {}
-        # basename -> vector after / before this version
-        new_map: dict[str, dict] = {}
-        old_map: dict[str, dict] = {}
-        for kind, rel, action, dv, old_dv in units:
-            if kind == "cdc":
-                out_parts.append(
-                    cdc_scan(action).withColumn("_commit_version", lit_v)
-                )
-            elif kind == "dv":
-                dv_files[rel] = action
-                base = os.path.basename(urllib.parse.unquote(rel))
-                if dv:
-                    new_map[base] = dv
-                if old_dv:
-                    old_map[base] = old_dv
-            else:
-                files[kind][rel] = action
-        parts = [
-            (_rename_back(scan(fmap), rename), ctype)
-            for ctype, fmap in files.items()
-            if fmap
-        ]
-        if dv_files:
-            tagged = _rename_back(
-                scan(dv_files, keep_file=True, keep_pos=True), rename
+    ct = StructField("_change_type", StringType())
+    for layer in _name_layers(units["cdc"]):
+        # this writer's cdc files hold every column; a foreign
+        # writer's hold the data columns, its partition values live in
+        # the action and override the (null) file column
+        body = spark.read.schema(StructType(list(schema.fields) + [ct])).parquet(
+            *[os.path.join(path, urllib.parse.unquote(u[0]))
+              for _, u in sorted(layer.items())]
+        ).withColumn("_dl_file", F.col("_metadata.file_name"))
+        foreign = {
+            b: u for b, u in layer.items() if u[2].get("partitionValues")
+        }
+        for pc in part_cols if foreign else ():
+            pvals = _file_map(
+                foreign, lambda u: u[2]["partitionValues"].get(pc)
             )
-            for ctype, wanted, minus in (
-                ("delete", new_map, old_map), ("insert", old_map, new_map)
-            ):
-                if wanted:
-                    parts.append((
-                        tagged.join(
-                            positions(wanted, minus), ["_dl_file", "_dl_dv_pos"]
-                        ).drop("_dl_file", "_dl_dv_pos"),
-                        ctype,
-                    ))
-        out_parts.extend(
-            df.withColumn("_change_type", F.lit(ctype))
-            .withColumn("_commit_version", lit_v)
-            for df, ctype in parts
-        )
+            body = body.withColumn(
+                pc,
+                F.when(
+                    F.map_contains_key(pvals, F.col("_dl_file")),
+                    pvals[F.col("_dl_file")].cast(types_[pc]),
+                ).otherwise(F.col(pc)),
+            )
+        emit(body, layer)
+    for ctype in ("insert", "delete"):
+        for layer in _name_layers(units[ctype]):
+            emit(scan(layer).withColumn("_change_type", F.lit(ctype)), layer)
+    for layer in _name_layers(units["dv"]):
+        tagged = scan(layer, keep_pos=True)
+        new_map = {b: u[3] for b, u in layer.items() if u[3]}
+        old_map = {b: u[4] for b, u in layer.items() if u[4]}
+        for ctype, wanted, minus in (
+            ("delete", new_map, old_map), ("insert", old_map, new_map)
+        ):
+            if wanted:
+                emit(
+                    tagged.join(
+                        positions(wanted, minus), ["_dl_file", "_dl_dv_pos"]
+                    ).drop("_dl_dv_pos")
+                    .withColumn("_change_type", F.lit(ctype)),
+                    layer,
+                )
     if not out_parts:
-        empty = spark.createDataFrame([], schema)
-        return empty.withColumn("_change_type", F.lit(None).cast("string")) \
-                    .withColumn("_commit_version", F.lit(None).cast("long"))
+        return empty_frame(spark, schema) \
+            .withColumn("_change_type", F.lit(None).cast("string")) \
+            .withColumn("_commit_version", F.lit(None).cast("long"))
     out = out_parts[0]
     for p in out_parts[1:]:
         out = out.unionByName(p)

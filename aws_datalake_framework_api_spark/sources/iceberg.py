@@ -92,7 +92,7 @@ from ..functions.numeric import money_sum, sql_money_sum
 from ..registry import query
 from .avro_codec import read_avro_file, write_avro_file
 from .landing import _scratch
-from .readers import load_table
+from .readers import empty_frame, load_table
 from .table_io import (
     CommitConflict,
     footer_min_max,
@@ -1067,7 +1067,7 @@ def read_iceberg(
         snapshot_id = _snapshot_at_timestamp(meta, as_of_timestamp)
     snap = _snapshot_by_id(meta, snapshot_id)
     if snap is None:
-        return spark.createDataFrame([], spark_schema)
+        return empty_frame(spark, spark_schema)
     data, deletes, eq_deletes = _manifest_entries(path, meta, snap)
     if partition_filter:
         data = _prune_partition_filter(
@@ -1258,7 +1258,7 @@ def _plan_scan(
     retains ``_ice_pos`` (the changelog reader joins position-delete
     deltas on both)."""
     if not data:
-        out = spark.createDataFrame([], spark_schema)
+        out = empty_frame(spark, spark_schema)
         if keep_file:
             out = out.withColumn("_ice_file", F.lit(None).cast("string"))
         if keep_pos:
@@ -1675,7 +1675,7 @@ def read_iceberg_range(
     spark_schema = _schema_to_spark(schema_json)
     snap = _snapshot_by_id(meta, snapshot_id)
     if snap is None:
-        return spark.createDataFrame([], spark_schema)
+        return empty_frame(spark, spark_schema)
     data, deletes, eq_deletes = _manifest_entries(path, meta, snap)
     kept = []
     for rec in data:
@@ -1805,7 +1805,7 @@ def read_iceberg_changes(
                 out = p if out is None else out.unionByName(p)
     if out is None:
         return (
-            spark.createDataFrame([], spark_schema)
+            empty_frame(spark, spark_schema)
             .withColumn("_change_type", F.lit(None).cast("string"))
             .withColumn("_snapshot_id", F.lit(None).cast("long"))
         )

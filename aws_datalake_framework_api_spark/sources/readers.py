@@ -32,6 +32,13 @@ TABLE_NAMES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """A frame with ``schema``, no rows and no partitions.
+    ``createDataFrame([], schema)`` takes the pickled-RDD path, and the
+    first action on it starts a Python worker to read an empty list."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, sf_dir)

@@ -51,7 +51,7 @@ from ..sources.delta import (
     read_delta,
     write_delta,
 )
-from ..sources.readers import load_table
+from ..sources.readers import empty_frame, load_table
 from .catchup import _PLUS, catch_up
 
 MV_SCHEMA = StructType(
@@ -82,7 +82,7 @@ def mv_apply_batch(view: str, batch_df: DataFrame, batch_id: int) -> None:
         return
     v = _table_version(view)  # commit only on top of the state read
     if v is None:
-        cur = spark.createDataFrame([], MV_SCHEMA)
+        cur = empty_frame(spark, MV_SCHEMA)
     else:
         cur = read_delta(spark, view, version_as_of=v)
     sign = (

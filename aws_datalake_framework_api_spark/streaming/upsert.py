@@ -45,7 +45,7 @@ from ..sources.delta import (
     read_delta,
     write_delta,
 )
-from ..sources.readers import load_table
+from ..sources.readers import empty_frame, load_table
 from ..sources.table_io import stage_parquet
 
 FEED_SCHEMA = StructType(
@@ -75,7 +75,7 @@ def merge_microbatch(path: str, batch_df: DataFrame, batch_id: int) -> None:
         return  # checkpoint replayed a batch the table already has
     v = _table_version(path)  # commit only on top of the state read
     if v is None:
-        cur = spark.createDataFrame([], FEED_SCHEMA)
+        cur = empty_frame(spark, FEED_SCHEMA)
     else:
         cur = read_delta(spark, path, version_as_of=v)
     w = Window.partitionBy("k").orderBy(F.desc("seq"))

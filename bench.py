@@ -178,6 +178,12 @@ def main() -> None:
     # over minutes of executor work — instead of first-run compilation
     # latency (measured on this Spark build: b_llm_quality 4.8 s cold
     # vs 0.5 s steady-state at sf0.1; the cold number is ~90% codegen).
+    # The warm classes last only while the codegen cache holds them:
+    # the pass compiles about 330.  With Spark's default of 100 entries
+    # the first timed runs compiled 374 classes again and the second
+    # 30; with session.py's cache the first compile 39
+    # (b_llm_dedup_ngram 21 and b_lake_iceberg_merge_mor 18, whose
+    # plans differ between the two inputs) and the second none.
     warm_dir = os.path.join(os.path.dirname(src_dir.rstrip("/")), "sf0.001")
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir

@@ -398,3 +398,16 @@ def test_event_update_survives_a_concurrent_flush(spark, tmp_path, monkeypatch):
     flushed = {r["aws_request_id"]: r["status"]
                for r in rival.audit_log().collect()}
     assert flushed == {"r1": "done", "r2": "success"}
+
+
+def test_empty_local_frame_has_no_partitions(spark, cat):
+    """No rows plan as a frame of no partitions — no Python worker
+    starts to read an empty list — and a delete that empties an
+    entity table still reads back empty."""
+    from aws_datalake_framework_api_spark.catalog import ENTITY_SCHEMA, _local_df
+
+    assert _local_df(spark, [], ENTITY_SCHEMA).rdd.getNumPartitions() == 0
+    cat.create("target_system", 3, "only")
+    assert cat.delete("target_system", 3)["matched"] == 1
+    assert cat.load("target_system").collect() == []
+    assert cat.read("target_system", 3).count() == 0

@@ -115,3 +115,78 @@ def test_cdf_stream_emits_restored_rows_as_inserts(spark, tmp_path):
     assert batch == [
         (0, "a", 0.0, "insert", 4), (4, "a", 4.0, "delete", 4),
     ]
+
+
+def test_changes_take_foreign_cdc_partition_values_by_file_name(
+    spark, tmp_path
+):
+    """A foreign writer's cdc file holds only the data columns; its
+    partition values live in the cdc action.  The batch reader scans
+    such files in one scan beside this writer's cdc files, and each row
+    must still carry its file's partition value (NULL included) and
+    the version that committed it."""
+    import json
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_datalake_framework_api_spark.sources.delta import (
+        alter_table_properties_delta,
+        read_delta_changes,
+        update_delta,
+    )
+
+    t = str(tmp_path / "t")
+    rows = [(i, ("a", "b", None)[i % 3], float(i)) for i in range(12)]
+    write_delta(_df(spark, rows).coalesce(1), t, mode="error",
+                partition_by=["part"])                            # v0
+    alter_table_properties_delta(
+        spark, t, {"delta.enableChangeDataFeed": "true"}
+    )                                                             # v1
+    update_delta(spark, t, F.col("k") < 6, {"v": -1.0})           # v2: cdc
+    update_delta(spark, t, F.col("k") >= 9, {"v": -2.0})          # v3: cdc
+    want = sorted(
+        map(tuple, read_delta_changes(spark, t, 1, 3).collect()),
+        key=repr,
+    )
+    assert {r[-1] for r in want} == {2, 3}
+    assert {r[1] for r in want} == {"a", "b", None}
+
+    # lay out v2's change files the way a foreign writer does: one
+    # file per partition directory, the partition column only in the
+    # action
+    log = os.path.join(t, "_delta_log", f"{2:020d}.json")
+    with open(log) as fh:
+        acts = [json.loads(line) for line in fh if line.strip()]
+    rewritten = []
+    for a in acts:
+        if "cdc" not in a:
+            rewritten.append(a)
+            continue
+        table = pq.read_table(os.path.join(t, a["cdc"]["path"]))
+        by_part: dict = {}
+        for rec in table.to_pylist():
+            by_part.setdefault(rec.pop("part"), []).append(rec)
+        data_schema = table.schema.remove(table.schema.get_field_index("part"))
+        for p, recs in by_part.items():
+            d = f"part={'__HIVE_DEFAULT_PARTITION__' if p is None else p}"
+            rel = f"_change_data/{d}/cdc-{uuid.uuid4()}.c000.snappy.parquet"
+            os.makedirs(os.path.join(t, "_change_data", d), exist_ok=True)
+            pq.write_table(
+                pa.Table.from_pylist(recs, schema=data_schema),
+                os.path.join(t, rel),
+            )
+            rewritten.append({"cdc": {
+                "path": rel, "partitionValues": {"part": p},
+                "size": os.path.getsize(os.path.join(t, rel)),
+                "dataChange": False,
+            }})
+    with open(log, "w") as fh:
+        fh.write("".join(json.dumps(a) + "\n" for a in rewritten))
+
+    got = sorted(
+        map(tuple, read_delta_changes(spark, t, 1, 3).collect()), key=repr
+    )
+    assert got == want

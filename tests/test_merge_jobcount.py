@@ -17,6 +17,9 @@ writes, commit — no replica scan, no merge planning.  Its budget is 8
 jobs per drain (15 at genesis and 30 incremental on this fixture when
 replication still ran a merge-on-read merge), and a drain with nothing
 new runs none.
+
+A steady round of the two (merge, then drain) compiles no Janino
+class: it reuses what the round before it compiled.
 """
 
 import os
@@ -158,3 +161,61 @@ def test_merge_pin_persist_mode_same_result(spark, sf_dir, tmp_path, monkeypatch
         )
         outs.append((stats["updated"], stats["deleted"], stats["inserted"], rows))
     assert outs[0] == outs[1]
+
+
+def _janino_compiles(spark) -> int:
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def test_steady_merge_and_drain_round_compiles_nothing(spark, tmp_path):
+    """Three rounds shaped like perfbench's lake_cdc: a MERGE of a
+    fresh batch (updates of the newest keys, deletes, inserts) into a
+    change-feed table, then a replication drain.  The third round
+    compiles nothing.  It did compile while the codegen cache held 100
+    entries (each round evicted the merge's classes) and while the
+    change feed tagged rows with a per-version ``lit(v)``, which
+    codegen inlines into the generated Java."""
+    import pandas as pd
+
+    cols = ["o_orderkey", "o_orderpriority", "o_totalprice"]
+    schema = "o_orderkey long, o_orderpriority string, o_totalprice double"
+    t, replica = str(tmp_path / "d"), str(tmp_path / "r")
+    write_delta(spark.createDataFrame(pd.DataFrame(
+        [(k, ("1-URGENT", "5-LOW")[k % 2], 1000.0 + k) for k in range(400)],
+        columns=cols,
+    ), schema), t)
+    alter_table_properties_delta(
+        spark, t, {"delta.enableChangeDataFeed": "true"}
+    )
+    write_iceberg(read_delta(spark, t).limit(0).coalesce(1), replica)
+    run_replication(spark, t, replica, ["o_orderkey"])
+    clauses = [
+        {"when": "matched", "action": "update",
+         "condition": "s.o_totalprice >= 0"},
+        {"when": "matched", "action": "delete"},
+        {"when": "not_matched", "action": "insert",
+         "condition": "s.o_totalprice >= 0"},
+    ]
+    compiled = []
+    for r in range(3):
+        top = 400 + 10 * r
+        batch = (
+            [(k, "2-HIGH", 2000.0 + r) for k in range(top - 30, top)]
+            + [(k, "5-LOW", -1.0) for k in range(20 * r, 20 * r + 10)]
+            + [(k, "3-MEDIUM", 3000.0) for k in range(top, top + 10)]
+        )
+        n0 = _janino_compiles(spark)
+        merge_delta(
+            spark, t,
+            spark.createDataFrame(
+                pd.DataFrame(batch, columns=cols), schema
+            ),
+            ["o_orderkey"], clauses=clauses,
+        )
+        run_replication(spark, t, replica, ["o_orderkey"])
+        compiled.append(_janino_compiles(spark) - n0)
+    assert compiled[2] == 0, f"Janino compiles per round: {compiled}"
+    assert sorted(map(tuple, read_iceberg(spark, replica).collect())) == sorted(
+        map(tuple, read_delta(spark, t).collect())
+    )

@@ -32,13 +32,21 @@ linear in the quantity the mechanism is meant to scale with.
   executor-side DV bitmap per touched file, zero data-file copies);
 - ``uniform``: UniForm enable + refresh: wall at 1× vs 8× file count
   (both are O(files) metadata passes — per-file footer/DV work, never
-  data).
+  data);
+- ``codegen``: N rounds of perfbench's lake_cdc workload after its
+  warm-up round (default 3): per op the wall time, process-tree CPU,
+  Janino compile count and codegen cache entries; per round the CPU of
+  the JVM's C1 and C2 compiler threads and the JVM's own JIT
+  compilation time.  A steady round that reuses the classes of the
+  round before it compiles nothing.
 
 Usage: python tools/scale_probes.py <probe>|all
+       python tools/scale_probes.py codegen [rounds]
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import sys
@@ -473,6 +481,122 @@ def probe_uniform(spark) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
+def _codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM (the count of Spark's
+    ``CodegenMetrics`` compilation-time histogram)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def _codegen_cache_entries(spark) -> int:
+    """Entries in ``CodeGenerator``'s compiled-class cache (a private
+    field, read by reflection)."""
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    return field.get(None).size()
+
+
+def _jit_thread_cpu() -> dict[tuple[str, int], float]:
+    """CPU seconds of each live C1 and C2 compiler thread of this
+    process's JVM children, keyed by (kind, thread id)."""
+    from perfbench import host
+
+    tick = os.sysconf("SC_CLK_TCK")
+    out: dict[tuple[str, int], float] = {}
+    for pid in host.process_tree()[1:]:
+        tasks = f"/proc/{pid}/task"
+        try:
+            tids = os.listdir(tasks)
+        except OSError:
+            continue
+        for tid in tids:
+            try:
+                with open(f"{tasks}/{tid}/stat") as fh:
+                    stat = fh.read()
+            except OSError:
+                continue
+            comm = stat[stat.find("(") + 1:stat.rfind(")")]
+            if comm[:2] in ("C1", "C2") and "Compiler" in comm:
+                f = stat[stat.rfind(")") + 2:].split()
+                out[(comm[:2], int(tid))] = (int(f[11]) + int(f[12])) / tick
+    return out
+
+
+def _jit_cpu_delta(before: dict, after: dict) -> dict[str, float]:
+    """C1 and C2 thread CPU spent between two ``_jit_thread_cpu``
+    readings.  HotSpot retires idle compiler threads; what a thread
+    retired in between had spent is not counted."""
+    out = {"C1": 0.0, "C2": 0.0}
+    for (kind, tid), cpu in after.items():
+        out[kind] += cpu - before.get((kind, tid), 0.0)
+    return out
+
+
+def probe_codegen(spark, rounds: int = 3) -> None:
+    """Where a lake_cdc round's compilation goes: perfbench's own
+    workload (seed 1) runs its warm-up round, then ``rounds`` more;
+    each op reports its wall time, process-tree CPU, Janino compile
+    count and the codegen cache's entry count after it."""
+    from perfbench import host
+    from perfbench.tracing import Recorder
+    from perfbench.wl_cdc import LakeCdc
+
+    cap = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    jit_mx = spark._jvm.java.lang.management.ManagementFactory \
+        .getCompilationMXBean()
+
+    class CompileRecorder(Recorder):
+        @contextlib.contextmanager
+        def op(self, op_type: str, kind: str):
+            t0, cpu0 = time.time(), host.tree_cpu_seconds()
+            n0 = _codegen_compiles(spark)
+            with super().op(op_type, kind) as rec:
+                yield rec
+            self.rows.append((
+                op_type, time.time() - t0, host.tree_cpu_seconds() - cpu0,
+                _codegen_compiles(spark) - n0, _codegen_cache_entries(spark),
+                rec["ok"],
+            ))
+
+    base = tempfile.mkdtemp(prefix="codegen_probe_")
+    try:
+        wl = LakeCdc(1, base)
+        rec = CompileRecorder(spark, False)
+        wl.generate()
+        wl.build(spark)
+        for r in range(rounds + 1):
+            jit0 = _jit_thread_cpu()
+            jit_ms0 = jit_mx.getTotalCompilationTime()
+            rec.rows = []
+            if r == 0:
+                wl.warmup(spark, rec)
+            else:
+                wl.run_round(spark, rec)
+            jit = _jit_cpu_delta(jit0, _jit_thread_cpu())
+            jit_ms = jit_mx.getTotalCompilationTime() - jit_ms0
+            ops = rec.rows
+            print(
+                f"codegen {'warm-up' if r == 0 else f'round {r}'}: "
+                f"{len(ops)} ops, wall {sum(o[1] for o in ops):.2f}s, "
+                f"cpu {sum(o[2] for o in ops):.2f}s, "
+                f"compiles {sum(o[3] for o in ops)}, "
+                f"cache {_codegen_cache_entries(spark)}/{cap}, "
+                f"C1 {jit['C1']:.2f}s, C2 {jit['C2']:.2f}s, "
+                f"JIT {jit_ms / 1000:.2f}s"
+            )
+            for name, wall, cpu, n, entries, ok in ops:
+                print(
+                    f"  {name:<20} wall {wall:6.2f}s  cpu {cpu:6.2f}s  "
+                    f"compiles {n:3d}  cache {entries:4d}"
+                    f"{'' if ok else '  FAILED'}"
+                )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 PROBES = {
     "substr": probe_substr,
     "pq": probe_pq,
@@ -485,6 +609,7 @@ PROBES = {
     "mint": probe_mint,
     "morconv": probe_morconv,
     "uniform": probe_uniform,
+    "codegen": probe_codegen,
 }
 
 
@@ -496,7 +621,9 @@ def main() -> None:
 
     spark = get_spark("scale-probes")
     for name, probe in PROBES.items():
-        if which in (name, "all"):
+        if which == name:
+            probe(spark, *[int(a) for a in sys.argv[2:]])
+        elif which == "all":
             probe(spark)
 
 
