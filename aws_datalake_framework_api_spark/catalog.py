@@ -68,6 +68,7 @@ from pyspark.sql.types import (
 from .sources.delta import (CommitConflict, _table_version, read_delta,
                             update_delta, write_delta)
 from .sources.readers import empty_frame
+from .sources.table_io import COMMIT_ATTEMPTS
 
 ENTITY_TYPES = ("source_system", "target_system", "data_asset")
 
@@ -134,14 +135,16 @@ def _is_table(d: str) -> bool:
 
 def _retry(attempt):
     """Run ``attempt`` (read, check, commit) again while a rival
-    writer wins its commit race — 5 tries, ``write_delta``'s own bound
-    for a rebasing append — then raise."""
-    for _ in range(5):
+    writer wins its commit race — ``COMMIT_ATTEMPTS`` tries, the
+    commit loop's own bound for a rebasing append — then raise."""
+    for _ in range(COMMIT_ATTEMPTS):
         try:
             return attempt()
         except (CommitConflict, FileExistsError) as e:
             lost = e
-    raise CommitConflict("lost the commit race 5 times") from lost
+    raise CommitConflict(
+        f"lost the commit race {COMMIT_ATTEMPTS} times"
+    ) from lost
 
 
 @dataclass

@@ -51,12 +51,15 @@ parquet write, flattens them into the table root under unique names
 reader never assumes hive-style paths), derives ``partitionValues``
 from the staging layout, and publishes the commit JSON with
 put-if-absent: two racing writers of version N produce exactly one
-winner, the loser gets a ``FileExistsError`` to retry against the new
-state (optimistic concurrency, as the protocol prescribes).  Staging,
-footer stats and the put-if-absent publish are the format-neutral
+winner (optimistic concurrency, as the protocol prescribes).  The
+loser goes through :func:`.table_io.commit_loop`: a blind append
+rebases onto the winner, everything else raises, and a commit that
+lands nothing unlinks what it staged.  Staging, footer stats, the
+put-if-absent publish and the commit loop are the format-neutral
 steps in :mod:`.table_io`, shared with the Iceberg connector; this
 module keeps the Delta codec (``add``/``cdc`` actions, JSON stats,
-log replay and checkpoints).
+log replay and checkpoints), its claim (:func:`_commit`) and its one
+commit step (:func:`_commit_mutation`).
 """
 
 from __future__ import annotations
@@ -78,7 +81,9 @@ from ..registry import query
 from .landing import _scratch
 from .readers import empty_frame, load_table
 from .table_io import (
+    ORPHAN_AGE_FLOOR_MS,
     CommitConflict,
+    commit_loop,
     footer_min_max,
     put_if_absent,
     stage_parquet,
@@ -1355,6 +1360,8 @@ def _dv_relation(
 
 
 _ICT_KEY = "delta.enableInCommitTimestamps"
+_ICT_ENABLED_AT = "delta.inCommitTimestampEnablementVersion"
+_ICT_ENABLED_TS = "delta.inCommitTimestampEnablementTimestamp"
 
 
 def _last_ict(path: str, version: int) -> int | None:
@@ -1387,19 +1394,23 @@ def _apply_ict(
     carry a MONOTONICALLY increasing ``inCommitTimestamp`` — the
     commit's authoritative wall clock, immune to file-mtime drift
     (log copies, backup restores).  Clamped to strictly exceed the
-    previous commit's ICT, exactly delta-spark's rule."""
-    if not conf or conf.get(_ICT_KEY) != "true":
-        return actions
-    now = int(time.time() * 1000)
-    prev = _last_ict(path, version)
-    ict = max(now, (prev or 0) + 1)
-    ci = next((a for a in actions if "commitInfo" in a), None)
-    if ci is None:
-        ci = {"commitInfo": {"timestamp": now, "operation": "WRITE"}}
-        actions = [ci] + list(actions)
+    previous commit's ICT, exactly delta-spark's rule.  The commit
+    that enables the feature carries the enablement timestamp its
+    ``metaData`` records (``alter_table_properties_delta``).  Every
+    writer here puts the ``commitInfo`` first."""
+    md_conf = next(
+        (a["metaData"].get("configuration") or {}
+         for a in actions if "metaData" in a),
+        {},
+    )
+    if md_conf.get(_ICT_ENABLED_AT) == str(version):
+        ict = int(md_conf[_ICT_ENABLED_TS])
+    elif conf and conf.get(_ICT_KEY) == "true":
+        now = int(time.time() * 1000)
+        ict = max(now, (_last_ict(path, version) or 0) + 1)
     else:
-        actions = [ci] + [a for a in actions if a is not ci]
-    ci["commitInfo"]["inCommitTimestamp"] = ict
+        return actions
+    actions[0]["commitInfo"]["inCommitTimestamp"] = ict
     return actions
 
 
@@ -1498,31 +1509,70 @@ def _apply_row_tracking(
     return actions
 
 
+def _removes(
+    snap: _Snapshot, rels, now: int, data_change: bool = True
+) -> list[dict]:
+    """One ``remove`` per active path in ``rels``.  Reconciliation is
+    keyed by (path, dvId), so each names the deletion vector of the
+    file version it tombstones."""
+    out = []
+    for rel in rels:
+        rm = {
+            "path": rel, "deletionTimestamp": now, "dataChange": data_change,
+        }
+        if snap.files[rel].get("deletionVector"):
+            rm["deletionVector"] = snap.files[rel]["deletionVector"]
+        out.append({"remove": rm})
+    return out
+
+
+def _action_files(path: str, actions: list[dict]) -> list[str]:
+    """The files the ``add`` and ``cdc`` actions name, under ``path``."""
+    return [
+        os.path.join(path, urllib.parse.unquote(a[kind]["path"]))
+        for a in actions
+        for kind in ("add", "cdc")
+        if kind in a
+    ]
+
+
 def _commit_mutation(
-    path: str, version: int, actions: list[dict], operation: str,
-    snap: _Snapshot | None = None,
-) -> None:
-    """Commit a snapshot-dependent mutation; a lost race surfaces as
-    :class:`CommitConflict` (deterministic, actionable) instead of a
-    bare FileExistsError.  ``snap`` (the PRE-commit snapshot) lets the
-    commit honor table-level commit obligations — In-Commit
-    Timestamps (:func:`_apply_ict`) and row tracking
-    (:func:`_apply_row_tracking`)."""
-    if snap is not None:
-        actions = _apply_ict(
-            path, version, actions,
-            (snap.metadata or {}).get("configuration"),
-        )
-        actions = _apply_row_tracking(path, version, actions, snap)
-    try:
+    path: str,
+    version: int,
+    operation: str,
+    params: dict,
+    actions: list[dict],
+    snap: _Snapshot,
+    removed=(),
+    staged=(),
+    data_change: bool = True,
+) -> int:
+    """Commit a change computed against ``snap`` (the PRE-commit
+    snapshot) as ``version`` and return it.  The commit is a
+    ``commitInfo`` naming ``operation`` and ``params``, a ``remove``
+    per path in ``removed`` (:func:`_removes`; ``data_change=False``
+    marks a pure rearrangement), then ``actions``, with the table's
+    commit obligations applied: In-Commit Timestamps
+    (:func:`_apply_ict`) and row tracking (:func:`_apply_row_tracking`).
+    A rival claiming ``version`` first raises :class:`CommitConflict`
+    and unlinks ``staged``, the files this call wrote for the commit
+    (:func:`.table_io.commit_loop`)."""
+    now = int(time.time() * 1000)
+    info = {"timestamp": now, "operation": operation,
+            "operationParameters": params}
+    actions = [{"commitInfo": info}] + _removes(
+        snap, removed, now, data_change
+    ) + list(actions)
+    actions = _apply_ict(
+        path, version, actions, (snap.metadata or {}).get("configuration")
+    )
+    actions = _apply_row_tracking(path, version, actions, snap)
+
+    def claim() -> int:
         _commit(path, version, actions)
-    except FileExistsError as e:
-        raise CommitConflict(
-            f"concurrent writer committed version {version} while this "
-            f"{operation} was computed against version {version - 1}; "
-            "the operation read a stale snapshot — re-run it against "
-            "the current table state"
-        ) from e
+        return version
+
+    return commit_loop(claim, staged)
 
 
 def _commit(path: str, version: int, actions: list[dict]) -> None:
@@ -1883,15 +1933,7 @@ def add_constraint_delta(
     conf = dict(md.get("configuration") or {})
     conf[f"delta.constraints.{name}"] = expr
     md["configuration"] = conf
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": expr},
-            }
-        }
-    ]
+    actions: list[dict] = []
     proto = snap.protocol or {}
     writer = int(proto.get("minWriterVersion", 1))
     feats = proto.get("writerFeatures")
@@ -1912,9 +1954,10 @@ def add_constraint_delta(
             }}
         )
     actions.append({"metaData": md})
-    version = latest + 1
-    _commit_mutation(path, version, actions, "ADD CONSTRAINT", snap=snap)
-    return version
+    return _commit_mutation(
+        path, latest + 1, "ADD CONSTRAINT", {"name": name, "expr": expr},
+        actions, snap,
+    )
 
 
 def alter_table_properties_delta(
@@ -1941,18 +1984,6 @@ def alter_table_properties_delta(
     for k in unset or []:
         conf.pop(k, None)
     md["configuration"] = conf
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(set_props or {}),
-                    "unset": json.dumps(unset or []),
-                },
-            }
-        }
-    ]
     # Enabling CDF must upgrade the protocol (delta-spark parity;
     # ADVICE r7): a legacy writer-v2 client could otherwise mutate the
     # table without writing cdc files, silently corrupting the feed.
@@ -2003,11 +2034,11 @@ def alter_table_properties_delta(
         # readers know where the mtime→ICT cutover sits.  The feature
         # is writer-side only — minReaderVersion stays; a legacy
         # protocol converts to writer-7 with its implied feature set.
+        # (_apply_ict stamps this commit with the recorded timestamp)
         ict = max(int(time.time() * 1000), (_last_ict(path, version) or 0) + 1)
-        conf["delta.inCommitTimestampEnablementVersion"] = str(version)
-        conf["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
+        conf[_ICT_ENABLED_AT] = str(version)
+        conf[_ICT_ENABLED_TS] = str(ict)
         md["configuration"] = conf
-        actions[0]["commitInfo"]["inCommitTimestamp"] = ict
         proto = cur_proto  # build on any CDF upgrade from this commit
         writer = int(proto.get("minWriterVersion", 1))
         feats = set(proto.get("writerFeatures") or [])
@@ -2052,11 +2083,13 @@ def alter_table_properties_delta(
             )
         cur_proto = new_proto
         proto_changed = True
-    if proto_changed:
-        actions.append({"protocol": cur_proto})
-    actions.append({"metaData": md})
-    _commit_mutation(path, version, actions, "SET TBLPROPERTIES", snap=snap)
-    return version
+    actions = [{"protocol": cur_proto}] if proto_changed else []
+    return _commit_mutation(
+        path, version, "SET TBLPROPERTIES",
+        {"properties": json.dumps(set_props or {}),
+         "unset": json.dumps(unset or [])},
+        actions + [{"metaData": md}], snap,
+    )
 
 
 #: legal type widenings over Spark-JSON type names (the vocabulary
@@ -2144,17 +2177,7 @@ def widen_type_delta(
     schema["fields"] = fields
     md["schemaString"] = json.dumps(schema)
     StructType.fromJson(json.loads(md["schemaString"]))  # must round-trip
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "CHANGE COLUMN",
-                "operationParameters": {
-                    "columns": json.dumps(retype_columns)
-                },
-            }
-        }
-    ]
+    actions: list[dict] = []
     proto = snap.protocol or {}
     rf = set(proto.get("readerFeatures") or [])
     wf = set(proto.get("writerFeatures") or [])
@@ -2192,8 +2215,10 @@ def widen_type_delta(
             }
         )
     actions.append({"metaData": md})
-    _commit_mutation(path, version, actions, "CHANGE COLUMN", snap=snap)
-    return version
+    return _commit_mutation(
+        path, version, "CHANGE COLUMN",
+        {"columns": json.dumps(retype_columns)}, actions, snap,
+    )
 
 
 # ------------------------------------------------------ identity columns
@@ -2571,23 +2596,10 @@ def drop_constraint_delta(spark: SparkSession, path: str, name: str) -> int:
     conf = dict(md.get("configuration") or {})
     del conf[f"delta.constraints.{name}"]
     md["configuration"] = conf
-    version = latest + 1
-    _commit_mutation(
-        path, version,
-        [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "DROP CONSTRAINT",
-                    "operationParameters": {"name": name},
-                }
-            },
-            {"metaData": md},
-        ],
-        "DROP CONSTRAINT",
-        snap=snap,
+    return _commit_mutation(
+        path, latest + 1, "DROP CONSTRAINT", {"name": name},
+        [{"metaData": md}], snap,
     )
-    return version
 
 
 def _check_schema_compat(
@@ -2755,7 +2767,15 @@ def write_delta(
     ``read_version + 1``: if the table has moved past it, or another
     writer claims that version first, it raises :class:`CommitConflict`
     and is never rebased — the caller re-reads and re-checks.  Writes
-    that read nothing pass nothing."""
+    that read nothing pass nothing.
+
+    The commit goes through :func:`.table_io.commit_loop`.  When a
+    rival claims the version first, a blind append (``append``, no
+    schema evolution, no ``read_version``) lands on top of the
+    winners unless one of them changed metadata/protocol or already
+    applied its ``txn``; a create raises ``FileExistsError`` and every
+    other write :class:`CommitConflict`.  A write that commits nothing
+    unlinks the data files it staged."""
     partition_by = list(partition_by or [])
     spark = df.sparkSession
     if mode not in ("error", "overwrite", "append"):
@@ -2890,18 +2910,9 @@ def write_delta(
                 md["schemaString"] = evolved.json()
             actions.append({"metaData": md})
         if mode == "overwrite":
-            now = int(time.time() * 1000)
-            for rel in sorted(snap.files):
-                rm = {
-                    "path": rel,
-                    "deletionTimestamp": now,
-                    "dataChange": True,
-                }
-                # reconciliation is keyed by (path, dvId): the remove
-                # must name the DV of the file version it tombstones
-                if snap.files[rel].get("deletionVector"):
-                    rm["deletionVector"] = snap.files[rel]["deletionVector"]
-                actions.append({"remove": rm})
+            actions.extend(
+                _removes(snap, sorted(snap.files), int(time.time() * 1000))
+            )
     stage_df, stage_parts = df, partition_by
     if snap is not None and _mapping_mode(snap) not in ("none", ""):
         # column-mapped table: files/partitionValues/stats must spell
@@ -2929,107 +2940,70 @@ def write_delta(
         if md_wm is not None:
             actions.append({"metaData": md_wm})
     actions.extend(adds)
-    # Optimistic-concurrency commit (VERDICT r6 item #3).  A BLIND
-    # append (mode="append", no schema evolution riding along) read
-    # nothing, so losing the version race is reconcilable: re-read the
-    # winners, refuse if any changed metadata/protocol (the append's
-    # schema validation is stale then), honor txn idempotence if a
-    # concurrent writer already applied this (appId, version), else
-    # rebase onto latest+1 — delta-spark's winning-commit
-    # reconciliation for its append class.  Everything else loses
-    # deterministically: create → FileExistsError (the documented
-    # contract), overwrite/evolving append/any write carrying
-    # read_version → CommitConflict.
-    blind_append = (
-        mode == "append" and snap is not None and evolved is None
-        and read_version is None
-    )
     ict_conf = (
         (snap.metadata or {}).get("configuration") if snap is not None
         else None
     )
-    try:
-        for _attempt in range(5):
-            try:
-                # inject per ATTEMPT: a rebase moves `version`, and the
-                # in-commit timestamp must exceed the NEW predecessor's
-                _commit(
-                    path, version,
-                    _apply_row_tracking(
-                        path, version,
-                        _apply_ict(path, version, actions, ict_conf),
-                        snap,
-                    ),
-                )
-                return version
-            except FileExistsError:
-                if snap is None:
-                    raise  # racing CREATE: the table now exists
-                if _rt_supported(snap):
-                    # a row-tracked append reads the id high watermark
-                    # from its snapshot — a blind rebase onto a
-                    # concurrent commit could re-issue ids that commit
-                    # already minted; surface the conflict instead
-                    raise CommitConflict(
-                        f"concurrent writer committed version {version} "
-                        "while this row-tracked append was in flight — "
-                        "re-run against the current table state"
-                    ) from None
-                if not blind_append:
-                    raise CommitConflict(
-                        f"concurrent writer committed version {version} "
-                        f"while this {mode} was computed against version "
-                        f"{version - 1} — re-run it against the current "
-                        "table state"
-                    ) from None
-                latest2 = _table_version(path)
-                for w in range(version, latest2 + 1):
-                    with open(_version_file(path, w)) as fh:
-                        for line in fh:
-                            line = line.strip()
-                            if not line:
-                                continue
-                            a = json.loads(line)
-                            if "metaData" in a or "protocol" in a:
-                                raise CommitConflict(
-                                    f"concurrent commit {w} changed table "
-                                    "metadata/protocol while this append was "
-                                    "in flight — re-validate the write and "
-                                    "retry"
-                                ) from None
-                            if (
-                                txn is not None
-                                and "txn" in a
-                                and a["txn"].get("appId") == txn[0]
-                                and int(a["txn"].get("version", -1))
-                                >= int(txn[1])
-                            ):
-                                # idempotent sink: a concurrent writer
-                                # already applied this app transaction
-                                _unlink_staged(path, adds)
-                                return w
-                version = latest2 + 1
-        raise CommitConflict(
-            "append lost the commit race 5 times — the table is under "
-            "write contention this writer cannot keep up with"
+
+    def claim() -> int:
+        # inject per ATTEMPT: a rebase moves `version`, and the
+        # in-commit timestamp must exceed the NEW predecessor's
+        _commit(
+            path, version,
+            _apply_row_tracking(
+                path, version,
+                _apply_ict(path, version, actions, ict_conf), snap,
+            ),
         )
-    except (FileExistsError, CommitConflict):
-        # nothing committed: no log version references the files this
-        # write staged, so they go now rather than at the next vacuum
-        _unlink_staged(path, adds)
-        raise
+        return version
 
-
-def _unlink_staged(path: str, adds: list[dict]) -> None:
-    """Delete the data files a write staged for a commit that did not
-    land."""
-    for a in adds:
-        try:
-            os.unlink(
-                os.path.join(path, urllib.parse.unquote(a["add"]["path"]))
+    def rebase() -> int | None:
+        # delta-spark's winning-commit reconciliation for a BLIND
+        # append (mode="append", no schema evolution riding along, no
+        # read_version): it read nothing, so it lands on top of the
+        # winners unless one changed metadata/protocol (the append's
+        # schema validation is stale then) or already applied this
+        # (appId, version)
+        nonlocal version
+        if snap is None:  # racing CREATE: the table now exists
+            raise FileExistsError(f"delta table already exists at {path}")
+        if _rt_supported(snap):
+            # a row-tracked append reads the id high watermark from its
+            # snapshot — a rebase onto a concurrent commit could
+            # re-issue ids that commit already minted
+            raise CommitConflict(
+                f"concurrent writer committed version {version} while "
+                "this row-tracked append was in flight — re-run against "
+                "the current table state"
             )
-        except FileNotFoundError:
-            pass
+        latest2 = _table_version(path)
+        for w in range(version, latest2 + 1):
+            for a in _version_actions(path, w):
+                if "metaData" in a or "protocol" in a:
+                    raise CommitConflict(
+                        f"concurrent commit {w} changed table "
+                        "metadata/protocol while this append was in "
+                        "flight — re-validate the write and retry"
+                    )
+                if (
+                    txn is not None
+                    and "txn" in a
+                    and a["txn"].get("appId") == txn[0]
+                    and int(a["txn"].get("version", -1)) >= int(txn[1])
+                ):
+                    return w
+        version = latest2 + 1
+        return None
+
+    # a create, an overwrite, an evolving append and any write carrying
+    # read_version lose deterministically: FileExistsError for the
+    # create (the documented contract), CommitConflict for the rest
+    rebases = snap is None or (
+        mode == "append" and evolved is None and read_version is None
+    )
+    return commit_loop(
+        claim, _action_files(path, adds), rebase if rebases else None
+    )
 
 
 def _assign_mapping(node, counter: list[int], phys=None):
@@ -3221,28 +3195,11 @@ def upgrade_column_mapping_delta(spark: SparkSession, path: str) -> int:
             "minReaderVersion": max(r, 2),
             "minWriterVersion": max(w, 5),
         }
-    version = latest + 1
-    _commit_mutation(
-        path, version,
-        [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps(
-                            {_CMAP_MODE_KEY: "name"}
-                        )
-                    },
-                }
-            },
-            {"protocol": new_proto},
-            {"metaData": md},
-        ],
-        "upgrade column mapping",
-        snap=snap,
+    return _commit_mutation(
+        path, latest + 1, "SET TBLPROPERTIES",
+        {"properties": json.dumps({_CMAP_MODE_KEY: "name"})},
+        [{"protocol": new_proto}, {"metaData": md}], snap,
     )
-    return version
 
 
 def rename_column_delta(
@@ -3290,25 +3247,11 @@ def rename_column_delta(
     md["partitionColumns"] = [
         renames.get(c, c) for c in md.get("partitionColumns") or []
     ]
-    version = latest + 1
-    _commit_mutation(
-        path, version,
-        [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "RENAME COLUMN",
-                    "operationParameters": {
-                        "renames": json.dumps(dict(sorted(renames.items())))
-                    },
-                }
-            },
-            {"metaData": md},
-        ],
-        "RENAME COLUMN",
-        snap=snap,
+    return _commit_mutation(
+        path, latest + 1, "RENAME COLUMN",
+        {"renames": json.dumps(dict(sorted(renames.items())))},
+        [{"metaData": md}], snap,
     )
-    return version
 
 
 def drop_column_delta(
@@ -3351,25 +3294,10 @@ def drop_column_delta(
         raise ValueError("cannot drop every column")
     md = dict(snap.metadata)
     md["schemaString"] = json.dumps({**sj, "fields": fields})
-    version = latest + 1
-    _commit_mutation(
-        path, version,
-        [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "DROP COLUMNS",
-                    "operationParameters": {
-                        "columns": json.dumps(sorted(columns))
-                    },
-                }
-            },
-            {"metaData": md},
-        ],
-        "DROP COLUMNS",
-        snap=snap,
+    return _commit_mutation(
+        path, latest + 1, "DROP COLUMNS",
+        {"columns": json.dumps(sorted(columns))}, [{"metaData": md}], snap,
     )
-    return version
 
 
 def delete_partition(
@@ -3382,29 +3310,14 @@ def delete_partition(
     _check_write_protocol(snap, "delete")
     # partitionValues spell stored (physical) keys on mapped tables
     col_stored = _resolve_read_schema(snap)[3].get(column, column)
-    now = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": f"{column} = '{value}'"},
-            }
-        }
-    ]
-    for rel in sorted(snap.files):
-        if snap.partition_values(rel).get(col_stored) == value:
-            rm = {
-                "path": rel,
-                "deletionTimestamp": now,
-                "dataChange": True,
-            }
-            if snap.files[rel].get("deletionVector"):
-                rm["deletionVector"] = snap.files[rel]["deletionVector"]
-            actions.append({"remove": rm})
-    version = latest + 1
-    _commit_mutation(path, version, actions, "partition DELETE", snap=snap)
-    return version
+    return _commit_mutation(
+        path, latest + 1, "DELETE",
+        {"predicate": f"{column} = '{value}'"}, [], snap,
+        removed=[
+            rel for rel in sorted(snap.files)
+            if snap.partition_values(rel).get(col_stored) == value
+        ],
+    )
 
 
 def update_delta(
@@ -3483,27 +3396,13 @@ def update_delta(
         post = post.withColumn("_change_type", F.lit("update_postimage"))
         cdc_actions = _stage_cdc(pre.unionByName(post), snap, path)
     version = latest + 1
-    now = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "UPDATE",
-                "operationParameters": {
-                    "predicate": str(condition),
-                    "rewrittenFiles": len(hit_rels),
-                },
-            }
-        }
-    ]
-    for rel in hit_rels:
-        rm = {"path": rel, "deletionTimestamp": now, "dataChange": True}
-        if snap.files[rel].get("deletionVector"):
-            rm["deletionVector"] = snap.files[rel]["deletionVector"]
-        actions.append({"remove": rm})
-    actions.extend(_stage_mutation(updated, snap, path, version))
-    actions.extend(cdc_actions)
-    _commit_mutation(path, version, actions, "UPDATE", snap=snap)
+    actions = _stage_mutation(updated, snap, path, version) + cdc_actions
+    _commit_mutation(
+        path, version, "UPDATE",
+        {"predicate": str(condition), "rewrittenFiles": len(hit_rels)},
+        actions, snap, removed=hit_rels,
+        staged=_action_files(path, actions),
+    )
     return version, matched
 
 
@@ -3537,6 +3436,31 @@ def _dv_protocol_upgrade(snap: _Snapshot) -> dict | None:
             "writerFeatures": sorted(wf),
         }
     }
+
+
+def _dv_files(path: str, written: list) -> list[str]:
+    """The deletion-vector files :func:`_stage_dv_bitmaps` wrote."""
+    return [_dv_file_path(path, json.loads(r["descriptor"])) for r in written]
+
+
+def _dv_readds(
+    snap: _Snapshot, rels: list[str], written: list
+) -> tuple[list[dict], list[str]]:
+    """The re-adds of the files :func:`_stage_dv_bitmaps` gave a new
+    vector, each carrying it, and the paths whose old (path, dv) the
+    commit removes."""
+    rel_of = {
+        os.path.basename(urllib.parse.unquote(rel)): rel for rel in rels
+    }
+    written = sorted(written, key=lambda r: r["_dl_file"])
+    touched = [rel_of[r["_dl_file"]] for r in written]
+    readds = [
+        {"add": {**snap.files[rel],
+                 "deletionVector": json.loads(r["descriptor"]),
+                 "dataChange": True}}
+        for rel, r in zip(touched, written)
+    ]
+    return readds, touched
 
 
 def _stage_dv_bitmaps(
@@ -3621,7 +3545,7 @@ def delete_where_delta(spark: SparkSession, path: str, condition) -> tuple[int, 
     the driver for the commit (VERDICT r6).  A retried task can leave
     an orphan ``deletion_vector_*.bin`` behind (only the surviving
     attempt's descriptor is committed) — vacuum reclaims those by
-    mtime, the same contract a failed commit already has."""
+    mtime, the same contract a crashed commit has."""
     snap, latest = _snapshot(spark, path)
     _check_write_protocol(snap, "delete")
     rels = sorted(snap.files)
@@ -3636,46 +3560,36 @@ def delete_where_delta(spark: SparkSession, path: str, condition) -> tuple[int, 
     )
     if not written:
         return latest, 0
-    rel_of = {
-        os.path.basename(urllib.parse.unquote(rel)): rel for rel in rels
-    }
-    now = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": str(condition)},
-            }
-        }
-    ]
+    staged = _dv_files(path, written)
+    actions: list[dict] = []
     if _cdf_enabled(snap):
-        actions.extend(
-            _stage_cdc(
-                tagged.filter(condition)
-                .drop("_dl_file", "_dl_dv_pos")
-                .withColumn("_change_type", F.lit("delete")),
-                snap, path,
-            )
+        actions = _stage_cdc(
+            tagged.filter(condition)
+            .drop("_dl_file", "_dl_dv_pos")
+            .withColumn("_change_type", F.lit("delete")),
+            snap, path,
         )
+        staged += _action_files(path, actions)
     upgrade = _dv_protocol_upgrade(snap)
     if upgrade:
         actions.append(upgrade)
-    n_deleted = 0
-    for r in sorted(written, key=lambda r: r["_dl_file"]):
-        rel = rel_of[r["_dl_file"]]
-        a = snap.files[rel]
-        n_deleted += int(r["n_new"])
-        rm = {"path": rel, "deletionTimestamp": now, "dataChange": True}
-        if a.get("deletionVector"):
-            rm["deletionVector"] = a["deletionVector"]
-        actions.append({"remove": rm})
-        actions.append({"add": {**{k: v for k, v in a.items()},
-                               "deletionVector": json.loads(r["descriptor"]),
-                               "dataChange": True}})
-    version = latest + 1
-    _commit_mutation(path, version, actions, "DELETE", snap=snap)
-    return version, n_deleted
+    readds, touched = _dv_readds(snap, rels, written)
+    version = _commit_mutation(
+        path, latest + 1, "DELETE", {"predicate": str(condition)},
+        actions + readds, snap, removed=touched, staged=staged,
+    )
+    return version, sum(int(r["n_new"]) for r in written)
+
+
+def _merge_params(on: list[str], clauses, **extra) -> dict:
+    """A MERGE commit's ``operationParameters``."""
+    return {
+        "matchedPredicates": json.dumps(on),
+        "clauses": json.dumps(
+            [{k: v for k, v in cl.items() if k != "set"} for cl in clauses]
+        ),
+        **extra,
+    }
 
 
 def _merge_delta_mor(  # gen_ident threaded from merge_delta's prep
@@ -3720,42 +3634,13 @@ def _merge_delta_mor(  # gen_ident threaded from merge_delta's prep
     if want_cdc and len(planned) > 3 and planned[3] is not None:
         cdc_actions = _stage_cdc(planned[3], snap, path)
     version = latest + 1
-    now = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "matchedPredicates": json.dumps(on),
-                    "clauses": json.dumps(
-                        [
-                            {k: v for k, v in cl.items() if k != "set"}
-                            for cl in clauses
-                        ]
-                    ),
-                    "strategy": "merge-on-read",
-                },
-            }
-        }
-    ]
+    actions: list[dict] = []
     if written:
         upgrade = _dv_protocol_upgrade(snap)
         if upgrade:
             actions.append(upgrade)
-    rel_of = {
-        os.path.basename(urllib.parse.unquote(rel)): rel for rel in rels
-    }
-    for r in sorted(written, key=lambda r: r["_dl_file"]):
-        rel = rel_of[r["_dl_file"]]
-        a = snap.files[rel]
-        rm = {"path": rel, "deletionTimestamp": now, "dataChange": True}
-        if a.get("deletionVector"):
-            rm["deletionVector"] = a["deletionVector"]
-        actions.append({"remove": rm})
-        actions.append({"add": {**{k: v for k, v in a.items()},
-                               "deletionVector": json.loads(r["descriptor"]),
-                               "dataChange": True}})
+    readds, touched = _dv_readds(snap, rels, written)
+    actions.extend(readds)
     adds = _stage_mutation(new_rows, snap, path, version)
     if gen_ident:
         # watermark in the same commit as the minted values (see the
@@ -3769,7 +3654,14 @@ def _merge_delta_mor(  # gen_ident threaded from merge_delta's prep
     actions.extend(cdc_actions)
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": int(txn[1])}})
-    _commit_mutation(path, version, actions, "MERGE", snap=snap)
+    _commit_mutation(
+        path, version, "MERGE",
+        _merge_params(on, clauses, strategy="merge-on-read"), actions, snap,
+        removed=touched,
+        staged=_dv_files(path, written) + _action_files(
+            path, adds + cdc_actions
+        ),
+    )
     return {"version": version, **stats}
 
 
@@ -4002,30 +3894,7 @@ def merge_delta(
         stats["updated"], stats["deleted"], stats["inserted"],
     )
     version = latest + 1
-    now = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "matchedPredicates": json.dumps(on),
-                    "clauses": json.dumps(
-                        [
-                            {k: v for k, v in cl.items() if k != "set"}
-                            for cl in clauses
-                        ]
-                    ),
-                    "rewrittenFiles": len(hit_rels),
-                },
-            }
-        }
-    ]
-    for rel in hit_rels:
-        rm = {"path": rel, "deletionTimestamp": now, "dataChange": True}
-        if snap.files[rel].get("deletionVector"):
-            rm["deletionVector"] = snap.files[rel]["deletionVector"]
-        actions.append({"remove": rm})
+    actions: list[dict] = []
     adds = _stage_mutation(new_data, snap, path, version)
     if gen_ident:
         # the watermark rides the SAME commit as the minted values —
@@ -4040,7 +3909,12 @@ def merge_delta(
     actions.extend(cdc_actions)
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": int(txn[1])}})
-    _commit_mutation(path, version, actions, "MERGE", snap=snap)
+    _commit_mutation(
+        path, version, "MERGE",
+        _merge_params(on, clauses, rewrittenFiles=len(hit_rels)), actions,
+        snap, removed=hit_rels,
+        staged=_action_files(path, adds + cdc_actions),
+    )
     return {
         "version": version,
         "updated": n_updated,
@@ -4143,19 +4017,9 @@ def optimize_delta(
             tuple(pv.get(c) for c in part_stored), []
         ).append(rel)
     version = latest + 1
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetSize": target_file_bytes,
-                },
-            }
-        }
-    ]
-    files_before = files_after = n_parts = 0
-    now = int(time.time() * 1000)
+    removed: list[str] = []
+    adds: list[dict] = []
+    n_parts = 0
     for key, rels in sorted(by_part.items(), key=lambda kv: str(kv[0])):
         has_dv = any(
             int((snap.files[r].get("deletionVector") or {}).get("cardinality") or 0)
@@ -4192,28 +4056,21 @@ def optimize_delta(
             )
         else:
             rows = rows.coalesce(n_out)
-        adds = _stage_mutation(
+        adds += _stage_mutation(
             rows, snap, path, version, data_change=False
         )
-        for rel in group:
-            rm = {
-                "path": rel,
-                "deletionTimestamp": now,
-                "dataChange": False,
-            }
-            if snap.files[rel].get("deletionVector"):
-                rm["deletionVector"] = snap.files[rel]["deletionVector"]
-            actions.append({"remove": rm})
-        actions.extend(adds)
-        files_before += len(group)
-        files_after += len(adds)
+        removed += group
         n_parts += 1
     if not n_parts:
         return {"version": latest, "files_before": 0, "files_after": 0,
                 "partitions_compacted": 0}
-    _commit_mutation(path, version, actions, "OPTIMIZE", snap=snap)
-    return {"version": version, "files_before": files_before,
-            "files_after": files_after, "partitions_compacted": n_parts}
+    _commit_mutation(
+        path, version, "OPTIMIZE", {"targetSize": target_file_bytes}, adds,
+        snap, removed=removed, staged=_action_files(path, adds),
+        data_change=False,
+    )
+    return {"version": version, "files_before": len(removed),
+            "files_after": len(adds), "partitions_compacted": n_parts}
 
 
 def _version_actions(path: str, version: int) -> list[dict]:
@@ -4687,16 +4544,8 @@ def enable_row_tracking_delta(spark: SparkSession, path: str) -> int:
         snap, {"rowTracking", "domainMetadata"}
     )
     conf["delta.enableRowTracking"] = "true"
-    now = int(time.time() * 1000)
     version = latest + 1
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "ENABLE ROW TRACKING",
-                "operationParameters": {},
-            }
-        },
         {"protocol": proto_action},
         {"metaData": {**snap.metadata, "configuration": conf}},
     ]
@@ -4711,15 +4560,13 @@ def enable_row_tracking_delta(spark: SparkSession, path: str) -> int:
             hwm = max(
                 hwm, int(a["baseRowId"]) + _add_num_records(path, a) - 1
             )
-    for rel in sorted(snap.files):
+    backfill = [
+        rel for rel in sorted(snap.files)
+        if snap.files[rel].get("baseRowId") is None  # else keeps its ids
+    ]
+    for rel in backfill:
         a = snap.files[rel]
-        if a.get("baseRowId") is not None:
-            continue  # keeps its issued ids
         n = _add_num_records(path, a)
-        rm = {"path": rel, "deletionTimestamp": now, "dataChange": False}
-        if a.get("deletionVector"):
-            rm["deletionVector"] = a["deletionVector"]
-        actions.append({"remove": rm})
         actions.append(
             {"add": {
                 **a,
@@ -4736,10 +4583,10 @@ def enable_row_tracking_delta(spark: SparkSession, path: str) -> int:
             "removed": False,
         }}
     )
-    _commit_mutation(
-        path, version, actions, "ENABLE ROW TRACKING", snap=snap
+    return _commit_mutation(
+        path, version, "ENABLE ROW TRACKING", {}, actions, snap,
+        removed=backfill, data_change=False,
     )
-    return version
 
 
 def read_delta_row_ids(spark: SparkSession, path: str) -> DataFrame:
@@ -4837,17 +4684,7 @@ def alter_cluster_by_delta(
             raise ValueError(
                 f"cannot cluster by partition column {c!r}"
             )
-    version = latest + 1
     actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "CLUSTER BY",
-                "operationParameters": {
-                    "clusterBy": json.dumps(columns)
-                },
-            }
-        },
         {"protocol": _writer7_protocol_action(
             snap, {"clustering", "domainMetadata"}
         )},
@@ -4859,8 +4696,10 @@ def alter_cluster_by_delta(
             "removed": False,
         }},
     ]
-    _commit_mutation(path, version, actions, "CLUSTER BY", snap=snap)
-    return version
+    return _commit_mutation(
+        path, latest + 1, "CLUSTER BY", {"clusterBy": json.dumps(columns)},
+        actions, snap,
+    )
 
 
 def _clustering_columns(snap: _Snapshot) -> list[str]:
@@ -4979,30 +4818,12 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
     snap_cur, latest = _snapshot(spark, path)
     _check_write_protocol(snap_cur, "overwrite")
     snap_old, _ = _snapshot(spark, path, version)
-    now = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now,
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-            }
-        },
-        {"metaData": snap_old.metadata},
-    ]
+    actions: list[dict] = [{"metaData": snap_old.metadata}]
 
     def key(a: dict) -> tuple:
         return (a["path"], _dv_uid(a.get("deletionVector")))
 
     old_keys = {key(a) for a in snap_old.files.values()}
-    for rel in sorted(snap_cur.files):
-        a = snap_cur.files[rel]
-        if key(a) in old_keys:
-            continue
-        rm = {"path": rel, "deletionTimestamp": now, "dataChange": True}
-        if a.get("deletionVector"):
-            rm["deletionVector"] = a["deletionVector"]
-        actions.append({"remove": rm})
     cur_keys = {key(a) for a in snap_cur.files.values()}
     for rel in sorted(snap_old.files):
         a = snap_old.files[rel]
@@ -5015,9 +4836,15 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
                 "was vacuumed (RESTORE needs the old files on disk)"
             )
         actions.append({"add": {**a, "dataChange": True}})
-    new_version = latest + 1
-    _commit_mutation(path, new_version, actions, "RESTORE", snap=snap_cur)
-    return new_version
+    # the re-added files are the target version's, not staged here
+    return _commit_mutation(
+        path, latest + 1, "RESTORE", {"version": version}, actions,
+        snap_cur,
+        removed=[
+            rel for rel in sorted(snap_cur.files)
+            if key(snap_cur.files[rel]) not in old_keys
+        ],
+    )
 
 
 def history_delta(spark: SparkSession, path: str) -> list[dict]:
@@ -5049,14 +4876,6 @@ def history_delta(spark: SparkSession, path: str) -> list[dict]:
     return out
 
 
-#: Minimum VACUUM retention (1 h) without ``force``: a zero-retention
-#: vacuum can delete a CONCURRENT writer's staged-but-uncommitted data
-#: files (they are not yet in any log and their mtime is now), breaking
-#: the commit that then references them — the same race delta-spark
-#: guards with retentionDurationCheck.
-_VACUUM_RETENTION_FLOOR_MS = 3600 * 1000
-
-
 def vacuum_delta(
     spark: SparkSession,
     path: str,
@@ -5068,15 +4887,17 @@ def vacuum_delta(
     mtime) is older than ``retention_ms`` — Delta's VACUUM semantics:
     reclaims tombstoned + orphaned storage, and time travel to
     versions needing the removed files stops working, which is the
-    documented contract.  Retention below 1 hour requires
-    ``force=True`` (see ``_VACUUM_RETENTION_FLOOR_MS``).  The
+    documented contract.  Retention below
+    :data:`.table_io.ORPHAN_AGE_FLOOR_MS` (1 h) requires ``force=True``:
+    a shorter one can delete a CONCURRENT writer's staged-but-
+    uncommitted data files (in no log yet, mtime now).  The
     candidate set is the log's remove actions plus a root listing for
     debris; both are bounded by files-per-table (the same planning
     bound as reads)."""
-    if retention_ms < _VACUUM_RETENTION_FLOOR_MS and not force:
+    if retention_ms < ORPHAN_AGE_FLOOR_MS and not force:
         raise ValueError(
             f"retention {retention_ms} ms is below the "
-            f"{_VACUUM_RETENTION_FLOOR_MS} ms safety floor (a short "
+            f"{ORPHAN_AGE_FLOOR_MS} ms safety floor (a short "
             "retention can race a concurrent writer's staged files); "
             "pass force=True only when no writer can be in flight"
         )

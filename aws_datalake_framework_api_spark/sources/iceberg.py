@@ -23,10 +23,12 @@ this module implements the PUBLIC Iceberg table spec
 - **commit**: put-if-absent on the next metadata version + atomic
   ``version-hint.text`` replace — the same optimistic protocol as the
   Delta connector's log commits.  Staging, footer stats, the
-  put-if-absent publish and ``CommitConflict`` are the format-neutral
-  steps in :mod:`.table_io`, shared with :mod:`.delta`; this module
-  keeps the Iceberg codec (``data_file`` records, binary bounds, Avro
-  manifests and metadata JSON).
+  put-if-absent publish, ``CommitConflict`` and the commit loop
+  (claim, rebase or refuse, unlink what a refused commit staged) are
+  the format-neutral steps in :mod:`.table_io`, shared with
+  :mod:`.delta`; this module keeps the Iceberg codec (``data_file``
+  records, binary bounds, Avro manifests and metadata JSON) and its
+  claim (:func:`_claim_metadata`) and append rebase steps.
 
 Equality deletes (content=2, the merge-on-read DELETE shape Flink
 CDC writes) are both READ (null-safe anti-join on the delete's
@@ -94,7 +96,9 @@ from .avro_codec import read_avro_file, write_avro_file
 from .landing import _scratch
 from .readers import empty_frame, load_table
 from .table_io import (
+    ORPHAN_AGE_FLOOR_MS,
     CommitConflict,
+    commit_loop,
     footer_min_max,
     put_if_absent,
     stage_parquet,
@@ -2416,11 +2420,14 @@ def _commit_snapshot(
     properties: dict | None = None,
     schemas_json: list[dict] | None = None,
     last_column_id: int | None = None,
+    staged=(),
+    reconcile=None,
 ) -> int:
-    """Commit one snapshot: write the manifest list, then claim the
-    next metadata version with ``os.link`` put-if-absent (the same
+    """Commit one snapshot through :func:`.table_io.commit_loop`: each
+    claim writes a manifest list, then claims the version after the
+    one ``base_meta`` was loaded at with put-if-absent (the same
     optimistic-concurrency shape as the Delta connector's log) and
-    atomically repoint ``version-hint.text``.  ``properties`` seeds
+    atomically repoints ``version-hint.text``.  ``properties`` seeds
     the table properties on a FIRST commit (ignored otherwise).
     ``schemas_json`` (first commit only) seeds a FULL schema history
     — each entry carries its ``schema-id``, the LAST is current; the
@@ -2428,135 +2435,172 @@ def _commit_snapshot(
     name era schema 0 under the logical current schema 1, so id-less
     referenced files resolve through the name→id history map.
     ``last_column_id`` overrides the top-level max when the history
-    allocated nested/structural ids past it."""
-    now = int(time.time() * 1000)
+    allocated nested/structural ids past it.
+
+    A rival claiming the version first raises :class:`CommitConflict`
+    and unlinks the new manifests, the manifest list and the files of
+    ``staged`` (the data_file records of the data and delete files the
+    caller wrote for this snapshot, never of files it only
+    references).  A blind append passes
+    ``reconcile`` instead: given the winner's metadata it raises
+    :class:`CommitConflict` when the winner invalidated the write and
+    otherwise returns the manifests to carry onto it, and the snapshot
+    is claimed again on top of the winner."""
     os.makedirs(_meta_dir(path), exist_ok=True)
-    if base_meta is None:
-        if schema_json is None:
-            raise ValueError("first commit needs a schema")
-        fields = [
-            {
-                "name": pf["name"],
-                "transform": pf["transform"],
-                "source-id": pf["source-id"],
-                "field-id": 1000 + i,
+    base = [base_meta, carry_manifests]
+
+    def claim() -> int:
+        base_meta, carry_manifests = base
+        now = int(time.time() * 1000)
+        if base_meta is None:
+            if schema_json is None:
+                raise ValueError("first commit needs a schema")
+            fields = [
+                {
+                    "name": pf["name"],
+                    "transform": pf["transform"],
+                    "source-id": pf["source-id"],
+                    "field-id": 1000 + i,
+                }
+                for i, pf in enumerate(part_spec or [])
+            ]
+            meta = {
+                "format-version": 2,
+                "table-uuid": str(uuid.uuid4()),
+                "location": path,
+                "last-sequence-number": 0,
+                "last-updated-ms": now,
+                "last-column-id": (
+                    last_column_id
+                    if last_column_id is not None
+                    else max(
+                        [int(f["id"]) for f in schema_json["fields"]] or [0]
+                    )
+                ),
+                "schemas": (
+                    schemas_json
+                    if schemas_json is not None
+                    else [
+                        {"schema-id": 0, "type": "struct",
+                         "fields": schema_json["fields"]}
+                    ]
+                ),
+                "current-schema-id": (
+                    int(schemas_json[-1]["schema-id"])
+                    if schemas_json is not None
+                    else 0
+                ),
+                "partition-specs": [{"spec-id": 0, "fields": fields}],
+                "default-spec-id": 0,
+                "last-partition-id": 999 + len(fields),
+                "sort-orders": [{"order-id": 0, "fields": []}],
+                "default-sort-order-id": 0,
+                "properties": dict(properties or {}),
+                "snapshots": [],
+                "snapshot-log": [],
+                "metadata-log": [],
             }
-            for i, pf in enumerate(part_spec or [])
-        ]
-        meta = {
-            "format-version": 2,
-            "table-uuid": str(uuid.uuid4()),
-            "location": path,
-            "last-sequence-number": 0,
-            "last-updated-ms": now,
-            "last-column-id": (
-                last_column_id
-                if last_column_id is not None
-                else max(
-                    [int(f["id"]) for f in schema_json["fields"]] or [0]
-                )
-            ),
-            "schemas": (
-                schemas_json
-                if schemas_json is not None
-                else [
-                    {"schema-id": 0, "type": "struct",
-                     "fields": schema_json["fields"]}
-                ]
-            ),
-            "current-schema-id": (
-                int(schemas_json[-1]["schema-id"])
-                if schemas_json is not None
-                else 0
-            ),
-            "partition-specs": [{"spec-id": 0, "fields": fields}],
-            "default-spec-id": 0,
-            "last-partition-id": 999 + len(fields),
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "default-sort-order-id": 0,
-            "properties": dict(properties or {}),
-            "snapshots": [],
-            "snapshot-log": [],
-            "metadata-log": [],
+            version = 1
+        else:
+            meta = json.loads(json.dumps(base_meta))  # deep copy
+            # claim exactly base+1: if someone committed after our
+            # load, the claim hits their file and loses — never rebase
+            # a write onto state it did not read
+            version = int(meta.pop("__file_version__", 0)) or (
+                max(_metadata_versions(path))
+            )
+            version += 1
+        seq = int(meta.get("last-sequence-number", 0)) + 1
+        sid = uuid.uuid4().int >> 76  # positive, fits a long
+        for m in new_manifests:
+            m["sequence_number"] = seq
+            m["min_sequence_number"] = seq
+            m["added_snapshot_id"] = sid
+        ml_name = os.path.join(
+            _meta_dir(path), f"snap-{sid}-1-{uuid.uuid4().hex}.avro"
+        )
+        write_avro_file(
+            ml_name,
+            _MANIFEST_LIST_SCHEMA,
+            new_manifests + carry_manifests,
+            metadata={"format-version": "2"},
+        )
+        snap = {
+            "snapshot-id": sid,
+            "sequence-number": seq,
+            "timestamp-ms": now,
+            "summary": {"operation": operation},
+            "manifest-list": ml_name,
+            "schema-id": meta.get("current-schema-id", 0),
         }
-        version = 1
-    else:
-        meta = json.loads(json.dumps(base_meta))  # deep copy
-        # claim exactly base+1: if someone committed after our load,
-        # the os.link below hits their file and raises — never rebase
-        # a write onto state it did not read
-        version = int(meta.pop("__file_version__", 0)) or (
-            max(_metadata_versions(path))
-        )
-        version += 1
-    seq = int(meta.get("last-sequence-number", 0)) + 1
-    sid = uuid.uuid4().int >> 76  # positive, fits a long
-    for m in new_manifests:
-        m["sequence_number"] = seq
-        m["min_sequence_number"] = seq
-        m["added_snapshot_id"] = sid
-    ml_name = os.path.join(
-        _meta_dir(path), f"snap-{sid}-1-{uuid.uuid4().hex}.avro"
+        if branch is not None:
+            # branch commit: parent is the BRANCH head (fork from main
+            # on first write), the ref moves, main's
+            # current-snapshot-id and snapshot-log stay untouched —
+            # readers of the table see nothing until
+            # fast_forward_iceberg publishes the branch (the
+            # write-audit-publish pattern)
+            refs = dict(meta.get("refs") or {})
+            prev = refs.get(branch)
+            parent = (
+                int(prev["snapshot-id"]) if prev
+                else meta.get("current-snapshot-id")
+            )
+            if parent not in (None, -1):
+                snap["parent-snapshot-id"] = parent
+            meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
+            refs[branch] = {"snapshot-id": sid, "type": "branch"}
+            meta["refs"] = refs
+        else:
+            if meta.get("current-snapshot-id") not in (None, -1):
+                snap["parent-snapshot-id"] = meta["current-snapshot-id"]
+            meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
+            meta["current-snapshot-id"] = sid
+            meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
+                {"timestamp-ms": now, "snapshot-id": sid}
+            ]
+        meta["last-sequence-number"] = seq
+        meta["last-updated-ms"] = now
+        try:
+            _claim_metadata(path, meta, version)
+        except FileExistsError:
+            os.unlink(ml_name)  # this attempt's list; a rebase writes anew
+            raise
+        return version
+
+    def rebase() -> None:
+        try:
+            fresh = _load_metadata(path)
+        except Exception:  # noqa: BLE001 — the winner is unreadable
+            fresh = None
+        if fresh is None or int(fresh.get("__file_version__") or 0) <= int(
+            base[0].get("__file_version__") or 0
+        ):
+            # the next slot is claimed by something that is not
+            # readable table metadata (junk/partial claim) — there is
+            # no winner to rebase onto
+            raise CommitConflict(
+                f"commit conflict at {path}: the metadata version this "
+                "commit lost is not readable table metadata — repair the "
+                "table and retry"
+            )
+        base[:] = [fresh, reconcile(fresh)]
+
+    return commit_loop(
+        claim,
+        [m["manifest_path"] for m in new_manifests]
+        + [f["file_path"] for f in staged],
+        rebase if reconcile is not None else None,
     )
-    write_avro_file(
-        ml_name,
-        _MANIFEST_LIST_SCHEMA,
-        new_manifests + carry_manifests,
-        metadata={"format-version": "2"},
-    )
-    snap = {
-        "snapshot-id": sid,
-        "sequence-number": seq,
-        "timestamp-ms": now,
-        "summary": {"operation": operation},
-        "manifest-list": ml_name,
-        "schema-id": meta.get("current-schema-id", 0),
-    }
-    if branch is not None:
-        # branch commit: parent is the BRANCH head (fork from main on
-        # first write), the ref moves, main's current-snapshot-id and
-        # snapshot-log stay untouched — readers of the table see
-        # nothing until fast_forward_iceberg publishes the branch
-        # (the write-audit-publish pattern)
-        refs = dict(meta.get("refs") or {})
-        prev = refs.get(branch)
-        parent = (
-            int(prev["snapshot-id"]) if prev
-            else meta.get("current-snapshot-id")
-        )
-        if parent not in (None, -1):
-            snap["parent-snapshot-id"] = parent
-        meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
-        refs[branch] = {"snapshot-id": sid, "type": "branch"}
-        meta["refs"] = refs
-    else:
-        if meta.get("current-snapshot-id") not in (None, -1):
-            snap["parent-snapshot-id"] = meta["current-snapshot-id"]
-        meta["snapshots"] = list(meta.get("snapshots") or []) + [snap]
-        meta["current-snapshot-id"] = sid
-        meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
-            {"timestamp-ms": now, "snapshot-id": sid}
-        ]
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now
-    _claim_metadata(path, meta, version)
-    return version
 
 
 def _claim_metadata(path: str, meta: dict, version: int) -> None:
     """Claim exactly metadata version N with
-    :func:`.table_io.put_if_absent` (concurrent committers conflict
-    loudly, never rebase silently), then atomically repoint
+    :func:`.table_io.put_if_absent` (a rival's claim raises
+    ``FileExistsError``), then atomically repoint
     ``version-hint.text``."""
     final = os.path.join(_meta_dir(path), f"v{version}.metadata.json")
-    try:
-        put_if_absent(final, json.dumps(meta))
-    except FileExistsError as e:
-        raise CommitConflict(
-            f"iceberg commit conflict at version {version} ({path}) — "
-            "a concurrent writer won; re-read the table and retry the "
-            "operation"
-        ) from e
+    put_if_absent(final, json.dumps(meta))
     hint = os.path.join(_meta_dir(path), "version-hint.text")
     htmp = hint + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(htmp, "w") as fh:
@@ -2569,9 +2613,10 @@ def _commit_metadata(
 ) -> int:
     """The metadata-only commit tail: stamp ``last-updated-ms``, claim
     the version after the one ``meta`` was loaded at (its
-    ``__file_version__``) and return it.  ``current`` also moves
-    ``current-snapshot-id`` there and logs the move in
-    ``snapshot-log`` at the same timestamp."""
+    ``__file_version__``) through :func:`.table_io.commit_loop` and
+    return it; a rival's claim raises :class:`CommitConflict`.
+    ``current`` also moves ``current-snapshot-id`` there and logs the
+    move in ``snapshot-log`` at the same timestamp."""
     now = int(time.time() * 1000)
     meta["last-updated-ms"] = now
     if current is not None:
@@ -2580,8 +2625,12 @@ def _commit_metadata(
             {"timestamp-ms": now, "snapshot-id": current}
         ]
     version = int(meta.pop("__file_version__")) + 1
-    _claim_metadata(path, meta, version)
-    return version
+
+    def claim() -> int:
+        _claim_metadata(path, meta, version)
+        return version
+
+    return commit_loop(claim, ())
 
 
 def evolve_iceberg(
@@ -2931,6 +2980,14 @@ def write_iceberg(
         raise FileExistsError(f"iceberg table already exists at {path}")
     if branch is not None and not exists:
         raise ValueError("cannot create a table on a branch")
+
+    def head_manifests(meta: dict) -> list[dict]:
+        # an append extends the BRANCH head, not main
+        ref = (meta.get("refs") or {}).get(branch) if branch else None
+        return _carry_manifests(
+            path, meta, int(ref["snapshot-id"]) if ref else None
+        )
+
     if not exists:
         ids = iter(range(1, 10_000))
         ice = _spark_to_ice(df.schema, lambda: next(ids))
@@ -2958,16 +3015,7 @@ def write_iceberg(
                 f"{[(p['name'], p['transform']) for p in part_spec]}, "
                 f"write passed {partition_by}"
             )
-        if mode == "overwrite":
-            carry = []
-        elif branch is not None and branch in (base_meta.get("refs") or {}):
-            # append extends the BRANCH head, not main
-            carry = _carry_manifests(
-                path, base_meta,
-                int(base_meta["refs"][branch]["snapshot-id"]),
-            )
-        else:
-            carry = _carry_manifests(path, base_meta)
+        carry = [] if mode == "overwrite" else head_manifests(base_meta)
     os.makedirs(path, exist_ok=True)
     part_fields = part_spec
     files = _stage_data_files(df, path, part_spec, schema_json)
@@ -2991,68 +3039,40 @@ def write_iceberg(
         "append" if mode == "append" else
         ("append" if not exists else "overwrite")
     )
-    # Optimistic-concurrency commit (VERDICT r6 item #3): an APPEND
-    # read nothing, so a lost version race is reconcilable — reload the
-    # metadata, refuse if the schema or partition spec moved (the
-    # write's validation is stale then), recompute the carried
-    # manifests against the winner's snapshot set, re-commit.  The
-    # staged data manifest file is version-agnostic (sequence numbers
-    # inherit at commit), so only the manifest LIST is rewritten per
-    # attempt; a retried attempt's list becomes an expire-reclaimable
-    # orphan.  Overwrites and mutations surface CommitConflict
-    # deterministically instead.
-    if mode != "append" or base_meta is None:
-        return _commit_snapshot(
-            path, base_meta, [manifest], carry, operation,
-            schema_json=schema_json, part_spec=part_spec, branch=branch,
-        )
-    last_seen = int(base_meta.get("__file_version__") or 0)
-    for _attempt in range(5):
-        try:
-            return _commit_snapshot(
-                path, base_meta, [manifest], carry, "append",
-                schema_json=schema_json, part_spec=part_spec, branch=branch,
+
+    def reconcile(fresh: dict) -> list[dict]:
+        # an APPEND read nothing, so a lost race is reconcilable unless
+        # the winner moved the schema or the partition spec (the
+        # write's validation is stale then): carry the winner's
+        # manifests.  The staged data manifest is version-agnostic
+        # (sequence numbers inherit at commit).
+        fresh_schema = _current_schema(fresh)
+        if json.dumps(fresh_schema["fields"], sort_keys=True) != (
+            json.dumps(schema_json["fields"], sort_keys=True)
+        ):
+            raise CommitConflict(
+                "concurrent schema evolution while this append was "
+                "in flight — re-validate the write and retry"
             )
-        except CommitConflict as conflict:
-            try:
-                fresh = _load_metadata(path)
-                fresh_schema = _current_schema(fresh)
-            except Exception:  # noqa: BLE001 — winner unreadable
-                raise conflict from None  # cannot reconcile, surface it
-            fresh_v = int(fresh.get("__file_version__") or 0)
-            if fresh_v <= last_seen:
-                # the next slot is claimed by something that is not
-                # readable table metadata (junk/partial claim) — there
-                # is no winner to rebase onto
-                raise conflict from None
-            last_seen = fresh_v
-            if json.dumps(fresh_schema["fields"], sort_keys=True) != (
-                json.dumps(schema_json["fields"], sort_keys=True)
-            ):
-                raise CommitConflict(
-                    "concurrent schema evolution while this append was "
-                    "in flight — re-validate the write and retry"
-                ) from None
-            fresh_spec = _spec_from_meta(fresh, fresh_schema)
-            if [(p["name"], p["transform"]) for p in fresh_spec] != [
-                (p["name"], p["transform"]) for p in part_spec
-            ]:
-                raise CommitConflict(
-                    "concurrent partition-spec evolution while this "
-                    "append was in flight — re-validate the write and "
-                    "retry"
-                ) from None
-            if branch is not None and branch in (fresh.get("refs") or {}):
-                carry = _carry_manifests(
-                    path, fresh,
-                    int(fresh["refs"][branch]["snapshot-id"]),
-                )
-            else:
-                carry = _carry_manifests(path, fresh)
-            base_meta = fresh
-    raise CommitConflict(
-        "append lost the commit race 5 times — the table is under "
-        "write contention this writer cannot keep up with"
+        fresh_spec = _spec_from_meta(fresh, fresh_schema)
+        if [(p["name"], p["transform"]) for p in fresh_spec] != [
+            (p["name"], p["transform"]) for p in part_spec
+        ]:
+            raise CommitConflict(
+                "concurrent partition-spec evolution while this "
+                "append was in flight — re-validate the write and "
+                "retry"
+            )
+        return head_manifests(fresh)
+
+    return _commit_snapshot(
+        path, base_meta, [manifest], carry, operation,
+        schema_json=schema_json, part_spec=part_spec, branch=branch,
+        staged=files,
+        reconcile=(
+            reconcile if mode == "append" and base_meta is not None
+            else None
+        ),
     )
 
 
@@ -3180,7 +3200,9 @@ def delete_iceberg_rows(spark: SparkSession, path: str, condition) -> int:
         return max(_metadata_versions(path))
     manifest = _delete_manifest(path, del_files, schema_json)
     carry = _carry_manifests(path, meta)
-    return _commit_snapshot(path, meta, [manifest], carry, "delete")
+    return _commit_snapshot(
+        path, meta, [manifest], carry, "delete", staged=del_files
+    )
 
 
 def delete_by_key_iceberg(
@@ -3329,7 +3351,9 @@ def delete_by_key_iceberg(
     op = "overwrite" if del_files and staged else (
         "delete" if del_files else "append"
     )
-    return _commit_snapshot(path, meta, new_manifests, carry, op)
+    return _commit_snapshot(
+        path, meta, new_manifests, carry, op, staged=del_files + staged
+    )
 
 
 def upsert_iceberg(
@@ -3364,6 +3388,7 @@ def upsert_iceberg(
     part_spec = _spec_from_meta(meta, schema_json)
     part_fields = part_spec
     new_manifests: list[dict] = []
+    del_files: list[dict] = []
     if data:
         files = sorted({r["path"] for r in data})
         res = _resolution(meta)
@@ -3408,7 +3433,10 @@ def upsert_iceberg(
         )
     )
     carry = _carry_manifests(path, meta)
-    return _commit_snapshot(path, meta, new_manifests, carry, "overwrite")
+    return _commit_snapshot(
+        path, meta, new_manifests, carry, "overwrite",
+        staged=del_files + staged,
+    )
 
 
 # ------------------------------------------------------------------ query
@@ -4275,7 +4303,9 @@ def rewrite_data_files(
     carry = [
         m for m in _carry_manifests(path, meta) if int(m.get("content") or 0) == 1
     ]
-    v = _commit_snapshot(path, meta, new_manifests, carry, "replace")
+    v = _commit_snapshot(
+        path, meta, new_manifests, carry, "replace", staged=staged
+    )
     return {"version": v, "files_before": len(compact),
             "files_after": len(staged), "partitions_compacted": n_parts}
 
@@ -4468,7 +4498,9 @@ def rewrite_position_delete_files(spark: SparkSession, path: str) -> dict:
         m for m in _carry_manifests(path, meta)
         if int(m.get("content") or 0) == 0
     ]
-    v = _commit_snapshot(path, meta, new_manifests, carry, "replace")
+    v = _commit_snapshot(
+        path, meta, new_manifests, carry, "replace", staged=del_files
+    )
     return {
         "version": v,
         "delete_files_before": len(deletes),
@@ -4702,6 +4734,7 @@ def merge_iceberg(
                 )
             return {"version": v, **stats}
         new_manifests: list[dict] = []
+        del_files: list[dict] = []
         if stats["updated"] or stats["deleted"]:
             # position deletes name files by FULL path; the tags carry
             # basenames — resolve through a broadcast map bounded by
@@ -4750,7 +4783,10 @@ def merge_iceberg(
             props = dict(meta.get("properties") or {})
             props[f"txn.{txn[0]}"] = str(int(txn[1]))
             meta["properties"] = props
-        v = _commit_snapshot(path, meta, new_manifests, carry, "overwrite")
+        v = _commit_snapshot(
+            path, meta, new_manifests, carry, "overwrite",
+            staged=del_files + staged,
+        )
         return {"version": v, **stats}
     # matched-hit and by-source-hit discovery UNIONED into one collect
     # (r12, item #4 — same shape as merge_delta's)
@@ -4843,21 +4879,30 @@ def merge_iceberg(
         props = dict(meta.get("properties") or {})
         props[f"txn.{txn[0]}"] = str(int(txn[1]))
         meta["properties"] = props
-    v = _commit_snapshot(path, meta, new_manifests, carry, "overwrite")
+    v = _commit_snapshot(
+        path, meta, new_manifests, carry, "overwrite", staged=staged
+    )
     return {"version": v, **stats}
 
 
 def expire_snapshots(
     spark: SparkSession, path: str, keep_last: int = 1
 ) -> dict:
-    """Snapshot expiration + orphan reclamation (the iceberg-spark
-    ``expire_snapshots`` action): drop all but the last ``keep_last``
-    snapshots from the metadata (the current one always survives),
-    then physically delete every data/delete file and manifest no
-    REMAINING snapshot references.  Time travel to expired snapshots
-    stops working — the documented contract; readers of live state
-    are unaffected because deletion is reference-driven, never
-    age-driven."""
+    """Snapshot expiration (the iceberg-spark ``expireSnapshots``
+    action): drop all but the last ``keep_last`` snapshots from the
+    metadata (the current one and every named ref's survive), then
+    physically delete the manifest lists, manifests and data/delete
+    files under ``metadata/`` and ``data/`` that the dropped snapshots
+    reference and no surviving snapshot does.  Time travel to expired
+    snapshots stops working — the documented contract; readers of
+    live state are unaffected because deletion is reference-driven.
+
+    A file that no snapshot names is a concurrent writer's staged
+    file or a crashed writer's debris, not a dropped snapshot's: it is
+    deleted only once it is older than
+    :data:`.table_io.ORPHAN_AGE_FLOOR_MS`, so a commit in flight keeps
+    what it staged (iceberg-spark leaves these to
+    ``deleteOrphanFiles(olderThan)``)."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     meta = _load_metadata(path)
@@ -4873,28 +4918,31 @@ def expire_snapshots(
         return {"version": max(_metadata_versions(path)), "expired": 0,
                 "files_deleted": 0}
     location = meta.get("location") or path
-    # referenced set across SURVIVING snapshots
-    live_files: set[str] = set()
-    live_manifests: set[str] = set()
-    live_mls: set[str] = set()
-    for s in snaps:
-        if s["snapshot-id"] not in keep:
-            continue
-        ml = _resolve(s["manifest-list"], path, location)
-        live_mls.add(os.path.abspath(ml))
-        _, manifests = read_avro_file(ml)
-        for mf in manifests:
-            mp = _resolve(mf["manifest_path"], path, location)
-            live_manifests.add(os.path.abspath(mp))
-            _, entries = read_avro_file(mp)
-            for e in entries:
-                if int(e.get("status") or 0) == 2:
-                    continue
-                live_files.add(
+    entries_of: dict[str, list[dict]] = {}
+
+    def named(snapshots: list[dict], live: bool) -> set[str]:
+        # manifest lists, manifests and files the snapshots reference;
+        # ``live`` leaves out the files their manifests mark DELETED
+        out: set[str] = set()
+        for s in snapshots:
+            ml = _resolve(s["manifest-list"], path, location)
+            out.add(os.path.abspath(ml))
+            for mf in read_avro_file(ml)[1]:
+                mp = _resolve(mf["manifest_path"], path, location)
+                out.add(os.path.abspath(mp))
+                if mp not in entries_of:
+                    entries_of[mp] = read_avro_file(mp)[1]
+                out |= {
                     os.path.abspath(
                         _resolve(e["data_file"]["file_path"], path, location)
                     )
-                )
+                    for e in entries_of[mp]
+                    if not (live and int(e.get("status") or 0) == 2)
+                }
+        return out
+
+    live = named([s for s in snaps if s["snapshot-id"] in keep], True)
+    was_named = named(dropped, False)
     # new metadata version with the surviving snapshots only
     meta2 = json.loads(json.dumps(meta))
     meta2["snapshots"] = [s for s in snaps if s["snapshot-id"] in keep]
@@ -4903,22 +4951,27 @@ def expire_snapshots(
         e for e in meta2.get("snapshot-log") or [] if e["snapshot-id"] in keep_ids
     ]
     version = _commit_metadata(path, meta2)
-    # reclaim: files under data/ and avro under metadata/ that no
-    # surviving snapshot references
+    cutoff = time.time() - ORPHAN_AGE_FLOOR_MS / 1000
+    candidates = [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(os.path.join(path, "data"))
+        for f in files
+        if f.endswith(".parquet")
+    ] + [
+        os.path.join(_meta_dir(path), f)
+        for f in os.listdir(_meta_dir(path))
+        if f.endswith(".avro")
+    ]
     n_del = 0
-    ddir = os.path.join(path, "data")
-    if os.path.isdir(ddir):
-        for root, _dirs, files in os.walk(ddir):
-            for f in files:
-                full = os.path.abspath(os.path.join(root, f))
-                if f.endswith(".parquet") and full not in live_files:
-                    os.unlink(full)
-                    n_del += 1
-    for f in os.listdir(_meta_dir(path)):
-        full = os.path.abspath(os.path.join(_meta_dir(path), f))
-        if f.endswith(".avro") and full not in live_manifests | live_mls:
-            os.unlink(full)
-            n_del += 1
+    for full in map(os.path.abspath, candidates):
+        if full in live:
+            continue
+        try:
+            if full in was_named or os.path.getmtime(full) < cutoff:
+                os.unlink(full)
+                n_del += 1
+        except FileNotFoundError:
+            pass  # a writer that lost its commit unlinked what it staged
     return {"version": version, "expired": len(dropped), "files_deleted": n_del}
 
 
@@ -5795,6 +5848,7 @@ def _delta_commit_to_iceberg(
             dst, entries, part_spec, 0, "data", schema_json, spec_id=0
         )
     ]
+    del_files: list[dict] = []
     if dv_map:
         # materialize the deletion vectors as position-delete files in
         # the same v1 commit: decode executor-side from the shipped
@@ -5838,6 +5892,9 @@ def _delta_commit_to_iceberg(
         ),
         schemas_json=schemas_json,
         last_column_id=last_column_id,
+        # the data files are the Delta table's; only the position
+        # deletes are this call's
+        staged=del_files,
     )
 
 

@@ -1,13 +1,22 @@
-"""Format-neutral file I/O under the Delta and Iceberg connectors.
+"""Format-neutral file I/O and the one commit loop under the Delta and
+Iceberg connectors.
 
 Both formats publish data the same way: Spark writes parquet into a
 scratch directory, the part files move under the table's own names,
 their footers give row counts and column bounds, and a commit file is
 claimed with put-if-absent.  This module holds one copy of each step
-(:func:`stage_parquet`, :func:`footer_min_max`, :func:`put_if_absent`)
-and the one :class:`CommitConflict`; :mod:`.delta` and :mod:`.iceberg`
-keep only their codecs (Delta ``add``/``cdc`` actions with JSON stats,
-Iceberg ``data_file`` records with binary bounds).
+(:func:`stage_parquet`, :func:`footer_min_max`, :func:`put_if_absent`),
+the one :class:`CommitConflict`, and the one commit loop,
+:func:`commit_loop`: claim, rebase or refuse, and unlink what a
+refused commit staged.  :mod:`.delta` and :mod:`.iceberg` keep only
+their codecs (Delta ``add``/``cdc`` actions with JSON stats, Iceberg
+``data_file`` records with binary bounds) and their claim and rebase
+steps.
+
+A file that no commit names is either staged by a writer still in
+flight or left by one that crashed.  :data:`ORPHAN_AGE_FLOOR_MS` is
+the one age below which maintenance (``vacuum_delta``,
+``expire_snapshots``) never reclaims such a file.
 
 ``os.link`` assumes a filesystem with atomic link semantics (POSIX,
 NFSv4, HDFS-mounted).  On an object store the same guarantee needs an
@@ -18,11 +27,12 @@ nothing else changes.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import urllib.parse
 import uuid
-from typing import Callable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
@@ -35,8 +45,75 @@ class CommitConflict(RuntimeError):
     ``write_delta(read_version=)``, Iceberg upsert/merge/delete/
     compaction/evolution — delta-spark's winning-commit reconciliation
     likewise fails these and asks the caller to re-run.  Blind appends
-    (``write_delta``, ``write_iceberg``) auto-rebase onto the winner
-    instead (see their retry loops)."""
+    (``write_delta``, ``write_iceberg``) pass :func:`commit_loop` a
+    rebase step and land on top of the winner instead, unless the
+    winner invalidated them or they lose :data:`COMMIT_ATTEMPTS`
+    times."""
+
+
+#: Claims one commit makes before it gives up (the first claim plus
+#: the rebased ones); ``Catalog._retry`` re-runs a whole
+#: read-check-commit as often.
+COMMIT_ATTEMPTS = 5
+
+#: Minimum age (1 h) of a file that no commit names before
+#: maintenance may reclaim it: a younger one may be a concurrent
+#: writer's staged file, which its commit is about to name — the race
+#: delta-spark guards with retentionDurationCheck and iceberg-spark
+#: with ``deleteOrphanFiles(olderThan)``.
+ORPHAN_AGE_FLOOR_MS = 3600 * 1000
+
+
+def commit_loop(
+    claim: Callable[[], int],
+    staged: Iterable[str],
+    rebase: Callable[[], int | None] | None = None,
+) -> int:
+    """Publish one commit and return its version.  ``claim`` writes
+    the commit file with :func:`put_if_absent` and returns the version
+    it claimed; it raises ``FileExistsError`` when a rival claimed
+    that version first.  ``staged`` lists the files this call wrote
+    for the commit and nothing else: a file the commit only references
+    is not the call's to delete.
+
+    Without ``rebase`` a lost claim raises :class:`CommitConflict`.
+    A blind append passes ``rebase``, which re-reads the winners: it
+    raises when they invalidate the write, returns the version of a
+    winner that already applied it (txn idempotence), or returns None
+    and the loop claims again, at most :data:`COMMIT_ATTEMPTS` times.
+    Every exit that publishes nothing (a conflict, an applied txn, the
+    attempts spent) unlinks ``staged``.  Any other error from
+    ``claim`` leaves them: the claim may have published."""
+    try:
+        for _attempt in range(COMMIT_ATTEMPTS):
+            try:
+                return claim()
+            except FileExistsError as e:
+                if rebase is None:
+                    name = os.path.basename(e.filename2 or e.filename or "")
+                    raise CommitConflict(
+                        f"commit conflict: a concurrent writer claimed "
+                        f"{name or 'this version'} first, so this operation "
+                        "read a stale snapshot; re-run it against the "
+                        "current table state (a retry re-reads it)"
+                    ) from e
+            won = rebase()
+            if won is not None:
+                _unlink(staged)
+                return won
+        raise CommitConflict(
+            f"lost the commit race {COMMIT_ATTEMPTS} times — the table is "
+            "under write contention this writer cannot keep up with; retry"
+        )
+    except (CommitConflict, FileExistsError):
+        _unlink(staged)
+        raise
+
+
+def _unlink(paths: Iterable[str]) -> None:
+    for p in paths:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(p)
 
 
 def stage_parquet(
@@ -125,11 +202,12 @@ def put_if_absent(final: str, text: str) -> None:
     write a temp file beside it and ``os.link`` it to the final name.
     The link fails with ``FileExistsError`` if the name is taken, so
     concurrent writers of one version get exactly one winner; readers
-    never see a partial file."""
+    never see a partial file, and the temp file goes on every exit,
+    a failed write (a full disk) included."""
     tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as fh:
-        fh.write(text)
     try:
+        with open(tmp, "w") as fh:
+            fh.write(text)
         os.link(tmp, final)
     finally:
-        os.unlink(tmp)
+        _unlink([tmp])

@@ -1,9 +1,13 @@
 """The format-neutral write layer under both connectors
 (``sources/table_io.py``): a failed Spark write leaves no staging
 directory and commits nothing, both connectors raise one
-``CommitConflict``, and the driver-memory default fits the host."""
+``CommitConflict``, a commit a rival refused leaves no file that no
+version names, maintenance spares a commit in flight, and the
+driver-memory default fits the host."""
 
+import errno
 import os
+import urllib.parse
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +15,8 @@ from pyspark.sql import functions as F
 from aws_datalake_framework_api_spark import session
 from aws_datalake_framework_api_spark.sources import delta as D
 from aws_datalake_framework_api_spark.sources import iceberg as I
+from aws_datalake_framework_api_spark.sources import table_io
+from aws_datalake_framework_api_spark.sources.avro_codec import read_avro_file
 
 
 def _df(spark, rows):
@@ -71,3 +77,230 @@ def test_driver_memory_is_half_the_host_with_a_floor(monkeypatch):
     assert session.driver_memory() == "1024m"
     monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
     assert session.driver_memory() == "3g"
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _delta_unnamed(path):
+    """Files in the table that no version of its log names."""
+    named = set()
+    for v in D._list_versions(path):
+        for a in D._version_actions(path, v):
+            for kind in ("add", "remove", "cdc"):
+                if kind not in a:
+                    continue
+                named.add(os.path.join(
+                    path, urllib.parse.unquote(a[kind]["path"])
+                ))
+                dv = a[kind].get("deletionVector")
+                if dv and dv.get("storageType") == "u":
+                    named.add(D._dv_file_path(path, dv))
+    return {
+        os.path.join(r, f)
+        for r, _dirs, files in os.walk(path)
+        if D._LOG not in r.split(os.sep)
+        for f in files
+    } - named
+
+
+def _iceberg_unnamed(path):
+    """Data, delete and Avro files that no snapshot names."""
+    meta = I._load_metadata(path)
+    loc = meta.get("location") or path
+    named = set()
+    for s in meta.get("snapshots") or []:
+        ml = I._resolve(s["manifest-list"], path, loc)
+        named.add(os.path.abspath(ml))
+        for mf in read_avro_file(ml)[1]:
+            mp = I._resolve(mf["manifest_path"], path, loc)
+            named.add(os.path.abspath(mp))
+            for e in read_avro_file(mp)[1]:
+                named.add(os.path.abspath(
+                    I._resolve(e["data_file"]["file_path"], path, loc)
+                ))
+    return {
+        os.path.abspath(os.path.join(r, f))
+        for r, _dirs, files in os.walk(path)
+        for f in files
+        if not f.endswith(".metadata.json") and f != "version-hint.text"
+    } - named
+
+
+def _race(monkeypatch, mod, seam, rival):
+    """Patch the claim seam so that a rival commits first, once."""
+    orig = getattr(mod, seam)
+    raced = []
+
+    def racing(*args):
+        if not raced:
+            raced.append(True)
+            rival(args[0])
+        return orig(*args)
+
+    monkeypatch.setattr(mod, seam, racing)
+
+
+def _cdf_table(spark, path):
+    D.write_delta(
+        _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]).coalesce(1), path,
+        mode="error",
+    )
+    D.alter_table_properties_delta(
+        spark, path, {"delta.enableChangeDataFeed": "true"}
+    )
+
+
+_REFUSED = {
+    "update_delta": lambda spark, p: D.update_delta(
+        spark, p, F.col("k") == 1, {"v": 10.0}
+    ),
+    "delete_where_delta": lambda spark, p: D.delete_where_delta(
+        spark, p, F.col("k") == 1
+    ),
+    "merge_delta": lambda spark, p: D.merge_delta(
+        spark, p, _df(spark, [(1, "a", 10.0), (5, "e", 5.0)]), on=["k"]
+    ),
+    "write_delta_overwrite": lambda spark, p: D.write_delta(
+        _df(spark, [(7, "q", 7.0)]), p, mode="overwrite"
+    ),
+    "merge_iceberg": lambda spark, p: I.merge_iceberg(
+        spark, p, _df(spark, [(1, "a", 10.0), (5, "e", 5.0)]), on=["k"]
+    ),
+    "delete_by_key_iceberg": lambda spark, p: I.delete_by_key_iceberg(
+        spark, p, spark.createDataFrame([(1,)], "k int")
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REFUSED))
+def test_refused_commit_leaves_no_unnamed_file(spark, tmp_path, monkeypatch, op):
+    """A commit a rival claimed first raises ``CommitConflict``, leaves
+    the rows as the rival left them, and unlinks everything it staged:
+    no file is left that no version or snapshot names."""
+    path = str(tmp_path / "t")
+    rival_row = (9, "z", 9.0)
+    if op.endswith("_iceberg"):
+        I.write_iceberg(
+            _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]).coalesce(1), path,
+            mode="error",
+        )
+        read, unnamed = I.read_iceberg, _iceberg_unnamed
+        _race(monkeypatch, I, "_claim_metadata", lambda p: I.write_iceberg(
+            _df(spark, [rival_row]), p, mode="append"
+        ))
+    else:
+        _cdf_table(spark, path)
+        read, unnamed = D.read_delta, _delta_unnamed
+        _race(monkeypatch, D, "_commit", lambda p: D.write_delta(
+            _df(spark, [rival_row]), p, mode="append"
+        ))
+    before = _rows(read(spark, path))
+    with pytest.raises(D.CommitConflict):
+        _REFUSED[op](spark, path)
+    assert _rows(read(spark, path)) == sorted(before + [rival_row])
+    assert unnamed(path) == set()
+
+
+def _restore(spark, path):
+    D.write_delta(_df(spark, [(3, "c", 3.0)]), path, mode="overwrite")
+    return lambda: D.restore_delta(spark, path, 0)
+
+
+def _dv_delete(spark, path):
+    return lambda: D.delete_where_delta(spark, path, F.col("k") == 1)
+
+
+@pytest.mark.parametrize("make", [_restore, _dv_delete],
+                         ids=["restore", "delete_where"])
+def test_refused_commit_keeps_the_files_it_only_references(
+    spark, tmp_path, monkeypatch, make
+):
+    """RESTORE re-adds the target version's files and a DV delete
+    re-adds the data file it gives a new vector: neither stages those
+    files, so a lost race must not unlink them — every version still
+    reads."""
+    path = str(tmp_path / "t")
+    D.write_delta(
+        _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]).coalesce(1), path,
+        mode="error",
+    )
+    refused = make(spark, path)
+    _race(monkeypatch, D, "_commit", lambda p: D.write_delta(
+        _df(spark, [(9, "z", 9.0)]), p, mode="append"
+    ))
+    with pytest.raises(D.CommitConflict):
+        refused()
+    for v in D._list_versions(path):
+        assert D.read_delta(spark, path, version_as_of=v).count() >= 1
+    assert _delta_unnamed(path) == set()
+
+
+def test_rebased_iceberg_append_leaves_no_losing_manifest_list(
+    spark, tmp_path, monkeypatch
+):
+    """A blind append that loses once lands on top of the rival, and
+    the manifest list of its losing attempt is gone."""
+    path = str(tmp_path / "t")
+    I.write_iceberg(_df(spark, [(1, "a", 1.0)]), path, mode="error")
+    _race(monkeypatch, I, "_claim_metadata", lambda p: I.write_iceberg(
+        _df(spark, [(2, "b", 2.0)]), p, mode="append"
+    ))
+    assert I.write_iceberg(
+        _df(spark, [(3, "c", 3.0)]), path, mode="append"
+    ) == 3
+    assert _rows(I.read_iceberg(spark, path)) == [
+        (1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0),
+    ]
+    assert _iceberg_unnamed(path) == set()
+
+
+def test_expire_between_staging_and_claim_spares_the_append(
+    spark, tmp_path, monkeypatch
+):
+    """``expire_snapshots`` running after an append staged its files
+    and before it claims its version must not delete what the append
+    staged: the append lands on top of the expire and the table
+    reads."""
+    path = str(tmp_path / "t")
+    I.write_iceberg(_df(spark, [(1, "a", 1.0)]), path, mode="error")
+    I.write_iceberg(_df(spark, [(2, "b", 2.0)]), path, mode="append")
+    _race(monkeypatch, I, "_claim_metadata", lambda p: I.expire_snapshots(
+        spark, p, keep_last=1
+    ))
+    I.write_iceberg(_df(spark, [(3, "c", 3.0)]), path, mode="append")
+    assert len(I._load_metadata(path)["snapshots"]) == 2
+    assert _rows(I.read_iceberg(spark, path)) == [
+        (1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0),
+    ]
+
+
+def test_put_if_absent_unlinks_its_temp_file_when_the_write_fails(
+    tmp_path, monkeypatch
+):
+    """A write that raises (a full disk) leaves no ``.tmp-`` file and
+    publishes nothing."""
+    real_open = open
+
+    class _Full:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, text):
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(
+        table_io, "open", lambda p, mode="r": _Full(real_open(p, mode)),
+        raising=False,
+    )
+    final = str(tmp_path / "00000000000000000001.json")
+    with pytest.raises(OSError, match="No space left"):
+        table_io.put_if_absent(final, "{}")
+    assert os.listdir(tmp_path) == []

@@ -38,10 +38,16 @@ linear in the quantity the mechanism is meant to scale with.
   Janino compile count and codegen cache entries; per round the CPU of
   the JVM's C1 and C2 compiler threads and the JVM's own JIT
   compilation time.  A steady round that reuses the classes of the
-  round before it compiles nothing.
+  round before it compiles nothing;
+- ``orphans``: N rounds of perfbench's lake_cdc workload after its
+  warm-up round (default 6): per maintenance op the files
+  ``vacuum_delta`` and ``expire_snapshots`` deleted, and after every
+  round the count of files in the source and the replica that no
+  Delta version or Iceberg snapshot names (a leak check: a commit
+  that lands nothing must leave nothing).
 
 Usage: python tools/scale_probes.py <probe>|all
-       python tools/scale_probes.py codegen [rounds]
+       python tools/scale_probes.py codegen|orphans [rounds]
 """
 
 from __future__ import annotations
@@ -597,6 +603,115 @@ def probe_codegen(spark, rounds: int = 3) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
+def _delta_unnamed(path: str) -> set[str]:
+    """Files in a Delta table that no version of its log names."""
+    import urllib.parse
+
+    from aws_datalake_framework_api_spark.sources import delta as D
+
+    named = set()
+    for v in D._list_versions(path):
+        for a in D._version_actions(path, v):
+            for kind in ("add", "remove", "cdc"):
+                if kind in a:
+                    named.add(os.path.join(
+                        path, urllib.parse.unquote(a[kind]["path"])
+                    ))
+                    dv = a[kind].get("deletionVector")
+                    if dv and dv.get("storageType") == "u":
+                        named.add(D._dv_file_path(path, dv))
+    return {
+        os.path.join(r, f)
+        for r, _dirs, files in os.walk(path)
+        if D._LOG not in r.split(os.sep)
+        for f in files
+    } - named
+
+
+def _iceberg_unnamed(path: str) -> set[str]:
+    """Data, delete and Avro files no snapshot of the table names."""
+    from aws_datalake_framework_api_spark.sources import iceberg as I
+    from aws_datalake_framework_api_spark.sources.avro_codec import (
+        read_avro_file,
+    )
+
+    meta = I._load_metadata(path)
+    loc = meta.get("location") or path
+    named = set()
+    for s in meta.get("snapshots") or []:
+        ml = I._resolve(s["manifest-list"], path, loc)
+        named.add(os.path.abspath(ml))
+        for mf in read_avro_file(ml)[1]:
+            mp = I._resolve(mf["manifest_path"], path, loc)
+            named.add(os.path.abspath(mp))
+            named |= {
+                os.path.abspath(
+                    I._resolve(e["data_file"]["file_path"], path, loc)
+                )
+                for e in read_avro_file(mp)[1]
+            }
+    return {
+        os.path.abspath(os.path.join(r, f))
+        for r, _dirs, files in os.walk(path)
+        for f in files
+        if not f.endswith(".metadata.json") and f != "version-hint.text"
+    } - named
+
+
+def probe_orphans(spark, rounds: int = 6) -> None:
+    """What lake_cdc's maintenance reclaims and what its commits leave:
+    perfbench's own workload (seed 1) runs its warm-up round, then
+    ``rounds`` more; each maintenance op reports the files
+    ``vacuum_delta`` and ``expire_snapshots`` deleted, and each round
+    the files of either table that no version or snapshot names."""
+    from aws_datalake_framework_api_spark.sources import delta as D
+    from aws_datalake_framework_api_spark.sources import iceberg as I
+    from perfbench.tracing import Recorder
+    from perfbench.wl_cdc import LakeCdc
+
+    deleted: list[str] = []
+
+    def counting(mod, name, key):
+        real = getattr(mod, name)
+
+        def wrapper(*a, **kw):
+            out = real(*a, **kw)
+            deleted.append(f"{name} {out[key]}")
+            return out
+
+        return real, wrapper
+
+    patched = [
+        (D, "vacuum_delta", *counting(D, "vacuum_delta", "deleted_files")),
+        (I, "expire_snapshots",
+         *counting(I, "expire_snapshots", "files_deleted")),
+    ]
+    base = tempfile.mkdtemp(prefix="orphans_probe_")
+    try:
+        for mod, name, _real, wrapper in patched:
+            setattr(mod, name, wrapper)
+        wl = LakeCdc(1, base)
+        rec = Recorder(spark, False)
+        wl.generate()
+        wl.build(spark)
+        for r in range(rounds + 1):
+            deleted.clear()
+            if r == 0:
+                wl.warmup(spark, rec)
+            else:
+                wl.run_round(spark, rec)
+            print(
+                f"orphans {'warm-up' if r == 0 else f'round {r}'}: "
+                f"{', '.join(deleted) or 'no maintenance'}; unnamed "
+                f"delta {len(_delta_unnamed(wl.src))}, "
+                f"iceberg {len(_iceberg_unnamed(wl.replica))}"
+            )
+    finally:
+        for mod, name, real, _wrapper in patched:
+            setattr(mod, name, real)
+        shutil.rmtree(base, ignore_errors=True)
+
+
 PROBES = {
     "substr": probe_substr,
     "pq": probe_pq,
@@ -610,6 +725,7 @@ PROBES = {
     "morconv": probe_morconv,
     "uniform": probe_uniform,
     "codegen": probe_codegen,
+    "orphans": probe_orphans,
 }
 
 
