@@ -56,10 +56,13 @@ loser goes through :func:`.table_io.commit_loop`: a blind append
 rebases onto the winner, everything else raises, and a commit that
 lands nothing unlinks what it staged.  Staging, footer stats, the
 put-if-absent publish and the commit loop are the format-neutral
-steps in :mod:`.table_io`, shared with the Iceberg connector; this
-module keeps the Delta codec (``add``/``cdc`` actions, JSON stats,
-log replay and checkpoints), its claim (:func:`_commit`) and its one
-commit step (:func:`_commit_mutation`).
+steps in :mod:`.table_io`, shared with the Iceberg connector, as is
+the key-range pruner (:func:`.table_io.prune_by_bounds`) that range
+reads and merges skip files through; this module keeps the Delta
+codec (``add``/``cdc`` actions, JSON stats and their decoder
+:func:`_stats_bounds`, log replay and checkpoints), its claim
+(:func:`_commit`) and its commit steps (:func:`_commit_mutation`, and
+:func:`_commit_create` for the creates that claim version 0).
 """
 
 from __future__ import annotations
@@ -85,6 +88,7 @@ from .table_io import (
     CommitConflict,
     commit_loop,
     footer_min_max,
+    prune_by_bounds,
     put_if_absent,
     stage_parquet,
 )
@@ -1586,6 +1590,21 @@ def _commit(path: str, version: int, actions: list[dict]) -> None:
     )
 
 
+def _commit_create(path: str, actions: list[dict], staged: list[str]) -> int:
+    """Claim version 0 for a CREATE through :func:`.table_io.commit_loop`.
+    A rival create that lands first raises ``FileExistsError`` (the
+    create contract :func:`write_delta` has) and unlinks ``staged``."""
+
+    def claim() -> int:
+        _commit(path, 0, actions)
+        return 0
+
+    def rebase() -> None:
+        raise FileExistsError(f"delta table already exists at {path}")
+
+    return commit_loop(claim, staged, rebase)
+
+
 def _footer_stats(dst: str) -> str | None:
     """The protocol's ``add.stats`` JSON string ({numRecords,
     minValues, maxValues}) from the already-written parquet footer
@@ -2582,8 +2601,7 @@ def create_identity_delta(
         },
     ]
     actions.extend(adds)
-    _commit(path, 0, actions)
-    return 0
+    return _commit_create(path, actions, _action_files(path, adds))
 
 
 def drop_constraint_delta(spark: SparkSession, path: str, name: str) -> int:
@@ -3111,10 +3129,9 @@ def create_mapped_delta(
             }
         },
     ]
-    actions.extend(
-        _stage_files(df_phys, path, [l2p[c] for c in partition_by], 0)
-    )
-    _commit(path, 0, actions)
+    adds = _stage_files(df_phys, path, [l2p[c] for c in partition_by], 0)
+    actions.extend(adds)
+    _commit_create(path, actions, _action_files(path, adds))
     return l2p
 
 
@@ -3729,6 +3746,7 @@ def merge_delta(
         check_clauses,
         pin,
         plan_merge,
+        source_key_bounds,
     )
 
     if strategy not in ("cow", "mor"):
@@ -3755,42 +3773,9 @@ def merge_delta(
         source, snap, part_cols, skip_null_check=set(gen_ident)
     )
     check_clauses(clauses, cols)
-    # Materialize the merge source ONCE (r11 optimization, guide §5).
-    # The planning below executes it repeatedly — dup check, key-bounds
-    # aggregate, hit-file discovery join, per-clause counts, insert
-    # count, CDC staging, data staging — and delta-spark itself
-    # materializes the merge source for exactly this reason (plus
-    # determinism under non-deterministic sources, which this also
-    # buys).  One micro-batch / merge source is bounded working-set
-    # data; re-deriving it per action is the only alternative.
-    source = pin(source)
+    source = pin(source)  # ONCE: the planning below re-reads it
     matched_cl = [c for c in clauses if c["when"] == "matched"]
-    # ONE pass over the checkpointed source for BOTH the duplicate-key
-    # check and the key-bounds used by stats pruning (r12, VERDICT r11
-    # item #4): group by the merge key, then a tiny aggregate takes
-    # max group multiplicity alongside per-key min/max (min/max over
-    # the group keys equal min/max over the rows, and both ignore
-    # NULLs).  r11 ran these as two separate source passes.
-    b = (
-        source.groupBy(*on)
-        .agg(F.count("*").alias("_mg_n"))
-        .agg(
-            F.max("_mg_n").alias("_mg_dup"),
-            *[
-                a
-                for i, c in enumerate(on)
-                for a in (
-                    F.min(c).alias(f"_lo{i}"), F.max(c).alias(f"_hi{i}")
-                )
-            ],
-        )
-        .first()
-    )
-    if (b["_mg_dup"] or 0) > 1:
-        raise ValueError(
-            f"merge source has duplicate keys on {on} — a target row "
-            "would match more than one source row"
-        )
+    ranges = source_key_bounds(source, on)
     rels = sorted(snap.files)
     dv_map = _dv_map(path, snap, rels)
     target = _logical_scan(spark, path, snap, rels, dv_map, keep_file=True)
@@ -3800,28 +3785,9 @@ def merge_delta(
     # table just because a by-source clause exists.
     cand_rels = rels
     if matched_cl:
-        # stats-prune the matched-candidate set: files whose add.stats
-        # bounds provably miss the source's key range on ANY key
-        # column cannot hold a match (equality on every key must hold
-        # simultaneously), so a key-clustered batch against a
-        # clustered table scans only the overlapping files here.
-        # Composite keys conjoin per-column bounds (r8 — the
-        # reference's own audit-table access pattern is a 2-col key,
-        # source-system lambda_function.py:35-38).  By-source
-        # discovery and insert planning still see the full table;
-        # files without stats are conservatively kept; NULL source
-        # keys never equality-match, so min/max ignoring NULLs is
-        # sound.  COW scans the survivors for hit-file discovery; MOR
-        # scans them for touched-row planning.
-        _sch, _pc, _rn, l2p_m = _resolve_read_schema(snap)
-        kept = set(rels)
-        for i, c in enumerate(on):
-            lo, hi = b[f"_lo{i}"], b[f"_hi{i}"]
-            if lo is None:
-                continue
-            col_kept, _ = _prune_snapshot(snap, l2p_m.get(c, c), lo, hi)
-            kept &= set(col_kept)
-        cand_rels = rels if len(kept) == len(rels) else sorted(kept)
+        cand_rels, _ = prune_by_bounds(
+            rels, _stats_bounds(snap, _resolve_read_schema(snap)[3]), ranges
+        )
     bysrc_cond = bysource_hit_condition(clauses)
     if strategy == "mor":
         return _merge_delta_mor(
@@ -4731,28 +4697,24 @@ def _clustering_columns(snap: _Snapshot) -> list[str]:
     return out
 
 
-def _prune_snapshot(
-    snap: _Snapshot, column: str, lo, hi
-) -> tuple[list[str], list[str]]:
-    kept: list[str] = []
-    skipped: list[str] = []
-    for rel in sorted(snap.files):
+def _stats_bounds(snap: _Snapshot, l2p: dict[str, str]):
+    """The Delta codec for :func:`.table_io.prune_by_bounds`: a file's
+    ``add.stats`` ``(minValues, maxValues)`` for a logical column, read
+    under its stored name ``l2p`` (stats keys are PHYSICAL names on
+    column-mapped tables); None without stats."""
+
+    def bounds(rel: str, column: str) -> tuple | None:
         st = snap.files[rel].get("stats")
-        prunable = False
-        if st:
-            s = json.loads(st) if isinstance(st, str) else st
-            mn = (s.get("minValues") or {}).get(column)
-            mx = (s.get("maxValues") or {}).get(column)
-            if mn is not None and mx is not None:
-                try:
-                    prunable = mx < lo or mn > hi
-                except TypeError:
-                    # stats type doesn't compare with the bound (a
-                    # foreign writer's serialization) — keep the file;
-                    # wrong-to-prune is the only fatal direction
-                    prunable = False
-        (skipped if prunable else kept).append(rel)
-    return kept, skipped
+        if not st:
+            return None
+        s = json.loads(st) if isinstance(st, str) else st
+        key = l2p.get(column, column)
+        return (
+            (s.get("minValues") or {}).get(key),
+            (s.get("maxValues") or {}).get(key),
+        )
+
+    return bounds
 
 
 def prune_files(
@@ -4767,13 +4729,16 @@ def prune_files(
     skipped) for a range read ``lo <= column <= hi`` using the
     ``add.stats`` min/max — no parquet footer is opened for a skipped
     file, which at 100 TB is the difference between touching metadata
-    for every file and touching none of the cold ones.  A file without
-    stats for ``column`` is KEPT (conservative): a missing or stale
-    stat can only cost performance, never rows."""
+    for every file and touching none of the cold ones.  Both lists are
+    in ``sorted(snap.files)`` order.  The interval test is the one
+    :func:`.table_io.prune_by_bounds` both connectors share: a file
+    without stats for ``column`` is KEPT (conservative), since a
+    missing or stale stat can only cost performance, never rows."""
     snap, _ = _snapshot(spark, path, version_as_of)
-    # stats keys are PHYSICAL names on column-mapped tables
-    _schema, _parts, _rename, l2p = _resolve_read_schema(snap)
-    return _prune_snapshot(snap, l2p.get(column, column), lo, hi)
+    l2p = _resolve_read_schema(snap)[3]
+    return prune_by_bounds(
+        sorted(snap.files), _stats_bounds(snap, l2p), [(column, lo, hi)]
+    )
 
 
 def read_delta_range(
@@ -4790,10 +4755,10 @@ def read_delta_range(
     identical to an unpruned scan by construction."""
     snap, _ = _snapshot(spark, path, version_as_of)
     schema, part_cols, rename, l2p = _resolve_read_schema(snap)
-    # prune by the STORED stats key, filter by the LOGICAL column
-    kept, _skipped = _prune_snapshot(snap, l2p.get(column, column), lo, hi)
+    kept, _skipped = prune_by_bounds(
+        sorted(snap.files), _stats_bounds(snap, l2p), [(column, lo, hi)]
+    )
     cond = (F.col(column) >= F.lit(lo)) & (F.col(column) <= F.lit(hi))
-    kept = sorted(kept)
     _enable_field_id_read(spark, snap, path, kept)
     return _rename_back(
         _scan_files(
@@ -5192,6 +5157,7 @@ def convert_iceberg_to_delta(spark: SparkSession, src: str, dst: str) -> int:
     else:
         data, deletes, eq_deletes = _manifest_entries(src, meta, snap)
     dv_by_base: dict[str, dict] = {}
+    written: list = []
     if deletes or eq_deletes:
         # materialize the merge-on-read state as Delta DELETION
         # VECTORS: one kill-row plan per delete shape (shared with the
@@ -5300,8 +5266,7 @@ def convert_iceberg_to_delta(spark: SparkSession, src: str, dst: str) -> int:
         if dv is not None:
             add["deletionVector"] = dv
         actions.append({"add": add})
-    _commit(dst, 0, actions)
-    return 0
+    return _commit_create(dst, actions, _dv_files(dst, written))
 
 
 # ------------------------------------------------------------------ query

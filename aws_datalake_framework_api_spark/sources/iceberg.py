@@ -26,9 +26,12 @@ this module implements the PUBLIC Iceberg table spec
   put-if-absent publish, ``CommitConflict`` and the commit loop
   (claim, rebase or refuse, unlink what a refused commit staged) are
   the format-neutral steps in :mod:`.table_io`, shared with
-  :mod:`.delta`; this module keeps the Iceberg codec (``data_file``
-  records, binary bounds, Avro manifests and metadata JSON) and its
-  claim (:func:`_claim_metadata`) and append rebase steps.
+  :mod:`.delta`, as is the key-range pruner range reads and merges
+  skip files through (:func:`.table_io.prune_by_bounds`); this module
+  keeps the Iceberg codec (``data_file`` records, binary bounds and
+  their decoder :func:`_manifest_bounds`, Avro manifests and metadata
+  JSON) and its claim (:func:`_claim_metadata`) and append rebase
+  steps.
 
 Equality deletes (content=2, the merge-on-read DELETE shape Flink
 CDC writes) are both READ (null-safe anti-join on the delete's
@@ -100,6 +103,7 @@ from .table_io import (
     CommitConflict,
     commit_loop,
     footer_min_max,
+    prune_by_bounds,
     put_if_absent,
     stage_parquet,
 )
@@ -303,6 +307,30 @@ def _sv_decode(ice_type: str, b: bytes):
     except (struct.error, UnicodeDecodeError):
         return None
     return None
+
+
+def _manifest_bounds(schema_json: dict):
+    """The Iceberg codec for :func:`.table_io.prune_by_bounds`: a data
+    file's ``lower``/``upper`` bounds for a column, looked up by field
+    id and decoded with :func:`_sv_decode`.  Only primitive fields have
+    single-value bounds; any other column returns None and the file is
+    kept."""
+    prim = {
+        f["name"]: (int(f["id"]), f["type"])
+        for f in schema_json["fields"]
+        if isinstance(f["type"], str)
+    }
+
+    def bounds(rec: dict, column: str) -> tuple | None:
+        if column not in prim:
+            return None
+        fid, ftype = prim[column]
+        return (
+            _sv_decode(ftype, (rec["lower"] or {}).get(fid)),
+            _sv_decode(ftype, (rec["upper"] or {}).get(fid)),
+        )
+
+    return bounds
 
 
 # ---------------------------------------------------------------- avro schemas
@@ -1665,35 +1693,22 @@ def read_iceberg_range(
 ) -> DataFrame:
     """Stats-skipping range read ``lo <= column <= hi``: files whose
     manifest lower/upper bounds PROVABLY miss the range are never
-    scanned (metrics filtering, the Iceberg analogue of the Delta
-    connector's ``prune_files``); files without usable bounds are
+    scanned (metrics filtering through the one interval test the Delta
+    connector's ``prune_files`` also uses,
+    :func:`.table_io.prune_by_bounds`); files without usable bounds are
     conservatively kept, and the row filter always applies."""
     meta = _load_metadata(path)
     schema_json = _current_schema(meta)
-    field = next(
-        (f for f in schema_json["fields"] if f["name"] == column), None
-    )
-    if field is None:
+    if not any(f["name"] == column for f in schema_json["fields"]):
         raise ValueError(f"no such column: {column}")
-    fid, ftype = int(field["id"]), field["type"]
     spark_schema = _schema_to_spark(schema_json)
     snap = _snapshot_by_id(meta, snapshot_id)
     if snap is None:
         return empty_frame(spark, spark_schema)
     data, deletes, eq_deletes = _manifest_entries(path, meta, snap)
-    kept = []
-    for rec in data:
-        prunable = False
-        if isinstance(ftype, str):
-            mn = _sv_decode(ftype, (rec["lower"] or {}).get(fid))
-            mx = _sv_decode(ftype, (rec["upper"] or {}).get(fid))
-            if mn is not None and mx is not None:
-                try:
-                    prunable = mx < lo or mn > hi
-                except TypeError:
-                    prunable = False
-        if not prunable:
-            kept.append(rec)
+    kept, _skipped = prune_by_bounds(
+        data, _manifest_bounds(schema_json), [(column, lo, hi)]
+    )
     out = _plan_scan(
         spark, spark_schema, kept, deletes, _resolution(meta),
         eq_deletes=eq_deletes, schema_json=schema_json, meta=meta,
@@ -4585,6 +4600,7 @@ def merge_iceberg(
         pin,
         plan_merge,
         plan_merge_mor,
+        source_key_bounds,
     )
 
     if strategy not in ("cow", "mor"):
@@ -4612,43 +4628,9 @@ def merge_iceberg(
     types = {f.name: f.dataType for f in spark_schema.fields}
     clauses = [dict(c) for c in (clauses or DEFAULT_CLAUSES)]
     check_clauses(clauses, cols)
-    # Materialize the merge source ONCE (r11 optimization, guide §5):
-    # the planning below executes it repeatedly (dup check, key-bounds
-    # aggregate, clause counts, insert count, staging writes), and a
-    # caller's source lineage would re-run on every re-execution: a
-    # micro-batch in the streaming merge sink (streaming/lake_sink.py)
-    # or a fixture union in the merge ids (b_lake_iceberg_merge,
-    # b_lake_iceberg_merge_mor, b_stream_iceberg_cdf).  Mirrors
-    # merge_delta; delta-spark materializes its merge source for the
-    # same reason.
-    source = pin(source)
+    source = pin(source)  # ONCE: the planning below re-reads it
     matched_cl = [c for c in clauses if c["when"] == "matched"]
-    # ONE pass over the checkpointed source for BOTH the duplicate-key
-    # check and the manifest-prune key bounds (r12, VERDICT r11 item
-    # #4; same fold as merge_delta): max group multiplicity and
-    # per-key min/max in a single aggregate.  Bounds are computed for
-    # every key column here; the pruning below still only consults the
-    # primitive-typed ones.
-    b = (
-        source.groupBy(*on)
-        .agg(F.count("*").alias("_mg_n"))
-        .agg(
-            F.max("_mg_n").alias("_mg_dup"),
-            *[
-                a
-                for i, c in enumerate(on)
-                for a in (
-                    F.min(c).alias(f"_lo{i}"), F.max(c).alias(f"_hi{i}")
-                )
-            ],
-        )
-        .first()
-    )
-    if (b["_mg_dup"] or 0) > 1:
-        raise ValueError(
-            f"merge source has duplicate keys on {on} — a target row "
-            "would match more than one source row"
-        )
+    ranges = source_key_bounds(source, on)
     data, deletes, eq_deletes = _manifest_entries(path, meta, snap)
     res = _resolution(meta)
     part_spec = _spec_from_meta(meta, schema_json)
@@ -4659,45 +4641,10 @@ def merge_iceberg(
         eq_deletes=eq_deletes, schema_json=schema_json, keep_file=True,
         meta=meta,
     )
-    # manifest-bounds-prune the matched-candidate set (metrics
-    # filtering, like read_iceberg_range): files whose lower/upper
-    # provably miss the source's key range on ANY key column cannot
-    # hold a match (the equality must hold on every key
-    # simultaneously), so composite keys conjoin per-column bounds
-    # (r8); boundless files / non-primitive key types are
-    # conservatively kept.  COW scans the survivors for hit-file
-    # discovery; MOR scans them for touched-row planning.
+    # matched candidates: the files that may hold a source key
     cand = data
     if data and matched_cl:
-        # (bounds come from the combined dup+bounds aggregate above —
-        # indexed by the key's position in ``on``)
-        key_fields = [
-            (i, f)
-            for i, c in enumerate(on)
-            for f in schema_json["fields"]
-            if f["name"] == c and isinstance(f["type"], str)
-        ]
-        if key_fields:
-            kept_recs = []
-            for rec in data:
-                prunable = False
-                for i, f in key_fields:
-                    lo, hi = b[f"_lo{i}"], b[f"_hi{i}"]
-                    if lo is None:
-                        continue
-                    fid, ftype = int(f["id"]), f["type"]
-                    mn = _sv_decode(ftype, (rec["lower"] or {}).get(fid))
-                    mx = _sv_decode(ftype, (rec["upper"] or {}).get(fid))
-                    if mn is not None and mx is not None:
-                        try:
-                            if mx < lo or mn > hi:
-                                prunable = True
-                                break
-                        except TypeError:
-                            pass
-                if not prunable:
-                    kept_recs.append(rec)
-            cand = kept_recs
+        cand, _ = prune_by_bounds(data, _manifest_bounds(schema_json), ranges)
     bysrc_cond = bysource_hit_condition(clauses)
     if strategy == "mor":
         # merge-on-read: no hit-FILE discovery at all — plan the

@@ -51,7 +51,13 @@ from pyspark.sql import functions as F
 
 def pin(df: DataFrame) -> DataFrame:
     """Materialize a merge working set eagerly and return the pinned
-    frame.  Default is ``localCheckpoint(eager=True)`` — blocks live on
+    frame.  Both merges pin their source ONCE: their planning executes
+    it repeatedly (the key aggregate, hit discovery, clause and insert
+    counts, CDC and data staging), and a caller's lineage (a streaming
+    micro-batch, a fixture union) would re-run on every action;
+    delta-spark materializes its merge source for the same reason,
+    which also buys determinism under a non-deterministic source.
+    Default is ``localCheckpoint(eager=True)`` — blocks live on
     the executors, lineage truncated, zero extra configuration.  Set
     ``SPARK_GRAFT_MERGE_PIN=persist`` for clusters running DYNAMIC
     ALLOCATION: localCheckpoint blocks are non-recoverable when their
@@ -99,6 +105,43 @@ def check_clauses(clauses, cols: list[str]) -> None:
             bad = set(st) - set(cols)
             if bad:
                 raise ValueError(f"merge SET unknown columns: {sorted(bad)}")
+
+
+def source_key_bounds(
+    source: DataFrame, on: list[str]
+) -> list[tuple[str, object, object]]:
+    """Refuse a source with duplicate keys on ``on`` and return its
+    per-key ``(column, min, max)``, in ONE ``.first()`` pass: group by
+    the key, then take the max group size and per-key min/max (both
+    ignore NULLs, and a NULL key never equality-matches).  Both merges
+    prune their matched candidates with these ranges through
+    :func:`.table_io.prune_by_bounds`: a file whose bounds miss the
+    source's range on ANY key column holds no match, so a
+    key-clustered batch scans only the overlapping files — the
+    reference's keyed upsert on a two-column audit key (source-system
+    ``lambda_function.py:35-38``).  By-source discovery and insert
+    planning still see the full table."""
+    b = (
+        source.groupBy(*on)
+        .agg(F.count("*").alias("_mg_n"))
+        .agg(
+            F.max("_mg_n").alias("_mg_dup"),
+            *[
+                a
+                for i, c in enumerate(on)
+                for a in (
+                    F.min(c).alias(f"_lo{i}"), F.max(c).alias(f"_hi{i}")
+                )
+            ],
+        )
+        .first()
+    )
+    if (b["_mg_dup"] or 0) > 1:
+        raise ValueError(
+            f"merge source has duplicate keys on {on} — a target row "
+            "would match more than one source row"
+        )
+    return [(c, b[f"_lo{i}"], b[f"_hi{i}"]) for i, c in enumerate(on)]
 
 
 def bysource_hit_condition(clauses) -> "F.Column | None":

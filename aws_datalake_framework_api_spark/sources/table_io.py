@@ -1,5 +1,5 @@
-"""Format-neutral file I/O and the one commit loop under the Delta and
-Iceberg connectors.
+"""Format-neutral file I/O, the one commit loop and the one key-range
+pruner under the Delta and Iceberg connectors.
 
 Both formats publish data the same way: Spark writes parquet into a
 scratch directory, the part files move under the table's own names,
@@ -8,10 +8,11 @@ claimed with put-if-absent.  This module holds one copy of each step
 (:func:`stage_parquet`, :func:`footer_min_max`, :func:`put_if_absent`),
 the one :class:`CommitConflict`, and the one commit loop,
 :func:`commit_loop`: claim, rebase or refuse, and unlink what a
-refused commit staged.  :mod:`.delta` and :mod:`.iceberg` keep only
-their codecs (Delta ``add``/``cdc`` actions with JSON stats, Iceberg
-``data_file`` records with binary bounds) and their claim and rebase
-steps.
+refused commit staged.  Range reads and merges in both formats skip
+files through the one key-range pruner, :func:`prune_by_bounds`.
+:mod:`.delta` and :mod:`.iceberg` keep only their codecs (Delta
+``add``/``cdc`` actions with JSON stats, Iceberg ``data_file``
+records with binary bounds) and their claim and rebase steps.
 
 A file that no commit names is either staged by a writer still in
 flight or left by one that crashed.  :data:`ORPHAN_AGE_FLOOR_MS` is
@@ -195,6 +196,37 @@ def footer_min_max(
             if name not in maxs or hi > maxs[name]:  # type: ignore[operator]
                 maxs[name] = hi
     return md.num_rows, mins, maxs
+
+
+def prune_by_bounds(
+    files: Iterable,
+    bounds: Callable[[object, str], tuple | None],
+    ranges: Iterable[tuple[str, object, object]],
+) -> tuple[list, list]:
+    """Split ``files`` into ``(kept, skipped)``, both in input order,
+    for a read of ``lo <= column <= hi`` on every ``(column, lo, hi)``
+    of ``ranges`` (conjoined: a composite key prunes on any column).
+    ``bounds(file, column)`` is the format's codec: the file's decoded
+    ``(min, max)``, or None.  A file is skipped only when both bounds
+    are present and provably miss some range.  A range with a None end
+    is ignored, and a bound that does not compare with it (a
+    ``TypeError``, e.g. a foreign writer's serialization) keeps the
+    file: wrong-to-prune is the only fatal direction."""
+    live = [r for r in ranges if r[1] is not None and r[2] is not None]
+    kept: list = []
+    skipped: list = []
+    for f in files:
+        miss = any(_misses(bounds(f, c), lo, hi) for c, lo, hi in live)
+        (skipped if miss else kept).append(f)
+    return kept, skipped
+
+
+def _misses(b: tuple | None, lo, hi) -> bool:
+    mn, mx = b or (None, None)
+    try:
+        return mn is not None and mx is not None and bool(mx < lo or mn > hi)
+    except TypeError:
+        return False
 
 
 def put_if_absent(final: str, text: str) -> None:

@@ -2519,14 +2519,14 @@ def test_merge_hit_discovery_is_stats_pruned(spark, tmp_path, monkeypatch):
             path, mode=mode,
         )
     calls = {}
-    orig = D._prune_snapshot
+    orig = D.prune_by_bounds
 
-    def spy(snap, col, lo, hi):
-        kept, skipped = orig(snap, col, lo, hi)
+    def spy(files, bounds, ranges):
+        kept, skipped = orig(files, bounds, ranges)
         calls["kept"], calls["skipped"] = len(kept), len(skipped)
         return kept, skipped
 
-    monkeypatch.setattr(D, "_prune_snapshot", spy)
+    monkeypatch.setattr(D, "prune_by_bounds", spy)
     out = D.merge_delta(
         spark, path,
         _df(spark, [(105, "p", 9999.0), (110, "p", 8888.0)]), on=["k"],
@@ -2645,14 +2645,15 @@ def test_merge_composite_key_discovery_is_stats_pruned(
             path, mode="error" if i == 0 else "append",
         )
     calls = {}
-    orig = D._prune_snapshot
+    orig = D.prune_by_bounds
 
-    def spy(snap, col, lo, hi):
-        kept, skipped = orig(snap, col, lo, hi)
-        calls[col] = (len(kept), len(skipped))
-        return kept, skipped
+    def spy(files, bounds, ranges):
+        for col, lo, hi in ranges:
+            kept, skipped = orig(files, bounds, [(col, lo, hi)])
+            calls[col] = (len(kept), len(skipped))
+        return orig(files, bounds, ranges)
 
-    monkeypatch.setattr(D, "_prune_snapshot", spy)
+    monkeypatch.setattr(D, "prune_by_bounds", spy)
     out = D.merge_delta(
         spark, path, _df(spark, [(150, "a", 9999.0)]),
         on=["k", "part"],

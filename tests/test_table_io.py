@@ -1,11 +1,15 @@
-"""The format-neutral write layer under both connectors
+"""The format-neutral layer under both connectors
 (``sources/table_io.py``): a failed Spark write leaves no staging
 directory and commits nothing, both connectors raise one
-``CommitConflict``, a commit a rival refused leaves no file that no
-version names, maintenance spares a commit in flight, and the
-driver-memory default fits the host."""
+``CommitConflict``, a commit a rival refused (a create included)
+leaves no file that no version names, maintenance spares a commit in
+flight, both connectors' bounds codecs prune the same files through
+the one interval test, both merges refuse a duplicate-key source with
+one message, and the driver-memory default fits the host."""
 
+import datetime
 import errno
+import json
 import os
 import urllib.parse
 
@@ -304,3 +308,154 @@ def test_put_if_absent_unlinks_its_temp_file_when_the_write_fails(
     with pytest.raises(OSError, match="No space left"):
         table_io.put_if_absent(final, "{}")
     assert os.listdir(tmp_path) == []
+
+
+def _convert(spark, tmp_path, path):
+    src = str(tmp_path / "ice")
+    I.write_iceberg(
+        _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]).coalesce(1), src,
+        mode="error",
+    )
+    I.delete_iceberg_rows(spark, src, F.col("k") == 1)  # a position delete
+    return lambda: D.convert_iceberg_to_delta(spark, src, path)
+
+
+_CREATES = {
+    "create_identity_delta": lambda spark, tmp_path, p: (
+        lambda: D.create_identity_delta(
+            spark, _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]), p, "id"
+        )
+    ),
+    "create_mapped_delta": lambda spark, tmp_path, p: (
+        lambda: D.create_mapped_delta(
+            _df(spark, [(1, "a", 1.0), (2, "b", 2.0)]), p
+        )
+    ),
+    "convert_iceberg_to_delta": _convert,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_CREATES))
+def test_create_that_loses_the_race_leaves_no_unnamed_file(
+    spark, tmp_path, monkeypatch, op
+):
+    """A create whose version 0 a rival create claimed first raises
+    ``FileExistsError`` and unlinks what it staged (data files, or
+    the deletion vectors a conversion writes): the table is the
+    rival's, and no file is left that version 0 does not name."""
+    path = str(tmp_path / "t")
+    create = _CREATES[op](spark, tmp_path, path)
+    _race(monkeypatch, D, "_commit", lambda p: D.write_delta(
+        _df(spark, [(9, "z", 9.0)]), p, mode="error"
+    ))
+    with pytest.raises(FileExistsError):
+        create()
+    assert D._list_versions(path) == [0]
+    assert _rows(D.read_delta(spark, path)) == [(9, "z", 9.0)]
+    assert _delta_unnamed(path) == set()
+
+
+# (name, {column: (min, max)}): per-file bounds, encoded below once as
+# Delta stats JSON and once as Iceberg binary bounds.  A None end is a
+# bound the file does not record.
+_FILES = [
+    ("f0", {"k": (0, 99), "part": ("a", "a")}),
+    ("f1", {"k": (100, 199), "part": ("b", "b")}),
+    ("f2", {}),
+    ("f3", {"k": (0, None), "part": ("a", "a")}),
+    ("f4", {"k": (200, 299), "part": ("a", "b")}),
+]
+_ICE_FIELDS = [
+    {"id": 1, "name": "k", "required": False, "type": "int"},
+    {"id": 2, "name": "part", "required": False, "type": "string"},
+    {"id": 3, "name": "s", "required": False, "type": {
+        "type": "struct", "fields": [
+            {"id": 4, "name": "x", "required": False, "type": "int"},
+        ],
+    }},
+]
+
+
+def _delta_codec():
+    snap = D._Snapshot()
+    for name, b in _FILES:
+        stats = {
+            "numRecords": 1,
+            "minValues": {c: lo for c, (lo, _) in b.items() if lo is not None},
+            "maxValues": {c: hi for c, (_, hi) in b.items() if hi is not None},
+        }
+        snap.files[name] = {"path": name, "stats": json.dumps(stats)}
+    return list(snap.files), D._stats_bounds(snap, {"k": "k", "part": "part"})
+
+
+def _iceberg_codec():
+    types = {f["name"]: (f["id"], f["type"]) for f in _ICE_FIELDS}
+
+    def encode(b, end):
+        return {
+            types[c][0]: I._sv_encode(types[c][1], v[end])
+            for c, v in b.items() if v[end] is not None
+        } or None
+
+    recs = [
+        {"path": name, "lower": encode(b, 0), "upper": encode(b, 1)}
+        for name, b in _FILES
+    ]
+    return recs, I._manifest_bounds({"fields": _ICE_FIELDS})
+
+
+@pytest.mark.parametrize("ranges, kept", [
+    # an endpoint equal to lo or hi is kept
+    ([("k", 99, 100)], ["f0", "f1", "f2", "f3"]),
+    ([("k", 300, 400)], ["f2", "f3"]),
+    # uncomparable bounds keep every file
+    ([("k", datetime.date(2020, 1, 1), datetime.date(2020, 1, 2))],
+     ["f0", "f1", "f2", "f3", "f4"]),
+    # a None end ignores that column
+    ([("k", None, 5)], ["f0", "f1", "f2", "f3", "f4"]),
+    ([("k", 300, None), ("part", "b", "b")], ["f1", "f2", "f4"]),
+    # a two-column key prunes on either column
+    ([("k", 150, 150), ("part", "a", "a")], ["f2", "f3"]),
+    ([("k", 50, 250), ("part", "b", "b")], ["f1", "f2", "f4"]),
+    # a column without single-value bounds keeps every file
+    ([("s", 1, 2)], ["f0", "f1", "f2", "f3", "f4"]),
+])
+def test_both_codecs_prune_the_same_files(ranges, kept):
+    """``prune_by_bounds`` over Delta stats JSON and over Iceberg
+    binary bounds keeps the same files, in input order; no Spark
+    session is involved."""
+    names, delta_bounds = _delta_codec()
+    d_kept, d_skipped = table_io.prune_by_bounds(names, delta_bounds, ranges)
+    recs, ice_bounds = _iceberg_codec()
+    i_kept, i_skipped = table_io.prune_by_bounds(recs, ice_bounds, ranges)
+    assert d_kept == kept
+    assert [r["path"] for r in i_kept] == kept
+    assert d_skipped == [n for n in names if n not in kept]
+    assert [r["path"] for r in i_skipped] == d_skipped
+
+
+_MERGES = {"delta": D.merge_delta, "iceberg": I.merge_iceberg}
+
+
+@pytest.mark.parametrize("fmt", sorted(_MERGES))
+def test_merge_refuses_a_source_with_duplicate_keys(spark, tmp_path, fmt):
+    """Both merges refuse a source that holds one key twice, with the
+    one message of the shared key aggregate, and commit nothing."""
+    write, versions = _WRITERS[fmt]
+    path = str(tmp_path / "t")
+    write(
+        _df(spark, [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0),
+                    (4, "b", 4.0)]).coalesce(1),
+        path, mode="error",
+    )
+    before = versions(path)
+    with pytest.raises(ValueError) as e:
+        _MERGES[fmt](
+            spark, path, _df(spark, [(2, "a", 20.0), (2, "a", 21.0)]),
+            on=["k"],
+        )
+    assert str(e.value) == (
+        "merge source has duplicate keys on ['k'] — a target row "
+        "would match more than one source row"
+    )
+    assert versions(path) == before
