@@ -29,15 +29,18 @@ Scale notes.  State reconstruction materializes the active-file list
 on the driver — bounded by files-per-table, the same planning-side
 bound delta-spark itself has (its scan planning ships the file list
 through the driver too); checkpoints cap the JSON replay at
-``commits since last checkpoint``.  The data read has two plan
-shapes: up to ``_UNION_BRANCH_CAP`` distinct partition tuples it
+``commits since last checkpoint``.  Every data read is the shared
+tagged scan, :func:`.table_io.scan_files`, with this module's codec:
+the log's ``partitionValues`` as per-file constants and its deletion
+vectors as ``(FILE, POS)`` kills.  It has two plan shapes: up to
+``_UNION_BRANCH_CAP`` distinct partition tuples the scan's reader
 unions per-partition scans with injected LITERAL partition columns
 (each branch a plain parquet ``FileScan`` — column pruning +
 predicate pushdown intact, and Catalyst constant-folds partition
 predicates to prune whole branches at plan time); past the cap it
-plans ONE ``FileScan`` over every live file plus a broadcast join
-against the log-derived file → partitionValues map, so plan size is
-O(1) in partition count (the role delta-spark's FileIndex plays) and
+plans ONE ``FileScan`` over every live file plus the shared scan's
+broadcast file → partitionValues map, so plan size is O(1) in
+partition count (the role delta-spark's FileIndex plays) and
 partition pruning moves to ``read_delta``'s ``partition_filter``
 (driver-side, against the log — the same planning-time prune a
 FileIndex does).  Files are addressed by the LOG, never by directory
@@ -88,9 +91,14 @@ from .table_io import (
     CommitConflict,
     commit_loop,
     footer_min_max,
+    FILE,
+    POS,
+    basenames,
     prune_by_bounds,
     put_if_absent,
+    scan_files,
     stage_parquet,
+    tag_columns,
 )
 
 _LOG = "_delta_log"
@@ -362,7 +370,7 @@ def _resolve_read_schema(
 
 def _logical_scan(
     spark: SparkSession, path: str, snap: _Snapshot, rels: list[str],
-    dv_map: dict | None, **tags,
+    dv_map: dict | None, tags: tuple[str, ...] = (),
 ) -> DataFrame:
     """Active-file scan projected to LOGICAL column names (identity on
     unmapped tables) — the frame mutation predicates, joins and
@@ -371,8 +379,7 @@ def _logical_scan(
     schema, part_cols, rename, _l2p = _resolve_read_schema(snap)
     _enable_field_id_read(spark, snap, path, rels)
     return _rename_back(
-        _scan_files(spark, path, snap, rels, schema, part_cols, dv_map,
-                    **tags),
+        _scan_files(spark, path, snap, rels, schema, part_cols, dv_map, tags),
         rename,
     )
 
@@ -506,10 +513,10 @@ def _enable_field_id_read(
 def _rename_back(df: DataFrame, rename: list[tuple] | None) -> DataFrame:
     """Project physical columns back to logical names; a struct cast
     renames nested fields positionally only where some nested physical
-    name differs.  ``_dl_*`` bookkeeping columns ride through."""
+    name differs.  The scan's ``FILE``/``POS`` tags ride through."""
     if rename is None:
         return df
-    extras = [F.col(c) for c in df.columns if c.startswith("_dl_")]
+    extras = [c for c in (FILE, POS) if c in df.columns]
     return df.select(
         *[
             (F.col(p).cast(t) if casts else F.col(p)).alias(l)
@@ -764,8 +771,8 @@ def _snapshot(
 #
 # Scale note: the DRIVER only carries the O(active files) descriptor
 # list; bitmap BYTES are decoded EXECUTOR-side (one mapInPandas task
-# batch per slice of DV files) into a (file, position) relation that
-# anti-joins the scan's _metadata.row_index — broadcast when the
+# batch per slice of DV files) into the (FILE, POS) kills of the
+# shared tagged scan (table_io.scan_files) — broadcast when the
 # descriptors' summed cardinality is small, shuffle otherwise.  A
 # 100 TB table with billions of deleted positions therefore never
 # funnels positions through one process (VERDICT r6; the same
@@ -1041,139 +1048,72 @@ def _scan_files(
     schema: StructType,
     part_cols: list[str],
     dv_map: dict[str, dict] | None = None,
-    keep_file: bool = False,
-    keep_pos: bool = False,
+    tags: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Plan the scan of the given active files with partition columns
-    injected from the log.  Two shapes (see ``_UNION_BRANCH_CAP``):
-    per-partition union branches below the cap, a single FileScan plus
-    a broadcast file→partition-values join above it.
+    """The :func:`.table_io.scan_files` scan of the given active files,
+    with the log's partition values and deletion vectors.  Two shapes
+    (see ``_UNION_BRANCH_CAP``): per-partition union branches with
+    LITERAL partition columns below the cap, the shared scan's single
+    FileScan plus broadcast file→partitionValues map above it.
 
-    ``dv_map`` (file basename → ``deletionVector`` descriptor) applies
-    deletion vectors: each row is tagged with the scan's
-    ``_metadata.file_name`` / ``_metadata.row_index`` (deterministic
-    scan outputs — pushdown survives) and subtracted via one LEFT ANTI
-    join on (file, position) against the EXECUTOR-decoded position
-    relation — broadcast when the descriptors' summed cardinality is
-    small, shuffled otherwise.
-
-    ``keep_file`` retains the ``_dl_file`` basename column in the
-    output — the copy-on-write UPDATE path uses it to attribute
-    matched rows to the files that must be rewritten."""
-    if not rels:
-        out = empty_frame(spark, schema)
-        if keep_file:
-            out = out.withColumn("_dl_file", F.lit(None).cast("string"))
-        if keep_pos:
-            out = out.withColumn("_dl_dv_pos", F.lit(None).cast("long"))
-        return out
+    ``dv_map`` (file basename → ``deletionVector`` descriptor) becomes
+    the scan's ``(FILE, POS)`` kills, decoded EXECUTOR-side by
+    :func:`_dv_relation` and broadcast when the descriptors' summed
+    cardinality is small, shuffled otherwise.  ``tags`` keeps
+    :data:`.table_io.FILE` / :data:`.table_io.POS` in the output: the
+    copy-on-write rewrites attribute matched rows to files through
+    them, the DV writers to positions."""
+    pvals = {
+        os.path.join(path, urllib.parse.unquote(rel)):
+        snap.partition_values(rel) for rel in rels
+    }
+    files = sorted(pvals)
+    kills = None
+    if dv_map:
+        kills = _dv_relation(spark, path, dv_map)
+        total = sum(int(d.get("cardinality") or 0) for d in dv_map.values())
+        if total <= _DV_BROADCAST_CAP:
+            kills = F.broadcast(kills)
+    by_part: dict[tuple, list[str]] = {}
+    for f in files:
+        by_part.setdefault(
+            tuple(pvals[f].get(c) for c in part_cols), []
+        ).append(f)
+    # Hive-style files may share a basename across partition
+    # directories; an untagged read of those keeps the literal branches,
+    # which need no basename key.
+    if len(by_part) > _UNION_BRANCH_CAP and (
+        tags or kills is not None
+        or len({os.path.basename(f) for f in files}) == len(files)
+    ):
+        consts = (part_cols, {os.path.basename(f): pvals[f] for f in files})
+        return scan_files(spark, files, schema, consts, kills, tags)
     data_schema = StructType(
         [f for f in schema.fields if f.name not in part_cols]
     )
-    types = {f.name: f.dataType for f in schema.fields}
-    cols = [f.name for f in schema.fields]
-    want_dv = bool(dv_map)
-    want_pos = want_dv or keep_pos
-    want_tag = want_pos or keep_file
-    by_part: dict[tuple, list[str]] = {}
-    for rel in rels:
-        pvals = snap.partition_values(rel)
-        key = tuple(pvals.get(c) for c in part_cols)
-        by_part.setdefault(key, []).append(
-            os.path.join(path, urllib.parse.unquote(rel))
-        )
-    # Delta data file basenames are effectively unique (uuid-suffixed);
-    # both the partition-map join and the DV anti-join key on them.
-    names: dict[str, dict] = {}
-    collision = False
-    for rel in rels:
-        b = os.path.basename(urllib.parse.unquote(rel))
-        if b in names:
-            collision = True
-            break
-        names[b] = snap.partition_values(rel)
-    if want_tag and collision:
-        # a basename collision would attribute rows (DV subtraction,
-        # rewrite targeting) to the WRONG file — refuse rather than
-        # misread (the same policy as feature gates)
-        raise ValueError(
-            "cannot tag rows by file: duplicate data file basenames"
-        )
-    single_scan = (
-        bool(part_cols)
-        and len(by_part) > _UNION_BRANCH_CAP
-        and not collision
-        and "_dl_file" not in cols
-    )
-    if single_scan:
-        # ONE FileScan + broadcast map join, keyed on the scan's
-        # ``_metadata.file_name`` — a DETERMINISTIC scan output, so
-        # data-column filters still push through into the FileScan
-        # (``input_file_name()`` is classified non-deterministic and
-        # would block pushdown).
-        import pandas as pd
 
-        all_files = sorted(p for fs in by_part.values() for p in fs)
-        base = spark.read.schema(data_schema).parquet(*all_files)
-        extra = [F.col("_metadata.file_name").alias("_dl_file")]
-        if want_pos:
-            extra.append(F.col("_metadata.row_index").alias("_dl_dv_pos"))
-        base = base.select("*", *extra)
-        map_schema = ", ".join(
-            ["_dl_file string"] + [f"`{c}` string" for c in part_cols]
-        )
-        # Arrow-path createDataFrame: the map is driver-local and tiny
-        # relative to the scan; the pandas route plans a LocalTableScan
-        # instead of a Python-worker ExistingRDD.
-        pmap = spark.createDataFrame(
-            pd.DataFrame(
-                sorted(
-                    (b, *[pv.get(c) for c in part_cols])
-                    for b, pv in names.items()
-                ),
-                columns=["_dl_file", *part_cols],
-            ),
-            map_schema,
-        )
-        joined = base.join(F.broadcast(pmap), "_dl_file")
-        out_cols = [
-            F.col(c).cast(types[c]).alias(c) if c in part_cols else F.col(c)
-            for c in cols
-        ]
-        if want_tag:
-            out_cols.append(F.col("_dl_file"))
-        if want_pos:
-            out_cols.append(F.col("_dl_dv_pos"))
-        out = joined.select(*out_cols)
-    else:
+    def read(_files: list[str], want: list[str]) -> DataFrame:
         branches = []
-        for key, files in sorted(by_part.items(), key=lambda kv: str(kv[0])):
-            df = spark.read.schema(data_schema).parquet(*sorted(files))
-            for c, v in zip(part_cols, key):
-                # Partition values are serialized as strings in the log;
-                # cast through the declared type (None stays NULL).
-                df = df.withColumn(c, F.lit(v).cast(types[c]))
-            sel = [F.col(c) for c in cols]
-            if want_tag:
-                sel.append(F.col("_metadata.file_name").alias("_dl_file"))
-            if want_pos:
-                sel.append(F.col("_metadata.row_index").alias("_dl_dv_pos"))
-            df = df.select(*sel)
-            branches.append(df)
+        for key, fs in sorted(by_part.items(), key=lambda kv: str(kv[0])):
+            lits = dict(zip(part_cols, key))
+            branches.append(
+                spark.read.schema(data_schema).parquet(*fs).select(
+                    *[
+                        # the log's string serialization, cast through
+                        # the declared type (None stays NULL)
+                        F.lit(lits[f.name]).cast(f.dataType).alias(f.name)
+                        if f.name in lits else F.col(f.name)
+                        for f in schema.fields
+                    ],
+                    *tag_columns(want),
+                )
+            )
         out = branches[0]
         for b in branches[1:]:
             out = out.unionByName(b)
-    if want_dv:
-        deleted = _dv_relation(spark, path, dv_map)
-        total = sum(int(d.get("cardinality") or 0) for d in dv_map.values())
-        if total <= _DV_BROADCAST_CAP:
-            deleted = F.broadcast(deleted)
-        out = out.join(deleted, ["_dl_file", "_dl_dv_pos"], "left_anti")
-    if want_pos and not keep_pos:
-        out = out.drop("_dl_dv_pos")
-    if want_tag and not keep_file:
-        out = out.drop("_dl_file")
-    return out
+        return out
+
+    return scan_files(spark, files, schema, None, kills, tags, read)
 
 
 def _version_at_timestamp(path: str, ts) -> int:
@@ -1311,11 +1251,11 @@ def _dv_descriptor_df(spark: SparkSession, dv_map: dict[str, dict]):
         pd.DataFrame(
             rows,
             columns=[
-                "_dl_file", "_dv_st", "_dv_p", "_dv_off", "_dv_sz",
+                FILE, "_dv_st", "_dv_p", "_dv_off", "_dv_sz",
                 "_dv_card",
             ],
         ),
-        "_dl_file string, _dv_st string, _dv_p string, _dv_off long, "
+        f"{FILE} string, _dv_st string, _dv_p string, _dv_off long, "
         "_dv_sz long, _dv_card long",
     )
 
@@ -1324,7 +1264,7 @@ def _dv_relation(
     spark: SparkSession, path: str, dv_map: dict[str, dict]
 ) -> DataFrame:
     """Decode the deletion vectors EXECUTOR-side into a
-    ``(_dl_file, _dl_dv_pos)`` relation: the descriptors distribute
+    ``(FILE, POS)`` relation: the descriptors distribute
     across tasks and each task reads + decodes its files' bitmap
     bytes where it runs, so driver memory stays O(files) no matter
     how many positions the table carries."""
@@ -1352,12 +1292,12 @@ def _dv_relation(
                     chunk = pos[i : i + (1 << 20)]
                     yield pd.DataFrame(
                         {
-                            "_dl_file": [r["_dl_file"]] * len(chunk),
-                            "_dl_dv_pos": pd.array(chunk, dtype="int64"),
+                            FILE: [r[FILE]] * len(chunk),
+                            POS: pd.array(chunk, dtype="int64"),
                         }
                     )
 
-    return desc.mapInPandas(decode, "_dl_file string, _dl_dv_pos long")
+    return desc.mapInPandas(decode, f"{FILE} string, {POS} long")
 
 
 # ------------------------------------------------------------------ writer
@@ -3375,21 +3315,19 @@ def update_delta(
         )
     rels = sorted(snap.files)
     dv_map = _dv_map(path, snap, rels)
-    tagged = _logical_scan(spark, path, snap, rels, dv_map, keep_file=True)
+    tagged = _logical_scan(spark, path, snap, rels, dv_map, tags=(FILE,))
     # File basenames holding >=1 matched row.  The collect is bounded
     # by the table's active-file count (planning-sized state, the same
     # bound the snapshot replay itself carries), and for the intended
     # point/selective updates it is a handful of names.
     hit_names = {
-        r["_dl_file"]
-        for r in tagged.filter(condition).select("_dl_file").distinct().collect()
+        r[FILE]
+        for r in tagged.filter(condition).select(FILE).distinct().collect()
     }
     if not hit_names:
         return latest, 0
     hit_rels = [
-        rel
-        for rel in rels
-        if os.path.basename(urllib.parse.unquote(rel)) in hit_names
+        rel for rel, b in zip(rels, basenames(rels)) if b in hit_names
     ]
     types = {f.name: f.dataType for f in schema.fields}
     rows = _logical_scan(
@@ -3466,11 +3404,9 @@ def _dv_readds(
     """The re-adds of the files :func:`_stage_dv_bitmaps` gave a new
     vector, each carrying it, and the paths whose old (path, dv) the
     commit removes."""
-    rel_of = {
-        os.path.basename(urllib.parse.unquote(rel)): rel for rel in rels
-    }
-    written = sorted(written, key=lambda r: r["_dl_file"])
-    touched = [rel_of[r["_dl_file"]] for r in written]
+    rel_of = dict(zip(basenames(rels), rels))
+    written = sorted(written, key=lambda r: r[FILE])
+    touched = [rel_of[r[FILE]] for r in written]
     readds = [
         {"add": {**snap.files[rel],
                  "deletionVector": json.loads(r["descriptor"]),
@@ -3486,7 +3422,7 @@ def _stage_dv_bitmaps(
     """Write one merged deletion-vector bitmap per touched file,
     EXECUTOR-side (one ``applyInPandas`` group per file — the VERDICT
     r6 contract shared by DELETE and merge-on-read MERGE).  ``hits``
-    is ``(_dl_file, _dl_dv_pos)`` rows of NEWLY-dead positions,
+    is ``(FILE, POS)`` rows of NEWLY-dead positions,
     already disjoint from the old vectors because the scan they came
     from subtracted those.  Returns the collected per-file descriptor
     rows — O(touched files), never O(positions)."""
@@ -3496,7 +3432,7 @@ def _stage_dv_bitmaps(
     # group task decodes exactly that one bitmap where it runs
     if dv_map:
         hits = hits.join(
-            F.broadcast(_dv_descriptor_df(spark, dv_map)), "_dl_file", "left"
+            F.broadcast(_dv_descriptor_df(spark, dv_map)), FILE, "left"
         )
     else:
         hits = (
@@ -3509,7 +3445,7 @@ def _stage_dv_bitmaps(
     root = path
 
     def _write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        base = pdf["_dl_file"].iloc[0]
+        base = pdf[FILE].iloc[0]
         st = pdf["_dv_st"].iloc[0]
         old: list[int] = []
         if isinstance(st, str) and st:
@@ -3523,20 +3459,20 @@ def _stage_dv_bitmaps(
                     "cardinality": int(pdf["_dv_card"].iloc[0]),
                 },
             )
-        new = pdf["_dl_dv_pos"].astype("int64").tolist()
+        new = pdf[POS].astype("int64").tolist()
         # hits are disjoint from `old` (see docstring), so the union's
         # size is the simple sum
         merged = sorted(set(old) | set(new))
         dv = write_dv_file(root, merged)
         return pd.DataFrame(
-            [{"_dl_file": base, "n_new": len(set(new)),
+            [{FILE: base, "n_new": len(set(new)),
               "descriptor": json.dumps(dv)}]
         )
 
     return (
-        hits.groupBy("_dl_file")
+        hits.groupBy(FILE)
         .applyInPandas(
-            _write_group, "_dl_file string, n_new long, descriptor string"
+            _write_group, f"{FILE} string, n_new long, descriptor string"
         )
         .collect()  # O(touched files), never O(positions)
     )
@@ -3568,11 +3504,11 @@ def delete_where_delta(spark: SparkSession, path: str, condition) -> tuple[int, 
     rels = sorted(snap.files)
     dv_map = _dv_map(path, snap, rels)
     tagged = _logical_scan(
-        spark, path, snap, rels, dv_map, keep_file=True, keep_pos=True
+        spark, path, snap, rels, dv_map, tags=(FILE, POS)
     )
     written = _stage_dv_bitmaps(
         spark, path,
-        tagged.filter(condition).select("_dl_file", "_dl_dv_pos"),
+        tagged.filter(condition).select(FILE, POS),
         dv_map,
     )
     if not written:
@@ -3582,7 +3518,7 @@ def delete_where_delta(spark: SparkSession, path: str, condition) -> tuple[int, 
     if _cdf_enabled(snap):
         actions = _stage_cdc(
             tagged.filter(condition)
-            .drop("_dl_file", "_dl_dv_pos")
+            .drop(FILE, POS)
             .withColumn("_change_type", F.lit("delete")),
             snap, path,
         )
@@ -3628,12 +3564,12 @@ def _merge_delta_mor(  # gen_ident threaded from merge_delta's prep
     )
     tagged = _logical_scan(
         spark, path, snap, scan_rels, _dv_map(path, snap, scan_rels),
-        keep_file=True, keep_pos=True,
+        tags=(FILE, POS),
     )
     want_cdc = _cdf_enabled(snap)
     planned = plan_merge_mor(
         tagged, source, on, clauses, cols, types, target.select(*on),
-        ["_dl_file", "_dl_dv_pos"], want_changes=want_cdc,
+        [FILE, POS], want_changes=want_cdc,
         gen_ident=gen_ident,
     )
     touched, new_rows, stats = planned[0], planned[1], planned[2]
@@ -3778,7 +3714,7 @@ def merge_delta(
     ranges = source_key_bounds(source, on)
     rels = sorted(snap.files)
     dv_map = _dv_map(path, snap, rels)
-    target = _logical_scan(spark, path, snap, rels, dv_map, keep_file=True)
+    target = _logical_scan(spark, path, snap, rels, dv_map, tags=(FILE,))
     # hit files = rewrite set: files with source-matched rows (any
     # matched clause may touch them) ∪ files whose UNmatched rows some
     # by-source clause's condition actually hits — never the whole
@@ -3805,18 +3741,18 @@ def merge_delta(
             if cand_rels == rels
             else _logical_scan(
                 spark, path, snap, sorted(cand_rels),
-                _dv_map(path, snap, cand_rels), keep_file=True,
+                _dv_map(path, snap, cand_rels), tags=(FILE,),
             )
         )
         hit_probes.append(
-            cand.join(source.select(*on), on, "left_semi").select("_dl_file")
+            cand.join(source.select(*on), on, "left_semi").select(FILE)
         )
     if bysrc_cond is not None:
         hit_probes.append(
             target.alias("t")
             .join(source.select(*on), on, "left_anti")
             .filter(bysrc_cond)
-            .select("_dl_file")
+            .select(FILE)
         )
     hit_names: set[str] = set()
     if hit_probes:
@@ -3824,14 +3760,12 @@ def merge_delta(
         for p in hit_probes[1:]:
             probe = probe.unionByName(p)
         hit_names = {
-            r["_dl_file"]
+            r[FILE]
             for r in probe.distinct().collect()
             # bounded by the table's active-file count
         }
     hit_rels = [
-        rel
-        for rel in rels
-        if os.path.basename(urllib.parse.unquote(rel)) in hit_names
+        rel for rel, b in zip(rels, basenames(rels)) if b in hit_names
     ]
     hit_rows = _logical_scan(
         spark, path, snap, hit_rels, _dv_map(path, snap, hit_rels)
@@ -4142,7 +4076,7 @@ def _name_layers(units: list[tuple]) -> list[dict[str, tuple]]:
 
 def _file_map(layer: dict[str, tuple], value):
     """A map literal from each basename of ``layer`` to ``value(unit)``,
-    to be indexed by a ``_dl_file`` column."""
+    to be indexed by a ``FILE`` column."""
     return F.create_map(*[
         F.lit(x) for base, u in sorted(layer.items()) for x in (base, value(u))
     ])
@@ -4212,10 +4146,10 @@ def read_delta_changes(
     out_parts: list[DataFrame] = []
 
     def emit(df: DataFrame, layer: dict) -> None:
-        # physical columns + _change_type + _dl_file -> the output shape
+        # physical columns + _change_type + FILE -> the output shape
         df = df.withColumn(
             "_commit_version",
-            _file_map(layer, lambda u: u[1])[F.col("_dl_file")].cast("long"),
+            _file_map(layer, lambda u: u[1])[F.col(FILE)].cast("long"),
         )
         cols = (
             [f.name for f in schema.fields] if rename is None else [
@@ -4227,8 +4161,8 @@ def read_delta_changes(
 
     def scan(layer: dict, keep_pos: bool = False) -> DataFrame:
         # live rows (the files' own vectors subtracted) tagged with
-        # _dl_file; ``keep_pos`` keeps every position for the
-        # DV-transition joins instead
+        # FILE; ``keep_pos`` keeps every position, tagged with POS, for
+        # the DV-transition joins instead
         tmp = _Snapshot()
         tmp.metadata = state.metadata
         tmp.files = {u[0]: u[2] for u in layer.values()}
@@ -4236,7 +4170,7 @@ def read_delta_changes(
         return _scan_files(
             spark, path, tmp, rels, schema, part_cols,
             None if keep_pos else _dv_map(path, tmp, rels),
-            keep_file=True, keep_pos=keep_pos,
+            (FILE, POS) if keep_pos else (FILE,),
         )
 
     def positions(wanted: dict, minus: dict) -> DataFrame:
@@ -4248,7 +4182,7 @@ def read_delta_changes(
         if minus:
             out = out.join(
                 _dv_relation(spark, path, minus),
-                ["_dl_file", "_dl_dv_pos"], "left_anti",
+                [FILE, POS], "left_anti",
             )
         total = sum(int(d.get("cardinality") or 0) for d in wanted.values())
         return F.broadcast(out) if total <= _DV_BROADCAST_CAP else out
@@ -4258,10 +4192,12 @@ def read_delta_changes(
         # this writer's cdc files hold every column; a foreign
         # writer's hold the data columns, its partition values live in
         # the action and override the (null) file column
-        body = spark.read.schema(StructType(list(schema.fields) + [ct])).parquet(
-            *[os.path.join(path, urllib.parse.unquote(u[0]))
-              for _, u in sorted(layer.items())]
-        ).withColumn("_dl_file", F.col("_metadata.file_name"))
+        body = scan_files(
+            spark,
+            [os.path.join(path, urllib.parse.unquote(u[0]))
+             for _, u in sorted(layer.items())],
+            StructType(list(schema.fields) + [ct]), tags=(FILE,),
+        )
         foreign = {
             b: u for b, u in layer.items() if u[2].get("partitionValues")
         }
@@ -4272,8 +4208,8 @@ def read_delta_changes(
             body = body.withColumn(
                 pc,
                 F.when(
-                    F.map_contains_key(pvals, F.col("_dl_file")),
-                    pvals[F.col("_dl_file")].cast(types_[pc]),
+                    F.map_contains_key(pvals, F.col(FILE)),
+                    pvals[F.col(FILE)].cast(types_[pc]),
                 ).otherwise(F.col(pc)),
             )
         emit(body, layer)
@@ -4290,8 +4226,8 @@ def read_delta_changes(
             if wanted:
                 emit(
                     tagged.join(
-                        positions(wanted, minus), ["_dl_file", "_dl_dv_pos"]
-                    ).drop("_dl_dv_pos")
+                        positions(wanted, minus), [FILE, POS]
+                    ).drop(POS)
                     .withColumn("_change_type", F.lit(ctype)),
                     layer,
                 )
@@ -4573,7 +4509,7 @@ def read_delta_row_ids(spark: SparkSession, path: str) -> DataFrame:
         )
     rels = sorted(snap.files)
     rows = []
-    for rel in rels:
+    for rel, b in zip(rels, basenames(rels)):
         a = snap.files[rel]
         if a.get("baseRowId") is None:
             raise ValueError(
@@ -4581,35 +4517,31 @@ def read_delta_row_ids(spark: SparkSession, path: str) -> DataFrame:
                 "was written by a non-tracking writer after enablement"
             )
         rows.append(
-            (
-                os.path.basename(urllib.parse.unquote(rel)),
-                int(a["baseRowId"]),
-                int(a.get("defaultRowCommitVersion") or 0),
-            )
+            (b, int(a["baseRowId"]), int(a.get("defaultRowCommitVersion") or 0))
         )
     dv_map = _dv_map(path, snap, rels)
     tagged = _logical_scan(
-        spark, path, snap, rels, dv_map, keep_file=True, keep_pos=True
+        spark, path, snap, rels, dv_map, tags=(FILE, POS)
     )
     if not rows:
         return (
             tagged.withColumn("_row_id", F.lit(None).cast("long"))
             .withColumn("_row_commit_version", F.lit(None).cast("long"))
-            .drop("_dl_file", "_dl_dv_pos")
+            .drop(FILE, POS)
         )
     import pandas as pd
 
     m = spark.createDataFrame(
         pd.DataFrame(
-            sorted(rows), columns=["_dl_file", "_rt_base", "_rt_dcv"]
+            sorted(rows), columns=[FILE, "_rt_base", "_rt_dcv"]
         ),
-        "_dl_file string, _rt_base long, _rt_dcv long",
+        f"{FILE} string, _rt_base long, _rt_dcv long",
     )
     return (
-        tagged.join(F.broadcast(m), "_dl_file")
-        .withColumn("_row_id", F.col("_rt_base") + F.col("_dl_dv_pos"))
+        tagged.join(F.broadcast(m), FILE)
+        .withColumn("_row_id", F.col("_rt_base") + F.col(POS))
         .withColumn("_row_commit_version", F.col("_rt_dcv"))
-        .drop("_dl_file", "_dl_dv_pos", "_rt_base", "_rt_dcv")
+        .drop(FILE, POS, "_rt_base", "_rt_dcv")
     )
 
 
@@ -5165,50 +5097,34 @@ def convert_iceberg_to_delta(spark: SparkSession, src: str, dst: str) -> int:
         # union, then one executor-side bitmap write per touched file
         from .iceberg import (
             _apply_eq_deletes,
+            _live_deletes,
             _plan_scan,
             _pos_kill_rows,
         )
 
-        base_seq: dict[str, int] = {}
-        for r in data:
-            b = os.path.basename(urllib.parse.unquote(r["path"]))
-            if b in base_seq:
-                raise ValueError(
-                    "cannot convert: duplicate data file basenames in "
-                    "the iceberg snapshot"
-                )
-            base_seq[b] = r["seq"]
-        min_seq = min(r["seq"] for r in data) if data else 0
-        live_pos = [d for d in deletes if d["seq"] >= min_seq]
-        live_eq = [d for d in eq_deletes if d["seq"] > min_seq]
+        live_pos, live_eq = _live_deletes(data, deletes, eq_deletes)
         kills = None
         if live_pos:
-            kills = _pos_kill_rows(spark, live_pos, base_seq)
+            kills = _pos_kill_rows(spark, live_pos, data)
         if live_eq:
             tagged = _plan_scan(
                 spark, spark_schema, data, [], None, None,
-                schema_json, keep_file=True, keep_pos=True, meta=meta,
+                schema_json, tags=(FILE, POS), meta=meta,
             )
             eq_kills = _apply_eq_deletes(
-                spark, tagged, live_eq, data, base_seq, None,
-                schema_json, return_killed=True,
-            ).select("_ice_file", "_ice_pos")
+                spark, tagged, live_eq, data, None, schema_json,
+                return_killed=True,
+            ).select(FILE, POS)
             kills = (
                 eq_kills if kills is None else kills.unionByName(eq_kills)
             )
         if kills is not None:
             os.makedirs(dst, exist_ok=True)
             written = _stage_dv_bitmaps(
-                spark,
-                dst,
-                kills.dropDuplicates(["_ice_file", "_ice_pos"]).select(
-                    F.col("_ice_file").alias("_dl_file"),
-                    F.col("_ice_pos").alias("_dl_dv_pos"),
-                ),
-                None,
+                spark, dst, kills.dropDuplicates([FILE, POS]), None
             )
             dv_by_base = {
-                r["_dl_file"]: json.loads(r["descriptor"]) for r in written
+                r[FILE]: json.loads(r["descriptor"]) for r in written
             }
     now = int(time.time() * 1000)
     actions: list[dict] = [

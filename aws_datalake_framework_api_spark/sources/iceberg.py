@@ -16,8 +16,10 @@ this module implements the PUBLIC Iceberg table spec
   and the Java-compatible bounds encoding (array of key/value
   records for ``map<int, binary>``);
 - **positional deletes** (v2 merge-on-read): delete manifests
-  (content=1) → parquet delete files ``(file_path, pos)``, applied
-  as one distributed anti-join against ``_metadata.row_index`` with
+  (content=1) → parquet delete files ``(file_path, pos)``, decoded
+  by :func:`_pos_kill_rows` into the ``(FILE, POS)`` kills of the
+  shared tagged scan (:func:`.table_io.scan_files`, the one scan the
+  Delta connector's deletion vectors go through too) with
   sequence-number gating (a delete applies only to data files whose
   data sequence number is <= the delete's);
 - **commit**: put-if-absent on the next metadata version + atomic
@@ -74,7 +76,7 @@ import urllib.parse
 import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -101,11 +103,16 @@ from .readers import empty_frame, load_table
 from .table_io import (
     ORPHAN_AGE_FLOOR_MS,
     CommitConflict,
+    FILE,
+    POS,
+    basenames,
     commit_loop,
     footer_min_max,
     prune_by_bounds,
     put_if_absent,
+    scan_files,
     stage_parquet,
+    tag_columns,
 )
 
 # ---------------------------------------------------------------- type mapping
@@ -950,13 +957,13 @@ def _resolved_union(
     spark: SparkSession,
     files: list[str],
     res: dict,
-    tags: list[tuple[str, str]] | None = None,
+    tags: list[Column] = (),
 ) -> DataFrame:
     """One scan branch per distinct footer field-id mapping, each
     projected to the CURRENT schema (renamed columns re-aliased,
     columns the file predates filled with NULL, dropped columns simply
-    not selected).  ``tags`` appends ``_metadata`` pseudo-columns as
-    ``(alias, metadata_field)`` pairs — they must be selected inside
+    not selected).  ``tags`` appends ``_metadata`` pseudo-columns
+    (:func:`.table_io.tag_columns`) — they must be selected inside
     each branch, before any further join."""
     import pyarrow.parquet as pq
 
@@ -1025,10 +1032,9 @@ def _resolved_union(
                 proj.append(
                     F.lit(None).cast(_ice_to_spark(f["type"])).alias(f["name"])
                 )
-        for alias, mfield in tags or []:
-            proj.append(F.col(f"_metadata.{mfield}").alias(alias))
         branches.append(
-            spark.read.schema(read_schema).parquet(*sorted(gfiles)).select(*proj)
+            spark.read.schema(read_schema).parquet(*sorted(gfiles))
+            .select(*proj, *tags)
         )
     out = branches[0]
     for b in branches[1:]:
@@ -1272,6 +1278,24 @@ def _identity_const_plan(
     return const_cols, files
 
 
+def _live_deletes(
+    data: list[dict], deletes: list[dict], eq_deletes: list[dict]
+) -> tuple[list[dict], list[dict]]:
+    """The position and equality deletes that can apply to some file of
+    ``data``.  A position delete applies to data files whose data
+    sequence number is <= its own; an equality delete at sequence S
+    applies STRICTLY, only to files below S (the spec's rule that lets
+    an upsert's own appended rows survive the delete committed
+    alongside them)."""
+    if not data:
+        return [], []
+    min_seq = min(r["seq"] for r in data)
+    return (
+        [d for d in deletes if d["seq"] >= min_seq],
+        [d for d in eq_deletes if d["seq"] > min_seq],
+    )
+
+
 def _plan_scan(
     spark: SparkSession,
     spark_schema: StructType,
@@ -1280,236 +1304,97 @@ def _plan_scan(
     res: dict | None = None,
     eq_deletes: list[dict] | None = None,
     schema_json: dict | None = None,
-    keep_file: bool = False,
-    keep_pos: bool = False,
+    tags: tuple[str, ...] = (),
     meta: dict | None = None,
 ) -> DataFrame:
-    """``keep_file`` retains the ``_ice_file`` basename column in the
-    output — the MERGE rewrite-set planner attributes matched rows to
-    the files that must be rewritten through it; ``keep_pos`` also
-    retains ``_ice_pos`` (the changelog reader joins position-delete
-    deltas on both)."""
-    if not data:
-        out = empty_frame(spark, spark_schema)
-        if keep_file:
-            out = out.withColumn("_ice_file", F.lit(None).cast("string"))
-        if keep_pos:
-            out = out.withColumn("_ice_pos", F.lit(None).cast("long"))
-        return out
+    """The :func:`.table_io.scan_files` scan of the data files
+    ``data``, with this module's codec: identity-partition constants
+    (:func:`_identity_const_plan`), the field-id resolved reader on a
+    renamed table (:func:`_resolved_union`), sequence-gated position
+    deletes as ``(FILE, POS)`` kills (:func:`_pos_kill_rows`) and
+    equality deletes (:func:`_apply_eq_deletes`).  ``tags`` keeps
+    :data:`.table_io.FILE` / :data:`.table_io.POS` in the output: the
+    MERGE rewrite-set planner attributes matched rows to files through
+    FILE, and the changelog reader joins position-delete deltas on
+    both."""
     files = sorted({r["path"] for r in data})
-    inject = (
+    consts = (
         _identity_const_plan(meta, schema_json, data)
         if meta is not None and schema_json is not None
         else None
     )
-    # r11 (VERDICT r10 item #6): the renamed-column union now serves
-    # identity constants too (build() joins the broadcast basename→
-    # constants map on top of _resolved_union), so the r10 refusal on
-    # renamed converted/migrated tables is LIFTED — id-less foreign
-    # files resolve data columns through the unambiguous history
-    # name→id map and partition columns from manifest metadata.
-
-    def build(want_tags: bool) -> DataFrame:
-        tags = (
-            [("_ice_file", "file_name"), ("_ice_pos", "row_index")]
-            if want_tags
-            else None
+    # a renamed table resolves its files by field id; the constants
+    # map overrides the partition columns the union NULL-fills
+    read = None if res is None else (
+        lambda fs, t: _resolved_union(spark, fs, res, tag_columns(t))
+    )
+    live_pos, live_eq = _live_deletes(data, deletes, eq_deletes or [])
+    # No forced broadcast on the kills: position-delete files are
+    # DATA-sized at scale — AQE picks broadcast when they are small.
+    kills = _pos_kill_rows(spark, live_pos, data) if live_pos else None
+    if not live_eq:
+        return scan_files(
+            spark, files, spark_schema, consts, kills, tags, read
         )
-        if res is not None:
-            if inject is None:
-                return _resolved_union(spark, files, res, tags)
-            # renamed table over converted/migrated (or pruning-
-            # eligible) identity partitions: the union NULL-fills the
-            # partition columns (the files lack them and carry no
-            # ids), so overwrite them from the broadcast basename→
-            # constants map — the same §Column Projection service as
-            # the unrenamed single-scan branch below (r11, VERDICT
-            # r10 item #6)
-            import pandas as pd
-
-            const_cols, cmap = inject
-            utags = [("_ice_file", "file_name")] + (
-                [("_ice_pos", "row_index")] if want_tags else []
-            )
-            out = _resolved_union(spark, files, res, utags)
-            types_ = {f.name: f.dataType for f in spark_schema.fields}
-            pmap = spark.createDataFrame(
-                pd.DataFrame(
-                    sorted(
-                        (b, *[vals[c] for c in const_cols])
-                        for b, vals in cmap.items()
-                    ),
-                    columns=["_ice_file"]
-                    + [f"_ice_const_{i}" for i in range(len(const_cols))],
-                ),
-                ", ".join(
-                    ["_ice_file string"]
-                    + [
-                        f"_ice_const_{i} string"
-                        for i in range(len(const_cols))
-                    ]
-                ),
-            )
-            joined = out.join(F.broadcast(pmap), "_ice_file")
-            sel = []
-            for f in spark_schema.fields:
-                if f.name in const_cols:
-                    i = const_cols.index(f.name)
-                    sel.append(
-                        F.col(f"_ice_const_{i}")
-                        .cast(types_[f.name])
-                        .alias(f.name)
-                    )
-                else:
-                    sel.append(F.col(f.name))
-            if want_tags:
-                sel += [F.col("_ice_file"), F.col("_ice_pos")]
-            return joined.select(*sel)
-        if inject is not None:
-            # identity-partition sources come from the manifest's
-            # partition metadata (spec §Column Projection): ONE
-            # FileScan over the remaining columns + a broadcast
-            # basename→constants map join, keyed on the scan's
-            # deterministic ``_metadata.file_name`` so data-column
-            # pushdown survives — same shape as the Delta reader's
-            # single-scan partition injection.
-            import pandas as pd
-
-            const_cols, cmap = inject
-            scan_schema = StructType(
-                [f for f in spark_schema.fields if f.name not in const_cols]
-            )
-            types_ = {f.name: f.dataType for f in spark_schema.fields}
-            df = spark.read.schema(scan_schema).parquet(*files)
-            extra = [F.col("_metadata.file_name").alias("_ice_file")]
-            if want_tags:
-                extra.append(
-                    F.col("_metadata.row_index").alias("_ice_pos")
-                )
-            df = df.select("*", *extra)
-            pmap = spark.createDataFrame(
-                pd.DataFrame(
-                    sorted(
-                        (b, *[vals[c] for c in const_cols])
-                        for b, vals in cmap.items()
-                    ),
-                    columns=["_ice_file", *const_cols],
-                ),
-                ", ".join(
-                    ["_ice_file string"]
-                    + [f"`{c}` string" for c in const_cols]
-                ),
-            )
-            joined = df.join(F.broadcast(pmap), "_ice_file")
-            out_cols = [
-                F.col(c).cast(types_[c]).alias(c)
-                if c in const_cols
-                else F.col(c)
-                for c in [f.name for f in spark_schema.fields]
-            ]
-            if want_tags:
-                out_cols += [F.col("_ice_file"), F.col("_ice_pos")]
-            return joined.select(*out_cols)
-        df = spark.read.schema(spark_schema).parquet(*files)
-        if want_tags:
-            df = df.select(
-                "*",
-                F.col("_metadata.file_name").alias("_ice_file"),
-                F.col("_metadata.row_index").alias("_ice_pos"),
-            )
-        return df
-
-    min_seq = min(r["seq"] for r in data)
-    live_deletes = [d for d in deletes if d["seq"] >= min_seq]
-    # equality deletes gate STRICTLY: a delete at sequence S removes
-    # matching rows only from data files with data sequence < S (the
-    # spec's rule that lets an upsert's own appended rows survive the
-    # delete committed alongside them)
-    live_eq = [d for d in (eq_deletes or []) if d["seq"] > min_seq]
-    if not live_deletes and not live_eq:
-        if keep_file or keep_pos:
-            out = build(True)
-            if not keep_file:
-                out = out.drop("_ice_file")
-            if not keep_pos:
-                out = out.drop("_ice_pos")
-            return out
-        return build(False)
-    # Basenames key both joins (full paths differ between the writer's
-    # URI form and the local scan's); a collision would misattribute
-    # deletes — refuse, like the Delta DV path.
-    base_seq: dict[str, int] = {}
-    for r in data:
-        b = os.path.basename(urllib.parse.unquote(r["path"]))
-        if b in base_seq:
-            raise ValueError(
-                "cannot apply deletes: duplicate data file basenames"
-            )
-        base_seq[b] = r["seq"]
-    tagged = build(True)
-    if live_deletes:
-        del_rows = _pos_kill_rows(spark, live_deletes, base_seq)
-        # No forced broadcast on the delete rows: position-delete files
-        # are DATA-sized at scale (unlike the planning-sized seq maps
-        # inside the helper) — AQE picks broadcast when they happen to
-        # be small.
-        tagged = tagged.join(del_rows, ["_ice_file", "_ice_pos"], "left_anti")
-    if live_eq:
-        tagged = _apply_eq_deletes(
-            spark, tagged, live_eq, data, base_seq, res, schema_json
-        )
-    drop = []
-    if not keep_file:
-        drop.append("_ice_file")
-    if not keep_pos:
-        drop.append("_ice_pos")
+    tagged = _apply_eq_deletes(
+        spark,
+        scan_files(
+            spark, files, spark_schema, consts, kills, (FILE, POS), read
+        ),
+        live_eq, data, res, schema_json,
+    )
+    drop = [t for t in (FILE, POS) if t not in tags]
     return tagged.drop(*drop) if drop else tagged
 
 
 def _pos_kill_rows(
-    spark: SparkSession, live_deletes: list[dict], base_seq: dict[str, int]
+    spark: SparkSession, live_deletes: list[dict], data: list[dict]
 ) -> DataFrame:
-    """``(_ice_file, _ice_pos)`` rows the position-delete files KILL,
-    sequence-gated (a delete applies to files whose data sequence <=
-    the delete's) and basename-keyed — the scan subtraction in
-    :func:`_plan_scan` and the DV materialization in
-    ``convert_iceberg_to_delta`` (sources/delta.py) share this.
-    Delete rows name their target file as a full URI; normalize to
-    basename.  The scan of delete files is DISTRIBUTED — at scale
-    positional-delete files are data-sized, never driver state."""
+    """``(FILE, POS)`` rows the position-delete files KILL in the data
+    files ``data``, sequence-gated (a delete applies to files whose
+    data sequence <= the delete's) and basename-keyed — the scan
+    subtraction in :func:`_plan_scan`, the changelog reader and the DV
+    materialization in ``convert_iceberg_to_delta`` (sources/delta.py)
+    share this.  Delete rows name their target file as a full URI;
+    normalize to basename.  The scan of delete files is DISTRIBUTED —
+    at scale positional-delete files are data-sized, never driver
+    state."""
     import pandas as pd
 
+    dfiles = sorted({d["path"] for d in live_deletes})
     dseq = spark.createDataFrame(
         pd.DataFrame(
-            sorted(
-                (os.path.basename(urllib.parse.unquote(d["path"])), d["seq"])
-                for d in live_deletes
-            ),
-            columns=["_ice_dfile", "_ice_dseq"],
+            sorted(zip(basenames(d["path"] for d in live_deletes),
+                       (d["seq"] for d in live_deletes))),
+            columns=[FILE, "_ice_dseq"],
         ),
-        "_ice_dfile string, _ice_dseq long",
+        f"{FILE} string, _ice_dseq long",
     )
     dmap = spark.createDataFrame(
         pd.DataFrame(
-            sorted(base_seq.items()), columns=["_ice_file", "_ice_seq"]
+            sorted(zip(basenames(r["path"] for r in data),
+                       (r["seq"] for r in data))),
+            columns=[FILE, "_ice_seq"],
         ),
-        "_ice_file string, _ice_seq long",
+        f"{FILE} string, _ice_seq long",
     )
-    dfiles = sorted({d["path"] for d in live_deletes})
+    # FILE names the delete file until the join with its sequence
+    # number, then the data file its row targets
     return (
-        spark.read.schema("file_path string, pos long").parquet(*dfiles)
-        .withColumn(
-            "_ice_dfile",
-            F.element_at(F.split(F.col("_metadata.file_name"), "/"), -1),
+        scan_files(
+            spark, dfiles,
+            StructType([StructField("file_path", StringType()),
+                        StructField("pos", LongType())]),
+            tags=(FILE,),
         )
-        .join(F.broadcast(dseq), "_ice_dfile")
+        .join(F.broadcast(dseq), FILE)
         .withColumn(
-            "_ice_file",
+            FILE,
             F.url_decode(F.element_at(F.split(F.col("file_path"), "/"), -1)),
         )
-        .join(F.broadcast(dmap), "_ice_file")
+        .join(F.broadcast(dmap), FILE)
         .filter(F.col("_ice_dseq") >= F.col("_ice_seq"))
-        .select("_ice_file", F.col("pos").alias("_ice_pos"))
+        .select(FILE, F.col("pos").alias(POS))
     )
 
 
@@ -1518,7 +1403,6 @@ def _apply_eq_deletes(
     tagged: DataFrame,
     live_eq: list[dict],
     data: list[dict],
-    base_seq: dict[str, int],
     res: dict | None,
     schema_json: dict | None,
     return_killed: bool = False,
@@ -1551,18 +1435,14 @@ def _apply_eq_deletes(
     smap = spark.createDataFrame(
         pd.DataFrame(
             sorted(
-                (
-                    os.path.basename(urllib.parse.unquote(r["path"])),
-                    r["seq"],
-                    _part_key(r.get("partition")),
-                )
-                for r in data
+                (b, r["seq"], _part_key(r.get("partition")))
+                for b, r in zip(basenames(r["path"] for r in data), data)
             ),
-            columns=["_ice_file", "_ice_seq", "_ice_part"],
+            columns=[FILE, "_ice_seq", "_ice_part"],
         ),
-        "_ice_file string, _ice_seq long, _ice_part string",
+        f"{FILE} string, _ice_seq long, _ice_part string",
     )
-    tagged = tagged.join(F.broadcast(smap), "_ice_file")
+    tagged = tagged.join(F.broadcast(smap), FILE)
     killed = None
     groups: dict[tuple, list[dict]] = {}
     for d in live_eq:
@@ -1581,27 +1461,19 @@ def _apply_eq_deletes(
         dmeta = spark.createDataFrame(
             pd.DataFrame(
                 sorted(
-                    (
-                        os.path.basename(urllib.parse.unquote(d["path"])),
-                        d["seq"],
-                        _part_key(d.get("partition")),
-                    )
-                    for d in recs
+                    (b, d["seq"], _part_key(d.get("partition")))
+                    for b, d in zip(basenames(d["path"] for d in recs), recs)
                 ),
-                columns=["_eq_dfile", "_eq_dseq", "_eq_dpart"],
+                columns=[FILE, "_eq_dseq", "_eq_dpart"],
             ),
-            "_eq_dfile string, _eq_dseq long, _eq_dpart string",
+            f"{FILE} string, _eq_dseq long, _eq_dpart string",
         )
         dfiles = sorted({d["path"] for d in recs})
         # Delete rows scan DISTRIBUTED (a CDC stream's delete files are
         # data-sized); AQE broadcasts them when they happen to be small.
         dr = (
-            spark.read.schema(sub_schema).parquet(*dfiles)
-            .withColumn(
-                "_eq_dfile",
-                F.element_at(F.split(F.col("_metadata.file_name"), "/"), -1),
-            )
-            .join(F.broadcast(dmeta), "_eq_dfile")
+            scan_files(spark, dfiles, sub_schema, tags=(FILE,))
+            .join(F.broadcast(dmeta), FILE)
             .select(
                 *[F.col(c).alias(f"_eq_{c}") for c in cols],
                 "_eq_dseq",
@@ -1624,7 +1496,7 @@ def _apply_eq_deletes(
     if return_killed:
         if killed is None:
             killed = tagged.limit(0)
-        return killed.dropDuplicates(["_ice_file", "_ice_pos"]).drop(
+        return killed.dropDuplicates([FILE, POS]).drop(
             "_ice_seq", "_ice_part"
         )
     return tagged.drop("_ice_seq", "_ice_part")
@@ -1770,11 +1642,11 @@ def read_iceberg_changes(
     hi = len(snaps) if ending_snapshot_id is None else _index(
         ending_snapshot_id, "ending") + 1
 
-    def scan(data, deletes, eq_deletes, tagged=False):
+    def scan(data, deletes, eq_deletes, tags=()):
         return _plan_scan(
             spark, spark_schema, data, deletes, res,
-            eq_deletes=eq_deletes, schema_json=schema_json, meta=meta,
-            keep_file=tagged, keep_pos=tagged,
+            eq_deletes=eq_deletes, schema_json=schema_json, tags=tags,
+            meta=meta,
         )
 
     out = None
@@ -1790,30 +1662,26 @@ def read_iceberg_changes(
         if carried and (step["new_pos"] or step["new_eq"]):
             # the carried files' rows live before the snapshot, tagged
             # so the new delete files' kills can be picked out of them
-            tagged = scan(carried, prev_pos, prev_eq, tagged=True)
-            base_seq = {
-                os.path.basename(urllib.parse.unquote(r["path"])): r["seq"]
-                for r in carried
-            }
+            tagged = scan(carried, prev_pos, prev_eq, (FILE, POS))
             if step["new_pos"]:
                 hit = tagged.join(
-                    _pos_kill_rows(spark, step["new_pos"], base_seq),
-                    ["_ice_file", "_ice_pos"], "left_semi",
+                    _pos_kill_rows(spark, step["new_pos"], carried),
+                    [FILE, POS], "left_semi",
                 )
                 if step["new_eq"]:
                     # a row the new equality deletes kill too is
                     # emitted once, by the equality part below
                     hit = _apply_eq_deletes(
-                        spark, hit, step["new_eq"], carried, base_seq,
-                        res, schema_json,
+                        spark, hit, step["new_eq"], carried, res,
+                        schema_json,
                     )
-                deletes.append(hit.drop("_ice_file", "_ice_pos"))
+                deletes.append(hit.drop(FILE, POS))
             if step["new_eq"]:
                 deletes.append(
                     _apply_eq_deletes(
-                        spark, tagged, step["new_eq"], carried, base_seq,
-                        res, schema_json, return_killed=True,
-                    ).drop("_ice_file", "_ice_pos")
+                        spark, tagged, step["new_eq"], carried, res,
+                        schema_json, return_killed=True,
+                    ).drop(FILE, POS)
                 )
         lit_s = F.lit(int(snap["snapshot-id"])).cast("long")
         for ct, parts in (("insert", inserts), ("delete", deletes)):
@@ -3181,33 +3049,28 @@ def delete_iceberg_rows(spark: SparkSession, path: str, condition) -> int:
 
         tagged = _plan_scan(
             spark, spark_schema, data, [], None,
-            schema_json=schema_json, keep_file=True, keep_pos=True,
-            meta=meta,
+            schema_json=schema_json, tags=(FILE, POS), meta=meta,
         )
         full = spark.createDataFrame(
             pd.DataFrame(
-                sorted(
-                    (
-                        os.path.basename(urllib.parse.unquote(p)),
-                        urllib.parse.unquote(p),
-                    )
-                    for p in files
-                ),
-                columns=["_ice_file", "file_path"],
+                sorted(zip(basenames(files),
+                           map(urllib.parse.unquote, files))),
+                columns=[FILE, "file_path"],
             ),
-            "_ice_file string, file_path string",
+            f"{FILE} string, file_path string",
         )
         hits = (
             tagged.filter(condition)
-            .join(F.broadcast(full), "_ice_file")
-            .select("file_path", F.col("_ice_pos").alias("pos"))
+            .join(F.broadcast(full), FILE)
+            .select("file_path", F.col(POS).alias("pos"))
         )
     else:
         # renamed table: the condition names CURRENT columns — a
         # by-name scan would silently miss rows in pre-rename files
         tagged = _resolved_union(
             spark, files, res,
-            [("file_path", "file_path"), ("pos", "row_index")],
+            [F.col("_metadata.file_path").alias("file_path"),
+             F.col("_metadata.row_index").alias("pos")],
         )
         hits = tagged.filter(condition).select("file_path", "pos")
     del_files = _stage_pos_delete(spark, path, hits)
@@ -3420,7 +3283,8 @@ def upsert_iceberg(
             # renamed table: resolve pre-rename files by field id
             tagged = _resolved_union(
                 spark, files, res,
-                [("file_path", "file_path"), ("pos", "row_index")],
+                [F.col("_metadata.file_path").alias("file_path"),
+             F.col("_metadata.row_index").alias("pos")],
             )
         hits = tagged.join(source.select(*on), on, "left_semi").select(
             "file_path", "pos"
@@ -4638,7 +4502,7 @@ def merge_iceberg(
     # rows must neither count as matched nor resurrect in a rewrite
     live = _plan_scan(
         spark, spark_schema, data, deletes, res,
-        eq_deletes=eq_deletes, schema_json=schema_json, keep_file=True,
+        eq_deletes=eq_deletes, schema_json=schema_json, tags=(FILE,),
         meta=meta,
     )
     # matched candidates: the files that may hold a source key
@@ -4662,11 +4526,11 @@ def merge_iceberg(
         tagged = _plan_scan(
             spark, spark_schema, scan_recs, deletes, res,
             eq_deletes=eq_deletes, schema_json=schema_json, meta=meta,
-            keep_file=True, keep_pos=True,
+            tags=(FILE, POS),
         )
         touched, new_rows, stats = plan_merge_mor(
             tagged, source, on, clauses, cols, types, live.select(*on),
-            ["_ice_file", "_ice_pos"],
+            [FILE, POS],
         )
         if not (stats["updated"] or stats["deleted"] or stats["inserted"]):
             # zero-change merge still ADVANCES a txn watermark, as a
@@ -4686,17 +4550,14 @@ def merge_iceberg(
             # position deletes name files by FULL path; the tags carry
             # basenames — resolve through a broadcast map bounded by
             # the scanned-file count (metadata-scale)
+            paths = [r["path"] for r in scan_recs]
             path_map = spark.createDataFrame(
-                [
-                    (os.path.basename(urllib.parse.unquote(r["path"])),
-                     r["path"])
-                    for r in scan_recs
-                ],
-                "_ice_file string, file_path string",
+                list(zip(basenames(paths), paths)),
+                f"{FILE} string, file_path string",
             )
-            hits = touched.join(
-                F.broadcast(path_map), "_ice_file"
-            ).select("file_path", F.col("_ice_pos").alias("pos"))
+            hits = touched.join(F.broadcast(path_map), FILE).select(
+                "file_path", F.col(POS).alias("pos")
+            )
             del_files = _stage_pos_delete(spark, path, hits)
             if del_files:
                 new_manifests.append(
@@ -4745,20 +4606,18 @@ def merge_iceberg(
             else _plan_scan(
                 spark, spark_schema, cand, deletes, res,
                 eq_deletes=eq_deletes, schema_json=schema_json, meta=meta,
-                keep_file=True,
+                tags=(FILE,),
             )
         )
         hit_probes.append(
-            cand_live.join(source.select(*on), on, "left_semi").select(
-                "_ice_file"
-            )
+            cand_live.join(source.select(*on), on, "left_semi").select(FILE)
         )
     if data and bysrc_cond is not None:
         hit_probes.append(
             live.alias("t")
             .join(source.select(*on), on, "left_anti")
             .filter(bysrc_cond)
-            .select("_ice_file")
+            .select(FILE)
         )
     hit_names: set[str] = set()
     if hit_probes:
@@ -4766,18 +4625,13 @@ def merge_iceberg(
         for p in hit_probes[1:]:
             probe = probe.unionByName(p)
         hit_names = {
-            r["_ice_file"]
+            r[FILE]
             for r in probe.distinct().collect()
             # bounded by the table's active-file count
         }
-    hit = [
-        r for r in data
-        if os.path.basename(urllib.parse.unquote(r["path"])) in hit_names
-    ]
-    kept = [
-        r for r in data
-        if os.path.basename(urllib.parse.unquote(r["path"])) not in hit_names
-    ]
+    hit, kept = [], []
+    for r, b in zip(data, basenames(r["path"] for r in data)):
+        (hit if b in hit_names else kept).append(r)
     hit_rows = _plan_scan(
         spark, spark_schema, hit, deletes, res,
         eq_deletes=eq_deletes, schema_json=schema_json, meta=meta,
@@ -5584,19 +5438,12 @@ def _delta_commit_to_iceberg(
         )
     import urllib.parse as _up
 
+    # DV positions and partition tuples key by basename below
+    rels = sorted(snap.files)
+    names = basenames(rels)
     dv_map: dict[str, dict] = {}
-    basenames: set[str] = set()
-    for rel, a in snap.files.items():
-        b = os.path.basename(_up.unquote(rel))
-        if b in basenames:
-            # DV positions and partition tuples key by basename below;
-            # a collision would misattribute them — refuse loudly
-            raise ValueError(
-                "cannot convert: duplicate data file basenames in the "
-                "delta snapshot"
-            )
-        basenames.add(b)
-        dv = a.get("deletionVector")
+    for rel, b in zip(rels, names):
+        dv = snap.files[rel].get("deletionVector")
         if dv and int(dv.get("cardinality") or 0) != 0:
             dv_map[b] = dv
     from pyspark.sql.types import StructType as _ST
@@ -5807,21 +5654,18 @@ def _delta_commit_to_iceberg(
 
         from .delta import _dv_relation
 
-        abs_of = sorted(
-            (
-                os.path.basename(_up.unquote(rel)),
-                os.path.abspath(os.path.join(src, _up.unquote(rel))),
-            )
-            for rel in snap.files
-        )
+        abs_of = sorted(zip(names, [
+            os.path.abspath(os.path.join(src, _up.unquote(rel)))
+            for rel in rels
+        ]))
         amap = spark.createDataFrame(
-            _pd.DataFrame(abs_of, columns=["_dl_file", "file_path"]),
-            "_dl_file string, file_path string",
+            _pd.DataFrame(abs_of, columns=[FILE, "file_path"]),
+            f"{FILE} string, file_path string",
         )
         hits = (
             _dv_relation(spark, src, dv_map)
-            .join(F.broadcast(amap), "_dl_file")
-            .select("file_path", F.col("_dl_dv_pos").alias("pos"))
+            .join(F.broadcast(amap), FILE)
+            .select("file_path", F.col(POS).alias("pos"))
         )
         del_files = _stage_pos_delete(
             spark, dst, hits, subdir=delete_subdir

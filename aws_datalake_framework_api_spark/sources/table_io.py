@@ -1,5 +1,5 @@
-"""Format-neutral file I/O, the one commit loop and the one key-range
-pruner under the Delta and Iceberg connectors.
+"""Format-neutral file I/O, the one tagged scan, the one commit loop
+and the one key-range pruner under the Delta and Iceberg connectors.
 
 Both formats publish data the same way: Spark writes parquet into a
 scratch directory, the part files move under the table's own names,
@@ -10,9 +10,19 @@ the one :class:`CommitConflict`, and the one commit loop,
 :func:`commit_loop`: claim, rebase or refuse, and unlink what a
 refused commit staged.  Range reads and merges in both formats skip
 files through the one key-range pruner, :func:`prune_by_bounds`.
-:mod:`.delta` and :mod:`.iceberg` keep only their codecs (Delta
-``add``/``cdc`` actions with JSON stats, Iceberg ``data_file``
-records with binary bounds) and their claim and rebase steps.
+
+Both formats read the same way too: one parquet scan over the live
+files, per-file constants (Delta ``partitionValues``, Iceberg
+identity-partition values) joined from a broadcast basename map, rows
+tagged with their file and position (:data:`FILE`, :data:`POS`), and
+the positions a deletion vector or position delete kills removed by
+one ``(FILE, POS)`` anti-join.  :func:`scan_files` is that scan and
+:func:`basenames` its one rule: rows are keyed on the file's basename,
+so two live files sharing one are refused.  :mod:`.delta` and
+:mod:`.iceberg` keep only their codecs (Delta ``add``/``cdc`` actions
+with JSON stats, ``partitionValues`` and deletion-vector descriptors;
+Iceberg ``data_file`` records with binary bounds, identity constants
+and sequence-gated deletes) and their claim and rebase steps.
 
 A file that no commit names is either staged by a writer still in
 flight or left by one that crashed.  :data:`ORPHAN_AGE_FLOOR_MS` is
@@ -35,7 +45,11 @@ import urllib.parse
 import uuid
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .readers import empty_frame
 
 
 class CommitConflict(RuntimeError):
@@ -63,6 +77,113 @@ COMMIT_ATTEMPTS = 5
 #: delta-spark guards with retentionDurationCheck and iceberg-spark
 #: with ``deleteOrphanFiles(olderThan)``.
 ORPHAN_AGE_FLOOR_MS = 3600 * 1000
+
+
+#: The tags a scan puts on its rows: the data file's basename and the
+#: row's position in it (the scan's ``_metadata.file_name`` and
+#: ``_metadata.row_index``, deterministic outputs, so filters still
+#: push into the scan).
+FILE, POS = "_lake_file", "_lake_pos"
+_METADATA = {FILE: "file_name", POS: "row_index"}
+
+
+def basenames(paths: Iterable[str]) -> list[str]:
+    """The unquoted basename of each data file, in order.  Tags,
+    per-file constants and ``(FILE, POS)`` kills key rows on it, so
+    two files sharing one would attribute rows to the wrong file:
+    raise instead."""
+    out = [os.path.basename(urllib.parse.unquote(p)) for p in paths]
+    if len(set(out)) != len(out):
+        raise ValueError(
+            "cannot attribute rows to files: duplicate data file "
+            "basenames (rewrite the table's files under unique names)"
+        )
+    return out
+
+
+def tag_columns(tags: Iterable[str]) -> list[Column]:
+    """The columns of ``tags`` (a subset of :data:`FILE`, :data:`POS`),
+    in that order.  Select them on the parquet scan itself, before any
+    join: ``_metadata`` resolves only against the scan relation."""
+    tags = set(tags)
+    return [
+        F.col(f"_metadata.{_METADATA[t]}").alias(t)
+        for t in (FILE, POS) if t in tags
+    ]
+
+
+def scan_files(
+    spark: SparkSession,
+    files: list[str],
+    schema: StructType,
+    consts: tuple[list[str], dict[str, dict]] | None = None,
+    kills: DataFrame | None = None,
+    tags: Iterable[str] = (),
+    read: Callable[[list[str], list[str]], DataFrame] | None = None,
+) -> DataFrame:
+    """Scan the parquet ``files`` (absolute paths) as ``schema``, plus
+    the ``tags`` asked for.  No files gives no rows.
+
+    ``consts`` is ``(cols, {basename: {col: wire string}})``: the
+    ``cols`` of ``schema`` served per file from one broadcast map,
+    joined on :data:`FILE` and cast through ``schema``.  ``kills`` is a
+    ``(FILE, POS)`` frame of dead rows, removed by one left-anti join;
+    the caller decides whether to broadcast it.  ``read(files, tags)``
+    returns the files' rows with the ``tags`` selected on the scan
+    (:func:`tag_columns`); by default one ``FileScan`` of the columns
+    ``consts`` does not serve.  Any use of :data:`FILE` checks
+    :func:`basenames`."""
+    tags = set(tags)
+    cols, cmap = consts or ([], {})
+    want = [
+        t for t in (FILE, POS)
+        if t in tags or kills is not None or (t == FILE and cols)
+    ]
+    if not files:
+        out = empty_frame(spark, schema)
+        for t in (FILE, POS):
+            if t in tags:
+                out = out.withColumn(
+                    t, F.lit(None).cast("string" if t == FILE else "long")
+                )
+        return out
+    if FILE in want:
+        basenames(files)
+    if read is None:
+        data = StructType([f for f in schema.fields if f.name not in cols])
+
+        def read(fs: list[str], t: list[str]) -> DataFrame:
+            df = spark.read.schema(data).parquet(*fs)
+            return df.select("*", *tag_columns(t)) if t else df
+
+    out = read(files, want)
+    if cols:
+        import pandas as pd
+
+        # Arrow-path createDataFrame: the map is driver-local and tiny
+        # next to the scan, and plans as a LocalRelation
+        pmap = spark.createDataFrame(
+            pd.DataFrame(
+                sorted((b, *[v.get(c) for c in cols]) for b, v in cmap.items()),
+                columns=[FILE, *cols],
+            ),
+            ", ".join([f"{FILE} string"] + [f"`{c}` string" for c in cols]),
+        )
+        # a reader that yields the constant columns too (Iceberg's
+        # renamed-column union fills them with NULL) gives them up here
+        out = out.drop(*[c for c in cols if c in out.columns])
+        out = out.join(F.broadcast(pmap), FILE).select(
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                if f.name in cols else F.col(f.name)
+                for f in schema.fields
+            ],
+            *want,
+        )
+    if kills is not None:
+        out = out.join(kills, [FILE, POS], "left_anti")
+    drop = [t for t in want if t not in tags]
+    return out.drop(*drop) if drop else out
 
 
 def commit_loop(

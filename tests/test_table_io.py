@@ -5,7 +5,9 @@ directory and commits nothing, both connectors raise one
 leaves no file that no version names, maintenance spares a commit in
 flight, both connectors' bounds codecs prune the same files through
 the one interval test, both merges refuse a duplicate-key source with
-one message, and the driver-memory default fits the host."""
+one message, both connectors read through the one tagged scan and
+refuse two live files sharing a basename, and the driver-memory
+default fits the host."""
 
 import datetime
 import errno
@@ -459,3 +461,118 @@ def test_merge_refuses_a_source_with_duplicate_keys(spark, tmp_path, fmt):
         "would match more than one source row"
     )
     assert versions(path) == before
+
+
+def test_basenames_unquote_and_refuse_a_collision():
+    assert table_io.basenames(["/t/a%20b.parquet", "file:/t/p=1/c.parquet"]) == [
+        "a b.parquet", "c.parquet"
+    ]
+    with pytest.raises(ValueError, match="duplicate data file basenames"):
+        table_io.basenames(["/t/p=1/f.parquet", "/t/p=2/f.parquet"])
+
+
+def _delta_dup(spark, path):
+    """Commit an add of a hardlink of one live file, under ``dup/``."""
+    snap, v = D._snapshot(spark, path)
+    rel = sorted(snap.files)[0]
+    src = os.path.join(path, urllib.parse.unquote(rel))
+    os.makedirs(os.path.join(path, "dup"))
+    os.link(src, os.path.join(path, "dup", os.path.basename(src)))
+    add = {k: x for k, x in snap.files[rel].items() if k != "deletionVector"}
+    add.update(path="dup/" + os.path.basename(rel), dataChange=True)
+    D._commit(path, v + 1, [{"add": add}])
+
+
+def _iceberg_dup(spark, path):
+    """Commit an append of a hardlink of one live data file, under
+    ``dup/``; returns the original file's path."""
+    meta = I._load_metadata(path)
+    schema_json = I._current_schema(meta)
+    data, _pos, _eq = I._manifest_entries(
+        path, meta, I._snapshot_by_id(meta, None)
+    )
+    r = data[0]
+    dst = os.path.join(path, "dup", os.path.basename(r["path"]))
+    os.makedirs(os.path.dirname(dst))
+    os.link(r["path"], dst)
+    entry = {
+        "status": 1, "snapshot_id": None, "sequence_number": None,
+        "file_sequence_number": None,
+        "data_file": {
+            "content": 0, "file_path": dst, "file_format": "PARQUET",
+            "partition": r["partition"], "record_count": r["record_count"],
+            "file_size_in_bytes": os.path.getsize(dst),
+            "lower_bounds": None, "upper_bounds": None,
+        },
+    }
+    manifest = I._write_manifest(
+        path, [entry], I._spec_from_meta(meta, schema_json), 0, "data",
+        schema_json, spec_id=int(r["spec_id"]),
+    )
+    I._commit_snapshot(
+        path, meta, [manifest], I._carry_manifests(path, meta), "append"
+    )
+    return r["path"]
+
+
+_SCANS = {
+    "delta": (D.read_delta, D.delete_where_delta, _delta_dup),
+    "iceberg": (I.read_iceberg, I.delete_iceberg_rows, _iceberg_dup),
+}
+
+
+@pytest.mark.parametrize("n_parts", [3, 40])
+@pytest.mark.parametrize("fmt", sorted(_SCANS))
+def test_shared_scan_in_both_codecs(spark, tmp_path, fmt, n_parts):
+    """Both connectors read through the one tagged scan: partition
+    values served per file, one row removed by a deletion vector or a
+    position delete, one FileScan over the data past Delta's union
+    cap, and one refusal when two live files share a basename."""
+    write = _WRITERS[fmt][0]
+    read, delete, dup = _SCANS[fmt]
+    path = str(tmp_path / "t")
+    rows = [(k, f"p{k % n_parts}", float(k)) for k in range(2 * n_parts)]
+    write(_df(spark, rows), path, mode="error", partition_by=["part"])
+    delete(spark, path, F.col("k") == 1)
+    back = read(spark, path)
+    assert _rows(back.select("k", "part", "v")) == sorted(
+        r for r in rows if r[0] != 1
+    )
+    if n_parts > D._UNION_BRANCH_CAP:
+        plan = back._jdf.queryExecution().executedPlan().toString()
+        data_scans = [
+            line for line in plan.splitlines()
+            if "FileScan parquet" in line and "file_path" not in line
+        ]
+        assert len(data_scans) == 1
+        assert "Union" not in plan
+    dup(spark, path)
+    with pytest.raises(ValueError, match="duplicate data file basenames"):
+        read(spark, path).collect()
+
+
+def test_changelog_refuses_two_carried_files_with_one_basename(
+    spark, tmp_path
+):
+    """A new position delete is attributed to a carried file by
+    basename; two carried files sharing one would both emit a delete
+    row for the killed position, so the changelog refuses."""
+    path = str(tmp_path / "t")
+    I.write_iceberg(
+        _df(spark, [(1, "a", 1.0), (2, "a", 2.0)]).coalesce(1), path,
+        mode="error",
+    )
+    first = _iceberg_dup(spark, path)
+    meta = I._load_metadata(path)
+    before = int(meta["current-snapshot-id"])
+    del_files = I._stage_pos_delete(
+        spark, path,
+        spark.createDataFrame([(first, 0)], "file_path string, pos long"),
+    )
+    I._commit_snapshot(
+        path, meta,
+        [I._delete_manifest(path, del_files, I._current_schema(meta))],
+        I._carry_manifests(path, meta), "delete", staged=del_files,
+    )
+    with pytest.raises(ValueError, match="duplicate data file basenames"):
+        I.read_iceberg_changes(spark, path, before).collect()

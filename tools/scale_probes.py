@@ -44,7 +44,16 @@ linear in the quantity the mechanism is meant to scale with.
   ``vacuum_delta`` and ``expire_snapshots`` deleted, and after every
   round the count of files in the source and the replica that no
   Delta version or Iceberg snapshot names (a leak check: a commit
-  that lands nothing must leave nothing).
+  that lands nothing must leave nothing);
+- ``plans``: the optimized logical plan of each native read over
+  perfbench's lake_cdc tables (seed 1) after its warm-up round and two
+  more (the second drains after the first maintenance, so the replica
+  holds live equality deletes): ``read_delta``, ``read_delta_range``, ``read_delta_changes``,
+  ``read_iceberg``, ``read_iceberg_range`` (equality deletes live) and
+  the catalog's ``read_delta``.  Expression ids, the work directory,
+  random file-name suffixes and the connectors' tag column names are
+  normalized, so the output of
+  two checkouts diffs to their plan changes.
 
 Usage: python tools/scale_probes.py <probe>|all
        python tools/scale_probes.py codegen|orphans [rounds]
@@ -712,6 +721,57 @@ def probe_orphans(spark, rounds: int = 6) -> None:
         shutil.rmtree(base, ignore_errors=True)
 
 
+def _plan_text(df, work: str) -> str:
+    import re
+
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    text = text.replace(work, "<work>")
+    text = re.sub(r"(?<=-)[0-9a-f]{8,}(?=\.parquet)", "<id>", text)
+    text = re.sub(r"_(?:dl|ice|lake)_file\b", "<FILE>", text)
+    text = re.sub(r"_(?:dl_dv|ice|lake)_pos\b", "<POS>", text)
+    return re.sub(r"#\d+L?", "#", text)
+
+
+def probe_plans(spark) -> None:
+    """The plans lake_cdc's reads run: perfbench's own workload
+    (seed 1) runs its warm-up round and two more, then each read's
+    optimized logical plan prints under its name."""
+    from aws_datalake_framework_api_spark.sources import delta as D
+    from aws_datalake_framework_api_spark.sources import iceberg as I
+    from perfbench.tracing import Recorder
+    from perfbench.wl_cdc import KEY, LakeCdc
+
+    base = tempfile.mkdtemp(prefix="plans_probe_")
+    try:
+        wl = LakeCdc(1, base)
+        rec = Recorder(spark, False)
+        wl.generate()
+        wl.build(spark)
+        wl.warmup(spark, rec)
+        wl.run_round(spark, rec)
+        wl.run_round(spark, rec)
+        latest = D._table_version(wl.src)
+        reads = {
+            "read_delta": lambda: D.read_delta(spark, wl.src),
+            "read_delta_range": lambda: D.read_delta_range(
+                spark, wl.src, KEY, 100, 900
+            ),
+            "read_delta_changes": lambda: D.read_delta_changes(
+                spark, wl.src, latest - 2
+            ),
+            "read_iceberg": lambda: I.read_iceberg(spark, wl.replica),
+            "read_iceberg_range": lambda: I.read_iceberg_range(
+                spark, wl.replica, KEY, 100, 900
+            ),
+            "catalog read_delta": lambda: wl.catalog.load("data_asset"),
+        }
+        for name, read in reads.items():
+            print(f"== {name}")
+            print(_plan_text(read(), base))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 PROBES = {
     "substr": probe_substr,
     "pq": probe_pq,
@@ -726,6 +786,7 @@ PROBES = {
     "uniform": probe_uniform,
     "codegen": probe_codegen,
     "orphans": probe_orphans,
+    "plans": probe_plans,
 }
 
 
