@@ -10,17 +10,17 @@ Built on Spark 4's Python Data Source API (the same public seam as
 ``sources/python_source.py`` and the streaming tails): the
 driver-side ``partitions()`` call plans from the table log/metadata
 (planning-sized JSON/avro — never data bytes) and emits one
-:class:`InputPartition` per live data file; the EXECUTOR-side
-``read()`` opens that one parquet with pyarrow through the SAME
-per-file reader as the format's streaming tail — Delta's
-``read_file_partition`` (column mapping, partition-value injection,
-deletion vectors decoded from the shipped O(1) descriptor) and
-Iceberg's ``read_live_rows`` (field-id column resolution, identity
-constants on converted tables, position and equality deletes).  The
-Iceberg equality-delete gate, strict sequence plus partition scope,
-is ``sources.iceberg._eq_delete_applies``; the reader applies it per
-(delete, data) file pair before opening a delete file, so a task
-reads only the delete files that can apply to it.
+``table_io.FileTask`` per live data file, built by the same codec as
+the format's streaming tail — Delta's ``file_task`` (column mapping,
+partition values as constants, the deletion-vector descriptor as a
+position kill) and Iceberg's ``ice_task`` (field-id column
+resolution, identity constants on converted tables, position and
+equality deletes).  The Iceberg equality-delete gate, strict sequence
+plus partition scope, is ``sources.iceberg._eq_delete_applies``;
+``ice_task`` applies it per (delete, data) file pair at planning, so a
+task ships and reads only the delete files that can apply to it.  The
+EXECUTOR-side ``read()`` is ``table_io.read_arrow``, the one
+Arrow-batch reader under every Python lake DataSource.
 
 Scale shape: file-parallel reads with data bytes moving
 executor-side, never through the driver.  The facade trades the
@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,19 +52,14 @@ from pyspark.sql.types import StructType
 
 from ..functions.numeric import money_sum, sql_money_sum
 from ..registry import query
-from ..streaming.delta_source import (
-    _DeltaFilePartition,
-    read_file_partition,
-    resolve_file_fields,
-)
+from ..streaming.delta_source import file_task, resolve_file_fields
 from ..streaming.iceberg_source import (
     _describe,
     _eq_chunk,
     _field_id_map,
-    _IceFilePartition,
-    read_live_rows,
+    ice_task,
 )
-from .delta import _snapshot, _version_at_timestamp
+from .delta import _live_dv, _snapshot, _version_at_timestamp
 from .iceberg import (
     _current_schema,
     _load_metadata,
@@ -76,6 +70,7 @@ from .iceberg import (
 )
 from .landing import _scratch
 from .readers import load_table
+from .table_io import FileTask, read_arrow
 
 
 # ------------------------------------------------------------- delta batch
@@ -94,11 +89,10 @@ def _delta_version(options, path: str) -> int | None:
 
 
 class DeltaBatchReader(DataSourceReader):
-    """One :class:`_DeltaFilePartition` per ACTIVE file of the
-    resolved snapshot — the same partition currency (and the same
-    executor-side ``read_file_partition``) as the streaming tail, so
-    column mapping, partition-value injection, and DV subtraction are
-    one proven code path, not two."""
+    """One ``file_task`` per ACTIVE file of the resolved snapshot —
+    the same task (and the same executor-side ``read_arrow``) as the
+    streaming tail, so column mapping, partition-value injection, and
+    DV subtraction are one proven code path, not two."""
 
     def __init__(self, schema: StructType, options) -> None:
         self.path = options.get("path")
@@ -109,27 +103,14 @@ class DeltaBatchReader(DataSourceReader):
 
     def partitions(self):
         snap, _ = _snapshot(None, self.path, self.version)
-        fields, part_cols = resolve_file_fields(snap, self.schema)
-        out: list[_DeltaFilePartition] = []
-        for rel in sorted(snap.files):
-            add = snap.files[rel]
-            dv = add.get("deletionVector")
-            if not (dv and int(dv.get("cardinality") or 0)):
-                dv = None
-            out.append(
-                _DeltaFilePartition(
-                    os.path.join(self.path, urllib.parse.unquote(rel)),
-                    dict(add.get("partitionValues") or {}),
-                    dv,
-                    self.path,
-                    fields,
-                    part_cols,
-                )
-            )
-        return out
+        colmap, parts = resolve_file_fields(snap, self.schema)
+        return [
+            file_task(self.path, add, parts, colmap, kill=_live_dv(add))
+            for _rel, add in sorted(snap.files.items())
+        ]
 
-    def read(self, partition: _DeltaFilePartition):
-        return read_file_partition(partition)
+    def read(self, partition: FileTask):
+        return read_arrow(partition, self.schema)
 
 
 class DeltaCDFBatchReader(DataSourceReader):
@@ -246,13 +227,12 @@ class DeltaBatchSource(DataSource):
 
 
 class IcebergBatchReader(DataSourceReader):
-    """One :class:`_IceFilePartition` per live data file of the
-    resolved snapshot, read by the same executor-side
-    ``read_live_rows`` as the streaming tails.  Each task ships the
-    snapshot's delete-file descriptors; the reader's per-pair gates
-    (sequence for position deletes, ``_eq_delete_applies`` for
-    equality deletes) decide which apply to its data file, and a
-    delete file that applies to none is never opened."""
+    """One ``ice_task`` per live data file of the resolved snapshot,
+    read by the same executor-side ``read_arrow`` as the streaming
+    tails.  The per-pair gates (sequence for position deletes,
+    ``_eq_delete_applies`` for equality deletes) decide at planning
+    which of the snapshot's delete files a task ships, so a delete
+    file that applies to none of its data is never opened."""
 
     def __init__(self, schema: StructType, options) -> None:
         self.path = options.get("path")
@@ -299,12 +279,12 @@ class IcebergBatchReader(DataSourceReader):
         pos = [desc(d) for d in deletes]
         eqs = [desc(d) for d in eq_deletes]
         return [
-            _IceFilePartition([desc(r)], names, resolve, pos, eqs)
+            ice_task([desc(r)], resolve, pos_deletes=pos, eq_deletes=eqs)
             for r in sorted(data, key=lambda r: r["path"])
         ]
 
-    def read(self, partition: _IceFilePartition):
-        return read_live_rows(partition, _eq_chunk(self.options))
+    def read(self, partition: FileTask):
+        return read_arrow(partition, self.schema, _eq_chunk(self.options))
 
 
 class IcebergBatchSource(DataSource):
@@ -425,8 +405,8 @@ def scan_delta_fmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     fail the hash compare.  (The native ``read_delta`` twin of this
     shape is ``b_lake_delta_dv``; this id certifies the FORMAT facade
     plumbing: schema from the log, per-file partition planning,
-    executor-side pyarrow read + DV subtraction, Arrow-free row
-    assembly through the Python DataSource seam.)"""
+    executor-side pyarrow read + DV subtraction, Arrow batches through
+    the Python DataSource seam.)"""
     from .delta import _table_version, delete_where_delta, write_delta
 
     orders = load_table(spark, sf_dir, "orders").select(

@@ -1145,32 +1145,8 @@ def _const_wire(value, ice_type: str) -> str | None:
     return str(value)
 
 
-def _const_typed(value, ice_type: str):
-    """One identity-partition value, avro PHYSICAL form → the Python
-    value a row-assembling (pyarrow-side) reader yields: date objects
-    from epoch-days, datetimes from epoch-micros — the typed twin of
-    ``_const_wire`` (which targets Spark's string cast)."""
-    import datetime as _dt
-
-    if value is None:
-        return None
-    if ice_type == "date":
-        return _dt.date(1970, 1, 1) + _dt.timedelta(days=int(value))
-    if ice_type in ("timestamp", "timestamptz"):
-        return _dt.datetime(1970, 1, 1) + _dt.timedelta(
-            microseconds=int(value)
-        )
-    if ice_type in ("int", "long"):
-        return int(value)
-    if ice_type in ("float", "double"):
-        return float(value)
-    if ice_type == "boolean":
-        return bool(value)
-    return value
-
-
 def _identity_const_plan(
-    meta: dict, schema_json: dict, data: list[dict], typed: bool = False
+    meta: dict, schema_json: dict, data: list[dict]
 ) -> tuple[list[str], dict[str, dict]] | None:
     """Identity-partition CONSTANTS plan (spec §Column Projection:
     readers MUST serve identity-transform source columns from the
@@ -1183,10 +1159,9 @@ def _identity_const_plan(
     ``data`` with the key present in every partition tuple; None when
     no column qualifies (evolved/mixed specs conservatively read the
     columns from the files, which native writers always populate).
-    Values are Spark-castable WIRE STRINGS by default (the JVM-scan
-    injection path) or typed Python values with ``typed=True`` (the
-    pyarrow row-assembling readers — the batch format facade and the
-    streaming tails)."""
+    Values are WIRE STRINGS, cast to the declared type by both readers
+    of them: the Spark scan's constants map and the Arrow reader of
+    the Python DataSources (``table_io.read_arrow``)."""
     if not data:
         return None
     id_to_name = {int(f["id"]): f["name"] for f in schema_json["fields"]}
@@ -1270,9 +1245,8 @@ def _identity_const_plan(
                 "file basenames on a converted/migrated table — "
                 "rewrite_data_files first"
             )
-        conv = _const_typed if typed else _const_wire
         files[b] = {
-            c: conv(part[pf_name[c]], type_by_name[c])
+            c: _const_wire(part[pf_name[c]], type_by_name[c])
             for c in const_cols
         }
     return const_cols, files

@@ -24,6 +24,13 @@ with JSON stats, ``partitionValues`` and deletion-vector descriptors;
 Iceberg ``data_file`` records with binary bounds, identity constants
 and sequence-gated deletes) and their claim and rebase steps.
 
+The Python DataSources (``format("delta"|"iceberg"|"delta_stream"|
+"iceberg_stream")``) read the same way on the executors: each codec
+plans tasks (:class:`FileTask`: files, per-file constants, position
+sources and equality-delete key files, each gated to the files it
+applies to) and :func:`read_arrow`, the one Arrow-batch reader, turns
+each into Arrow record batches of the declared schema.
+
 A file that no commit names is either staged by a writer still in
 flight or left by one that crashed.  :data:`ORPHAN_AGE_FLOOR_MS` is
 the one age below which maintenance (``vacuum_delta``,
@@ -45,8 +52,10 @@ import urllib.parse
 import uuid
 from typing import Callable, Iterable
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import InputPartition
 from pyspark.sql.types import StructType
 
 from .readers import empty_frame
@@ -77,6 +86,10 @@ COMMIT_ATTEMPTS = 5
 #: delta-spark guards with retentionDurationCheck and iceberg-spark
 #: with ``deleteOrphanFiles(olderThan)``.
 ORPHAN_AGE_FLOOR_MS = 3600 * 1000
+
+
+#: No positions: what :func:`_positions` holds for a file it names none in.
+_NO_POS = np.empty(0, np.int64)
 
 
 #: The tags a scan puts on its rows: the data file's basename and the
@@ -184,6 +197,225 @@ def scan_files(
         out = out.join(kills, [FILE, POS], "left_anti")
     drop = [t for t in want if t not in tags]
     return out.drop(*drop) if drop else out
+
+
+class FileTask(InputPartition):
+    """One task of a Python lake DataSource, read by :func:`read_arrow`.
+    It carries planning-sized descriptors only:
+
+    - ``files``: ``{"path", "consts"}`` per data file; ``consts`` maps a
+      reader column to the wire string (None: NULL) every row of the
+      file carries, over the file's own column;
+    - ``colmap(file_schema, path)``: the codec's reader → file column
+      map for one file (or key file);
+    - ``kills`` / ``only``: position sources whose positions are
+      removed / the only positions read (None: no restriction).  A
+      source is a Delta deletion vector ``{"dv", "root", "files"}`` or
+      an Iceberg position-delete file ``{"path", "files"}``;
+    - ``eq`` / ``eq_only``: equality-delete key files ``{"path",
+      "keys", "files"}`` whose keys kill rows / the only rows kept
+      (None: no restriction).
+
+    Every source's ``files`` lists the :func:`basenames` it applies to:
+    the codec gates it at planning time, so a source that applies to no
+    file of the task is not shipped, and is never opened."""
+
+    def __init__(
+        self,
+        files: list[dict],
+        colmap: Callable,
+        kills: list[dict] = (),
+        only: list[dict] | None = None,
+        eq: list[dict] = (),
+        eq_only: list[dict] | None = None,
+    ) -> None:
+        self.files = files
+        self.colmap = colmap
+        self.kills = kills
+        self.only = only
+        self.eq = eq
+        self.eq_only = eq_only
+
+
+def read_arrow(task: FileTask, schema: StructType, chunk: int = 1 << 16):
+    """The one executor reader of every Python lake DataSource: yields
+    ``pyarrow.RecordBatch``es of ``task``'s rows as ``schema``.
+
+    Per file: one take of the ``only`` positions or one mask of the
+    ``kills``, one select-and-rename through ``colmap`` (a column it
+    does not resolve is NULL), one repeated array per constant, one
+    cast to ``schema``'s Arrow type.  Equality deletes then run over
+    the task's rows, one key file at a time and ``chunk`` key rows at a
+    time, as NULL-safe membership tests."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    names = basenames(f["path"] for f in task.files)
+    dead = _positions(task.kills)
+    want = None if task.only is None else _positions(task.only)
+    parts, owner = [], []
+    for i, (f, b) in enumerate(zip(task.files, names)):
+        gone = dead.get(b, _NO_POS)
+        if want is not None:
+            pick = np.setdiff1d(want.get(b, _NO_POS), gone)
+            if not pick.size:
+                continue  # nothing to read: the file is never opened
+        pf = pq.ParquetFile(f["path"])
+        consts = f.get("consts") or {}
+        cm = {
+            k: c for k, c in task.colmap(pf.schema_arrow, f["path"]).items()
+            if k in target.names and k not in consts
+        }
+        table = pf.read(columns=sorted(set(cm.values())))
+        # the row count is kept apart: a table of no columns loses it
+        n = pf.metadata.num_rows
+        if want is not None:
+            pick = pick[pick < n]
+            table, n = table.take(pick), pick.size
+        elif gone.size:
+            keep = np.ones(n, bool)
+            keep[gone[gone < n]] = False
+            table, n = table.filter(keep), int(keep.sum())
+        table = pa.table(
+            [
+                _const(consts[fld.name], fld.type, n) if fld.name in consts
+                else _unit_us(table.column(cm[fld.name])) if fld.name in cm
+                else pa.nulls(n, fld.type)
+                for fld in target
+            ],
+            names=target.names,
+        ).cast(target)
+        if task.eq or task.eq_only is not None:
+            parts.append(table)
+            owner.append(np.full(n, i))
+        else:
+            yield from table.to_batches()
+    if not parts:
+        return
+    table, owner = pa.concat_tables(parts), np.concatenate(owner)
+    if task.eq:
+        keep = ~_eq_hits(table, owner, names, task.eq, task.colmap, chunk)
+        table, owner = table.filter(keep), owner[keep]
+    if task.eq_only is not None:
+        table = table.filter(
+            _eq_hits(table, owner, names, task.eq_only, task.colmap, chunk)
+        )
+    yield from table.to_batches()
+
+
+def _const(value: str | None, typ, n: int):
+    """``n`` copies of one wire string as Arrow type ``typ``.  A
+    zone-less timestamp string reads as UTC, the session's zone."""
+    import pyarrow as pa
+
+    if value is None:
+        return pa.nulls(n, typ)
+    arr = pa.array([value], pa.string())
+    if pa.types.is_timestamp(typ) and typ.tz is not None:
+        with contextlib.suppress(pa.ArrowInvalid):  # a zoned string
+            arr = arr.cast(pa.timestamp(typ.unit))  # casts directly
+    return pa.repeat(arr.cast(typ)[0], n)
+
+
+def _unit_us(col):
+    """A nanosecond timestamp column truncated to microseconds, Spark's
+    unit: the one unsafe cast; every other cast stays safe."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(col.type) and col.type.unit == "ns":
+        return col.cast(pa.timestamp("us", col.type.tz), safe=False)
+    return col
+
+
+def _positions(sources: list[dict] | None) -> dict:
+    """Data-file basename → the sorted positions ``sources`` name in it
+    (each source limited to its ``files``)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out: dict = {}
+    for s in sources or ():
+        if "dv" in s:
+            from .delta import _load_dv_positions  # delta imports this module
+
+            got = {s["files"][0]: np.asarray(
+                _load_dv_positions(s["root"], s["dv"]), np.int64
+            )}
+        else:
+            t = pq.read_table(s["path"], columns=["file_path", "pos"])
+            fp = pc.dictionary_encode(t.column("file_path").combine_chunks())
+            code = fp.indices.to_numpy()
+            pos = t.column("pos").to_numpy()
+            base = [
+                os.path.basename(urllib.parse.unquote(p))
+                for p in fp.dictionary.to_pylist()
+            ]
+            got = {
+                b: pos[np.isin(code, [i for i, x in enumerate(base) if x == b])]
+                for b in s["files"]
+            }
+        for b, p in got.items():
+            out[b] = np.union1d(out.get(b, _NO_POS), p)
+    return out
+
+
+def _eq_hits(table, owner, names, deletes, colmap, chunk: int):
+    """Which rows of ``table`` (row ``r`` read from file
+    ``names[owner[r]]``) an equality-delete key file of ``deletes``
+    carries, each key file limited to its ``files``.  Key files are
+    read one at a time, ``chunk`` rows at a time."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    hit = np.zeros(table.num_rows, bool)
+    for d in sorted(deletes, key=lambda d: (d["keys"], d["path"])):
+        rows = np.isin(owner, [i for i, b in enumerate(names) if b in d["files"]])
+        rows &= ~hit
+        if not rows.any():
+            continue
+        pf = pq.ParquetFile(d["path"])
+        cm = colmap(pf.schema_arrow, d["path"])
+        data = [table.column(k) for k in d["keys"]]
+        cols = [cm[k] for k in d["keys"] if k in cm]
+        # a key file without any key column: every row is the all-NULL key
+        batches = (
+            pf.iter_batches(batch_size=chunk, columns=cols) if cols
+            else [None] if pf.metadata.num_rows else []
+        )
+        for batch in batches:
+            keys = [
+                _unit_us(batch.column(cm[k])).cast(c.type) if k in cm
+                else pa.nulls(1 if batch is None else batch.num_rows, c.type)
+                for k, c in zip(d["keys"], data)
+            ]
+            hit |= rows & _member(data, keys)
+    return hit
+
+
+def _member(data: list, keys: list):
+    """Per row of the ``data`` columns: does some row of the ``keys``
+    columns (same types) carry the same composite value?  NULL equals
+    NULL.  Each column's values, data and keys together, are
+    dictionary-encoded with NULL as one more code, and the codes fold
+    column by column into one non-NULL int64 per row (re-encoded after
+    each fold, so it stays below the row count squared); membership is
+    then one ``is_in`` on the folded codes."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(data[0])
+    code = None
+    for d, k in zip(data, keys):
+        enc = pc.dictionary_encode(
+            pa.concat_arrays([*d.chunks, k]), null_encoding="encode"
+        )
+        idx = enc.indices.cast(pa.int64())
+        if code is not None:
+            idx = pc.add(pc.multiply(code, len(enc.dictionary)), idx)
+        code = pc.dictionary_encode(idx).indices.cast(pa.int64())
+    return pc.is_in(code[:n], value_set=code[n:]).to_numpy(zero_copy_only=False)
 
 
 def commit_loop(

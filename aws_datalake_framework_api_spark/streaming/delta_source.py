@@ -8,11 +8,13 @@ the last committed version.
 Built on Spark 4's Python Data Source API (the same public seam as
 ``sources/python_source.py``): the driver-side ``partitions()`` call
 parses only the NEW log versions per batch (planning-sized JSON) and
-emits one :class:`InputPartition` per added data file; the
-EXECUTOR-side ``read()`` opens that one parquet file with pyarrow,
-injects the log's partition values, and subtracts any deletion-vector
-positions shipped in the partition descriptor.  Data bytes therefore
-move executor-parallel, never through the driver.
+emits one ``table_io.FileTask`` per added data file (:func:`file_task`:
+the log's partition values as constants, the deletion-vector
+descriptor as a position kill); the EXECUTOR-side ``read()`` is
+``table_io.read_arrow``, the one Arrow-batch reader under every Python
+lake DataSource.  This module keeps only Delta's codec: the planning
+and :func:`_file_colmap`, the column-mapping resolution.  Data bytes
+move executor-parallel as Arrow batches; planning ships descriptors only.
 
 Semantics (delta-spark parity):
 
@@ -40,16 +42,13 @@ Semantics (delta-spark parity):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import urllib.parse
 
 from pyspark.sql import SparkSession  # noqa: F401 — register() typing
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from ..sources.delta import (
@@ -57,7 +56,6 @@ from ..sources.delta import (
     _CMAP_PHYS_KEY,
     _list_versions,
     _live_dv,
-    _load_dv_positions,
     _logical_json,
     _mapping_mode,
     _physical_json,
@@ -67,57 +65,7 @@ from ..sources.delta import (
     _version_actions,
     _version_file,
 )
-
-
-class _DeltaFilePartition(InputPartition):
-    def __init__(
-        self,
-        file_path: str,
-        part_values: dict,
-        # the log's deletionVector descriptor (or None): positions are
-        # decoded EXECUTOR-side in read(), so the planner ships O(1)
-        # bytes per file regardless of how many rows are deleted
-        dv: dict | None,
-        table_root: str,
-        # (logical name, simpleString type, physical/stored name,
-        #  columnMapping id or None) — physical==logical on unmapped
-        # tables; id set only in id mode, where files match by
-        # parquet field id rather than name.
-        fields: list[tuple[str, str, str, int | None]],
-        part_cols: list[str],  # STORED names (what partitionValues spell)
-    ) -> None:
-        self.file_path = file_path
-        self.part_values = part_values
-        self.dv = dv
-        self.table_root = table_root
-        self.fields = fields
-        self.part_cols = part_cols
-
-
-def _typed(value: str | None, simple: str):
-    """Type one partition-value wire string (the log's serialization,
-    PROTOCOL.md "Partition Value Serialization") for row assembly."""
-    if value is None:
-        return None
-    if simple in ("int", "bigint", "smallint", "tinyint"):
-        return int(value)
-    if simple in ("double", "float"):
-        return float(value)
-    if simple == "boolean":
-        return value == "true"
-    if simple == "date":
-        import datetime as _dt
-
-        return _dt.date.fromisoformat(value)
-    if simple.startswith("timestamp"):
-        import datetime as _dt
-
-        return _dt.datetime.fromisoformat(value)
-    if simple.startswith("decimal("):
-        import decimal as _dec
-
-        return _dec.Decimal(value)
-    return value
+from ..sources.table_io import FileTask, basenames, read_arrow
 
 
 def _resolve_start(options, path: str) -> int:
@@ -166,21 +114,18 @@ def _resolve_start(options, path: str) -> int:
     return (max(vs) + 1) if vs else 0
 
 
-def resolve_file_fields(
-    snap, schema: StructType
-) -> tuple[list[tuple[str, str, str, int | None]], list[str]]:
+def resolve_file_fields(snap, schema: StructType) -> tuple:
     """Column-mapping resolution, ONCE per planned read: mapped tables
     spell PHYSICAL col-<uuid> names in the data files and in
     add.partitionValues, so matching file columns / partition keys by
     logical name would silently yield all-NULL rows — a misread, not a
     degradation (ADVICE r6; the batch reader resolves this too).
     ``name`` mode resolves by physical name; ``id`` mode ships the
-    columnMapping id so read() matches by parquet field id.  Returns
-    (fields, part_cols) in :class:`_DeltaFilePartition`'s currency:
-    fields = (logical name, simpleString type, physical name, field id
-    or None); part_cols = STORED partition-column names.  Shared by
-    the streaming tail and the batch ``spark.read.format("delta")``
-    facade (sources/format_facade.py)."""
+    columnMapping id so the executor matches by parquet field id.
+    Returns ``(colmap, parts)``: the :class:`FileTask` column map and
+    partition column → STORED name.  Shared by the streaming tail and
+    the batch ``spark.read.format("delta")`` facade
+    (sources/format_facade.py)."""
     mode = _mapping_mode(snap)
     sj = json.loads(snap.metadata["schemaString"])
     if mode not in ("none", ""):
@@ -200,81 +145,80 @@ def resolve_file_fields(
         for f in sj.get("fields") or []
     }
     mapped = mode in ("name", "id")
-    fields = []
-    for fobj in schema.fields:
-        md = meta_by.get(fobj.name, {})
-        phys = md.get(_CMAP_PHYS_KEY, fobj.name) if mapped else fobj.name
-        fid = (
-            int(md[_CMAP_ID_KEY])
-            if mode == "id" and _CMAP_ID_KEY in md
-            else None
+
+    def stored(name: str) -> str:
+        return meta_by.get(name, {}).get(_CMAP_PHYS_KEY, name) if mapped else name
+
+    fields = [
+        (
+            f.name,
+            stored(f.name),
+            int(meta_by[f.name][_CMAP_ID_KEY])
+            if mode == "id" and _CMAP_ID_KEY in meta_by.get(f.name, {})
+            else None,
         )
-        fields.append((fobj.name, fobj.dataType.simpleString(), phys, fid))
-    # partition columns = declared schema minus what the files hold;
-    # stored under PHYSICAL names on mapped tables
-    part_cols = [
-        meta_by.get(c, {}).get(_CMAP_PHYS_KEY, c) if mapped else c
-        for c in snap.metadata.get("partitionColumns") or []
+        for f in schema.fields
     ]
-    return fields, part_cols
+    parts = {c: stored(c) for c in snap.metadata.get("partitionColumns") or []}
+    return functools.partial(_file_colmap, fields), parts
 
 
-def read_file_partition(partition: _DeltaFilePartition):
-    """Executor-side read of one planned Delta data file: open the
-    parquet with pyarrow, resolve columns (by parquet field id in id
-    mode, by physical name otherwise; unresolved = column added after
-    the file was written, served as NULL), inject the log's partition
-    values, and subtract deletion-vector positions decoded from the
-    shipped descriptor.  Shared by the streaming tail and the batch
-    format facade."""
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(partition.file_path)
-    cols = set(table.column_names)
-    by_id: dict[int, str] = {}
-    for fld in table.schema:
-        raw = (fld.metadata or {}).get(b"PARQUET:field_id")
-        if raw is not None:
-            by_id[int(raw)] = fld.name
-    deleted = (
-        set(_load_dv_positions(partition.table_root, partition.dv))
-        if partition.dv
-        else set()
-    )
-    # partition values are keyed by STORED (physical) names in the
-    # log; output keys are logical
-    part_typed = {
-        name: _typed(partition.part_values.get(phys), simple)
-        for name, simple, phys, _fid in partition.fields
-        if phys in partition.part_cols
+def _file_colmap(fields: list, schema, path: str) -> dict:
+    """Delta's reader → file column map for one parquet ``schema``:
+    ``fields`` are (logical name, physical name, field id or None); a
+    field id matches by parquet field id (id mode), else the physical
+    name matches.  An unmatched column (added after the file was
+    written) is left out and reads NULL."""
+    by_id = {
+        int(fld.metadata[b"PARQUET:field_id"]): fld.name
+        for fld in schema
+        if b"PARQUET:field_id" in (fld.metadata or {})
     }
-    resolved: dict[str, str | None] = {}
-    for name, _simple, phys, fid in partition.fields:
-        if phys in partition.part_cols:
-            continue
-        if fid is not None:
-            if not by_id:
-                raise ValueError(
-                    "delta read: id-mode table but "
-                    f"{partition.file_path} carries no parquet field "
-                    "ids — refusing to misread"
-                )
-            resolved[name] = by_id.get(fid)
-        else:
-            resolved[name] = phys if phys in cols else None
-    for pos, row in enumerate(table.to_pylist()):
-        if pos in deleted:
-            continue
-        yield tuple(
-            part_typed[name]
-            if name in part_typed
-            else (
-                row.get(resolved[name])
-                if resolved[name] is not None
-                else None
+    out = {}
+    for name, phys, fid in fields:
+        if fid is None:
+            if phys in schema.names:
+                out[name] = phys
+        elif not by_id:
+            raise ValueError(
+                f"delta read: id-mode table but {path} carries no "
+                "parquet field ids — refusing to misread"
             )
-            for name, _simple, _phys, _fid in partition.fields
-        )
+        elif fid in by_id:
+            out[name] = by_id[fid]
+    return out
+
+
+def file_task(
+    root: str,
+    action: dict,
+    parts: dict,
+    colmap,
+    extra: dict | None = None,
+    kill: dict | None = None,
+    only: dict | None = None,
+) -> FileTask:
+    """One :class:`FileTask` over the file of the log ``action`` (an
+    ``add``, ``remove`` or ``cdc``): its ``partitionValues`` serve the
+    ``parts`` columns, plus the ``extra`` constants.  The rows the
+    deletion vector ``kill`` leaves are read, or with ``only``, just
+    those of the positions ``only`` names.  Vectors decode on the
+    executor: the task ships O(1) descriptor bytes."""
+    path = os.path.join(root, urllib.parse.unquote(action["path"]))
+    pvals = action.get("partitionValues") or {}
+
+    def dvs(dv):
+        return [{"dv": dv, "root": root, "files": basenames([path])}] if dv else []
+
+    return FileTask(
+        [{
+            "path": path,
+            "consts": {n: pvals.get(s) for n, s in parts.items()} | (extra or {}),
+        }],
+        colmap,
+        kills=dvs(kill),
+        only=dvs(only) if only else None,
+    )
 
 
 class DeltaStreamReader(DataSourceStreamReader):
@@ -298,8 +242,8 @@ class DeltaStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["version"]), int(end["version"])
         snap, _ = _snapshot(None, self.path, hi)
-        fields, part_cols = resolve_file_fields(snap, self.schema)
-        out: list[_DeltaFilePartition] = []
+        colmap, parts = resolve_file_fields(snap, self.schema)
+        out: list[FileTask] = []
         for v in range(lo + 1, hi + 1):
             acts = _version_actions(self.path, v)
             for a in acts:
@@ -312,73 +256,20 @@ class DeltaStreamReader(DataSourceStreamReader):
                             "ignoreChanges=true to stream re-added rows "
                             "(downstream must dedupe by key)"
                         )
-            for a in acts:
-                if "add" not in a or not a["add"].get("dataChange", True):
-                    continue
-                add = a["add"]
-                rel = urllib.parse.unquote(add["path"])
-                out.append(
-                    _DeltaFilePartition(
-                        os.path.join(self.path, rel),
-                        dict(add.get("partitionValues") or {}),
-                        _live_dv(add),
-                        self.path,
-                        fields,
-                        part_cols,
-                    )
+            out += [
+                file_task(
+                    self.path, a["add"], parts, colmap, kill=_live_dv(a["add"])
                 )
+                for a in acts
+                if "add" in a and a["add"].get("dataChange", True)
+            ]
         return out
 
-    def read(self, partition: _DeltaFilePartition):
-        return read_file_partition(partition)
+    def read(self, partition: FileTask):
+        return read_arrow(partition, self.schema)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the engine checkpoint
-
-
-class _DeltaCDFPartition(InputPartition):
-    """One change-feed unit of a planned version range.  ``kind``:
-
-    - ``cdc``: a ``_change_data`` file — rows carry their own
-      ``_change_type`` column (update_preimage/postimage, insert,
-      delete);
-    - ``insert``: a dataChange add in a non-cdc commit — live rows
-      (DV subtracted) are inserts;
-    - ``delete``: a dataChange remove in a non-cdc commit — the
-      file's PREVIOUSLY-live rows (old DV applied) are deletes;
-    - ``dv``: a remove+re-add with a changed deletion vector — the
-      newly-dead positions (new minus old) are deletes, the
-      newly-live ones (old minus new) inserts.
-
-    The kinds are :func:`~..sources.delta._plan_changes`'s units.
-
-    All DV decode happens executor-side in ``read()``; the planner
-    ships O(1) descriptor bytes per file."""
-
-    def __init__(
-        self,
-        kind: str,
-        file_path: str,
-        part_values: dict,
-        dv: dict | None,
-        old_dv: dict | None,
-        version: int,
-        table_root: str,
-        fields: list[tuple[str, str]],  # (name, simpleString type)
-        part_cols: list[str],
-        pvals_in_action: bool,  # cdc from a foreign writer: partition
-        # values live in the action, data columns in the file
-    ) -> None:
-        self.kind = kind
-        self.file_path = file_path
-        self.part_values = part_values
-        self.dv = dv
-        self.old_dv = old_dv
-        self.version = version
-        self.table_root = table_root
-        self.fields = fields
-        self.part_cols = part_cols
-        self.pvals_in_action = pvals_in_action
 
 
 class DeltaCDFStreamReader(DataSourceStreamReader):
@@ -423,83 +314,44 @@ class DeltaCDFStreamReader(DataSourceStreamReader):
                 "not supported by the stream tail — read changes in "
                 "batch (read_delta_changes) instead"
             )
-        fields = [
-            (f.name, f.dataType.simpleString())
-            for f in self.schema.fields
-            if f.name not in ("_change_type", "_commit_version")
-        ]
-        part_cols = list(state.metadata.get("partitionColumns") or [])
-        out: list[_DeltaCDFPartition] = []
+        colmap = functools.partial(
+            _file_colmap, [(f.name, f.name, None) for f in self.schema.fields]
+        )
+        parts = {c: c for c in state.metadata.get("partitionColumns") or []}
+
+        def task(v, action, ctype, **dvs):
+            # ctype None: a cdc file's own _change_type column; a cdc
+            # action without partition values leaves the file's
+            # partition columns standing
+            return file_task(
+                self.path, action,
+                parts if ctype or action.get("partitionValues") else {},
+                colmap,
+                {"_commit_version": str(v)}
+                | ({"_change_type": ctype} if ctype else {}),
+                **dvs,
+            )
+
+        out: list[FileTask] = []
         for v, units in _plan_changes(self.path, state, lo, hi):
-            for kind, rel, action, dv, old_dv in units:
-                pvals = dict(action.get("partitionValues") or {})
-                out.append(
-                    _DeltaCDFPartition(
-                        kind,
-                        os.path.join(self.path, urllib.parse.unquote(rel)),
-                        pvals, dv, old_dv, v, self.path, fields, part_cols,
-                        kind != "cdc" or bool(pvals),
-                    )
-                )
+            for kind, _rel, action, dv, old_dv in units:
+                if kind == "cdc":
+                    out.append(task(v, action, None))
+                elif kind == "dv":
+                    # newly dead positions are deletes, newly live ones
+                    # inserts; the vectors decode before the data file
+                    # opens, so a transition that changes no row reads
+                    # two bitmaps and no parquet
+                    if dv:
+                        out.append(task(v, action, "delete", kill=old_dv, only=dv))
+                    if old_dv:
+                        out.append(task(v, action, "insert", kill=dv, only=old_dv))
+                else:  # insert: live rows; delete: previously-live rows
+                    out.append(task(v, action, kind, kill=dv))
         return out
 
-    def read(self, partition: _DeltaCDFPartition):
-        import pyarrow.parquet as pq
-
-        if partition.kind == "dv":
-            # resolve the position deltas BEFORE touching the data
-            # file: a transition that changes no live row costs two
-            # bitmap reads, not a parquet scan
-            new_pos, old_pos = (
-                set(_load_dv_positions(partition.table_root, d)) if d
-                else set()
-                for d in (partition.dv, partition.old_dv)
-            )
-            dead, revived = new_pos - old_pos, old_pos - new_pos
-            if not (dead or revived):
-                return
-        table = pq.read_table(partition.file_path)
-        cols = set(table.column_names)
-        part_typed = {
-            name: _typed(partition.part_values.get(name), simple)
-            for name, simple in partition.fields
-            if name in partition.part_cols
-            and (partition.pvals_in_action or name not in cols)
-        }
-
-        def emit(row, ctype):
-            return tuple(
-                [
-                    part_typed[n] if n in part_typed
-                    else (row.get(n) if n in cols else None)
-                    for n, _s in partition.fields
-                ]
-                + [ctype, partition.version]
-            )
-
-        if partition.kind == "cdc":
-            for row in table.to_pylist():
-                yield emit(row, row.get("_change_type"))
-            return
-        if partition.kind == "dv":
-            # materialize ONLY the affected positions (Table.take) — a
-            # point delete/restore on a large file stays O(changed rows)
-            for ctype, pos in (("delete", dead), ("insert", revived)):
-                idx = sorted(p for p in pos if p < table.num_rows)
-                for row in table.take(idx).to_pylist() if idx else ():
-                    yield emit(row, ctype)
-            return
-        # delete: the file's previously-live rows (old DV applied);
-        # insert: its live rows (own DV subtracted) — same scan shape,
-        # the descriptor's dv field carries the right vector
-        dead = (
-            set(_load_dv_positions(partition.table_root, partition.dv))
-            if partition.dv
-            else set()
-        )
-        for pos, row in enumerate(table.to_pylist()):
-            if pos not in dead:
-                yield emit(row, partition.kind)
+    def read(self, partition: FileTask):
+        return read_arrow(partition, self.schema)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the engine checkpoint

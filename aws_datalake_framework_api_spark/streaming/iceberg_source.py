@@ -10,18 +10,21 @@ API).  Driver-side ``partitions()`` classifies each snapshot of the
 range with ``sources.iceberg._plan_snapshot_changes`` — the one
 snapshot diff under these tails and the batch
 ``read_iceberg_changes`` — as pure-Python metadata work, and ships
-planning-sized :class:`_IceFilePartition` tasks.  Executor-side,
-every task reads through :func:`read_live_rows`, the one Iceberg
-per-file reader (the batch ``format("iceberg")`` facade uses it too):
-it resolves columns by parquet field id on renamed tables, injects
-identity-partition constants on converted/migrated tables (whose
-files lack those columns), subtracts position deletes and applies
-equality deletes in bounded ``maxEqDeleteRows`` chunks.  Which delete
-file applies to which data file is decided per pair by the gates in
+planning-sized ``table_io.FileTask``s built by :func:`ice_task` (the
+batch ``format("iceberg")`` facade builds its tasks there too).  This
+module keeps only Iceberg's codec: the planning, the identity-partition
+constants of converted/migrated tables (whose files lack those
+columns, served as wire strings) and :func:`_colmap`, the field-id
+resolution of renamed tables.  Which delete file applies to which data
+file is decided per pair at planning, by the gates in
 ``sources.iceberg``: sequence at or above the data file's for position
 deletes, and ``_eq_delete_applies`` (strict sequence plus partition
 scope) for equality deletes — the rule ``_apply_eq_deletes`` applies
-in the Spark readers.
+in the Spark readers.  Executor-side, every task reads through
+``table_io.read_arrow``, the one Arrow-batch reader under every Python
+lake DataSource: position kills as one mask or take per file,
+equality deletes as NULL-safe membership tests in bounded
+``maxEqDeleteRows`` chunks.
 
 Semantics (iceberg-spark parity):
 
@@ -44,22 +47,19 @@ Semantics (iceberg-spark parity):
   ``_snapshot_id``), the same rows as the batch
   ``read_iceberg_changes``.  This goes BEYOND iceberg-spark, whose
   streaming read is append-only.  Equality-delete key files of any
-  size stream: a task consults them one file at a time and, within a
+  size stream: a task reads them one file at a time and, within a
   file, ``maxEqDeleteRows`` rows at a time, so per-task key residency
   is one chunk regardless of file shape.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import urllib.parse
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from ..sources.iceberg import (
@@ -72,6 +72,7 @@ from ..sources.iceberg import (
     _resolution,
     _schema_to_spark,
 )
+from ..sources.table_io import FileTask, basenames, read_arrow
 
 
 # ----------------------------------------------------------- planning side
@@ -105,9 +106,9 @@ def _describe(meta: dict, data: list[dict]):
     """``desc(rec)``: one manifest record as the planning-sized
     descriptor a task ships — unquoted path, sequence number and
     partition tuple (the delete gates' inputs).  A data file adds its
-    typed identity-partition constants; an equality delete adds its key
-    columns, named through the current schema (field ids are the
-    spec's stable identity; a dropped or nested key refuses).
+    identity-partition constants (wire strings); an equality delete
+    adds its key columns, named through the current schema (field ids
+    are the spec's stable identity; a dropped or nested key refuses).
 
     Constants are served only on converted/migrated tables, whose
     referenced files lack their identity partition columns (spec
@@ -119,7 +120,7 @@ def _describe(meta: dict, data: list[dict]):
     props = meta.get("properties") or {}
     consts: dict = {}
     if props.get("converted-from-delta") or props.get("migrated-data-files"):
-        plan = _identity_const_plan(meta, schema_json, data, typed=True)
+        plan = _identity_const_plan(meta, schema_json, data)
         consts = plan[1] if plan else {}
 
     def key_name(rec: dict, fid: int) -> str:
@@ -160,50 +161,61 @@ def _eq_chunk(options) -> int:
     return max(1, int(options.get("maxeqdeleterows", 1 << 16)))
 
 
-class _IceFilePartition(InputPartition):
-    """One task of an Iceberg Python reader: a ``format("iceberg")``
-    scan file, an append-tail file or one changelog unit.  It carries
-    :func:`_describe` descriptors only; :func:`read_live_rows` does
-    every parquet read.
+def ice_task(
+    files: list[dict],
+    resolve: dict | None,
+    suffix: dict | None = None,
+    pos_deletes: list[dict] = (),
+    eq_deletes: list[dict] = (),
+    killed_by_pos: list[dict] | None = None,
+    killed_by_eq: list[dict] | None = None,
+) -> FileTask:
+    """One :class:`FileTask` of an Iceberg Python reader (a
+    ``format("iceberg")`` scan file, an append-tail file or one
+    changelog unit) over the :func:`_describe` descriptors ``files``.
+    ``pos_deletes`` / ``eq_deletes`` kill rows where their gates apply;
+    ``killed_by_pos`` / ``killed_by_eq``, when given, keep only the
+    rows these NEW delete files kill (the changelog's row-level
+    deletes).  ``suffix`` adds constants to every row (the changelog's
+    change type and snapshot id).  Each delete file is gated per data
+    file here, at planning: one that applies to no file is not
+    shipped.  A position delete applies at or above the data file's
+    sequence number, an equality delete per :func:`_eq_delete_applies`."""
+    names = basenames(f["path"] for f in files)
 
-    - ``files``: the data files whose rows the task reads;
-    - ``pos_deletes`` / ``eq_deletes``: delete files whose kills are
-      subtracted where their gates apply;
-    - ``killed_by_pos`` / ``killed_by_eq``: when given, only the
-      remaining rows these NEW delete files kill are emitted (the
-      changelog's row-level deletes);
-    - ``suffix``: values appended to every row (the changelog's
-      change type and snapshot id)."""
+    def pos_applies(d, f):
+        return d["seq"] >= f["seq"]
 
-    def __init__(
-        self,
-        files: list[dict],
-        names: list[str],
-        resolve: dict | None,
-        pos_deletes: list[dict] = (),
-        eq_deletes: list[dict] = (),
-        killed_by_pos: list[dict] = (),
-        killed_by_eq: list[dict] = (),
-        suffix: tuple = (),
-    ) -> None:
-        self.files = files
-        self.names = names
-        self.resolve = resolve
-        self.pos_deletes = pos_deletes
-        self.eq_deletes = eq_deletes
-        self.killed_by_pos = killed_by_pos
-        self.killed_by_eq = killed_by_eq
-        self.suffix = suffix
+    def gated(deletes, applies):
+        if deletes is None:
+            return None
+        out = []
+        for d in deletes:
+            hit = [b for b, f in zip(names, files) if applies(d, f)]
+            if hit:
+                out.append({"path": d["path"], "keys": d.get("keys"), "files": hit})
+        return out
+
+    return FileTask(
+        [
+            {"path": f["path"], "consts": (f.get("consts") or {}) | (suffix or {})}
+            for f in files
+        ],
+        functools.partial(_colmap, resolve),
+        kills=gated(pos_deletes, pos_applies),
+        only=gated(killed_by_pos, pos_applies),
+        eq=gated(eq_deletes, _eq_delete_applies),
+        eq_only=gated(killed_by_eq, _eq_delete_applies),
+    )
 
 
 # ----------------------------------------------------------- executor side
 
 
-def _colmap(table, resolve: dict | None) -> dict:
-    """Reader-column → file-column map for one pyarrow table OR schema,
+def _colmap(resolve: dict | None, schema, path: str = "") -> dict:
+    """Reader-column → file-column map for one parquet ``schema``,
     resolving renamed tables by parquet field id (silent NULLs for
     renamed columns would be a misread)."""
-    schema = table.schema if hasattr(table, "column_names") else table
     if resolve is None:
         return {n: n for n in schema.names}
     colmap: dict[str, str] = {}
@@ -223,143 +235,6 @@ def _colmap(table, resolve: dict | None) -> dict:
         if cur is not None:
             colmap[cur] = fld.name
     return colmap
-
-
-def _dead_positions(deletes: list[dict], files: list[dict]) -> dict:
-    """Data-file basename → the row positions that position-delete
-    files ``deletes`` kill in ``files``, for each (delete, data) pair
-    whose delete sequence is at or above the data file's.  Each delete
-    file is read once per task, however many data files it covers."""
-    import pyarrow.parquet as pq
-
-    seq = {os.path.basename(f["path"]): f["seq"] for f in files}
-    lowest = min(seq.values(), default=None)
-    out: dict[str, set[int]] = {}
-    for d in deletes:
-        if lowest is None or d["seq"] < lowest:
-            continue  # older than every data file here: cannot apply
-        t = pq.read_table(d["path"], columns=["file_path", "pos"])
-        for fp, pos in zip(
-            t.column("file_path").to_pylist(), t.column("pos").to_pylist()
-        ):
-            b = os.path.basename(urllib.parse.unquote(fp))
-            if b in seq and d["seq"] >= seq[b]:
-                out.setdefault(b, set()).add(int(pos))
-    return out
-
-
-def _eq_kill_flags(entries, files, deletes, chunk, resolve) -> bytearray:
-    """Per-entry kill flags: ``entries`` are ``(row, file index)``
-    pairs, a row is killed when an equality-delete file that passes
-    ``_eq_delete_applies`` for its data file carries its key (NULL
-    matches NULL: tuple equality).  Delete files are read one at a
-    time, ``chunk`` rows at a time, so key residency is one chunk;
-    a file that applies to no entry's data file is never opened.
-    Delete files sharing key columns share one row-key extraction."""
-    import pyarrow.parquet as pq
-
-    flags = bytearray(len(entries))
-    groups: dict[tuple, list[dict]] = {}
-    for d in deletes:
-        groups.setdefault(d["keys"], []).append(d)
-    for keys, group in sorted(groups.items()):
-        row_keys = [tuple(row.get(k) for k in keys) for row, _fi in entries]
-        for d in sorted(group, key=lambda d: d["path"]):
-            applies = [_eq_delete_applies(d, f) for f in files]
-            targets = [
-                i for i, (_row, fi) in enumerate(entries)
-                if applies[fi] and not flags[i]
-            ]
-            if not targets:
-                continue
-            pf = pq.ParquetFile(d["path"])
-            cm = _colmap(pf.schema_arrow, resolve)
-            cols = [cm[k] for k in keys if k in cm]
-            if cols:
-                key_batches = (
-                    zip(*[
-                        b.column(b.schema.get_field_index(cm[k])).to_pylist()
-                        if k in cm else [None] * b.num_rows
-                        for k in keys
-                    ])
-                    for b in pf.iter_batches(batch_size=chunk, columns=cols)
-                )
-            else:
-                # no key column in the file: every delete row carries
-                # the all-NULL key
-                key_batches = (
-                    [[(None,) * len(keys)]] if pf.metadata.num_rows else []
-                )
-            for batch in key_batches:
-                kill = set(batch)
-                for i in targets:
-                    if not flags[i] and row_keys[i] in kill:
-                        flags[i] = 1
-                del kill
-    return flags
-
-
-def read_live_rows(part: _IceFilePartition, chunk: int):
-    """The one executor reader of Iceberg data files, under the batch
-    ``format("iceberg")`` facade, the append tail and every changelog
-    unit: yields, per live row of ``part.files``, the ``part.names``
-    values plus ``part.suffix``.  A row is live when no position delete
-    of ``part.pos_deletes`` and no equality delete of
-    ``part.eq_deletes`` kills it, each gated per data file.  With
-    ``killed_by_pos`` / ``killed_by_eq`` only the live rows those delete
-    files kill are yielded, and files they do not target are never
-    read.  Columns resolve through :func:`_colmap`; identity constants
-    overwrite the file's values (metadata wins)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    files = part.files
-    dead = _dead_positions(part.pos_deletes, files)
-    only = (
-        _dead_positions(part.killed_by_pos, files)
-        if part.killed_by_pos else None
-    )
-    entries: list[tuple[dict, int]] = []
-    for fi, f in enumerate(files):
-        base = os.path.basename(f["path"])
-        gone = dead.get(base, set())
-        if only is not None:
-            want = only.get(base, set()) - gone
-            if not want:
-                continue
-        table = pq.read_table(f["path"])
-        cm = _colmap(table, part.resolve)
-        if only is not None:
-            # materialize only the named positions, never the whole file
-            table = table.take(
-                pa.array(
-                    sorted(p for p in want if p < table.num_rows), pa.int64()
-                )
-            )
-        elif gone:
-            table = table.filter(
-                pa.array([p not in gone for p in range(table.num_rows)])
-            )
-        rows = table.select(list(cm.values())).rename_columns(
-            list(cm)
-        ).to_pylist()
-        consts = f.get("consts")
-        for row in rows:
-            if consts:
-                row.update(consts)
-            entries.append((row, fi))
-    if part.eq_deletes:
-        killed = _eq_kill_flags(
-            entries, files, part.eq_deletes, chunk, part.resolve
-        )
-        entries = [e for e, k in zip(entries, killed) if not k]
-    if part.killed_by_eq:
-        hit = _eq_kill_flags(
-            entries, files, part.killed_by_eq, chunk, part.resolve
-        )
-        entries = [e for e, h in zip(entries, hit) if h]
-    for row, _fi in entries:
-        yield tuple(row.get(n) for n in part.names) + part.suffix
 
 
 # ------------------------------------------------------------- the tails
@@ -461,7 +336,7 @@ class IcebergStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         names = [f.name for f in self.schema.fields]
         steps, desc, resolve = _plan_range(self.path, start, end, names)
-        out: list[_IceFilePartition] = []
+        out: list[FileTask] = []
         for snap, step in steps:
             if (
                 step["removed"] or step["new_pos"] or step["new_eq"]
@@ -474,14 +349,11 @@ class IcebergStreamReader(DataSourceStreamReader):
                     "stream only its added files (downstream must dedupe "
                     "by key)"
                 )
-            out += [
-                _IceFilePartition([desc(r)], names, resolve)
-                for r in step["added"]
-            ]
+            out += [ice_task([desc(r)], resolve) for r in step["added"]]
         return out
 
-    def read(self, partition: _IceFilePartition):
-        return read_live_rows(partition, _eq_chunk(self.options))
+    def read(self, partition: FileTask):
+        return read_arrow(partition, self.schema, _eq_chunk(self.options))
 
     def commit(self, end: dict) -> None:
         pass
@@ -497,8 +369,8 @@ class IcebergChangesStreamReader(DataSourceStreamReader):
     without loss instead of refusing.  Output = table columns +
     ``_change_type`` + ``_snapshot_id``.
 
-    Each step becomes :class:`_IceFilePartition` units, all read by
-    :func:`read_live_rows`:
+    Each step becomes :func:`ice_task` units, all read by
+    ``table_io.read_arrow``:
 
     - ``ins``, one per ADDED data file: its live rows as inserts (the
       snapshot's own position deletes subtracted, so an upsert's
@@ -541,9 +413,9 @@ class IcebergChangesStreamReader(DataSourceStreamReader):
             if f.name not in ("_change_type", "_snapshot_id")
         ]
         steps, desc, resolve = _plan_range(self.path, start, end, names)
-        out: list[_IceFilePartition] = []
+        out: list[FileTask] = []
         for snap, step in steps:
-            sid = int(snap["snapshot-id"])
+            sid = str(snap["snapshot-id"])
             prev_pos = [desc(d) for d in step["prev"][1]]
             prev_eq = [desc(d) for d in step["prev"][2]]
             cur_eq = [desc(d) for d in step["cur"][2]]
@@ -552,11 +424,8 @@ class IcebergChangesStreamReader(DataSourceStreamReader):
             carried = [desc(r) for r in step["carried"]]
 
             def unit(files, change, **deletes):
-                out.append(
-                    _IceFilePartition(
-                        files, names, resolve, suffix=(change, sid), **deletes
-                    )
-                )
+                suffix = {"_change_type": change, "_snapshot_id": sid}
+                out.append(ice_task(files, resolve, suffix, **deletes))
 
             for r in step["added"]:  # ins
                 unit([desc(r)], "insert", pos_deletes=new_pos)
@@ -578,8 +447,8 @@ class IcebergChangesStreamReader(DataSourceStreamReader):
                     )
         return out
 
-    def read(self, partition: _IceFilePartition):
-        return read_live_rows(partition, _eq_chunk(self.options))
+    def read(self, partition: FileTask):
+        return read_arrow(partition, self.schema, _eq_chunk(self.options))
 
     def commit(self, end: dict) -> None:
         pass

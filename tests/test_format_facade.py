@@ -490,3 +490,141 @@ def test_register_lake_view_time_travel(spark, tmp_path):
         register_lake_view(spark, "x", i, fmt="iceberg", version_as_of=0)
     with pytest.raises(ValueError, match="iceberg option"):
         register_lake_view(spark, "x", d, fmt="delta", ref="main")
+
+
+def test_facade_matches_native_on_delete_kinds_and_typed_columns(
+    spark, tmp_path
+):
+    """Both facades read through one Arrow reader: every delete kind
+    (a Delta deletion vector, an Iceberg position delete, an equality
+    delete on a composite key with a NULL component), a renamed
+    column, a converted table's identity constants, typed columns
+    (decimal, date, timestamp, map) and timestamp and decimal
+    partition columns must read as the native readers read them.  A
+    nanosecond parquet column reads truncated to microseconds, and
+    the changelog tail kills the same rows at any key-chunk size."""
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_datalake_framework_api_spark.sources.iceberg import (
+        convert_delta_to_iceberg,
+    )
+    from aws_datalake_framework_api_spark.sources.migrate import (
+        convert_parquet_to_delta,
+    )
+    from aws_datalake_framework_api_spark.streaming.iceberg_source import (
+        register as ice_register,
+    )
+
+    def same(fmt, path, native):
+        got = spark.read.format(fmt).load(path)
+        want = native(spark, path)
+        assert sorted(got.columns) == sorted(want.columns)
+        rows = _rows(got)
+        assert rows == _rows(want.select(*got.columns))
+        return rows
+
+    register_formats(spark)
+    typed = spark.createDataFrame(
+        [
+            (
+                k, decimal.Decimal(f"{k}.25"), dt.date(2024, 1, k + 1),
+                dt.datetime(2024, 1, 1, 10, 0, k, 500), {"a": k, "b": None},
+                dt.datetime(2024, 3, 1, k % 2, 0, 0, 250000),
+                decimal.Decimal("1.50") if k % 2 else decimal.Decimal("-2.00"),
+            )
+            for k in range(8)
+        ],
+        "k int, amt decimal(12,2), d date, ts timestamp, "
+        "m map<string,bigint>, pts timestamp, pdec decimal(9,2)",
+    )
+    # Delta: typed columns, timestamp and decimal partitions, a DV
+    dl = str(tmp_path / "dl")
+    write_delta(
+        typed.coalesce(1), dl, mode="error", partition_by=["pts", "pdec"]
+    )
+    delete_where_delta(spark, dl, F.col("k") % 3 == 0)
+    rows = same("delta", dl, read_delta)
+    assert [r[0] for r in rows] == [1, 2, 4, 5, 7]
+
+    # Iceberg: a position delete and a composite-key equality delete
+    # whose (1, NULL) key kills only the row (1, NULL), not (5, NULL)
+    ice = str(tmp_path / "ice")
+    write_iceberg(
+        spark.createDataFrame(
+            [(k, None if k % 4 == 1 else f"n{k % 3}", float(k))
+             for k in range(12)],
+            "k int, name string, v double",
+        ).coalesce(1),
+        ice, mode="error",
+    )
+    delete_iceberg_rows(spark, ice, F.col("k") == 2)
+    delete_by_key_iceberg(
+        spark, ice,
+        spark.createDataFrame(
+            [(1, None), (6, "n0"), (7, "nX")], "k int, name string"
+        ),
+    )
+    rows = same("iceberg", ice, read_iceberg)
+    assert [r[0] for r in rows] == [0, 3, 4, 5, 7, 8, 9, 10, 11]
+    chunked = spark.read.format("iceberg").option("maxEqDeleteRows", 1)
+    assert _rows(chunked.load(ice)) == rows
+
+    # the changelog tail: the same change rows at one key row per chunk
+    ice_register(spark)
+
+    def changes(name, **opts):
+        out = str(tmp_path / name)
+        (
+            spark.readStream.format("iceberg_stream")
+            .option("readChangeFeed", "true").options(**opts).load(ice)
+            .writeStream.trigger(availableNow=True).format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", out + "_ckpt")
+            .start()
+        ).awaitTermination()
+        return _rows(spark.read.parquet(out).drop("_snapshot_id"))
+
+    log = changes("chunk1", maxEqDeleteRows="1")
+    assert log == changes("chunk_default")
+    assert [r[0] for r in log if r[3] == "delete"] == [1, 2, 6]
+
+    # a converted table: identity constants of a timestamp partition,
+    # the DV as a position delete, then a renamed column
+    dl2, conv = str(tmp_path / "dl2"), str(tmp_path / "conv")
+    write_delta(
+        typed.drop("m", "pdec").coalesce(1), dl2, mode="error",
+        partition_by=["pts"],
+    )
+    delete_where_delta(spark, dl2, F.col("k") == 4)
+    convert_delta_to_iceberg(spark, dl2, conv)
+    evolve_iceberg(conv, renames={"amt": "amount"})
+    rows = same("iceberg", conv, read_iceberg)
+    assert [r[0] for r in rows] == [0, 1, 2, 3, 5, 6, 7]
+    assert all(r[1] is not None and r[-1] is not None for r in rows)
+
+    # a foreign writer's nanosecond timestamps under a declared
+    # timestamp column (Spark's own parquet scan refuses
+    # TIMESTAMP(NANOS)): truncated to microseconds, sub-µs digits and all
+    src = tmp_path / "pq"
+    src.mkdir()
+    f = str(src / "f.parquet")
+    ns = pa.array(
+        [1_700_000_000_123_456_789, 1_700_000_001_000_000_001, None],
+        pa.timestamp("ns", tz="UTC"),
+    )
+    k = pa.array([1, 2, 3], pa.int64())
+    pq.write_table(
+        pa.table({"k": k, "ts": ns.cast(pa.timestamp("us", "UTC"), safe=False)}),
+        f,
+    )
+    nsdl = str(tmp_path / "nsdl")
+    convert_parquet_to_delta(spark, str(src), nsdl)
+    pq.write_table(pa.table({"k": k, "ts": ns}), f)
+    assert _rows(spark.read.format("delta").load(nsdl)) == [
+        (1, dt.datetime(2023, 11, 14, 22, 13, 20, 123456)),
+        (2, dt.datetime(2023, 11, 14, 22, 13, 21)),
+        (3, None),
+    ]
